@@ -44,265 +44,8 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["extract_text"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's per-round sweep is capped (~50 of the registry per round), so
-# ordering is the coverage lever: queries NO driver round has ever
-# value-checked come first (priority 0 — this includes everything new this
-# round), then staleness order (least-recently-checked first).
-# Cumulative driver coverage through r04 is 117/124 pre-round-5 queries; the
-# 7 priority-0 stragglers from r04 plus all round-5 additions (registry now
-# 200, 83 never-driver-checked, 50 of them in-cap) lead the r05 sweep.
-# scripts/self_correctness.py additionally runs the FULL registry every round
-# (CORRECTNESS_self_r{N}.json) so nothing is uncovered.
-_LAST_CHECKED_ROUND = {  # query -> most recent driver round that value-checked it
-    "ann_buckets": 2,
-    "ann_ivf_assign": 2,
-    "ann_ivf_kmeans_step": 2,
-    "ann_ivf_search": 2,
-    "ann_ivf_search_pruned": 4,
-    "ann_ivf_search_trained": 4,
-    "ann_lsh_pairs": 2,
-    "ann_lsh_pairs_t03": 2,
-    "bpe_merge_pairs": 4,
-    "chunk_documents": 4,
-    "conv_curation": 4,
-    "conv_dedup_exact": 4,
-    "conv_dedup_minhash": 4,
-    "conv_tool_stats": 4,
-    "conversation_text": 2,
-    "corpus_vocab": 2,
-    "curated_corpus": 4,
-    "curation_decisions": 2,
-    "dataset_build": 2,
-    "decontaminate_ngrams": 4,
-    "dedup_clusters": 3,
-    "dedup_edit_distance": 4,
-    "dedup_embedding_cosine": 2,
-    "dedup_exact": 3,
-    "dedup_minhash_lsh": 3,
-    "dedup_ngram_jaccard": 3,
-    "dedup_ngram_jaccard_pruned": 3,
-    "dedup_simhash": 2,
-    "dedup_simhash_pairs": 2,
-    "doc_fingerprints": 2,
-    "doc_rolling_hash": 2,
-    "dsir_importance_weights": 4,
-    "eval_coco_map": 3,
-    "eval_confusion": 3,
-    "eval_span_prf": 3,
-    "eval_teds": 3,
-    "events_asof_join": 4,
-    "events_json_extract": 3,
-    "events_range_join": 4,
-    "events_sessionize": 3,
-    "events_tumbling_stats": 3,
-    "extract_spans": 2,
-    "extract_text": 2,
-    "ice_bloom_lookup": 4,
-    "ice_delete_where": 4,
-    "ice_evolved_scan": 4,
-    "ice_extract_turns": 4,
-    "ice_incremental_read": 4,
-    "ice_merge_upsert": 4,
-    "ice_pruned_scan": 4,
-    "ice_sorted_scan": 4,
-    "ice_time_travel": 4,
-    "ice_zorder_scan": 4,
-    "knn_bruteforce": 2,
-    "lang_id": 2,
-    "line_dedup_ccnet": 4,
-    "lm_sequence_labels": 3,
-    "lm_token_tags": 3,
-    "match_assignments": 3,
-    "match_nms_candidates": 3,
-    "media_audio_rms": 2,
-    "media_catalog": 2,
-    "media_frame_sample": 2,
-    "media_gif_anim_frames": 4,
-    "media_gif_interlaced_stats": 4,
-    "media_gif_stats": 4,
-    "media_image_stats": 2,
-    "media_jpeg_color_stats": 4,
-    "media_jpeg_stats": 4,
-    "media_pdf_texts": 4,
-    "media_pdf_texts_aes": 4,
-    "media_pdf_texts_aes256": 4,
-    "media_pdf_texts_cid": 4,
-    "media_pdf_texts_encrypted": 4,
-    "media_pdf_texts_incremental": 4,
-    "media_pdf_texts_mixed": 4,
-    "media_pdf_texts_objstm": 4,
-    "media_png_stats": 4,
-    "mixture_weights": 4,
-    "pack_sequences": 4,
-    "pdf_layout_spans": 4,
-    "pii_scrub": 4,
-    "pubtables_cells": 2,
-    "quality_scores": 2,
-    "quality_surprisal": 4,
-    "rel_anti_join": 3,
-    "rel_cube_volume": 3,
-    "rel_explode_words": 3,
-    "rel_filter_project": 2,
-    "rel_intersect_except": 3,
-    "rel_join_revenue": 2,
-    "rel_label_histogram": 3,
-    "rel_mean_std": 3,
-    "rel_percentile": 2,
-    "rel_pricing_summary": 2,
-    "rel_repeated": 4,
-    "rel_rollup": 3,
-    "rel_semi_join": 3,
-    "rel_topk_orders": 2,
-    "rel_union_distinct": 2,
-    "rel_window_topk": 3,
-    "repetition_filters": 4,
-    "role_bigrams": 4,
-    "stratified_sample": 4,
-    "stream_dedup_ingest": 3,
-    "stream_extract_text": 3,
-    "stream_ice_sink": 3,
-    "stream_reassemble_windows": 3,
-    "stream_session_assembly": 3,
-    "table_cells": 2,
-    "table_html": 2,
-    "table_refined": 2,
-    "table_refined_csv": 2,
-    "tfidf_bm25_terms": 4,
-    "token_counts": 2,
-    "weighted_sample_es": 4,
-    "word_tokens": 2,
-}
-
-
-def _priority(name: str) -> int:
-    return _LAST_CHECKED_ROUND.get(name, 0)  # never-checked first, then stalest
-
-
-# The 7 queries never driver-checked through r04 (the r4 verdict's coverage
-# stragglers) lead the sweep outright so cumulative driver coverage of the
-# pre-r5 registry closes at 124/124 even under a tight cap.
-_SWEEP_FRONT = (
-    "events_gapfill_locf", "rel_array_ops", "rel_grouping_sets", "rel_pivot",
-    "rel_unpivot", "rel_window_suite", "stream_interval_join",
-)
-
-# Within the never-driver-checked block, family-redundant queries go last:
-# with 83 never-checked and a ~50 cap, ~33 must miss the driver sweep, so
-# the cut is chosen, not accidental — each tail query shares most of its
-# code path with an in-cap sibling (repl with ann_ivf_search_trained/_pruned;
-# hits/triangles/bfs with pagerank/components' edge-harvest plumbing;
-# cms with hll's hash-agg shape; split-assign and the expectations report
-# are thin layers over already-swept stats). All remain value-checked every
-# round by scripts/self_correctness.py.
-_P0_TAIL = {
-    "ann_ivf_search_repl",
-    "graph_hits",
-    "graph_triangles",
-    "graph_bfs_levels",
-    "sketch_cms_heavy",
-    "corpus_split_assign",
-    "data_expectations",
-    # shares the postings CTE + broadcast-terms plumbing with the in-cap
-    # search_boolean_and / search_bm25_ranked pair
-    "search_phrase_match",
-    # the ADC search query (in-cap) runs the PQ encoder inside its own plan
-    "ann_pq_codes",
-    # same pure-column quality-gate shape as the in-cap gopher/C4 rule gates
-    "quality_char_diversity",
-    # the encode side replays bpe_train_vocab's merge table (in-cap, whose
-    # unrolled oracle already value-checks the merge applications)
-    "bpe_encode_corpus",
-    # maintenance sweep over the same ref-walk the in-cap ice_changelog /
-    # r4-driver-green ice_* family already exercises
-    "ice_orphan_cleanup",
-    # one map-side hash agg over the transcript QI tuple — the identical
-    # shape as the in-cap crawl_host_rollup (and the r4-green expectations
-    # family)
-    "privacy_k_anon",
-    # driver-side walk of the same manifest rows the in-cap
-    # ice_metadata_agg (and the r4-driver-green ice_* family) already
-    # value-checks; only the binning arithmetic is new
-    "ice_binpack_plan",
-    # broadcast-model log-prob scoring per doc — same shape as the in-cap
-    # quality_perplexity_bigram
-    "classify_nb_lang",
-    # fixed-size mergeable bucket-table agg — same shape as the in-cap
-    # sketch_hll_distinct
-    "sketch_hdr_quantiles",
-    # narrow pure-column scan-map like the in-cap gopher/C4 gates (and the
-    # r4-driver-green pii_scrub shares its planted-PII fixture pattern)
-    "pii_luhn_validate",
-    # same loader-prep rank-window + broadcast-model-side shape as the
-    # in-cap loader_epoch_shuffle (weights side is r4-green mixture_weights)
-    "loader_mixture_schedule",
-    # chained user_id-keyed hash aggs + same-key equi-joins — the plan
-    # family of the in-cap events_gapfill_locf and the r3/r4-green
-    # events_* suite; funnel and retention are also each other's siblings
-    "events_funnel_steps",
-    "events_retention_cohorts",
-    # the partial-rewrite commit reuses the r4-driver-green CoW delete
-    # machinery verbatim (manifest-minus-candidates + replace commit);
-    # its planner half shares the manifest walk with in-cap ice_metadata_agg
-    "ice_rewrite_bin",
-    # grouped exact-percentile agg + broadcast |types|-sized stats joins —
-    # the rel_percentile (r2-green) family with a pure-integer gate
-    "events_anomaly_mad",
-    # same Arrow-batch codec shape as the in-cap media_video_frames /
-    # media_ahash_neardup (decode path itself is the r4-green media_png_stats)
-    "media_png_strip",
-    # the JPEG twin of media_png_strip (one shared strip stage; decode
-    # path is the r4-green media_jpeg_stats)
-    "media_jpeg_strip",
-    # keyed rank-window over a narrow map — the in-cap sample_host_quota
-    # window shape; the Feistel arithmetic itself is self-green and driven
-    # at 100M rows by scripts/loader_smoke.py
-    "loader_epoch_shuffle",
-    # split/filter/posexplode over the same synthesized-payload contract as
-    # the in-cap extract_markdown_text (one shared fixture family)
-    "extract_markdown_tables",
-    # narrow higher-order-function map over embeddings — the in-cap
-    # ann_pq_search_adc consumes the same code-array shape (and pq encode
-    # is its tailed sibling already)
-    "embed_quantize_int8",
-    # two regexp_extract verdict columns — the in-cap crawl_robots_filter
-    # owns the policy semantics; this is its page-level narrow-map sibling
-    "crawl_page_directives",
-    # one rank window over the r3-driver-green dedup_clusters relation —
-    # the policy swap, not a new candidate/cluster path
-    "dedup_cluster_keep_longest",
-    # manifest-list-aggregate walk — the in-cap ice_metadata_agg family's
-    # cheapest member (history() loads no manifests at all)
-    "ice_snapshot_history",
-    # conv-partitioned lag + hash agg — the r4-green role_bigrams /
-    # conv_tool_stats shuffle shape over the same ts formula
-    "conv_response_latency",
-    # the r2-green knn_bruteforce plan shape (same 20-query broadcast +
-    # rank window) over embed_quantize_int8's tailed code arrays
-    "knn_int8_search",
-    # two fused hash aggs + a lang rollup — every constituent figure is
-    # already value-checked by in-cap quality/dedup/lang queries
-    "corpus_release_manifest",
-}
-
-# Newest unique surfaces promoted to just after the r4 stragglers: the KMV
-# two-level bottom-k path and the exactly-once streaming near-dup ingest
-# share no plan shape with any other in-cap query, so under the ~50 cap they
-# must not sit at the registration-ordered end of the priority-0 block.
-_P0_PROMOTE = ("sketch_kmv_setops", "stream_neardup_ingest")
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    names = sorted(
-        QUERIES,
-        key=lambda n: (
-            n not in _SWEEP_FRONT,
-            _priority(n),
-            n not in _P0_PROMOTE,
-            n in _P0_TAIL,
-            list(QUERIES).index(n),
-        ),
-    )
-    return {n: QUERIES[n] for n in names}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

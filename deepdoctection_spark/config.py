@@ -10,7 +10,7 @@ shape is a plain dataclass (see plans/pipeline.py).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -83,13 +83,8 @@ class PipelineConfig:
     tag_density_threshold: float = 8.0
     # pdfish column clustering: new column when x-gap exceeds this
     column_gap: float = 100.0
-    # words-per-shingle etc. for dedup operators
-    shingle_k: int = 3
     # salting for skewed mega-conversations (0 = rely on AQE only)
     skew_salt_buckets: int = 0
-    # output contract
-    block_join: str = "\n"
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = PipelineConfig()

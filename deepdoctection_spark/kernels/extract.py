@@ -5,7 +5,7 @@ analyzer chain (layout → segmentation → text → matching → ordering → p
 parsing, /root/reference/deepdoctection/analyzer/dd.py:256-401) collapsed into
 one pure function over a (text, tool) payload:
 
-    extract_turn(text, tool) -> [(category, block_text, cells)]
+    extract_turn(text, tool) -> [Block]
     finalize_turn(conv_id, turn_idx, blocks) -> TurnExtraction
 
 Payload dispatch mirrors the reference's source-sensitive _entry
@@ -20,36 +20,72 @@ Output contract (pinned once — SURVEY.md §7 hard-part #1):
 - span offsets are [begin, end) char offsets into extracted_text;
 - reading_order enumerates blocks 0.. in emit order
   (reference: TextOrderService, pipe/order.py:566-772);
-- span ids are content-addressed md5 (kernels/ids.py).
+- span ids are content-addressed md5 (kernels/ids.py);
+- block and cell rows are dicts in the Arrow layout declared below
+  (``SCHEMA``), the only declaration of the stage's output: the Arrow stage
+  (operators/extraction.py) assigns the rows as they are and derives its
+  Spark schema from ``SCHEMA``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from hashlib import md5 as _md5
+
+import pyarrow as pa
+
 from deepdoctection_spark.kernels.html import extract_blocks_stream, looks_like_html
 from deepdoctection_spark.kernels.layout import extract_layout_blocks, looks_like_layout
-from deepdoctection_spark.kernels.table import TableCell, cells_to_html
+from deepdoctection_spark.kernels.table import Block, cells_to_html
 from deepdoctection_spark.kernels.textnorm import normalize_ws, word_spans
 
-
-@dataclass(slots=True)
-class Block:
-    category: str
-    text: str
-    cells: list[TableCell] = field(default_factory=list)
-
-
-@dataclass(slots=True)
-class SpanOut:
-    span_id: str
-    category: str
-    begin: int
-    end: int
-    reading_order: int
-    parent_id: str | None
-    score: float
-    attrs: dict[str, str]
+SPAN = pa.struct(
+    [
+        ("span_id", pa.string()),
+        ("category", pa.string()),
+        ("span_begin", pa.int32()),
+        ("span_end", pa.int32()),
+        ("reading_order", pa.int32()),
+        ("parent_id", pa.string()),
+        ("score", pa.float32()),
+    ]
+)
+CELL = pa.struct(
+    [
+        ("span_id", pa.string()),
+        ("span_begin", pa.int32()),
+        ("span_end", pa.int32()),
+        ("row_number", pa.int32()),
+        ("column_number", pa.int32()),
+        ("row_span", pa.int32()),
+        ("column_span", pa.int32()),
+        ("parent_id", pa.string()),
+        ("cell_text", pa.string()),
+    ]
+)
+WORD = pa.struct(
+    [
+        ("token", pa.string()),
+        ("span_begin", pa.int32()),
+        ("span_end", pa.int32()),
+        ("word_idx", pa.int32()),
+    ]
+)
+SCHEMA = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()),
+        ("role", pa.string()),
+        ("tool", pa.string()),
+        ("extracted_text", pa.string()),
+        ("n_blocks", pa.int32()),
+        ("blocks", pa.list_(SPAN)),
+        ("cells", pa.list_(CELL)),
+        ("words", pa.list_(WORD)),
+        ("table_html", pa.string()),
+        ("error", pa.string()),
+    ]
+)
 
 
 # Word-level spans travel as plain (idx, token, begin, end) tuples — the
@@ -64,10 +100,10 @@ WordTuple = tuple[int, str, int, int]
 @dataclass(slots=True)
 class TurnExtraction:
     extracted_text: str
-    blocks: list[SpanOut]
-    cells: list[SpanOut]
+    blocks: list[dict]  # SPAN rows
+    cells: list[dict]  # CELL rows
     words: list[WordTuple]
-    table_htmls: list[str]
+    table_html: str | None  # every table's HTML in block order, "\n"-joined
 
 
 def extract_turn(
@@ -81,13 +117,10 @@ def extract_turn(
     if text is None:
         return []
     if tool == "browser" or (tool not in ("pdf_reader",) and looks_like_html(text)):
-        # HtmlBlock is duck-compatible with Block (category/text/cells) —
-        # re-wrapping every block in a second dataclass was pure alloc churn
         # the single-pass streaming extractor (no tree materialization);
         # block-identical to kernels/html.extract_blocks (property-tested)
         return extract_blocks_stream(text, link_density_threshold, tag_density_threshold)
     if tool == "pdf_reader" or looks_like_layout(text):
-        # LayoutBlock carries category/text and an empty shared .cells
         return extract_layout_blocks(text, column_gap)
     norm = normalize_ws(text)
     return [Block("text", norm)] if norm else []
@@ -102,10 +135,9 @@ def finalize_turn(
     (operators/extraction.py) tokenizes the whole batch in one vectorized
     pass instead — per-row word_spans was the hottest single kernel
     (~1/3 of stage CPU at sf0.1)."""
-    texts = [b.text for b in blocks]
-    extracted = "\n".join(texts)
-    spans: list[SpanOut] = []
-    cell_spans: list[SpanOut] = []
+    extracted = "\n".join([b.text for b in blocks])
+    spans: list[dict] = []
+    cell_rows: list[dict] = []
     table_htmls: list[str] = []
     offset = 0
     # span_id contract inlined (kernels/ids.py): the "{conv}|{turn}|" prefix
@@ -115,7 +147,15 @@ def finalize_turn(
         begin, end = offset, offset + len(b.text)
         sid = _md5(f"{pre}{b.category}|{begin}|{end}".encode()).hexdigest()
         spans.append(
-            SpanOut(sid, b.category, begin, end, order, None, 1.0, {})
+            {
+                "span_id": sid,
+                "category": b.category,
+                "span_begin": begin,
+                "span_end": end,
+                "reading_order": order,
+                "parent_id": None,
+                "score": 1.0,
+            }
         )
         if b.cells:
             table_htmls.append(cells_to_html(b.cells))
@@ -138,17 +178,18 @@ def finalize_turn(
                 if not first_in_row:
                     cursor += 1  # the joining space
                 cb, ce = cursor, cursor + len(c.text)
-                cid = _md5(f"{pre}cell|{cb}|{ce}".encode()).hexdigest()
-                cell_spans.append(
-                    SpanOut(
-                        cid, "cell", cb, ce, order, sid, 1.0,
-                        {
-                            "row_number": str(c.row_number),
-                            "column_number": str(c.column_number),
-                            "row_span": str(c.row_span),
-                            "column_span": str(c.column_span),
-                        },
-                    )
+                cell_rows.append(
+                    {
+                        "span_id": _md5(f"{pre}cell|{cb}|{ce}".encode()).hexdigest(),
+                        "span_begin": cb,
+                        "span_end": ce,
+                        "row_number": c.row_number,
+                        "column_number": c.column_number,
+                        "row_span": c.row_span,
+                        "column_span": c.column_span,
+                        "parent_id": sid,
+                        "cell_text": extracted[cb:ce],
+                    }
                 )
                 cursor = ce
                 first_in_row = False
@@ -156,7 +197,7 @@ def finalize_turn(
     return TurnExtraction(
         extracted,
         spans,
-        cell_spans,
+        cell_rows,
         word_spans(extracted) if with_words else [],
-        table_htmls,
+        "\n".join(table_htmls) if table_htmls else None,
     )

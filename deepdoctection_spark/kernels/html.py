@@ -17,10 +17,9 @@ from __future__ import annotations
 
 import re
 import types
-from dataclasses import dataclass, field
 from html import unescape as _unescape
 
-from deepdoctection_spark.kernels.table import TableCell, segment_table_grid
+from deepdoctection_spark.kernels.table import Block, TableCell, segment_table_grid
 from deepdoctection_spark.kernels.textnorm import _WS_RE
 
 # Alternatives: element tag | comment | DOCTYPE-style declaration | processing
@@ -288,19 +287,12 @@ def _has_block_child(node: Node) -> bool:
     return any(c.tag in _BLOCKISH and c.tag != "" for c in node.children)
 
 
-@dataclass(slots=True)
-class HtmlBlock:
-    category: str  # title | text | list | table
-    text: str
-    cells: list[TableCell] = field(default_factory=list)  # only for table
-
-
 def extract_blocks(
     html: str,
     link_density_threshold: float = 0.5,
     tag_density_threshold: float = 8.0,
     tag_density_min_tags: int = 3,
-) -> list[HtmlBlock]:
+) -> list[Block]:
     """Document-order main-content blocks after boilerplate stripping.
 
     Two readability-style density filters (reference analogue: score/NMS
@@ -316,7 +308,7 @@ def extract_blocks(
       blocks legitimately spend one element per item/cell.
     """
     root = parse_html(html)
-    out: list[HtmlBlock] = []
+    out: list[Block] = []
 
     def emit(
         node: Node,
@@ -343,7 +335,7 @@ def extract_blocks(
         if text is None:
             text = norm  # _gather_text output is already normalized
         if text:
-            out.append(HtmlBlock(category, text, cells or []))
+            out.append(Block(category, text, cells or ()))
 
     def walk(node: Node) -> None:
         # inline runs (text nodes + inline elements) between block children
@@ -433,7 +425,7 @@ def extract_blocks_stream(
     link_density_threshold: float = 0.5,
     tag_density_threshold: float = 8.0,
     tag_density_min_tags: int = 3,
-) -> list[HtmlBlock]:
+) -> list[Block]:
     """Single-pass streaming equivalent of :func:`extract_blocks`: lexer,
     density-stats gather, and block walk FUSED into one scan — no element
     tree is materialized except under a reached ``<table>`` (whose grid
@@ -456,7 +448,7 @@ def extract_blocks_stream(
     paths (text feed, plain-frame open/close, tag bumps) are inlined in
     the main loop; only reached-element open/close — a handful per
     document — pays a function call."""
-    out: list[HtmlBlock] = []
+    out: list[Block] = []
     split = _WS_RE.split
     n = len(html)
     blockish_set = _BLOCKISH
@@ -482,7 +474,7 @@ def extract_blocks_stream(
         if text is None:
             text = " ".join(scope[0])
         if text:
-            out.append(HtmlBlock(category, text, cells or []))
+            out.append(Block(category, text, cells or ()))
 
     # frame: [tag, role, scope_or_None, aux]
     #   aux: list frames -> item-text list; table frames -> root Node

@@ -19,10 +19,10 @@ boundary).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from operator import itemgetter
-from typing import ClassVar
 
+from deepdoctection_spark.kernels.table import Block
 from deepdoctection_spark.kernels.textnorm import normalize_ws
 
 _LINE_RE = re.compile(r"^@(-?\d+(?:\.\d+)?),(-?\d+(?:\.\d+)?):(.*)$")
@@ -33,18 +33,6 @@ class PositionedLine:
     x: float
     y: float
     content: str
-
-
-@dataclass
-class LayoutBlock:
-    category: str  # title | text
-    text: str
-    lines: list[PositionedLine] = field(default_factory=list)
-
-    # duck-compat with kernels.extract.Block: layout blocks never carry table
-    # cells; a shared immutable empty tuple (ClassVar — not a dataclass
-    # field) serves every instance with zero alloc
-    cells: ClassVar[tuple] = ()
 
 
 def parse_positioned_lines(payload: str) -> list[PositionedLine]:
@@ -141,7 +129,7 @@ def extract_layout_blocks(
     payload: str,
     column_gap: float = 100.0,
     paragraph_break: float | None = None,
-) -> list[LayoutBlock]:
+) -> list[Block]:
     """title block (unique topmost line) + one text block per column, in
     reading order (title, then columns left→right, sub-lines top→down).
     paragraph_break defaults to column_gap (a within-line gap wide enough to
@@ -161,17 +149,14 @@ def extract_layout_blocks(
     ]
     if not runs:
         return []
-    blocks: list[LayoutBlock] = []
+    blocks: list[Block] = []
     min_y = min(r[0] for r in runs)
     brk = column_gap if paragraph_break is None else paragraph_break
     tops = [r for r in runs if r[0] == min_y]
     if len(tops) == 1:
-        ty, tx, tc = tops[0]
-        tnorm = normalize_ws(tc)
+        tnorm = normalize_ws(tops[0][2])
         if tnorm:
-            blocks.append(
-                LayoutBlock("title", tnorm, lines=[PositionedLine(tx, ty, tc)])
-            )
+            blocks.append(Block("title", tnorm))
             # unique min-y run: any equal tuple would also be a top, so
             # remove-by-equality is remove-by-identity here
             runs.remove(tops[0])
@@ -202,5 +187,5 @@ def extract_layout_blocks(
     for bucket in cluster_columns(sub, column_gap):
         text = "\n".join(ln.content for ln in bucket if ln.content)
         if text:
-            blocks.append(LayoutBlock("text", text, lines=bucket))
+            blocks.append(Block("text", text))
     return blocks

@@ -14,6 +14,7 @@ Reference semantics re-expressed on DOM tables:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
@@ -31,6 +32,17 @@ class TableCell:
     column_number: int  # 1-based
     row_span: int = 1
     column_span: int = 1
+
+
+@dataclass(slots=True)
+class Block:
+    """One content block in reading order: what every payload decoder (HTML,
+    layout, plain text) emits and ``kernels/extract.finalize_turn`` reads.
+    Only table blocks carry cells."""
+
+    category: str  # title | text | list | table
+    text: str
+    cells: Sequence[TableCell] = ()
 
 
 # Span cap — browsers clamp similarly (HTML spec caps rowspan at 65534;

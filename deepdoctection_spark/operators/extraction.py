@@ -36,115 +36,27 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from deepdoctection_spark.config import DEFAULT_CONFIG, PipelineConfig
-from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
-
-_SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("span_id", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("span_begin", T.IntegerType()),
-        T.StructField("span_end", T.IntegerType()),
-        T.StructField("reading_order", T.IntegerType()),
-        T.StructField("parent_id", T.StringType()),
-        T.StructField("score", T.FloatType()),
-    ]
+from deepdoctection_spark.kernels.extract import (
+    CELL,
+    SCHEMA,
+    SPAN,
+    WORD,
+    extract_turn,
+    finalize_turn,
 )
 
-_CELL_STRUCT = T.StructType(
-    [
-        T.StructField("span_id", T.StringType()),
-        T.StructField("span_begin", T.IntegerType()),
-        T.StructField("span_end", T.IntegerType()),
-        T.StructField("row_number", T.IntegerType()),
-        T.StructField("column_number", T.IntegerType()),
-        T.StructField("row_span", T.IntegerType()),
-        T.StructField("column_span", T.IntegerType()),
-        T.StructField("parent_id", T.StringType()),
-        T.StructField("cell_text", T.StringType()),
-    ]
-)
-
-_WORD_STRUCT = T.StructType(
-    [
-        T.StructField("token", T.StringType()),
-        T.StructField("span_begin", T.IntegerType()),
-        T.StructField("span_end", T.IntegerType()),
-        T.StructField("word_idx", T.IntegerType()),
-    ]
-)
-
-EXTRACTION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("n_blocks", T.IntegerType()),
-        T.StructField("blocks", T.ArrayType(_SPAN_STRUCT)),
-        T.StructField("cells", T.ArrayType(_CELL_STRUCT)),
-        T.StructField("words", T.ArrayType(_WORD_STRUCT)),
-        T.StructField("table_html", T.StringType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-# pyarrow mirror of EXTRACTION_SCHEMA. The stage runs as mapInArrow and
-# builds RecordBatches with pyarrow's C conversion path directly: PySpark's
-# generic pandas→Arrow converter walks nested structs element-by-element in
-# Python (≈20× the cost of the extraction kernel itself, measured at sf0.1);
-# pa.array(list-of-dicts, type=...) does the same job in C.
-_PA_SPAN = pa.struct(
-    [
-        ("span_id", pa.string()),
-        ("category", pa.string()),
-        ("span_begin", pa.int32()),
-        ("span_end", pa.int32()),
-        ("reading_order", pa.int32()),
-        ("parent_id", pa.string()),
-        ("score", pa.float32()),
-    ]
-)
-_PA_CELL = pa.struct(
-    [
-        ("span_id", pa.string()),
-        ("span_begin", pa.int32()),
-        ("span_end", pa.int32()),
-        ("row_number", pa.int32()),
-        ("column_number", pa.int32()),
-        ("row_span", pa.int32()),
-        ("column_span", pa.int32()),
-        ("parent_id", pa.string()),
-        ("cell_text", pa.string()),
-    ]
-)
-_PA_WORD = pa.struct(
-    [
-        ("token", pa.string()),
-        ("span_begin", pa.int32()),
-        ("span_end", pa.int32()),
-        ("word_idx", pa.int32()),
-    ]
-)
-_PA_SCHEMA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("role", pa.string()),
-        ("tool", pa.string()),
-        ("extracted_text", pa.string()),
-        ("n_blocks", pa.int32()),
-        ("blocks", pa.list_(_PA_SPAN)),
-        ("cells", pa.list_(_PA_CELL)),
-        ("words", pa.list_(_PA_WORD)),
-        ("table_html", pa.string()),
-        ("error", pa.string()),
-    ]
-)
+# The stage runs as mapInArrow and builds RecordBatches with pyarrow's C
+# conversion path directly: PySpark's generic pandas→Arrow converter walks
+# nested structs element-by-element in Python (≈20× the cost of the
+# extraction kernel itself, measured at sf0.1); pa.array(list-of-dicts,
+# type=...) does the same job in C. The Spark schema is derived from the
+# kernel's Arrow layout, never written twice.
+_SCHEMA_TS = SCHEMA.append(pa.field("ts_us", pa.int64()))
+EXTRACTION_SCHEMA = from_arrow_schema(SCHEMA)
+EXTRACTION_SCHEMA_TS = from_arrow_schema(_SCHEMA_TS)
 
 
 def _batch_words(out_text: list[str]) -> pa.ListArray:
@@ -182,7 +94,7 @@ def _batch_words(out_text: list[str]) -> pa.ListArray:
             pa.array((begin[nonempty] + lens[nonempty]).astype(np.int32), pa.int32()),
             pa.array(word_idx[nonempty].astype(np.int32), pa.int32()),
         ],
-        fields=list(_PA_WORD),
+        fields=list(WORD),
     )
     w_offsets = nzcs[offs].astype(np.int32)  # words-per-row prefix sums
     return pa.ListArray.from_arrays(pa.array(w_offsets, pa.int32()), struct)
@@ -192,38 +104,21 @@ def _extract_batches(
     cfg: PipelineConfig, with_words: bool, keep_ts: bool = False
 ) -> "callable":
     ld, gap, td = cfg.link_density_threshold, cfg.column_gap, cfg.tag_density_threshold
-    schema = (
-        _PA_SCHEMA.append(pa.field("ts_us", pa.int64())) if keep_ts else _PA_SCHEMA
-    )
+    schema = _SCHEMA_TS if keep_ts else SCHEMA
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             n = rb.num_rows
-            idx = rb.schema.get_field_index
             # pass-through columns stay as Arrow arrays end-to-end (zero-copy
-            # into the output batch — no to_pylist + re-encode roundtrip);
-            # only the columns the Python kernels actually read are
-            # materialized. `role` never crosses into Python at all.
-            conv_arr = rb.column(idx("conv_id"))
-            tix_arr = rb.column(idx("turn_idx"))
-            roles_arr = rb.column(idx("role"))
-            tools_arr = rb.column(idx("tool"))
-            if conv_arr.type != pa.string():
-                conv_arr = conv_arr.cast(pa.string())
-            if tix_arr.type != pa.int32():
-                tix_arr = tix_arr.cast(pa.int32())
-            if roles_arr.type != pa.string():
-                roles_arr = roles_arr.cast(pa.string())
-            if tools_arr.type != pa.string():
-                tools_arr = tools_arr.cast(pa.string())
-            conv = conv_arr.to_pylist()
-            tix = tix_arr.to_pylist()
-            texts = rb.column(idx("text")).to_pylist()
-            tools = tools_arr.to_pylist()
+            # into the output batch); only the columns the Python kernels
+            # actually read are materialized. `role` never enters Python.
+            conv = rb.column("conv_id").to_pylist()
+            tix = rb.column("turn_idx").to_pylist()
+            texts = rb.column("text").to_pylist()
+            tools = rb.column("tool").to_pylist()
             out_text: list[str] = [""] * n
-            out_nb: list[int] = [0] * n
-            out_blocks: list[list] = [[] for _ in range(n)]
-            out_cells: list[list] = [[] for _ in range(n)]
+            out_blocks: list[list] = [[]] * n
+            out_cells: list[list] = [[]] * n
             out_html: list = [None] * n
             out_err: list = [None] * n
             for i in range(n):
@@ -232,78 +127,32 @@ def _extract_batches(
                     # words are NOT built per row: the whole batch's text is
                     # tokenized in one vectorized pass after the loop
                     # (_batch_words) — the per-row tokenizer was ~1/3 of
-                    # stage CPU
+                    # stage CPU. int() quarantines a null turn_idx.
                     fin = finalize_turn(conv[i], int(tix[i]), blocks,
                                         with_words=False)
-                    out_text[i] = fin.extracted_text
-                    out_nb[i] = len(fin.blocks)
-                    out_blocks[i] = [
-                        {
-                            "span_id": s.span_id,
-                            "category": s.category,
-                            "span_begin": s.begin,
-                            "span_end": s.end,
-                            "reading_order": s.reading_order,
-                            "parent_id": s.parent_id,
-                            "score": s.score,
-                        }
-                        for s in fin.blocks
-                    ]
-                    out_cells[i] = [
-                        {
-                            "span_id": s.span_id,
-                            "span_begin": s.begin,
-                            "span_end": s.end,
-                            "row_number": int(s.attrs["row_number"]),
-                            "column_number": int(s.attrs["column_number"]),
-                            "row_span": int(s.attrs["row_span"]),
-                            "column_span": int(s.attrs["column_span"]),
-                            "parent_id": s.parent_id,
-                            "cell_text": out_text[i][s.begin : s.end],
-                        }
-                        for s in fin.cells
-                    ]
-                    # every table's HTML, in block order (a turn can carry
-                    # several tables; keeping only the first silently
-                    # contradicts the cells output)
-                    out_html[i] = (
-                        "\n".join(fin.table_htmls) if fin.table_htmls else None
-                    )
                 except Exception as exc:  # quarantine, never throw
-                    # reset EVERY output (a failure after partial assignment
-                    # must not leave a half-extracted row; also keeps the
-                    # batch tokenizer from emitting words for it)
-                    out_text[i] = ""
-                    out_nb[i] = 0
-                    out_blocks[i] = []
-                    out_cells[i] = []
-                    out_html[i] = None
                     out_err[i] = f"{type(exc).__name__}: {exc}"[:500]
-            if with_words:
-                words_arr = _batch_words(out_text)
-            else:
-                words_arr = pa.ListArray.from_arrays(
-                    pa.array(np.zeros(n + 1, np.int32), pa.int32()),
-                    pa.StructArray.from_arrays(
-                        [pa.array([], f.type) for f in _PA_WORD],
-                        fields=list(_PA_WORD),
-                    ),
-                )
+                    continue
+                out_text[i] = fin.extracted_text
+                out_blocks[i] = fin.blocks
+                out_cells[i] = fin.cells
+                out_html[i] = fin.table_html
+            blocks_arr = pa.array(out_blocks, pa.list_(SPAN))
             arrays = [
-                conv_arr,
-                tix_arr,
-                roles_arr,
-                tools_arr,
+                rb.column("conv_id"),
+                rb.column("turn_idx"),
+                rb.column("role"),
+                rb.column("tool"),
                 pa.array(out_text, pa.string()),
-                pa.array(out_nb, pa.int32()),
-                pa.array(out_blocks, pa.list_(_PA_SPAN)),
-                pa.array(out_cells, pa.list_(_PA_CELL)),
-                words_arr,
+                blocks_arr.value_lengths(),
+                blocks_arr,
+                pa.array(out_cells, pa.list_(CELL)),
+                _batch_words(out_text) if with_words else pa.array([[]] * n, pa.list_(WORD)),
                 pa.array(out_html, pa.string()),
                 pa.array(out_err, pa.string()),
             ]
             if keep_ts:
-                arrays.append(rb.column(rb.schema.get_field_index("ts_us")))
+                arrays.append(rb.column("ts_us"))
             yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
     return fn
@@ -319,24 +168,26 @@ def extract_transcripts(
 
     Narrow (shuffle-free); schema is the engine's get_meta_annotation analogue
     (/root/reference/deepdoctection/pipe/base.py:118-128): a declared output
-    contract per operator.
+    contract per operator. Pass-through key columns are cast to their output
+    types here, JVM-side, so the Arrow stage never casts.
 
     ``keep_ts`` threads the event-time column through the Arrow stage as
     int64 micros (restored to timestamp JVM-side) — required by the
     streaming surface, where the watermark column must survive the stage.
     """
-    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
-    sel = transcripts.select(*cols) if not keep_ts else transcripts.select(
-        *cols, F.unix_micros("ts").alias("ts_us")
+    cols = [
+        F.col("conv_id").cast("string"),
+        F.col("turn_idx").cast("int"),
+        F.col("role").cast("string"),
+        "text",
+        F.col("tool").cast("string"),
+    ]
+    if keep_ts:
+        cols.append(F.unix_micros("ts").alias("ts_us"))
+    out = transcripts.select(*cols).mapInArrow(
+        _extract_batches(cfg, with_words, keep_ts),
+        schema=EXTRACTION_SCHEMA_TS if keep_ts else EXTRACTION_SCHEMA,
     )
-    schema = (
-        EXTRACTION_SCHEMA
-        if not keep_ts
-        else T.StructType(
-            EXTRACTION_SCHEMA.fields + [T.StructField("ts_us", T.LongType())]
-        )
-    )
-    out = sel.mapInArrow(_extract_batches(cfg, with_words, keep_ts), schema=schema)
     if keep_ts:
         out = out.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
     return out
@@ -348,44 +199,22 @@ def block_spans(extracted: DataFrame) -> DataFrame:
     return extracted.select(
         "conv_id", "turn_idx", F.explode("blocks").alias("b")
     ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("b.span_id").alias("span_id"),
-        F.col("b.category").alias("category"),
-        F.col("b.span_begin").alias("span_begin"),
-        F.col("b.span_end").alias("span_end"),
-        F.col("b.reading_order").alias("reading_order"),
+        "conv_id", "turn_idx",
+        "b.span_id", "b.category", "b.span_begin", "b.span_end", "b.reading_order",
     )
 
 
 def cell_spans(extracted: DataFrame) -> DataFrame:
     return extracted.select(
         "conv_id", "turn_idx", F.explode("cells").alias("c")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("c.span_id").alias("span_id"),
-        F.col("c.span_begin").alias("span_begin"),
-        F.col("c.span_end").alias("span_end"),
-        F.col("c.row_number").alias("row_number"),
-        F.col("c.column_number").alias("column_number"),
-        F.col("c.row_span").alias("row_span"),
-        F.col("c.column_span").alias("column_span"),
-        F.col("c.parent_id").alias("parent_id"),
-        F.col("c.cell_text").alias("cell_text"),
-    )
+    ).select("conv_id", "turn_idx", "c.*")
 
 
 def word_tokens(extracted: DataFrame) -> DataFrame:
     return extracted.select(
         "conv_id", "turn_idx", F.explode("words").alias("w")
     ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("w.word_idx").alias("word_idx"),
-        F.col("w.token").alias("token"),
-        F.col("w.span_begin").alias("span_begin"),
-        F.col("w.span_end").alias("span_end"),
+        "conv_id", "turn_idx", "w.word_idx", "w.token", "w.span_begin", "w.span_end"
     )
 
 

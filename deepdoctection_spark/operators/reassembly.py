@@ -27,17 +27,6 @@ from pyspark.sql import functions as F
 from deepdoctection_spark.config import DEFAULT_CONFIG, PipelineConfig
 
 
-def with_turn_order(extracted: DataFrame) -> DataFrame:
-    """Attach a dense per-conversation position via the canonical window
-    (Window.partitionBy(conv_id).orderBy(turn_idx)) — the cross-row analogue of
-    the reference's reading_order sub-category
-    (/root/reference/deepdoctection/pipe/order.py:566-772)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return extracted.withColumn("turn_order", F.row_number().over(w))
-
-
 def reassemble_conversations(
     extracted: DataFrame,
     text_col: str = "extracted_text",

@@ -2058,26 +2058,29 @@ class IceTable:
         wanted = set(paths)
         if not wanted:
             return self.snapshot()
-        carried_refs: list[dict] = []
+        # validate the whole plan before writing anything: a stale plan
+        # must not leave survivor manifests behind
+        kept: list[dict | list[dict]] = []  # carried ref, or survivor entries
         candidates: list[dict] = []
-        n_carried = 0
         for ref in refs:
             entries = self._load_manifest(ref["path"])
             cand = [e for e in entries if e["path"] in wanted]
             if not cand:
-                carried_refs.append(ref)
-                n_carried += ref["n_files"]
+                kept.append(ref)
                 continue
             candidates.extend(cand)
             survivors = [e for e in entries if e["path"] not in wanted]
-            n_carried += len(survivors)
             if survivors:
-                carried_refs.append(self._write_manifest(survivors))
+                kept.append(survivors)
         missing = wanted - {e["path"] for e in candidates}
         if missing:
             raise ValueError(
                 f"rewrite_files: {sorted(missing)} not in the current "
                 "snapshot — re-plan against HEAD")
+        carried_refs = [
+            self._write_manifest(k) if isinstance(k, list) else k for k in kept
+        ]
+        n_carried = sum(r["n_files"] for r in carried_refs)
         spec = prev.get("partition_by")
         df = self._read_with_deletes(
             spark, prev["schema"], candidates, prev).coalesce(target_files)

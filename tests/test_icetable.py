@@ -1377,6 +1377,21 @@ def test_rewrite_files_unknown_path_raises(spark, tbl):
         tbl.rewrite_files(spark, ["nope.parquet"])
 
 
+def test_rewrite_files_stale_plan_writes_no_manifest(spark, tbl):
+    """A plan naming one live file (whose manifest has survivors) and one
+    gone file must fail before any survivor manifest is written."""
+    tbl.append(_df(spark, 0, 90).repartition(3))
+    live = tbl.snapshot()["files"][0]["path"]
+
+    def manifests():
+        return {f for f in os.listdir(tbl.meta_dir) if f.startswith("manifest-")}
+
+    before = manifests()
+    with pytest.raises(ValueError, match="re-plan"):
+        tbl.rewrite_files(spark, [live, "nope.parquet"])
+    assert manifests() == before
+
+
 def test_history_tracks_every_commit_kind(spark, tbl):
     tbl.append(_df(spark, 0, 50).coalesce(1))
     tbl.delete_where(spark, ("id", "<", 10), mode="mor")

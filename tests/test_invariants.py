@@ -5,6 +5,7 @@ parallelism, salted-vs-unsalted equivalence, and plan-shape guarantees
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from deepdoctection_spark.config import PipelineConfig
@@ -133,10 +134,12 @@ def test_mega_conversation_skew_path(spark, sf_small):
     assert mega[0][2].startswith(first_turn)
 
 
-def test_poison_row_quarantined_not_fatal(spark):
+@pytest.mark.parametrize("tix_type", ["int", "bigint"])
+def test_poison_row_quarantined_not_fatal(spark, tix_type):
     """Row-level error quarantine (the MappingContextManager contract,
     SURVEY §2.9): a poison row yields an `error` value and empty outputs;
-    the batch and the job survive."""
+    the batch and the job survive. A bigint turn_idx is cast to int before
+    the Arrow stage and quarantines the same way."""
     rows = [
         ("c1", 0, "user", "good text", "", None),
         ("c1", None, "user", "poison: null turn_idx", "", None),  # int(None) raises
@@ -144,16 +147,39 @@ def test_poison_row_quarantined_not_fatal(spark):
     ]
     df = spark.createDataFrame(
         rows,
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        f"conv_id string, turn_idx {tix_type}, role string, text string, "
+        "tool string, ts timestamp",
     )
     out = extract_transcripts(df, with_words=True).collect()
     assert len(out) == 3
-    by_text = {r["text"] if "text" in r else None: r for r in out}
     errs = [r for r in out if r["error"] is not None]
-    good = [r for r in out if r["error"] is None]
-    assert len(errs) == 1 and len(good) == 2
+    good = sorted((r for r in out if r["error"] is None), key=lambda r: r["turn_idx"])
+    assert len(errs) == 1 and errs[0]["error"].startswith("TypeError")
     assert errs[0]["extracted_text"] == "" and errs[0]["blocks"] == []
-    assert {g["extracted_text"] for g in good} == {"good text", "also good"}
+    assert [(g["turn_idx"], g["extracted_text"], g["n_blocks"], len(g["words"]))
+            for g in good] == [(0, "good text", 1, 2), (2, "also good", 1, 2)]
+
+
+def test_extraction_schema_frozen():
+    """The Spark output schema, derived from the kernel's Arrow layout."""
+    from deepdoctection_spark.operators.extraction import (
+        EXTRACTION_SCHEMA,
+        EXTRACTION_SCHEMA_TS,
+    )
+
+    body = (
+        "conv_id:string,turn_idx:int,role:string,tool:string,"
+        "extracted_text:string,n_blocks:int,"
+        "blocks:array<struct<span_id:string,category:string,span_begin:int,"
+        "span_end:int,reading_order:int,parent_id:string,score:float>>,"
+        "cells:array<struct<span_id:string,span_begin:int,span_end:int,"
+        "row_number:int,column_number:int,row_span:int,column_span:int,"
+        "parent_id:string,cell_text:string>>,"
+        "words:array<struct<token:string,span_begin:int,span_end:int,"
+        "word_idx:int>>,table_html:string,error:string"
+    )
+    assert EXTRACTION_SCHEMA.simpleString() == f"struct<{body}>"
+    assert EXTRACTION_SCHEMA_TS.simpleString() == f"struct<{body},ts_us:bigint>"
 
 
 def test_empty_doc_counts_zero_tokens(spark):

@@ -301,9 +301,9 @@ def test_finalize_offsets_and_ids():
     fin = finalize_turn("c", 0, blocks)
     assert fin.extracted_text == "T\nbody"
     (b0, b1) = fin.blocks
-    assert (b0.begin, b0.end, b0.reading_order) == (0, 1, 0)
-    assert (b1.begin, b1.end, b1.reading_order) == (2, 6, 1)
-    assert b0.span_id == span_id("c", 0, "title", 0, 1)
+    assert (b0["span_begin"], b0["span_end"], b0["reading_order"]) == (0, 1, 0)
+    assert (b1["span_begin"], b1["span_end"], b1["reading_order"]) == (2, 6, 1)
+    assert b0["span_id"] == span_id("c", 0, "title", 0, 1)
     # word spans over extracted text: (idx, token, begin, end) tuples
     assert [(wb, we) for _i, _t, wb, we in fin.words] == [(0, 1), (2, 6)]
 
@@ -390,8 +390,8 @@ def test_multiple_tables_all_in_html():
         "<table><tr><td>b</td></tr></table></body>"
     )
     fin = finalize_turn("c", 0, extract_turn(html, "browser"))
-    assert len(fin.table_htmls) == 2
-    assert "a" in fin.table_htmls[0] and "b" in fin.table_htmls[1]
+    first, second = fin.table_html.split("\n")
+    assert "a" in first and "b" in second
 
 
 def test_adversarial_rowspan_capped():

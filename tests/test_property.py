@@ -45,14 +45,16 @@ def test_extract_turn_total_and_offsets_valid(text, tool):
     et = fin.extracted_text
     # every span's offsets slice to a consistent substring
     for s in fin.blocks:
-        assert 0 <= s.begin <= s.end <= len(et)
+        assert 0 <= s["span_begin"] <= s["span_end"] <= len(et)
+    for c in fin.cells:
+        assert et[c["span_begin"] : c["span_end"]] == c["cell_text"]
     for _wi, tok, wb, we in fin.words:
         assert et[wb:we] == tok
         assert " " not in tok and "\n" not in tok
     # block texts joined with \n reconstruct extracted_text
-    assert "\n".join(et[s.begin : s.end] for s in fin.blocks) == et
+    assert "\n".join(et[s["span_begin"] : s["span_end"]] for s in fin.blocks) == et
     # reading order is dense 0..n-1
-    assert [s.reading_order for s in fin.blocks] == list(range(len(fin.blocks)))
+    assert [s["reading_order"] for s in fin.blocks] == list(range(len(fin.blocks)))
 
 
 @settings(max_examples=80, deadline=None, derandomize=True)
