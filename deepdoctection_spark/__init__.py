@@ -15,5 +15,9 @@ operator computes) follow the reference, cited per-module as file:line.
 
 __version__ = "0.1.0"
 
-from deepdoctection_spark.config import get_spark  # noqa: F401
+from deepdoctection_spark import zipcache as _zipcache
+
+_zipcache.install()  # Python workers stop re-reading zips at every task
+
+from deepdoctection_spark.config import get_spark  # noqa: F401,E402
 from deepdoctection_spark.analyzer import Analyzer, get_analyzer  # noqa: F401,E402

@@ -944,9 +944,11 @@ def stride_schedule(docs: DataFrame, weights: DataFrame,
     ``mixture_weights`` (what share) and ``epoch_shuffle`` (order within a
     source) into an executable epoch plan without any RNG state.
 
-    key_q3 = (2k − 1)·10⁹ DIV (2·weight_q6): exact BIGINT arithmetic, so
-    the schedule is bit-identical across engines, re-runs and cluster
-    sizes. Within-source k here is a per-source md5-ordered rank window;
+    key_q3 = (2k − 1)·10⁹ DIV (2·max(weight_q6, 1)): exact BIGINT
+    arithmetic, so the schedule is bit-identical across engines, re-runs
+    and cluster sizes. A source whose weight floors to 0 runs at the
+    smallest weight, 1 ppm, instead of dividing by zero. Within-source k
+    here is a per-source md5-ordered rank window;
     at 10^12 rows a production loader takes k from ``epoch_shuffle``'s
     shard-local rank instead (bounded window groups) and never sorts a
     whole source. The weights side is sources-sized and broadcast.
@@ -966,7 +968,8 @@ def stride_schedule(docs: DataFrame, weights: DataFrame,
                     "source")
         .select(
             "source", id_col, "k",
-            F.expr("((2 * k - 1) * 1000000000L) DIV (2 * weight_q6)")
+            F.expr("((2 * k - 1) * 1000000000L)"
+                   " DIV (2 * greatest(weight_q6, 1))")
             .alias("key_q3"),
         )
     )

@@ -845,6 +845,12 @@ def pq_search_adc(
     )
 
 
+def _nonzero(amax):
+    """The absmax scale divisor: an all-zero vector divides its zeros by 1,
+    so its codes are 0 instead of 0/0 (DuckDB NULL, Spark ANSI error)."""
+    return F.when(amax > 0, amax).otherwise(F.lit(1.0))
+
+
 def quantize_int8(embs: DataFrame) -> DataFrame:
     """Per-vector absmax int8 quantization — the storage format a 10^12-row
     vector corpus actually ships (4× smaller than float32, and the ADC/IVF
@@ -862,13 +868,15 @@ def quantize_int8(embs: DataFrame) -> DataFrame:
     order-free. Entirely JVM higher-order expressions: a narrow map, zero
     Python, zero shuffle.
 
+    An all-zero vector (amax = 0) gets zero codes and amax_q6 = 0.
+
     Returns (vec_id, n_dims, amax_q6, max_abs_code, sum_codes, codes_md5,
     err_abs_q6)."""
     xd = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     amax = F.array_max(F.transform(xd, F.abs))
     amax_q6 = F.floor(amax * 1e6).cast("long")
     codes = F.transform(
-        xd, lambda v: F.floor(v * 127.0 / amax + 0.5).cast("int"))
+        xd, lambda v: F.floor(v * 127.0 / _nonzero(amax) + 0.5).cast("int"))
     base = embs.select(
         "vec_id", xd.alias("xd"), amax_q6.alias("amax_q6"),
         codes.alias("codes"))
@@ -911,6 +919,8 @@ def knn_int8(embeddings: DataFrame, n_queries: int = 20,
     in Spark and DuckDB. Same plan shape as knn_bruteforce (broadcast
     queries × streaming corpus + one per-query rank window).
 
+    An all-zero query or corpus vector scores cos_q8 = 0.
+
     Output: (query_id, vec_id, cos_q8, rank)."""
     from pyspark.sql.window import Window
 
@@ -918,7 +928,7 @@ def knn_int8(embeddings: DataFrame, n_queries: int = 20,
     amax = F.array_max(F.transform(xd, F.abs))
     corpus = embeddings.select(
         "vec_id",
-        F.transform(xd, lambda v: F.floor(v * 127.0 / amax + 0.5)
+        F.transform(xd, lambda v: F.floor(v * 127.0 / _nonzero(amax) + 0.5)
                     .cast("long")).alias("codes"),
     )
     queries = embeddings.where(F.col("vec_id") < n_queries).select(
@@ -943,8 +953,9 @@ def knn_int8(embeddings: DataFrame, n_queries: int = 20,
         )
         .select(
             "query_id", "vec_id",
-            F.floor(F.col("num") / F.sqrt((F.col("nq") * F.col("nc"))
-                                          .cast("double")) * 1e8 + 0.5)
+            F.when(F.col("nq") * F.col("nc") == 0, F.lit(0)).otherwise(
+                F.floor(F.col("num") / F.sqrt((F.col("nq") * F.col("nc"))
+                                              .cast("double")) * 1e8 + 0.5))
             .cast("long").alias("cos_q8"),
         )
     )

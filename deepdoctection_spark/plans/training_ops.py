@@ -2896,7 +2896,8 @@ ranked AS (
   FROM documents
 )
 SELECT r.source, r.doc_id, r.k,
-       ((2 * r.k - 1) * 1000000000 // (2 * w.weight_q6))::BIGINT AS key_q3
+       ((2 * r.k - 1) * 1000000000
+          // (2 * greatest(w.weight_q6, 1)))::BIGINT AS key_q3
 FROM ranked r JOIN wts w USING (source)
 """,
 )
@@ -3062,7 +3063,8 @@ s AS (
 ),
 c AS (
   SELECT vec_id, xd, amax_q6,
-         list_transform(xd, v -> floor(v * 127.0 / amax + 0.5)::INT)
+         list_transform(xd, v -> floor(v * 127.0
+           / CASE WHEN amax > 0 THEN amax ELSE 1.0 END + 0.5)::INT)
            AS codes
   FROM s
 ),
@@ -3202,7 +3204,8 @@ s AS (
 ),
 c AS (
   SELECT vec_id,
-         list_transform(xd, v -> floor(v * 127.0 / amax + 0.5)::BIGINT)
+         list_transform(xd, v -> floor(v * 127.0
+           / CASE WHEN amax > 0 THEN amax ELSE 1.0 END + 0.5)::BIGINT)
            AS codes
   FROM s
 ),
@@ -3221,7 +3224,9 @@ sc AS (
 ),
 r AS (
   SELECT query_id, vec_id,
-         floor(num / sqrt((nq * nc)::DOUBLE) * 1e8 + 0.5)::BIGINT AS cos_q8
+         CASE WHEN nq * nc = 0 THEN 0
+              ELSE floor(num / sqrt((nq * nc)::DOUBLE) * 1e8 + 0.5)
+         END::BIGINT AS cos_q8
   FROM sc
 ),
 rk AS (

@@ -24,6 +24,12 @@ The scaling harness (scripts/scaling_bench.py) runs this job at two
 parallelism levels on the same input and reports the scaling efficiency
 demanded by BASELINE.json north_rule (N vs 4N executors; sandbox stand-in:
 local[8] vs local[32]).
+
+Python workers: importing ``deepdoctection_spark`` (which every worker does
+to unpickle the extraction UDF, on any master, ``--py-files`` included)
+installs ``zipcache``, so a reused worker stops re-reading the zip archives
+on its path at every task (about 0.2 CPU-s per task on Python < 3.13). Each
+worker still pays the read on its first two tasks.
 """
 
 from __future__ import annotations

@@ -7,6 +7,7 @@ sorted by name; multiplicity-aware diff reporting).
 from __future__ import annotations
 
 import math
+import os
 from collections import Counter
 
 import duckdb
@@ -26,6 +27,22 @@ def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
+
+
+def sf_variant(sf_dir: str, out_dir, table: str, select_sql: str) -> str:
+    """A copy of the scale-factor dir at ``out_dir`` whose ``table`` is
+    ``select_sql`` (DuckDB, reading the original as ``src``); the other
+    tables are symlinked. Returns the new dir for ``compare_query``."""
+    os.makedirs(out_dir, exist_ok=True)
+    for t in TABLES:
+        if t != table:
+            os.symlink(f"{sf_dir}/{t}.parquet", f"{out_dir}/{t}.parquet")
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW src AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{table}.parquet')")
+        con.execute(f"COPY ({select_sql}) TO '{out_dir}/{table}.parquet' "
+                    "(FORMAT parquet)")
+    return str(out_dir)
 
 
 def _canon(v) -> str:

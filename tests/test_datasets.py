@@ -855,6 +855,29 @@ def test_stride_schedule_deterministic_across_partitioning(spark):
     assert a == b
 
 
+def test_stride_schedule_zero_weight_source_matches_oracle(spark, sf_small,
+                                                           tmp_path):
+    """A source with no tokens floors to weight_q6 = 0; both engines
+    schedule it at 1 ppm instead of dividing by zero."""
+    from deepdoctection_spark.operators.corpusprep import mixture_weights
+    from deepdoctection_spark.plans import training_ops  # noqa: F401
+    from deepdoctection_spark.plans.registry import ORACLES, QUERIES
+    from tests.harness import compare_query, sf_variant
+
+    sf = sf_variant(
+        sf_small, tmp_path / "sf", "documents",
+        "SELECT doc_id, CASE WHEN source = 'src0' THEN '' ELSE text END"
+        " AS text, lang, source, n_chars FROM src")
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    wts = {r.source: r.weight_q6 for r in mixture_weights(docs).collect()}
+    assert wts["src0"] == 0 and min(v for k, v in wts.items() if k != "src0") > 0
+    name = "loader_mixture_schedule"
+    assert compare_query(spark, name, QUERIES[name], ORACLES[name], sf) == []
+    keys = [r.key_q3 for r in QUERIES[name](spark, sf)
+            .where("source = 'src0'").collect()]
+    assert len(keys) == 25 and min(keys) == 500000000
+
+
 def test_markdown_extract_semantics(spark):
     from deepdoctection_spark.operators.textstats import markdown_extract
 

@@ -225,3 +225,30 @@ def test_knn_int8_recall_vs_float_bruteforce(spark, sf_parity):
     # 8-bit absmax quantization of 64-dim vectors barely moves cosine
     # ranks: demand near-exact agreement on average
     assert mean_recall >= 0.9, (mean_recall, sorted(recalls))
+
+
+def test_int8_all_zero_vectors_match_oracle(spark, sf_small, tmp_path):
+    """An all-zero embedding quantizes to zero codes with amax_q6 = 0 and
+    scores cos_q8 = 0 in kNN, identically on Spark and DuckDB."""
+    from deepdoctection_spark.plans import training_ops  # noqa: F401
+    from deepdoctection_spark.plans.registry import ORACLES, QUERIES
+    from tests.harness import compare_query, sf_variant
+
+    sf = sf_variant(
+        sf_small, tmp_path / "sf", "embeddings",
+        "SELECT vec_id, CASE WHEN vec_id IN (3, 100)"
+        " THEN list_transform(embedding, v -> 0::FLOAT) ELSE embedding END"
+        " AS embedding, label FROM src")
+    for name in ("embed_quantize_int8", "knn_int8_search"):
+        assert compare_query(spark, name, QUERIES[name], ORACLES[name],
+                             sf) == []
+    zero = QUERIES["embed_quantize_int8"](spark, sf).where(
+        "vec_id IN (3, 100)").collect()
+    assert len(zero) == 2
+    for r in zero:
+        assert (r.amax_q6, r.max_abs_code, r.sum_codes, r.err_abs_q6) == (
+            0, 0, 0, 0)
+    # query 3 is the zero vector: every neighbour ties at 0, ranked by id
+    knn = sorted((r.rank, r.vec_id, r.cos_q8) for r in QUERIES[
+        "knn_int8_search"](spark, sf).where("query_id = 3").collect())
+    assert knn == [(1, 0, 0), (2, 1, 0), (3, 2, 0), (4, 4, 0), (5, 5, 0)]
