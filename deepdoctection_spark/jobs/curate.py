@@ -3,41 +3,38 @@
 The production "build the training set" path: fuse the per-doc keep/drop
 verdicts (near-dup clustering × quality × language — plans/training_ops
 `curation_decisions`, the capstone oracle query) and materialize the kept
-corpus with the same Iceberg-style commit protocol as jobs/resumable.py, so
-a killed run resumes without recomputation or duplication.
+corpus with the same commit protocol as jobs/resumable.py, so a killed run
+resumes without recomputation or duplication.
 
-Two committed stages, each data-then-manifest:
+Two committed stages, each an IceTable (sources/icetable.py) commit:
 
 1. **decisions** — the global pass (LSH pairs cross any bucketing, so this
-   cannot be incremental): curation_decisions(docs) written once to
-   {out}/decisions/ parquet, then a marker file commits it. A resume finds
-   the marker and reuses the decisions verbatim — decision stability across
-   attempts is what makes stage 2 idempotent.
-2. **curated corpus** — kept docs, bucketed by xxhash64(doc_id), written in
-   waves with dynamic partition overwrite + append-only wave manifests
-   (identical recovery semantics to run_resumable_extract: a torn wave is
-   replaced exactly, committed buckets are skipped).
+   cannot be incremental): curation_decisions(docs) committed as ONE
+   snapshot of the table at {out}/decisions, partitioned by ``keep`` so the
+   kept/total counts come from the commit's own manifest entries. A resume
+   finds that snapshot and reuses the decisions verbatim — decision
+   stability across attempts is what makes stage 2 idempotent.
+2. **curated corpus** — kept docs, bucketed by xxhash64(doc_id), committed
+   to the WaveTable at {out} one wave of buckets per snapshot by
+   jobs/resumable.run_waves (identical recovery semantics to
+   run_resumable_extract: a torn wave is invisible and rerun, committed
+   buckets are skipped).
 
-Reference analogue: the dataflow save/checkpoint surface
-(/root/reference/deepdoctection/datapoint/image.py:635-674) — single-node
-JSON dumps there; partition-manifest commits here.
+Reference analogue: the dataflow save/checkpoint surface (deepdoctection's
+``Image.save``) — single-node JSON dumps there; table commits here.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deepdoctection_spark.jobs.resumable import pending_buckets, read_manifest
-
-BUCKET_COL = "part_bucket"
-_DECISIONS_MARKER = "_decisions_committed.json"
+from deepdoctection_spark.jobs.resumable import BUCKET_COL, WaveTable, read_manifest, run_waves
+from deepdoctection_spark.sources.icetable import IceTable
 
 
 def curation_decisions(docs: DataFrame) -> DataFrame:
@@ -81,32 +78,6 @@ class CurationResult:
     waves: int = 0
 
 
-def _commit_decisions(
-    spark: SparkSession, docs: DataFrame, out_dir: str
-) -> tuple[DataFrame, bool]:
-    """Stage 1: write decisions once; reuse on resume. Returns (decisions,
-    reused)."""
-    marker = os.path.join(out_dir, _DECISIONS_MARKER)
-    ddir = os.path.join(out_dir, "decisions")
-    if os.path.exists(marker):
-        return spark.read.parquet(ddir), True
-    dec = curation_decisions(docs)
-    dec.write.mode("overwrite").parquet(ddir)
-    stats = (
-        spark.read.parquet(ddir)
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("keep").cast("long")).alias("kept"),
-        )
-        .collect()[0]
-    )
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"n_docs": int(stats["n"]), "n_kept": int(stats["kept"] or 0)}, f)
-    os.rename(tmp, marker)  # atomic: decisions are committed only now
-    return spark.read.parquet(ddir), False
-
-
 def run_resumable_curation(
     spark: SparkSession,
     docs: DataFrame,
@@ -115,104 +86,37 @@ def run_resumable_curation(
     wave_size: int = 8,
     fail_after_waves: int | None = None,
 ) -> CurationResult:
-    """Run (or resume) the full curation into ``out_dir``.
-
-    ``fail_after_waves`` injects a crash after N committed corpus waves (the
-    kill/resume test hook, mirroring run_resumable_extract)."""
-    job_id = uuid.uuid4().hex[:12]
-    os.makedirs(out_dir, exist_ok=True)
-    decisions, reused = _commit_decisions(spark, docs, out_dir)
-    with open(os.path.join(out_dir, _DECISIONS_MARKER)) as f:
-        dstats = json.load(f)
-
-    prior = read_manifest(out_dir)
-    prior_nb = {e["n_buckets"] for e in prior if "n_buckets" in e}
-    if prior_nb and prior_nb != {n_buckets}:
-        raise ValueError(
-            f"manifest at {out_dir} was written with n_buckets={sorted(prior_nb)}; "
-            f"resume must use the same value (got {n_buckets})"
-        )
-    attempt = len({e.get("job_id") for e in prior}) + 1
-    pending = pending_buckets(out_dir, n_buckets)
+    """Run (or resume) the full curation into ``out_dir`` (``fail_after_waves``
+    counts corpus waves: see jobs/resumable.run_waves)."""
+    # stage 1: the decisions snapshot is the commit; a resume reuses it
+    decisions = IceTable(os.path.join(out_dir, "decisions"))
+    reused = decisions.current_seq() > 0
+    if not reused:
+        decisions.append(curation_decisions(docs), partition_by="keep")
+    files = decisions.snapshot()["files"]
     res = CurationResult(
-        job_id=job_id,
+        job_id=uuid.uuid4().hex[:12],
         n_buckets=n_buckets,
         decisions_reused=reused,
-        n_docs=dstats["n_docs"],
-        n_kept=dstats["n_kept"],
-        skipped_buckets=n_buckets - len(pending),
+        n_docs=sum(f["rows"] for f in files),
+        n_kept=sum(f["rows"] for f in files if f["partition"]["keep"] == "true"),
     )
-    if not pending:
-        return res
-
-    os.makedirs(os.path.join(out_dir, "_manifest"), exist_ok=True)
-    data_dir = os.path.join(out_dir, "data")
-    kept = (
-        docs.join(decisions.where("keep").select("doc_id", "pred_lang", "quality"),
-                  "doc_id")
-        .withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
-        .persist()  # every wave filters this by bucket; released below
+    kept = docs.join(
+        decisions.read(spark).where("keep").select("doc_id", "pred_lang", "quality"),
+        "doc_id",
+    ).withColumn(
+        BUCKET_COL, F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
-    try:
-        for wi in range(0, len(pending), wave_size):
-            wave = pending[wi : wi + wave_size]
-            t0 = time.time()
-            (
-                kept.where(F.col(BUCKET_COL).isin(wave))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BUCKET_COL)
-                .parquet(data_dir)
-            )
-            wall_ms = int((time.time() - t0) * 1000)
-            counts = {
-                r[BUCKET_COL]: r["cnt"]
-                for r in spark.read.parquet(data_dir)
-                .where(F.col(BUCKET_COL).isin(wave))
-                .groupBy(BUCKET_COL)
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            }
-            entries = [
-                {
-                    "bucket": int(b),
-                    "status": "done",
-                    "rows": int(counts.get(b, 0)),
-                    "wall_ms": wall_ms,
-                    "wave": res.waves,
-                    "attempt": attempt,
-                    "job_id": job_id,
-                    "n_buckets": n_buckets,
-                }
-                for b in wave
-            ]
-            mpath = os.path.join(
-                out_dir, "_manifest", f"wave-{job_id}-{res.waves}.json"
-            )
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(entries, f)
-            os.rename(tmp, mpath)
-            res.processed_buckets.extend(int(b) for b in wave)
-            res.waves += 1
-            if fail_after_waves is not None and res.waves >= fail_after_waves:
-                raise RuntimeError(f"injected failure after {res.waves} waves")
-    finally:
-        kept.unpersist()
-    return res
+    return run_waves(out_dir, kept, res, wave_size, fail_after_waves)
 
 
 def load_curated(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read back ONLY manifest-committed buckets of the curated corpus."""
-    done = sorted(
-        {e["bucket"] for e in read_manifest(out_dir) if e["status"] == "done"}
-    )
-    data_dir = os.path.join(out_dir, "data")
-    if not done or not os.path.isdir(data_dir):
+    """The committed curated corpus (a read of the WaveTable at ``out_dir``:
+    files of a torn wave are invisible)."""
+    table = WaveTable(out_dir)
+    if not table.current_seq():
         raise FileNotFoundError(f"no committed curated data under {out_dir}")
-    return spark.read.parquet(data_dir).where(F.col(BUCKET_COL).isin(done))
+    return table.read(spark)
 
 
 def publish_curated(
@@ -224,7 +128,7 @@ def publish_curated(
     """Publish the completed curation run as an IceTable snapshot — the
     consumable "training set vN" table.
 
-    The wave-bucketed parquet under ``out_dir`` is a WRITE layout (resume
+    The wave-bucketed table at ``out_dir`` is a WRITE layout (resume
     granularity); readers want a TABLE: one atomic version with snapshot
     isolation, history (each publish is an overwrite commit, so corpus v1
     remains time-travelable after v2 lands), and prunable file metadata.
@@ -237,16 +141,15 @@ def publish_curated(
     the corpus. Requires ALL buckets committed: publishing a torn run would
     freeze a partial corpus into a version.
     """
-    done = {e["bucket"] for e in read_manifest(out_dir) if e["status"] == "done"}
-    n_buckets = {e["n_buckets"] for e in read_manifest(out_dir) if "n_buckets" in e}
-    missing = set(range(max(n_buckets))) - done if n_buckets else set()
+    manifest = read_manifest(out_dir)
+    n_buckets = {e["n_buckets"] for e in manifest}
+    missing = (set(range(max(n_buckets))) - {e["bucket"] for e in manifest}
+               if n_buckets else set())
     if not n_buckets or missing:
         raise RuntimeError(
             f"curation at {out_dir} is incomplete (missing buckets "
             f"{sorted(missing) if n_buckets else 'all'}); resume it before publishing"
         )
-    from deepdoctection_spark.sources.icetable import IceTable
-
     corpus = load_curated(spark, out_dir).drop(BUCKET_COL)
     t = IceTable(table_path)
     # each publish is one commit = one corpus version (v1 stays

@@ -222,9 +222,15 @@ def epoch_shuffle(df: DataFrame, id_col: str = "doc_id",
     the rank implicit in file order.
 
     Output: (epoch, id, perm, shard, rank_in_shard) — bit-identical across
-    engines (md5 + integer arithmetic only).
+    engines (md5 + integer arithmetic only). An id outside [0, 2^32) raises:
+    its halves would pass 16 bits and perms could collide.
     """
     idc = F.col(id_col).cast("long")
+    idc = F.when(
+        (idc < 0) | (idc >= FEISTEL_HALF * FEISTEL_HALF),
+        F.raise_error(F.concat(F.lit("epoch_shuffle: id outside [0, 2^32): "),
+                               idc.cast("string"))),
+    ).otherwise(idc)
     e = df.select(idc.alias("id")).withColumn(
         "epoch", F.explode(F.array(*[F.lit(i) for i in range(epochs)]))
     )

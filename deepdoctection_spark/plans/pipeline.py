@@ -853,9 +853,13 @@ def q_privacy_k_anon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EPOCH_SHUFFLE_ORACLE = """
 WITH ep AS (SELECT unnest([0, 1, 2]) AS epoch),
-s0 AS (SELECT epoch, doc_id AS id, (doc_id // 65536)::BIGINT AS l0,
-              (doc_id % 65536)::BIGINT AS r0
-       FROM documents, ep),
+ids AS (SELECT CASE WHEN doc_id < 0 OR doc_id >= 4294967296
+                    THEN error('epoch_shuffle: id outside [0, 2^32): ' || doc_id)
+                    ELSE doc_id END AS id
+        FROM documents),
+s0 AS (SELECT epoch, id, (id // 65536)::BIGINT AS l0,
+              (id % 65536)::BIGINT AS r0
+       FROM ids, ep),
 s1 AS (SELECT epoch, id, r0 AS l1,
        xor(l0, ('0x' || substr(md5('shuf#' || epoch || '#0#' || r0),
                                1, 4))::BIGINT) AS r1 FROM s0),

@@ -108,9 +108,9 @@ latency stays flat in table size AND in per-commit data volume. Commits of
 ≤ ``_DRIVER_HARVEST_MAX`` files skip the job-scheduling overhead and run
 the IDENTICAL harvest function on the driver.
 
-jobs/resumable.py keeps its wave-level manifest (per-bucket throughput
-metrics feed); IceTable is the table-level commit/lineage layer underneath
-the same two-step protocol. scripts/curate_job.py composes both.
+The checkpointed jobs (jobs/resumable.py, jobs/curate.py) commit each wave
+as one ``append`` whose ``extra`` carries the wave record; their per-bucket
+metrics feed is a fold over :meth:`snapshot_log`.
 """
 
 from __future__ import annotations
@@ -141,19 +141,29 @@ _DRIVER_HARVEST_MAX = 4
 _MAX_MANIFEST_PARTITIONS = 64
 
 
-def _file_stats(path: str) -> tuple[int, dict[str, dict]]:
-    """Row count + per-column {min,max,nulls} from the parquet footer
-    (merged across row groups). Columns without footer stats (nested types,
-    binary) simply get no entry → never pruned on."""
+def _file_stats(path: str) -> tuple[int, dict[str, dict], dict[str, int]]:
+    """Row count, per-column {min,max,nulls} and per-column null counts from
+    the parquet footer (merged across row groups). Columns without footer
+    min/max (nested types, binary, all-null) get no ``stats`` entry → never
+    pruned on. A top-level column gets a null count (Iceberg's
+    ``null_value_counts``) when every row group records one, so an all-null
+    column is counted even though it has no ``stats`` entry."""
     meta = pq.ParquetFile(path).metadata
     stats: dict[str, dict] = {}
+    nulls: dict[str, int | None] = {}
     for rg in range(meta.num_row_groups):
         g = meta.row_group(rg)
         for ci in range(g.num_columns):
             col = g.column(ci)
             s = col.statistics
             name = col.path_in_schema
-            if "." in name or s is None or not s.has_min_max:
+            if "." in name:
+                continue
+            if s is None or not s.has_null_count:
+                nulls[name] = None  # a row group without a count: unknown
+            elif nulls.get(name, 0) is not None:
+                nulls[name] = nulls.get(name, 0) + s.null_count
+            if s is None or not s.has_min_max:
                 continue
             mn, mx = s.min, s.max
             if isinstance(mn, bytes):
@@ -174,7 +184,8 @@ def _file_stats(path: str) -> tuple[int, dict[str, dict]]:
                 cur["min"] = min(cur["min"], mn)
                 cur["max"] = max(cur["max"], mx)
                 cur["nulls"] += int(s.null_count or 0)
-    return meta.num_rows, stats
+    return meta.num_rows, stats, {c: n for c, n in nulls.items()
+                                  if n is not None}
 
 
 class CommitConflict(RuntimeError):
@@ -266,8 +277,9 @@ def _harvest_entry(data_dir: str, meta_dir: str, rel: str,
     """One manifest entry for one committed data file: footer stats, the
     partition value re-derived from the Hive path, Bloom sidecars written
     as a side effect. Pure function of the file — safe to run anywhere."""
-    rows, stats = _file_stats(os.path.join(data_dir, rel))
-    entry: dict = {"path": rel, "rows": rows, "stats": stats}
+    rows, stats, nulls = _file_stats(os.path.join(data_dir, rel))
+    entry: dict = {"path": rel, "rows": rows, "stats": stats,
+                   "null_value_counts": nulls}
     if partition_by:
         pdir = rel.split("/", 1)[0]
         entry["partition"] = {partition_by: pdir.split("=", 1)[1]}
@@ -398,6 +410,10 @@ def _manifest_partitions(entries: list[dict]) -> dict[str, list[str]] | None:
 
 
 class IceTable:
+    # the main branch's snapshot log (snap files, version hint), relative to
+    # the table path; a subclass may move it (jobs/resumable.WaveTable)
+    SNAPSHOT_DIR = "metadata"
+
     def __init__(self, path: str, branch: str | None = None) -> None:
         self.path = path
         self.data_dir = os.path.join(path, "data")
@@ -408,7 +424,7 @@ class IceTable:
         # branch-local snapshot JSON — Iceberg's branch model)
         self._snap_dir = (
             os.path.join(self.meta_dir, "branches", branch)
-            if branch else self.meta_dir)
+            if branch else os.path.join(path, self.SNAPSHOT_DIR))
 
     # -- snapshot resolution --------------------------------------------
 
@@ -470,6 +486,26 @@ class IceTable:
         if "files" not in raw:
             raw["files"] = self._snap_files(raw)
         return raw
+
+    def _added_files(self, raw: dict) -> list[dict]:
+        """Entries of the data files a snapshot added, from its added
+        manifests alone (or the inline list of a legacy snapshot)."""
+        if "added_manifests" in raw:
+            return [e for m in raw["added_manifests"]
+                    for e in self._load_manifest(m)]
+        by_path = {f["path"]: f for f in raw.get("files", [])}
+        return [by_path[p] for p in raw.get("added", []) if p in by_path]
+
+    def snapshot_log(self, newest_first: bool = False):
+        """Walk the snapshot log: each committed snapshot as stored (manifest
+        list and commit ``extra``, no file list) with ``added_files``, the
+        entries of the manifests that commit added — O(added files) per
+        snapshot, never the snapshot's full file list."""
+        seqs = self._committed_seqs()
+        for seq in reversed(seqs) if newest_first else seqs:
+            raw = self._raw_snapshot(seq)
+            raw["added_files"] = self._added_files(raw)
+            yield raw
 
     def history(self) -> list[dict]:
         """Lineage, oldest first: [{sequence, snapshot_id, parent, operation,
@@ -961,28 +997,32 @@ class IceTable:
                    "partition_by": prev.get("partition_by"),
                    "sort_by": prev.get("sort_by")})
 
+    def append_epoch(self, df: DataFrame, query_tag: str, epoch_id: int,
+                     **append_kw) -> bool:
+        """Epoch-guarded :meth:`append`: the commit records (query_tag,
+        epoch_id), and an epoch at or below the newest one already committed
+        under ``query_tag`` is detected against the snapshot log and skipped
+        (returns False) — a retried epoch lands its rows exactly once."""
+        for s in self.snapshot_log(newest_first=True):
+            if s.get("stream_query") == query_tag:
+                if int(s["stream_epoch"]) >= int(epoch_id):
+                    return False  # retried epoch: already committed
+                break
+        self.append(df, extra={"stream_query": query_tag,
+                               "stream_epoch": int(epoch_id)}, **append_kw)
+        return True
+
     def streaming_sink(self, query_tag: str = "stream"):
         """foreachBatch sink with exactly-once semantics over retried
-        micro-batches: each commit records (query_tag, epoch_id); a retried
+        micro-batches: each batch is an :meth:`append_epoch`, so a retried
         epoch (Structured Streaming re-runs a batch after failure BEFORE the
-        checkpoint advances) is detected against the snapshot log and
-        skipped, so rows land exactly once even though foreachBatch itself
-        is at-least-once. Usage::
+        checkpoint advances) is skipped and rows land exactly once even
+        though foreachBatch itself is at-least-once. Usage::
 
             stream.writeStream.foreachBatch(tbl.streaming_sink("extract"))
         """
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            for seq in reversed(self._committed_seqs()):
-                s = self._raw_snapshot(seq)
-                if s.get("stream_query") == query_tag:
-                    if int(s["stream_epoch"]) >= int(epoch_id):
-                        return  # retried epoch: already committed
-                    break
-            self.append(batch_df, extra={"stream_query": query_tag,
-                                         "stream_epoch": int(epoch_id)})
-
-        return sink
+        return lambda batch_df, epoch_id: self.append_epoch(
+            batch_df, query_tag, epoch_id)
 
     def delete_where(self, spark: SparkSession,
                      predicate: tuple[str, str, object],
@@ -1752,13 +1792,7 @@ class IceTable:
             if s["operation"] in ("replace", "rewrite-manifests"):
                 continue  # rewrites carry no new rows — skipping them
                 # keeps incremental consumers exactly-once
-            if "added_manifests" in s:
-                for mpath in s["added_manifests"]:
-                    added.extend(self._load_manifest(mpath))
-            else:  # legacy inline snapshot
-                by_path = {f["path"]: f for f in s["files"]}
-                added += [by_path[p] for p in s.get("added", [])
-                          if p in by_path]
+            added += self._added_files(s)
         if not added:
             return spark.createDataFrame([], schema=snap["schema"] or "dummy int")
         # the until-snapshot's deletes apply to the added files too, so an

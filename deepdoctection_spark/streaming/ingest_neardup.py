@@ -14,9 +14,9 @@ one partition); per-doc verdicts land in a third. Each micro-batch
      persisted index plus a candidate-bounded text fetch, so per-batch cost
      scales with the batch, never the corpus,
   3. appends accepted (is_new) docs to ``corpus``, their band keys to
-     ``index``, and the verdict rows to ``verdicts`` — each append
-     epoch-guarded like IceTable.streaming_sink, so foreachBatch's
-     at-least-once redelivery lands every row exactly once.
+     ``index``, and the verdict rows to ``verdicts`` — each append is
+     an ``IceTable.append_epoch`` (the commit behind IceTable.streaming_sink),
+     so foreachBatch's at-least-once redelivery lands every row exactly once.
 
 Batch-vs-stream contract: verdicts equal the serial replay of
 ``incremental_minhash_dedup`` over the same micro-batch partition of the
@@ -51,27 +51,11 @@ def _seq_before_epoch(tbl: IceTable, tag: str, epoch: int) -> int:
     """Greatest committed sequence NOT written by (tag, >= epoch) — the
     table state this epoch must compute against, even on redelivery after
     a partial commit. 0 = empty table."""
-    for seq in reversed(tbl._committed_seqs()):
-        s = tbl._raw_snapshot(seq)
+    for s in tbl.snapshot_log(newest_first=True):
         if s.get("stream_query") == tag and int(s.get("stream_epoch", -1)) >= epoch:
             continue
-        return seq
+        return s["sequence"]
     return 0
-
-
-def _append_once(tbl: IceTable, df: DataFrame, tag: str, epoch: int,
-                 **append_kw) -> bool:
-    """Epoch-guarded append (the streaming_sink contract, callable with a
-    derived DataFrame): returns False when this epoch already committed."""
-    for seq in reversed(tbl._committed_seqs()):
-        s = tbl._raw_snapshot(seq)
-        if s.get("stream_query") == tag:
-            if int(s["stream_epoch"]) >= int(epoch):
-                return False
-            break
-    tbl.append(df, extra={"stream_query": tag, "stream_epoch": int(epoch)},
-               **append_kw)
-    return True
 
 
 class NearDupIngest:
@@ -113,11 +97,10 @@ class NearDupIngest:
             accepted = batch.join(
                 v.where(F.col("is_new")).select("doc_id"), "doc_id"
             )
-            _append_once(self.corpus, accepted, tag, epoch_id)
-            _append_once(self.index, self._index_of(accepted), tag, epoch_id,
-                         partition_by="band_id")
-            _append_once(
-                self.verdicts,
+            self.corpus.append_epoch(accepted, tag, epoch_id)
+            self.index.append_epoch(self._index_of(accepted), tag, epoch_id,
+                                    partition_by="band_id")
+            self.verdicts.append_epoch(
                 v.withColumn("epoch", F.lit(int(epoch_id)).cast("long")),
                 tag, epoch_id,
             )

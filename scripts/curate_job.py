@@ -2,8 +2,9 @@
 
 Runs (or resumes) jobs/curate.run_resumable_curation over a documents
 parquet table: fused keep/drop decisions (near-dup clusters × quality ×
-lang-id) committed once, then the kept corpus written in manifest-committed
-waves. Safe to kill at any point and re-run with the same arguments.
+lang-id) committed once, then the kept corpus committed one wave of buckets
+per IceTable snapshot. Safe to kill at any point and re-run with the same
+arguments.
 
 Usage:
     python scripts/curate_job.py --docs /root/testdata/sf0.01/documents.parquet \\

@@ -6,6 +6,7 @@ reassembly."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from deepdoctection_spark.operators.convprep import (
@@ -220,3 +221,25 @@ def test_epoch_shuffle_partitioning_invariance(spark):
     a = sorted(map(tuple, epoch_shuffle(df.coalesce(1), epochs=1).collect()))
     b = sorted(map(tuple, epoch_shuffle(df.repartition(16), epochs=1).collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("ids", [[5, 2**32 + 5], [-1]])
+def test_epoch_shuffle_rejects_ids_outside_32_bits_on_both_engines(
+        spark, sf_small, tmp_path, ids):
+    """Ids outside [0, 2^32) push the Feistel halves past 16 bits, so perms
+    could leave the domain and collide: both engines raise instead."""
+    import duckdb
+
+    from deepdoctection_spark.plans import pipeline  # noqa: F401 — registers
+    from deepdoctection_spark.plans.registry import ORACLES, QUERIES
+    from tests.harness import duckdb_con, sf_variant
+
+    sf = sf_variant(sf_small, tmp_path / "sf", "documents", " UNION ALL ".join(
+        f"(SELECT * REPLACE ({i}::BIGINT AS doc_id) FROM src LIMIT 1)"
+        for i in ids))
+    name = "loader_epoch_shuffle"
+    with pytest.raises(Exception, match="epoch_shuffle: id outside"):
+        QUERIES[name](spark, sf).collect()
+    with duckdb_con(sf) as con, pytest.raises(
+            duckdb.Error, match="epoch_shuffle: id outside"):
+        con.execute(ORACLES[name]).fetchall()

@@ -1402,3 +1402,14 @@ def test_history_tracks_every_commit_kind(spark, tbl):
     assert h[0]["total_rows"] == 50
     # compaction folds the MoR delete physically: 40 footer rows
     assert h[2]["total_rows"] == 40 and h[2]["total_files"] == 1
+
+
+def test_harvest_records_null_counts_of_all_null_columns(spark, tbl):
+    """An all-null column has a footer null count but no min/max: the entry
+    records the count under ``null_value_counts`` (Iceberg's field of that
+    name) and still gets no ``stats`` entry, so it is never pruned on."""
+    df = spark.createDataFrame([(i, None) for i in range(5)],
+                               "id long, note string").coalesce(1)
+    (entry,) = tbl.append(df)["files"]
+    assert entry["null_value_counts"] == {"id": 0, "note": 5}
+    assert "note" not in entry["stats"] and entry["stats"]["id"]["nulls"] == 0
