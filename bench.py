@@ -147,8 +147,8 @@ def main() -> None:
     )
 
     # mega-conversation stress: same rows, ~30% reassigned to ONE conv_id —
-    # the two-phase reassembly must keep this within ~1.5x of the uniform
-    # shape (phase 1 spreads the hot conv over many bounded chunk groups)
+    # the reassembly must keep this within ~1.5x of the uniform shape, though
+    # the hot conv is one aggregation group
     from pyspark.sql import functions as F
 
     t_skew = t_all.withColumn(

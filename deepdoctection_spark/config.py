@@ -83,8 +83,6 @@ class PipelineConfig:
     tag_density_threshold: float = 8.0
     # pdfish column clustering: new column when x-gap exceeds this
     column_gap: float = 100.0
-    # salting for skewed mega-conversations (0 = rely on AQE only)
-    skew_salt_buckets: int = 0
 
 
 DEFAULT_CONFIG = PipelineConfig()

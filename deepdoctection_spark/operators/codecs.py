@@ -252,12 +252,13 @@ def png_strip_metadata(raw: bytes) -> tuple[bytes, int]:
 
 
 def jpeg_strip_metadata(raw: bytes) -> tuple[bytes, int]:
-    """Privacy scrub for JPEG payloads: drop every APP1-APP15 segment (EXIF
-    with GPS/serials lives in APP1, vendor blobs in the rest) and every COM
-    comment, keeping APP0/JFIF and all coding segments (DQT/DHT/SOF/SOS).
-    Metadata segments precede SOS in a baseline stream, so the walk stops
-    at SOS and copies the entropy-coded tail verbatim — the scrub is
-    byte-neutral on image data by construction. Returns
+    """Privacy scrub for JPEG payloads: drop every APP1-APP15 segment but
+    APP14 (EXIF with GPS/serials lives in APP1, vendor blobs in the rest) and
+    every COM comment, keeping APP0/JFIF, APP14/Adobe (its colour transform
+    decides how a CMYK/YCCK scan decodes) and all coding segments
+    (DQT/DHT/SOF/SOS). Metadata segments precede SOS in a baseline stream,
+    so the walk stops at SOS and copies the entropy-coded tail verbatim —
+    the scrub is byte-neutral on image data by construction. Returns
     (stripped_bytes, n_dropped); idempotent. Malformed streams raise →
     row quarantine upstream."""
     if raw[:2] != b"\xff\xd8":
@@ -275,7 +276,8 @@ def jpeg_strip_metadata(raw: bytes) -> tuple[bytes, int]:
         seg = raw[pos : pos + 2 + seglen]
         if len(seg) != 2 + seglen:
             raise ValueError("truncated JPEG segment")
-        if 0xE1 <= marker <= 0xEF or marker == 0xFE:  # APPn n>=1, COM
+        # APPn n>=1 but APP14, and COM
+        if (0xE1 <= marker <= 0xEF and marker != 0xEE) or marker == 0xFE:
             dropped += 1
         else:
             out += seg

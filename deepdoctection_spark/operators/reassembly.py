@@ -9,108 +9,58 @@ restored *declaratively*: sort keys travel with the data and a single
 aggregation reassembles each conversation.
 
 Scale notes (100 TB / 10^12 turns):
-- The groupBy(conv_id) shuffle hash-partitions conversations; AQE coalesces
-  small post-shuffle partitions and splits skewed ones.
-- Mega-conversation skew: `salted_repartition` pre-spreads a hot conv_id over
-  salt buckets for the narrow stage so no single input task drags; only the
-  final reassembly touches conv granularity (SURVEY.md §4 design rule 1).
-- array_sort(collect_list(struct(turn_idx, ...))) is used instead of a window
-  + collect over ordered rows: one shuffle, no second sort pass, and the sort
-  key is explicit in the data (never arrival order).
+- One aggregate over one Exchange, hashpartitioning(conv_id); over a
+  conv-bucketed table (jobs/bucketing.py) there is no Exchange at all. AQE
+  coalesces small post-shuffle partitions.
+- The sort key is explicit in the data (`listagg ... WITHIN GROUP (ORDER BY
+  turn_idx, text)`), never arrival order, and there is no window or second
+  sort pass.
+- A mega-conversation is one aggregation group, so one reduce task buffers
+  all of its turns. Measured, that costs less than a second shuffle of every
+  byte of text would (BENCH.md §2b), and the one output row holds the whole
+  conv_text anyway. A conversation too large for one row is the case for
+  `reassemble_conversations_chunked`, whose groups and rows are both
+  bounded by chunk_size turns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deepdoctection_spark.config import DEFAULT_CONFIG, PipelineConfig
+
+def _ordered_concat(text_col: str, sep: str) -> Column:
+    """Non-null text_col values joined by sep in (turn_idx, text) order; ''
+    for a group whose texts are all null. Ties on turn_idx order by text and
+    a null turn_idx sorts first, as a sort of (turn_idx, text) structs does.
+    text_col enters the SQL as a quoted identifier, sep as an escaped
+    literal."""
+    ident = "`" + text_col.replace("`", "``") + "`"
+    lit = "'" + sep.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return F.expr(
+        f"coalesce(listagg({ident}, {lit}) "
+        f"WITHIN GROUP (ORDER BY turn_idx, {ident}), '')"
+    )
 
 
 def reassemble_conversations(
     extracted: DataFrame,
     text_col: str = "extracted_text",
     sep: str = "\n\n",
-    chunk_size: int | None = 1024,
 ) -> DataFrame:
     """One row per conversation: turns concatenated in turn_idx order.
 
     conv_text = join of per-turn extracted text, ordered by the explicit key —
-    deterministic under any physical parallelism / arrival order.
+    deterministic under any physical parallelism / arrival order. n_turns
+    counts every turn row, including those whose text is null.
 
-    Two-phase by default (the mega-conversation memory bound): phase 1
-    partially concatenates per (conv_id, turn_idx // chunk_size) — each
-    aggregation group holds at most chunk_size per-turn structs, so a
-    conversation carrying 30% of the corpus no longer forces one task to
-    buffer (and sort) every turn struct at once; AQE cannot split a single
-    group, but it CAN distribute many chunk groups. Phase 2 merges the
-    ordered chunk strings per conv_id — state there is one string per chunk,
-    not one struct per turn. Output strings are byte-identical to the
-    single-phase plan (chunks are ordered ranges of turn_idx, and sep joins
-    both within and between chunks). The final row still materializes the
-    whole conv_text — that is the output contract; for an output-bounded
-    variant use reassemble_conversations_chunked.
-
-    chunk_size=None selects the single-phase plan (one groupBy, used by the
-    equivalence invariant test). Chunk grouping assumes roughly dense
-    turn_idx per conversation (the input contract); pathologically sparse
-    indices degrade phase 1 back toward single-group behavior but never
-    change the result.
+    One groupBy(conv_id), so one shuffle of the text. The row materializes
+    the whole conv_text — that is the output contract; for an
+    output-bounded variant use reassemble_conversations_chunked.
     """
-    if chunk_size is None:
-        return (
-            extracted.groupBy("conv_id")
-            .agg(
-                F.count("*").cast("long").alias("n_turns"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(F.col("turn_idx"), F.col(text_col))
-                            )
-                        ),
-                        lambda s: s[text_col],
-                    ),
-                    sep,
-                ).alias("conv_text"),
-            )
-        )
-    chunks = _chunked(extracted, text_col, sep, chunk_size)
-    return chunks.groupBy("conv_id").agg(
-        F.sum("chunk_turns").cast("long").alias("n_turns"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("chunk_no"), F.col("chunk_text")))
-                ),
-                lambda s: s["chunk_text"],
-            ),
-            sep,
-        ).alias("conv_text"),
-    )
-
-
-def _chunked(
-    extracted: DataFrame, text_col: str, sep: str, chunk_size: int
-) -> DataFrame:
-    """Phase 1: ordered partial concat per (conv_id, turn_idx // chunk_size)."""
-    return (
-        extracted.withColumn(
-            "chunk_no", F.floor(F.col("turn_idx") / chunk_size).cast("long")
-        )
-        .groupBy("conv_id", "chunk_no")
-        .agg(
-            F.count("*").cast("long").alias("chunk_turns"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("turn_idx"), F.col(text_col)))
-                    ),
-                    lambda s: s[text_col],
-                ),
-                sep,
-            ).alias("chunk_text"),
-        )
+    return extracted.groupBy("conv_id").agg(
+        F.count("*").alias("n_turns"),
+        _ordered_concat(text_col, sep).alias("conv_text"),
     )
 
 
@@ -122,27 +72,18 @@ def reassemble_conversations_chunked(
 ) -> DataFrame:
     """Bounded-output reassembly: one row per (conv_id, chunk_no) with at
     most chunk_size turns concatenated in order — the contract a 100 TB
-    consumer actually wants for a conversation too large for one row. A
-    reader restores the full text by concatenating chunk_text over ascending
-    chunk_no with sep (chunks are ordered, disjoint turn_idx ranges)."""
-    return _chunked(extracted, text_col, sep, chunk_size).select(
-        "conv_id", "chunk_no", "chunk_turns", "chunk_text"
+    consumer actually wants for a conversation too large for one row: no
+    aggregation group and no output row holds more than chunk_size turns.
+    A reader restores the full text by concatenating chunk_text over
+    ascending chunk_no with sep (chunks are ordered, disjoint turn_idx
+    ranges). Chunking assumes roughly dense turn_idx per conversation."""
+    return (
+        extracted.withColumn(
+            "chunk_no", F.floor(F.col("turn_idx") / chunk_size).cast("long")
+        )
+        .groupBy("conv_id", "chunk_no")
+        .agg(
+            F.count("*").alias("chunk_turns"),
+            _ordered_concat(text_col, sep).alias("chunk_text"),
+        )
     )
-
-
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Spread skewed conv_ids across salt buckets for the narrow stages.
-
-    repartition(N, conv_id, pmod(hash(turn_idx), SALT)) keeps a conversation's
-    turns in at most SALT partitions while preventing one mega-conversation
-    from serializing a stage (SURVEY.md §4 explicit-design rule 1). A no-op
-    when cfg.skew_salt_buckets == 0 (AQE-only mode).
-    """
-    if cfg.skew_salt_buckets <= 0:
-        return df.repartition(num_partitions, "conv_id")
-    salt = F.pmod(F.hash("turn_idx"), F.lit(cfg.skew_salt_buckets))
-    return df.repartition(num_partitions, F.col("conv_id"), salt)

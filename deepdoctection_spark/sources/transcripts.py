@@ -194,8 +194,8 @@ def build_skewed_transcripts(
     keys stay unique). This is the mega-conversation shape the north rule's
     skew handling must survive: a single conv_id holding 30% of the corpus
     would serialize a naive conv-partitioned stage; the narrow extraction
-    doesn't care (per-turn), salting spreads it pre-shuffle, and AQE
-    skew-splits the reassembly exchange."""
+    doesn't care (per-turn), and only the one reassembly group of
+    `conv-mega` touches conv granularity."""
     base = build_transcripts(spark, sf_dir, partitions)
     # recover doc identity from (conv, turn): doc_id = conv_no * TURNS + turn.
     # Both outputs derive from the ORIGINAL columns in one select — chained

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from deepdoctection_spark.config import DEFAULT_CONFIG, PipelineConfig
 from deepdoctection_spark.operators.extraction import extract_transcripts
+from deepdoctection_spark.operators.reassembly import _ordered_concat
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -102,10 +103,10 @@ def stream_reassemble(
 
     Extraction first (narrow), then watermark on the restored event-time
     column, then a per-(conv_id, event-window) aggregation. Sort keys travel
-    with the data — array_sort over (turn_idx, text) structs — so the result
-    is deterministic under any arrival order: the batch reassembly contract
-    (operators/reassembly.py) unchanged, plus watermark-bounded state so an
-    unbounded stream cannot accumulate unbounded conversations.
+    with the data — the batch reassembly's ordered concat
+    (operators/reassembly.py), ordered by (turn_idx, text) — so the result
+    is deterministic under any arrival order, plus watermark-bounded state so
+    an unbounded stream cannot accumulate unbounded conversations.
     """
     ex = stream_extract(transcripts, cfg=cfg, with_words=False)
     return (
@@ -113,17 +114,7 @@ def stream_reassemble(
         .groupBy(F.col("conv_id"), F.window("ts", window).alias("win"))
         .agg(
             F.count("*").cast("long").alias("n_turns"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(F.col("turn_idx"), F.col("extracted_text"))
-                        )
-                    ),
-                    lambda s: s["extracted_text"],
-                ),
-                "\n\n",
-            ).alias("conv_text"),
+            _ordered_concat("extracted_text", "\n\n").alias("conv_text"),
         )
         .select(
             "conv_id",

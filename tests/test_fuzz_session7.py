@@ -71,7 +71,9 @@ def test_jpeg_strip_fuzz_any_segment_mix():
                         + struct.pack(">H", 2 + len(payload)) + payload)
         tagged = raw[:2] + b"".join(segs) + raw[2:]
         stripped, dropped = jpeg_strip_metadata(tagged)
-        assert dropped == n_meta
+        kept = [s for s in segs if s[1] == 0xEE]  # APP14/Adobe stays
+        assert dropped == n_meta - len(kept)
+        assert stripped == raw[:2] + b"".join(kept) + raw[2:]
         assert np.array_equal(decode_image(stripped), decode_image(raw))
 
 

@@ -5,16 +5,20 @@ parallelism, salted-vs-unsalted equivalence, and plan-shape guarantees
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from deepdoctection_spark.config import PipelineConfig
 from deepdoctection_spark.operators.extraction import extract_transcripts
-from deepdoctection_spark.operators.reassembly import (
-    reassemble_conversations,
-    salted_repartition,
-)
+from deepdoctection_spark.operators.reassembly import reassemble_conversations
 from deepdoctection_spark.sources.transcripts import build_transcripts
+
+
+def _salted(df, salt_buckets):
+    """A hot conv_id spread over salt_buckets of 16 partitions."""
+    salt = F.pmod(F.hash("turn_idx"), F.lit(salt_buckets))
+    return df.repartition(16, F.col("conv_id"), salt)
 
 
 def _conv_fp(df):
@@ -39,7 +43,7 @@ def test_reassembly_stable_under_repartition(spark, sf_small):
 def test_salted_equals_unsalted(spark, sf_small):
     t = build_transcripts(spark, sf_small)
     base = _conv_fp(reassemble_conversations(extract_transcripts(t, with_words=False)))
-    salted = salted_repartition(t, 16, PipelineConfig(skew_salt_buckets=4))
+    salted = _salted(t, 4)
     got = _conv_fp(
         reassemble_conversations(extract_transcripts(salted, with_words=False))
     )
@@ -114,7 +118,7 @@ def test_mega_conversation_skew_path(spark, sf_small):
     assert abs(n_mega / n_total - 0.3) < 0.05
 
     base = _conv_fp(reassemble_conversations(extract_transcripts(t, with_words=False)))
-    salted = salted_repartition(t, 16, PipelineConfig(skew_salt_buckets=8))
+    salted = _salted(t, 8)
     got = _conv_fp(
         reassemble_conversations(extract_transcripts(salted, with_words=False))
     )
@@ -213,17 +217,86 @@ def test_vertical_tab_normalizes_identically_in_both_engines(spark):
     assert got["ws_tokens"] == oracle == 4  # a b c d
 
 
-def test_two_phase_reassembly_equals_single_phase_on_skew(spark, sf_small):
-    """The mega-conversation memory bound: the chunked two-phase plan must be
-    byte-identical to the single-phase plan, with a chunk size small enough
-    that the mega conversation spans MANY phase-1 groups."""
+# Planted rows for the reassembly edge cases: all-null texts, empty-string
+# turns, duplicate turn_idx arriving in descending text order, and null
+# turn_idx values.
+_EDGE_ROWS = [
+    ("edge-all-null", 0, None),
+    ("edge-all-null", 1, None),
+    ("edge-empty", 0, ""),
+    ("edge-empty", 1, "mid"),
+    ("edge-empty", 2, ""),
+    ("edge-dup-idx", 1, "d"),
+    ("edge-dup-idx", 1, "c"),
+    ("edge-dup-idx", 1, None),
+    ("edge-dup-idx", 1, "b"),
+    ("edge-dup-idx", 0, "z"),
+    ("edge-dup-idx", 1, "a"),
+    ("edge-null-idx", 2, "last"),
+    ("edge-null-idx", None, "second"),
+    ("edge-null-idx", None, "first"),
+    ("edge-null-idx", 1, None),
+]
+
+
+def test_reassembly_matches_reference_on_skew_and_edge_rows(spark, sf_small):
+    """reassemble_conversations is byte-identical to a sort of
+    (turn_idx, text) structs joined by sep, on the 30%-skewed input plus
+    planted edge rows, for a plain separator and one holding a quote and a
+    backslash."""
     from deepdoctection_spark.sources.transcripts import build_skewed_transcripts
 
     t = build_skewed_transcripts(spark, sf_small)
-    ex = extract_transcripts(t, with_words=False)
-    single = _conv_fp(reassemble_conversations(ex, chunk_size=None))
-    two_phase = _conv_fp(reassemble_conversations(ex, chunk_size=7))
-    assert two_phase == single
+    ex = extract_transcripts(t, with_words=False).select(
+        "conv_id", "turn_idx", "extracted_text"
+    )
+    edge = spark.createDataFrame(
+        _EDGE_ROWS, "conv_id string, turn_idx int, extracted_text string"
+    ).coalesce(1)
+    turns = ex.unionByName(edge)
+    for sep in ("\n\n", "'|\\"):
+        reference = turns.groupBy("conv_id").agg(
+            F.count("*").alias("n_turns"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("turn_idx", "extracted_text"))
+                    ),
+                    lambda s: s["extracted_text"],
+                ),
+                sep,
+            ).alias("conv_text"),
+        )
+        got = _conv_fp(reassemble_conversations(turns, sep=sep))
+        assert got == _conv_fp(reference), repr(sep)
+        by_conv = {c: (n, text) for c, n, text in got}
+        assert by_conv["edge-all-null"] == (2, "")
+        assert by_conv["edge-empty"] == (3, sep.join(["", "mid", ""]))
+        assert by_conv["edge-dup-idx"] == (6, sep.join("zabcd"))
+        assert by_conv["edge-null-idx"] == (4, sep.join(["first", "second", "last"]))
+
+
+def test_reassembly_plans_one_exchange(spark, tmp_path):
+    """Each reassembly is one aggregate over one hash Exchange on its group
+    keys, over a plain parquet scan."""
+    from deepdoctection_spark.operators.reassembly import (
+        reassemble_conversations_chunked,
+    )
+
+    path = str(tmp_path / "turns")
+    spark.createDataFrame(
+        _EDGE_ROWS, "conv_id string, turn_idx int, extracted_text string"
+    ).write.parquet(path)
+    turns = spark.read.parquet(path)
+    for df, keys in [
+        (reassemble_conversations(turns), r"conv_id#\d+, \d+"),
+        (reassemble_conversations_chunked(turns), r"conv_id#\d+, chunk_no#\d+L, \d+"),
+    ]:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+        assert len(exchanges) == 1, plan
+        kind, args = exchanges[0]
+        assert kind == "hashpartitioning" and re.fullmatch(keys, args), plan
 
 
 def test_chunked_reassembly_reconstructs_full_text(spark, sf_small):
@@ -240,7 +313,7 @@ def test_chunked_reassembly_reconstructs_full_text(spark, sf_small):
     t = build_skewed_transcripts(spark, sf_small)
     ex = extract_transcripts(t, with_words=False)
     full = {r["conv_id"]: (r["n_turns"], r["conv_text"])
-            for r in reassemble_conversations(ex, chunk_size=None).collect()}
+            for r in reassemble_conversations(ex).collect()}
     chunks = defaultdict(list)
     for r in reassemble_conversations_chunked(ex, chunk_size=5).collect():
         assert r["chunk_turns"] <= 5

@@ -162,3 +162,29 @@ def test_jpeg_strip_removes_exif_keeps_scan_bytes(spark):
         b = bytes(r.content)
         assert b"Exif" not in b and b"shot" not in b
         assert np.array_equal(decode_image(b), decode_image(tagged[mid]))
+
+
+def test_jpeg_strip_keeps_app14_adobe_transform():
+    """APP14 (Adobe) carries the colour transform a CMYK/YCCK scan decodes
+    by, so the scrub keeps it byte-identical next to APP0 and drops only
+    the APP1 EXIF and the COM comment."""
+    import struct
+
+    from deepdoctection_spark.kernels.jpeg import jpeg_encode
+    from deepdoctection_spark.operators.codecs import jpeg_strip_metadata
+
+    def seg(marker, payload):
+        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
+
+    raw = jpeg_encode(np.full((8, 8), 128, np.uint8))
+    soi, app0 = raw[:2], raw[2 : 4 + struct.unpack(">H", raw[4:6])[0]]
+    assert app0[:2] == b"\xff\xe0"
+    coding = raw[2 + len(app0) :]
+    app14 = seg(0xEE, b"Adobe\x00\x64\x00\x00\x00\x00\x02")
+    tagged = (soi + app0 + seg(0xE1, b"Exif\x00\x00GPS 1.2") + app14
+              + seg(0xFE, b"shot 7") + coding)
+    stripped, n_dropped = jpeg_strip_metadata(tagged)
+    assert n_dropped == 2
+    assert stripped == soi + app0 + app14 + coding
+    again, n_again = jpeg_strip_metadata(stripped)
+    assert n_again == 0 and again == stripped
