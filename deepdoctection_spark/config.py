@@ -10,6 +10,7 @@ shape is a plain dataclass (see plans/pipeline.py).
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -21,6 +22,24 @@ DEFAULT_ARROW_BATCH = 2048
 
 
 _ENV_MASTER = "env"  # sentinel: derive master from SPARK_GRAFT_CPUS
+
+
+def _tungsten_page_size(heap: str) -> str:
+    """Tungsten page size heap/8192 (at least 1m) for a JVM heap of ``heap``
+    (a Spark size string, MiB when unitless).
+
+    Spark's default page, up to 64m, is a G1 humongous object. Allocating
+    one can start a concurrent mark, and Spark pools freed pages through
+    weak references that a mark clears, so a shuffle-heavy job can fall into
+    reallocating pages and marking on every pass, at up to 40% more CPU
+    (the reassembly benchmark did in about one run in three). heap/8192 is
+    below the humongous threshold (half a region, heap/4096, for heaps up
+    to 64g), and a task's 8192-entry page table still spans the heap."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", heap.strip().lower())
+    if m is None:
+        raise ValueError(f"not a JVM memory size: {heap!r}")
+    mib = int(m[1]) * 1024 ** "kmgtp".index(m[2] or "m") // 1024
+    return f"{max(1, mib // 8192)}m"
 
 
 def get_spark(
@@ -43,6 +62,7 @@ def get_spark(
     # In local[N] there is no cluster: shuffle partitions should track cores,
     # not the 200 default (which just adds task-scheduling overhead).
     n_shuffle = shuffle_partitions or max(8, int(cpus) if cpus.isdigit() else 32)
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
     b = SparkSession.builder.appName(app_name)
     if master is not None:
         b = b.master(master)
@@ -57,9 +77,12 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_ARROW_BATCH)
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
+    if master is not None and master.startswith("local"):
+        # the driver JVM runs every task, so its heap sizes the pages
+        b = b.config("spark.buffer.pageSize", _tungsten_page_size(driver_mem))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -287,29 +287,3 @@ def bfs_levels(
         frontier = nxt
     edges.unpersist()
     return levels.select(F.col("node").alias("doc_id"), "lvl")
-
-
-def anchor_text_profile(links: DataFrame, k: int = 3) -> DataFrame:
-    """Per-target anchor-text profile — the classic IR signal: what the web
-    CALLS a page. links: (src, dst, anchor). Returns one row per (dst,
-    rank ≤ k): the target's top-k anchor strings by link count (count DESC,
-    anchor ASC for determinism), each with its count and the target's total
-    in-degree.
-
-    Plan: one (dst, anchor) hash agg (map-side partials collapse the heavy
-    anchor repetition before the exchange), then a dst-keyed window for the
-    top-k and a window sum for in-degree on the SAME partitioning — so the
-    whole profile is ONE shuffle over the already-aggregated (dst, anchor)
-    table, never over raw links. At 10^11 edges the agg output is bounded
-    by distinct (dst, anchor), which is what makes this shape survive."""
-    from pyspark.sql.window import Window
-
-    pa = links.groupBy("dst", "anchor").agg(F.count("*").alias("n"))
-    wd = Window.partitionBy("dst")
-    rk = Window.partitionBy("dst").orderBy(F.col("n").desc(), F.col("anchor"))
-    return (
-        pa.withColumn("dst_indegree", F.sum("n").over(wd))
-        .withColumn("rank", F.row_number().over(rk).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("dst", "rank", "anchor", "n", "dst_indegree")
-    )

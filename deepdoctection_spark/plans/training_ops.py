@@ -2131,176 +2131,6 @@ def q_quality_c4_rules(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# canonical-URL dedup (crawl-pipeline URL keying)
-# ---------------------------------------------------------------------------
-
-# Deterministic raw-URL synthesis: five fetch variants per logical page
-# (doc_id // 5). v0/v1/v2 must collapse to one canonical key (case + www +
-# trailing slash + default port + utm params + fragment); v3 keeps its
-# sorted non-tracking query; v4 differs for real (scheme + non-default
-# port). Same construction replayed in both engines.
-_URL_RAW_CTE = """
-raw AS (
-  SELECT doc_id,
-    CASE doc_id % 5
-      WHEN 0 THEN 'https://example.com/site/' || (doc_id // 5)
-      WHEN 1 THEN 'HTTPS://WWW.Example.COM/site/' || (doc_id // 5) || '/'
-      WHEN 2 THEN 'https://example.com:443/site/' || (doc_id // 5)
-                  || '?utm_source=feed&utm_campaign=x#top'
-      WHEN 3 THEN 'https://example.com/site/' || (doc_id // 5) || '?b=2&a=1'
-      ELSE 'http://example.com:8080/site/' || (doc_id // 5) || '#frag'
-    END AS raw_url
-  FROM documents
-)
-"""
-
-_URL_CANON_ORACLE = f"""
-WITH {_URL_RAW_CTE.strip()},
-c AS (
-  SELECT doc_id, raw_url,
-    lower(regexp_extract(raw_url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-      AS scheme,
-    lower(regexp_extract(raw_url,
-          '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-    regexp_extract(raw_url,
-          '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-    regexp_extract(raw_url, '\\?([^#]*)', 1) AS query
-  FROM raw
-), p AS (
-  SELECT doc_id, raw_url, scheme,
-    regexp_replace(string_split(hostport, ':')[1], '^www\\.', '') AS host,
-    CASE WHEN len(string_split(hostport, ':')) > 1
-         THEN string_split(hostport, ':')[2] ELSE '' END AS port,
-    CASE WHEN regexp_replace(path0, '/+$', '') = '' THEN '/'
-         ELSE regexp_replace(path0, '/+$', '') END AS path,
-    coalesce(array_to_string(list_sort(list_filter(
-      string_split(query, '&'),
-      q -> len(q) > 0 AND NOT starts_with(q, 'utm_'))), '&'), '') AS qn
-  FROM c
-), k AS (
-  SELECT doc_id, raw_url,
-    scheme || '://' || host
-    || (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-                  OR (scheme = 'https' AND port = '443')
-             THEN '' ELSE ':' || port END)
-    || path || (CASE WHEN qn = '' THEN '' ELSE '?' || qn END)
-      AS canonical_url
-  FROM p
-)
-SELECT doc_id, raw_url, canonical_url,
-  (doc_id = min(doc_id) OVER (PARTITION BY canonical_url))
-    AS is_canonical_rep,
-  (count(*) OVER (PARTITION BY canonical_url))::INT AS n_variants
-FROM k
-"""
-
-
-def _raw_urls(docs):
-    d = F.col("doc_id")
-    b = F.expr("doc_id div 5").cast("string")
-    v = d % 5
-    site = F.concat(F.lit("/site/"), b)
-
-    def u(prefix, suffix=""):
-        return F.concat(F.lit(prefix), site, F.lit(suffix))
-
-    url = (
-        F.when(v == 0, u("https://example.com"))
-        .when(v == 1, u("HTTPS://WWW.Example.COM", "/"))
-        .when(v == 2, u("https://example.com:443",
-                        "?utm_source=feed&utm_campaign=x#top"))
-        .when(v == 3, u("https://example.com", "?b=2&a=1"))
-        .otherwise(u("http://example.com:8080", "#frag"))
-    )
-    return docs.select("doc_id", url.alias("raw_url"))
-
-
-@register("dedup_url_canonical", _URL_CANON_ORACLE)
-def q_dedup_url_canonical(spark, sf_dir):
-    """Canonical-URL normalization + dedup verdict over five fetch variants
-    per logical page — the crawl-frontier keying step (operators/weburl.py:
-    pure column expressions for the key, ONE window shuffle for the
-    verdict)."""
-    from deepdoctection_spark.operators import weburl
-
-    return weburl.url_dedup(_raw_urls(_docs(spark, sf_dir)))
-
-
-_HOST_QUOTA_ORACLE = """
-WITH h AS (
-  SELECT doc_id, 'h' || (doc_id % 7) || '.example.org' AS host
-  FROM documents
-), r AS (
-  SELECT doc_id, host,
-    row_number() OVER (
-      PARTITION BY host ORDER BY md5(doc_id::VARCHAR), doc_id
-    )::INT AS host_rank
-  FROM h
-)
-SELECT doc_id, host, host_rank FROM r WHERE host_rank <= 10
-"""
-
-
-@register("sample_host_quota", _HOST_QUOTA_ORACLE)
-def q_sample_host_quota(spark, sf_dir):
-    """Per-domain quota sampling: cap each host at 10 docs via a
-    deterministic md5-ordered draw (operators/weburl.host_quota_sample) —
-    seven synthetic hosts over the corpus, 70 survivors. The md5 rank
-    order is computed identically by both engines, so the SAMPLE ITSELF
-    is value-checked, not just its size."""
-    from deepdoctection_spark.operators import weburl
-
-    d = F.col("doc_id")
-    hosts = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(F.lit("h"), (d % 7).cast("string"),
-                 F.lit(".example.org")).alias("host"),
-    )
-    return weburl.host_quota_sample(hosts, k=10)
-
-
-_WARC_ORACLE = """
-WITH resp AS (
-  SELECT doc_id // 8 AS blob_id,
-         row_number() OVER (PARTITION BY doc_id // 8 ORDER BY doc_id)::INT
-           AS rec_idx,
-         'resource' AS warc_type,
-         'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-         strlen(text)::BIGINT AS content_length,
-         substr(text, 1, 32) AS text_prefix
-  FROM documents
-), info AS (
-  SELECT DISTINCT doc_id // 8 AS blob_id, 0::INT AS rec_idx,
-         'warcinfo' AS warc_type, NULL::VARCHAR AS url,
-         {info_len}::BIGINT AS content_length, NULL::VARCHAR AS text_prefix
-  FROM documents
-)
-SELECT blob_id, rec_idx, warc_type, url, content_length, text_prefix,
-       NULL::VARCHAR AS error
-FROM (SELECT * FROM info UNION ALL SELECT * FROM resp)
-"""
-
-
-from deepdoctection_spark.operators.webcrawl import INFO_PAYLOAD as _WARC_INFO  # noqa: E402
-
-
-@register("warc_parse_records", _WARC_ORACLE.format(info_len=len(_WARC_INFO)))
-def q_warc_parse_records(spark, sf_dir):
-    """Common Crawl-style WARC ingest, full round trip: documents are packed
-    into multi-member `.warc.gz` blobs (one gzip member per record, warcinfo
-    head record per archive — operators/webcrawl.synth_warc), then the
-    stdlib codec (kernels/warc.py) inflates members via `unused_data`
-    streaming and parses every record header; the oracle recomputes each
-    exposed field (type, target URI, Content-Length, payload prefix)
-    closed-form from `documents`, so gzip framing, header serialization and
-    Content-Length slicing are all value-checked end to end."""
-    from deepdoctection_spark.operators import webcrawl
-
-    blobs = webcrawl.synth_warc(_docs(spark, sf_dir))
-    return webcrawl.warc_records(blobs)
-
-
-# ---------------------------------------------------------------------------
 # query-time retrieval: boolean AND, phrase match, BM25 top-k search
 # ---------------------------------------------------------------------------
 
@@ -2410,397 +2240,6 @@ def q_search_bm25_ranked(spark, sf_dir):
     Plan: postings ⋈ broadcast(terms) ⋈ doc-length → per-doc sum → one
     bounded top-k window over the hit set only."""
     return retrieval.bm25_query_search(_docs(spark, sf_dir), 10, 5, 20)
-
-
-_ROBOTS_ORACLE = """
-WITH u AS (
-  SELECT doc_id, (doc_id % 7)::VARCHAR AS k,
-         'h' || (doc_id % 7) || '.example.org' AS host,
-         '/p/' || doc_id AS path, doc_id::VARCHAR AS ds
-  FROM documents
-)
-SELECT doc_id, host, path,
-       (NOT starts_with(ds, k)) OR starts_with(ds, k || k) AS allowed,
-       CASE WHEN starts_with(ds, k || k) THEN '/p/' || k || k
-            WHEN starts_with(ds, k) THEN '/p/' || k
-            ELSE NULL END AS matched_prefix
-FROM u
-"""
-
-
-@register("crawl_robots_filter", _ROBOTS_ORACLE)
-def q_crawl_robots_filter(spark, sf_dir):
-    """robots.txt crawl-policy filter, parsed from REAL robots bodies: each
-    host's fixture robots.txt carries a foreign-agent group (`User-agent:
-    evilbot` / `Disallow: /`) that must NOT leak, a `User-agent: *` group
-    with `Disallow: /p/<k>` overridden by the longer `Allow: /p/<k><k>`
-    (RFC 9309 longest-match), a comment, a blank line and an empty-path
-    Disallow (spec: matches nothing). The oracle states every verdict
-    closed-form — blocked iff the doc id starts with the host digit and is
-    not re-allowed by the doubled-digit prefix — so group tracking, prefix
-    extraction, longest-match AND the no-match default are all value-checked
-    (operators/webcrawl.robots_rules / robots_filter)."""
-    from deepdoctection_spark.operators import webcrawl
-
-    d = F.col("doc_id")
-    k = (d % 7).cast("string")
-    docs = _docs(spark, sf_dir)
-    urls = docs.select(
-        "doc_id",
-        F.concat(F.lit("h"), k, F.lit(".example.org")).alias("host"),
-        F.concat(F.lit("/p/"), d.cast("string")).alias("path"),
-    )
-    robots = docs.select((d % 7).alias("hk")).distinct().select(
-        F.concat(F.lit("h"), F.col("hk").cast("string"),
-                 F.lit(".example.org")).alias("host"),
-        F.concat(
-            F.lit("# robots fixture\nUser-agent: evilbot\nDisallow: /\n\n"
-                  "User-agent: *\nDisallow: /p/"),
-            F.col("hk").cast("string"),
-            F.lit("\nAllow: /p/"),
-            F.col("hk").cast("string"), F.col("hk").cast("string"),
-            F.lit("\nDisallow:\n"),
-        ).alias("robots_txt"),
-    )
-    return webcrawl.robots_filter(urls, webcrawl.robots_rules(robots))
-
-
-_FRONTIER_ORACLE = """
-WITH u AS (
-  SELECT doc_id, (doc_id % 7) AS k,
-         'h' || (doc_id % 7) || '.example.org' AS host,
-         '/p/' || doc_id AS path,
-         ((doc_id * 13) % 97)::INT AS priority
-  FROM documents
-),
-s AS (
-  SELECT doc_id, host, path, priority,
-         (('0x' || substr(md5(host), 1, 8))::BIGINT % 64)::INT AS fetcher,
-         (row_number() OVER (PARTITION BY host
-                             ORDER BY priority DESC, path) - 1)::INT AS slot,
-         (CASE WHEN k % 2 = 0 THEN (k + 1) * 1000 ELSE 1000 END)::BIGINT
-           AS delay_ms
-  FROM u
-)
-SELECT doc_id, host, path, priority, fetcher, slot, delay_ms,
-       (slot * delay_ms)::BIGINT AS fetch_at_ms
-FROM s
-"""
-
-
-@register("crawl_frontier_schedule", _FRONTIER_ORACLE)
-def q_crawl_frontier_schedule(spark, sf_dir):
-    """Politeness-scheduled crawl frontier: per-host `Crawl-delay` parsed
-    from REAL robots bodies (even-digit hosts state `Crawl-delay: <k+1>`
-    under `User-agent: *`; a foreign-agent `Crawl-delay: 99` that must NOT
-    leak; odd hosts omit it and take the 1 s default), then every URL gets
-    its fetch slot (priority-descending rank within host), fetcher shard
-    (md5(host) % 64 — host-affine so the politeness clock is fetcher-local)
-    and start time slot*delay_ms. The oracle restates delays closed-form
-    from the host digit and replays the same window, so group tracking,
-    the max-wins duplicate rule, the default path, ranking and the slot
-    arithmetic are all value-checked (operators/webcrawl.robots_delays /
-    frontier_schedule)."""
-    from deepdoctection_spark.operators import webcrawl
-
-    d = F.col("doc_id")
-    k = (d % 7).cast("string")
-    docs = _docs(spark, sf_dir)
-    urls = docs.select(
-        "doc_id",
-        F.concat(F.lit("h"), k, F.lit(".example.org")).alias("host"),
-        F.concat(F.lit("/p/"), d.cast("string")).alias("path"),
-        ((d * 13) % 97).cast("int").alias("priority"),
-    )
-    hk = F.col("hk")
-    robots = docs.select((d % 7).alias("hk")).distinct().select(
-        F.concat(F.lit("h"), hk.cast("string"),
-                 F.lit(".example.org")).alias("host"),
-        F.concat(
-            F.lit("User-agent: evilbot\nCrawl-delay: 99\n\n"
-                  "User-agent: *\n"),
-            F.when(hk % 2 == 0,
-                   F.concat(F.lit("Crawl-delay: "),
-                            (hk + 1).cast("string"),
-                            F.lit("\nCrawl-delay: 1\n")))
-             .otherwise(F.lit("")),
-            F.lit("Disallow:\n"),
-        ).alias("robots_txt"),
-    )
-    return webcrawl.frontier_schedule(urls, webcrawl.robots_delays(robots))
-
-
-_SITEMAP_ORACLE = """
-WITH ids AS (
-  SELECT doc_id AS url_id, (doc_id % 7) AS k, TRUE AS known FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, (doc_id % 7), FALSE FROM documents
-  WHERE doc_id % 5 = 0
-)
-SELECT url_id,
-       'h' || k || '.example.org' AS host,
-       '2026-01-' || lpad(((url_id % 28) + 1)::VARCHAR, 2, '0') AS lastmod,
-       ((url_id % 10) * 10)::INT AS priority_pct,
-       known
-FROM ids
-"""
-
-
-@register("crawl_sitemap_discover", _SITEMAP_ORACLE)
-def q_crawl_sitemap_discover(spark, sf_dir):
-    """Sitemap ingest + discovery diff: per-host sitemaps.org urlset XML is
-    synthesised from `documents` (every doc URL plus never-crawled 'ghost'
-    entries), parsed back ENTIRELY JVM-side (`regexp_extract_all` + explode
-    + field extracts — operators/webcrawl.sitemap_entries), then diffed
-    against the URL frontier with one hash join (`sitemap_discover`). The
-    oracle restates loc/lastmod/priority closed-form from url_id and the
-    known flag from ghost membership, so XML assembly, the regex parse,
-    NULL handling and the discovery join are all value-checked round-trip."""
-    from deepdoctection_spark.operators import webcrawl
-
-    docs = _docs(spark, sf_dir)
-    ents = webcrawl.sitemap_entries(webcrawl.synth_sitemaps(docs))
-    frontier = docs.select(webcrawl.doc_url(F.col("doc_id")).alias("url"))
-    disc = webcrawl.sitemap_discover(ents, frontier)
-    return disc.select(
-        F.regexp_extract("loc", r"/p/(\d+)$", 1).cast("long").alias("url_id"),
-        "host", "lastmod", "priority_pct", "known",
-    )
-
-
-_WET_ORACLE = """
-SELECT doc_id,
-       'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-       (CASE WHEN doc_id % 11 = 0 THEN 404 ELSE 200 END)::INT AS http_status,
-       'text/html' AS content_type,
-       CASE WHEN doc_id % 11 = 0 THEN 'not found'
-            ELSE 'Doc ' || doc_id || chr(10) || 'site nav' || chr(10)
-                 || 'Doc ' || doc_id || chr(10) || text || chr(10) || 'contact'
-       END AS wet_text
-FROM documents
-"""
-
-
-@register("warc_wet_convert", _WET_ORACLE)
-def q_warc_wet_convert(spark, sf_dir):
-    """WARC→WET conversion over REAL HTTP response records: documents are
-    packed into `.warc.gz` response blobs (200 HTML pages on a
-    title/nav/h1/body/footer template; every 11th doc a 404 error page),
-    then the converter re-parses the gzip members, the WARC headers AND the
-    HTTP/1.1 message, and emits the WET plain-text (tags → line breaks,
-    trimmed, empties dropped — Common Crawl's dumb whole-page conversion;
-    boilerplate REMOVAL stays a downstream concern). The oracle restates
-    status and the full WET text closed-form from the template, so the
-    gzip/WARC/HTTP round-trip and the tag-strip contract are all
-    value-checked (operators/webcrawl.synth_warc_responses /
-    warc_wet_records; kernels/warc.parse_http_response / html_to_wet)."""
-    from deepdoctection_spark.operators import webcrawl
-
-    docs = _docs(spark, sf_dir)
-    recs = webcrawl.warc_wet_records(webcrawl.synth_warc_responses(docs))
-    return recs.select(
-        F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long").alias("doc_id"),
-        "url", "http_status", "content_type", "wet_text",
-    )
-
-
-_REDIRECT_ORACLE = """
-WITH s AS (SELECT doc_id FROM documents WHERE doc_id % 4 <> 0),
-u AS (
-  SELECT doc_id,
-         'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS src_url,
-         (doc_id - (doc_id % 4)) AS tgt
-  FROM s
-)
-SELECT src_url,
-       'https://h' || (tgt % 7) || '.example.org/p/' || tgt AS final_url,
-       (doc_id % 4)::INT AS hops,
-       TRUE AS resolved
-FROM u
-"""
-
-
-@register("crawl_redirect_resolve", _REDIRECT_ORACLE)
-def q_crawl_redirect_resolve(spark, sf_dir):
-    """Redirect-chain resolution by pointer doubling: every doc with
-    doc_id % 4 ≠ 0 redirects one id down, so the fixture holds ~3/4 of the
-    corpus in chains of length 1-3 ending at the %4==0 terminals. The
-    oracle states each source's terminal URL and hop count closed-form, so
-    the doubling joins, hop accumulation and the terminal test are all
-    value-checked (operators/weburl.resolve_redirects; loop flagging is
-    pinned separately in tests/test_redirects.py — the fixture graph is
-    loop-free by construction)."""
-    from deepdoctection_spark.operators import weburl
-    from deepdoctection_spark.operators.webcrawl import doc_url
-
-    d = F.col("doc_id")
-    docs = _docs(spark, sf_dir)
-    edges = docs.where(d % 4 != 0).select(
-        doc_url(d).alias("src"), doc_url(d - 1).alias("dst")
-    )
-    res = weburl.resolve_redirects(edges)
-    return res.select(
-        F.col("src").alias("src_url"), "final_url", "hops", "resolved"
-    )
-
-
-_ANCHOR_ORACLE = """
-WITH l AS (
-  SELECT doc_id AS src,
-         ((doc_id * 7 + j * 13) % 300)::BIGINT AS dst,
-         'w' || ((doc_id + j) % 5) AS anchor
-  FROM documents, unnest([0, 1, 2]) AS t(j)
-),
-pa AS (SELECT dst, anchor, count(*)::BIGINT AS n FROM l GROUP BY dst, anchor),
-tot AS (SELECT dst, sum(n)::BIGINT AS dst_indegree FROM pa GROUP BY dst),
-rk AS (
-  SELECT dst, anchor, n,
-         (row_number() OVER (PARTITION BY dst
-                             ORDER BY n DESC, anchor))::INT AS rank
-  FROM pa
-)
-SELECT r.dst, r.rank, r.anchor, r.n, t.dst_indegree
-FROM rk r JOIN tot t USING (dst) WHERE r.rank <= 3
-"""
-
-
-@register("crawl_anchor_profile", _ANCHOR_ORACLE)
-def q_crawl_anchor_profile(spark, sf_dir):
-    """Anchor-text profile per link target: each doc emits three
-    deterministic links (dst = (id·7 + j·13) mod 300, anchor from a 5-word
-    vocabulary), then the profile reduces to each target's top-3 anchors by
-    count with its total in-degree — the 'what the web calls this page'
-    signal. The oracle replays the identical agg + windows in SQL, so the
-    one-shuffle profile shape (hash agg → same-key windows) is value-checked
-    (operators/graph.anchor_text_profile)."""
-    from deepdoctection_spark.operators.graph import anchor_text_profile
-
-    d = F.col("doc_id")
-    docs = _docs(spark, sf_dir)
-    links = docs.select(
-        d.alias("src"), F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("j")
-    ).select(
-        "src",
-        ((F.col("src") * 7 + F.col("j") * 13) % 300).cast("long").alias("dst"),
-        F.concat(F.lit("w"), ((F.col("src") + F.col("j")) % 5).cast("string"))
-        .alias("anchor"),
-    )
-    return anchor_text_profile(links, k=3)
-
-
-_HOST_ROLLUP_ORACLE = """
-WITH p AS (
-  SELECT 'h' || (doc_id % 7) || '.example.org' AS host,
-         md5(text) AS fingerprint,
-         len(string_split(text, ' '))::BIGINT AS n_tokens,
-         (starts_with(doc_id::VARCHAR, (doc_id % 7)::VARCHAR)
-          AND NOT starts_with(doc_id::VARCHAR,
-                              (doc_id % 7)::VARCHAR || (doc_id % 7)::VARCHAR))
-           AS blocked
-  FROM documents
-),
-a AS (
-  SELECT host, count(*)::BIGINT AS n_pages,
-         count(DISTINCT fingerprint)::BIGINT AS n_unique,
-         sum(blocked::BIGINT)::BIGINT AS n_blocked,
-         sum(n_tokens)::BIGINT AS total_tokens
-  FROM p GROUP BY host
-)
-SELECT host, n_pages, n_unique,
-       floor((n_pages - n_unique) * 1000000 / n_pages)::BIGINT AS dup_ppm,
-       floor(n_blocked * 1000000 / n_pages)::BIGINT AS blocked_ppm,
-       floor(total_tokens * 1000 / n_pages)::BIGINT AS mean_tokens_milli,
-       CASE WHEN floor(n_blocked * 1000000 / n_pages) >= 300000 THEN 'drop'
-            WHEN floor((n_pages - n_unique) * 1000000 / n_pages) >= 100000
-              THEN 'sample'
-            ELSE 'keep' END AS verdict
-FROM a
-"""
-
-
-@register("crawl_host_rollup", _HOST_ROLLUP_ORACLE)
-def q_crawl_host_rollup(spark, sf_dir):
-    """Domain-level curation rollup: per host the page count, exact-dup
-    share (md5 fingerprints), robots-blocked share (the robots fixture's
-    closed-form digit rule) and mean token count — exact integer ppm/milli —
-    plus the keep/sample/drop verdict. ONE hosts-keyed hash agg; the
-    cheapest gate in the cascade, run before any per-page work
-    (operators/weburl.host_rollup). The oracle replays the identical
-    aggregation and thresholds."""
-    from deepdoctection_spark.operators import weburl
-
-    d = F.col("doc_id")
-    k = (d % 7).cast("string")
-    ds = d.cast("string")
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("h"), k, F.lit(".example.org")).alias("host"),
-        F.md5(F.col("text").cast("binary")).alias("fingerprint"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        (ds.startswith(k) & ~ds.startswith(F.concat(k, k))).alias("blocked"),
-    )
-    return weburl.host_rollup(pages)
-
-
-_SNAPDIFF_ORACLE = """
-WITH o AS (
-  SELECT 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-         md5(text) AS old_fp
-  FROM documents
-),
-n AS (
-  SELECT 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-         CASE WHEN doc_id % 5 = 0 THEN md5('v2#' || text) ELSE md5(text) END
-           AS new_fp
-  FROM documents WHERE doc_id % 13 <> 0
-  UNION ALL
-  SELECT 'https://h' || (doc_id % 7) || '.example.org/new/' || doc_id,
-         md5(doc_id::VARCHAR)
-  FROM documents WHERE doc_id % 17 = 0
-)
-SELECT url, old_fp, new_fp,
-       CASE WHEN old_fp IS NULL THEN 'added'
-            WHEN new_fp IS NULL THEN 'deleted'
-            WHEN old_fp <> new_fp THEN 'changed'
-            ELSE 'unchanged' END AS status
-FROM o FULL OUTER JOIN n USING (url)
-"""
-
-
-@register("crawl_snapshot_diff", _SNAPDIFF_ORACLE)
-def q_crawl_snapshot_diff(spark, sf_dir):
-    """Two-crawl snapshot diff: snapshot A holds every doc URL; snapshot B
-    drops every 13th (deleted), rewrites every 5th's fingerprint (changed)
-    and adds /new/ URLs for every 17th (added). One full-outer hash join +
-    a column verdict classifies every URL; the oracle replays the identical
-    construction and join (operators/weburl.crawl_snapshot_diff)."""
-    from deepdoctection_spark.operators import weburl
-
-    d = F.col("doc_id")
-    docs = _docs(spark, sf_dir)
-    url = F.concat(
-        F.lit("https://h"), (d % 7).cast("string"),
-        F.lit(".example.org/p/"), d.cast("string"),
-    )
-    old = docs.select(
-        url.alias("url"), F.md5(F.col("text").cast("binary")).alias("fingerprint")
-    )
-    new = docs.where(d % 13 != 0).select(
-        url.alias("url"),
-        F.when(
-            d % 5 == 0,
-            F.md5(F.concat(F.lit("v2#"), F.col("text")).cast("binary")),
-        ).otherwise(F.md5(F.col("text").cast("binary"))).alias("fingerprint"),
-    ).unionByName(
-        docs.where(d % 17 == 0).select(
-            F.concat(
-                F.lit("https://h"), (d % 7).cast("string"),
-                F.lit(".example.org/new/"), d.cast("string"),
-            ).alias("url"),
-            F.md5(d.cast("string").cast("binary")).alias("fingerprint"),
-        )
-    )
-    return weburl.crawl_snapshot_diff(old, new)
 
 
 _LUHN_SQL = """
@@ -3092,66 +2531,6 @@ def q_embed_quantize_int8(spark, sf_dir):
     from deepdoctection_spark.operators.similarity import quantize_int8
 
     return quantize_int8(_embs(spark, sf_dir))
-
-
-@register(
-    "crawl_page_directives",
-    """
-WITH pages AS (
-  SELECT 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-    '<html><head>'
-    || CASE WHEN doc_id % 4 = 0
-            THEN '<META NAME="robots" CONTENT="noindex, nofollow">'
-            WHEN doc_id % 4 = 1
-            THEN '<meta name=''robots'' content=''NOFOLLOW''>'
-            ELSE '' END
-    || CASE WHEN doc_id % 3 = 0
-            THEN '<link rel="canonical" href="https://ex.org/c/'
-                 || (doc_id // 3) || '">'
-            ELSE '' END
-    || '</head><body>b</body></html>' AS html
-  FROM documents
-)
-SELECT url,
-  contains(lower(regexp_extract(html,
-    '(?i)<meta[^>]*name\\s*=\\s*["'']robots["''][^>]*content\\s*=\\s*["'']([^"'']*)["'']',
-    1)), 'noindex')::INT AS noindex,
-  contains(lower(regexp_extract(html,
-    '(?i)<meta[^>]*name\\s*=\\s*["'']robots["''][^>]*content\\s*=\\s*["'']([^"'']*)["'']',
-    1)), 'nofollow')::INT AS nofollow,
-  nullif(regexp_extract(html,
-    '(?i)<link[^>]*rel\\s*=\\s*["'']canonical["''][^>]*href\\s*=\\s*["'']([^"'']*)["'']',
-    1), '') AS canonical
-FROM pages
-""",
-)
-def q_crawl_page_directives(spark, sf_dir):
-    """Page-level indexing directives: every 4th page plants an upper-case
-    double-quoted noindex,nofollow meta, the next a single-quoted
-    NOFOLLOW-only, every 3rd a rel=canonical link — case/quote variants
-    exercise the extraction's robustness, and verdict columns feed the
-    corpus gate (noindex drops the page) and the frontier (nofollow) and
-    URL-dedup keying (canonical) (operators/weburl.page_directives)."""
-    from deepdoctection_spark.operators import weburl
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    url = F.concat(F.lit("https://h"), (d % 7).cast("string"),
-                   F.lit(".example.org/p/"), d.cast("string"))
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(d % 4 == 0,
-               F.lit('<META NAME="robots" CONTENT="noindex, nofollow">'))
-        .when(d % 4 == 1, F.lit("<meta name='robots' content='NOFOLLOW'>"))
-        .otherwise(F.lit("")),
-        F.when(d % 3 == 0,
-               F.concat(F.lit('<link rel="canonical" href="https://ex.org/c/'),
-                        F.floor(d / 3).cast("long").cast("string"),
-                        F.lit('">'))).otherwise(F.lit("")),
-        F.lit("</head><body>b</body></html>"),
-    )
-    return weburl.page_directives(
-        docs.select(url.alias("url"), html.alias("html")))
 
 
 def _cluster_longest_oracle() -> str:
