@@ -308,3 +308,109 @@ def test_stream_matches_tree_on_stray_angle_hostile():
         s = "".join(gen())
         assert key(extract_blocks(s)) == key(extract_blocks_stream(s)), (
             trial, s[:300])
+
+
+def test_stream_matches_tree_on_table_shapes():
+    """Seeded stream-vs-tree sweep over table shapes the soup generators
+    never emit: span attributes in every spelling (quoted, unquoted,
+    entity-encoded, uppercase, out-of-range, junk), th/caption and
+    thead/tbody/tfoot chains, a tr under a div inside the table (not a row),
+    text directly in a tr, unclosed rows and cells, nested tables, <br> and
+    entities in cells, and rows at the depth cap. Compared cell for cell on
+    (row, col, row_span, col_span, text)."""
+    import random
+
+    from deepdoctection_spark.kernels.html import (
+        MAX_DEPTH,
+        extract_blocks,
+        extract_blocks_stream,
+    )
+
+    def key(bs):
+        return [
+            (b.category, b.text,
+             [(c.row_number, c.column_number, c.row_span, c.column_span, c.text)
+              for c in b.cells])
+            for b in bs
+        ]
+
+    span_values = ["2", '"2"', "'3'", "&#50;", '"&#x33;"', "0", "-3", "abc",
+                   '""', "2000000000", '" 2 "', "1", "4"]
+    span_names = ["rowspan", "colspan", "ROWSPAN", "ColSpan"]
+    cell_texts = ["a", "b c", " ", "", "&nbsp;", "&nbsp;x&nbsp;", "\xa0y\xa0",
+                  "p&amp;q", "&lt;td&gt;", "x<br>y", "<br>", "<b>bo</b>ld",
+                  "u <i>v</i> w", "<a href=/l>link</a>", "<p>para</p>tail",
+                  "<ul><li>i1</li><li>i2</li></ul>", "k<!--c-->l",
+                  "m<script>n</script>o", "<img src=x>img", "  spaced\tout  "]
+    rng = random.Random(8)
+
+    def span_attrs():
+        out = ""
+        for _ in range(rng.choice([0, 0, 0, 1, 1, 2])):
+            v = rng.choice(span_values)
+            if v == "2000000000" and rng.random() < 0.7:
+                v = "3"  # keep the 256x256 capped fill rare
+            out += f" {rng.choice(span_names)}={v}"
+        return out
+
+    def cell(depth):
+        tag = rng.choice(["td", "td", "th", "TD"])
+        body = "".join(rng.choice(cell_texts) for _ in range(rng.randint(0, 3)))
+        if depth < 2 and rng.random() < 0.12:
+            body += table(depth + 1)
+        end = f"</{tag}>" if rng.random() < 0.8 else ""
+        return f"<{tag}{span_attrs()}>{body}{end}"
+
+    def row(depth):
+        tag = rng.choice(["tr", "tr", "TR"])
+        parts = [cell(depth) for _ in range(rng.randint(0, 4))]
+        if rng.random() < 0.15:
+            parts.insert(rng.randint(0, len(parts)), rng.choice(["loose", " ", "r&amp;s"]))
+        end = f"</{tag}>" if rng.random() < 0.8 else ""
+        return f"<{tag}>{''.join(parts)}{end}"
+
+    def section(depth, level=0):
+        r = rng.random()
+        if r < 0.25 and level < 2:
+            tag = rng.choice(["thead", "tbody", "tfoot"])
+            inner = "".join(section(depth, level + 1) for _ in range(rng.randint(1, 3)))
+            end = f"</{tag}>" if rng.random() < 0.85 else ""
+            return f"<{tag}>{inner}{end}"
+        if r < 0.32:
+            return f"<caption>{rng.choice(cell_texts)}</caption>"
+        if r < 0.38:
+            return f"<div>{row(depth)}</div>"  # a tr under a div: not a row
+        if r < 0.42:
+            return rng.choice(["stray text", " ", "<b>bold</b>"])
+        return row(depth)
+
+    def table(depth=0):
+        inner = "".join(section(depth) for _ in range(rng.randint(0, 5)))
+        end = "</table>" if rng.random() < 0.85 else ""
+        return f"<table>{inner}{end}"
+
+    fixed = [
+        "<table><tr><td>a<td>b</tr></table>",
+        "<table><tr><td>a<td>b</tr><tr><td>c</table>",
+        "<table><tbody><thead><tfoot><tr><td>deep</td></tr></tfoot></thead></tbody></table>",
+        "<table><div><tr><td>no</td></tr></div><tr>loose<td>yes</td></tr></table>",
+        "<table><tr><td><table><tr><td>in</td></tr></table>out</td></tr></table>",
+        "<table><tr><td>&nbsp;x&nbsp;</td><td>&nbsp;x<b></b></td></tr></table>",
+        "<table><tr><td rowspan=&#50; COLSPAN='2'>s</td><td>t</td></tr><tr><td>u</td></tr></table>",
+        "<table><tr><td rowspan=0 colspan=-3>z</td><td rowspan=abc colspan=\"\">y</td></tr></table>",
+        "<table><tr><td rowspan=2000000000>big</td><td>r1</td></tr><tr><td>r2</td></tr></table>",
+        "<table><caption>cap</caption><tr><th>h</th></tr></table>",
+    ]
+    for pad in (MAX_DEPTH - 4, MAX_DEPTH - 3, MAX_DEPTH - 2):
+        # pad divs + table + tr: at MAX_DEPTH - 3 the tr is the last frame
+        # the stack admits, so its td is capped (text ""); one more pad caps
+        # the tr itself, one fewer admits the td
+        fixed.append("<div>" * pad + "<table><tr><td>capped</td><td rowspan=2>c2</td>"
+                     "</tr><tr><td>next</td></tr></table>" + "</div>" * pad)
+    for s in fixed:
+        assert key(extract_blocks(s)) == key(extract_blocks_stream(s)), s[-200:]
+    for trial in range(2500):
+        s = rng.choice(["", "<div>", "<p>lead</p>", "text "]) + table()
+        if rng.random() < 0.3:
+            s = f"<div>{s}<p>after</p></div>"
+        assert key(extract_blocks(s)) == key(extract_blocks_stream(s)), (trial, s[:300])
