@@ -117,8 +117,8 @@ def extract_turn(
     if text is None:
         return []
     if tool == "browser" or (tool not in ("pdf_reader",) and looks_like_html(text)):
-        # the single-pass streaming extractor (no tree materialization);
-        # block-identical to kernels/html.extract_blocks (property-tested)
+        # the single-pass streaming extractor (no element tree); block-
+        # identical to the tree reference in tests/html_oracle.py
         return extract_blocks_stream(text, link_density_threshold, tag_density_threshold)
     if tool == "pdf_reader" or looks_like_layout(text):
         return extract_layout_blocks(text, column_gap)
@@ -162,7 +162,7 @@ def finalize_turn(
             # cell offsets: walk the block's own text, which was assembled as
             # rows joined by \n and cells by single spaces (kernels/html.py) —
             # recompute positions by scanning within [begin, end). Cells
-            # arrive row-major / column-ascending from segment_table_grid
+            # arrive row-major / column-ascending from extract_blocks_stream
             # (the only producer), so a consecutive walk needs no sorting.
             cursor = begin
             cur_row = None

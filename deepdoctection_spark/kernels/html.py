@@ -1,12 +1,19 @@
-"""HTML main-content extraction: DOM walk + tag/link-density boilerplate strip.
+"""HTML main-content extraction: one streaming scan + tag/link-density
+boilerplate strip.
 
 This is the transcript-payload analogue of the reference's layout-detection +
 matching + NMS chain (/root/reference/deepdoctection/pipe/layout.py:37-121,
 pipe/common.py:76-168, 239-301): instead of a vision model proposing pixel
-blocks that are then filtered by score/NMS, a DOM walk proposes candidate
-blocks (headings, paragraphs, lists, tables, leaf containers) that are then
-filtered by a readability-style link-density heuristic — a block whose text is
-mostly anchor text is boilerplate (nav / footer / sidebar) and is dropped.
+blocks that are then filtered by score/NMS, a scan of the DOM's open/close
+events proposes candidate blocks (headings, paragraphs, lists, tables, leaf
+containers) that are then filtered by a readability-style link-density
+heuristic — a block whose text is mostly anchor text is boilerplate (nav /
+footer / sidebar) and is dropped.
+
+``extract_blocks_stream`` is the production path: it builds no element tree,
+and segments tables into grid cells during the same scan. ``parse_html``
+builds the tolerant element tree that TEDS (kernels/teds.py) compares and
+that the test-side tree reference folds (tests/html_oracle.py).
 
 Output categories follow the reference's LayoutType enum
 (/root/reference/deepdoctection/utils/settings.py:105-131):
@@ -19,7 +26,7 @@ import re
 import types
 from html import unescape as _unescape
 
-from deepdoctection_spark.kernels.table import Block, TableCell, segment_table_grid
+from deepdoctection_spark.kernels.table import Block, TableCell, _int_attr
 from deepdoctection_spark.kernels.textnorm import _WS_RE
 
 # Alternatives: element tag | comment | DOCTYPE-style declaration | processing
@@ -42,8 +49,8 @@ _ATTR_RE = re.compile(r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*=\s*(\"[^\"]*\"|'[^']*'|[
 # final text branch, so ONE finditer drives the whole scan (no per-event
 # search() call). Branch order matters: a '<' that opens a valid construct
 # takes a tag branch; a stray '<' falls through to the single-char text
-# branch, and the word-seam feed rules make split text chunks equivalent to
-# the old between-match slices (property-tested vs the tree fold).
+# branch, and consecutive text matches are fed as one run, so runs land
+# where parse_html's text nodes do (property-tested vs the tree fold).
 # Branch-split variant of _TAG_RE for the streaming loop: close tags are a
 # SEPARATE alternative so m.lastindex alone routes the event and a close
 # fetches ONE group (the tag) instead of the (slash, tag, attrs) triple. The
@@ -87,6 +94,16 @@ _BLOCKISH = (
 _NO_ATTRS: types.MappingProxyType = types.MappingProxyType({})
 
 
+def _decode_attrs(raw: str) -> dict:
+    """Attribute dict of a raw tag tail: lowercased names (a repeated name
+    keeps its last value), quotes stripped, entities decoded when the value
+    holds a '&'."""
+    return {
+        k.lower(): (_unescape(sv) if "&" in (sv := v.strip("\"'")) else sv)
+        for k, v in _ATTR_RE.findall(raw)
+    }
+
+
 class Node:
     __slots__ = ("tag", "text", "children", "_attrs", "_raw")
 
@@ -107,22 +124,12 @@ class Node:
     @property
     def attrs(self) -> dict:
         """Attribute dict, decoded LAZILY from the raw tag tail on first
-        access. Only td/th (row/col spans) and TEDS ever read attrs, so the
-        parse-time findall + dict build for every nav anchor / id'd div was
-        pure waste in the hot path — the raw substring is kept instead and
-        decoded here once, memoized. Value semantics are unchanged
-        (lowercased names, quote-strip, entity decode gated on '&')."""
+        access (only TEDS and td/th spans read attrs), memoized, with the
+        same ``_decode_attrs`` the streaming scan applies to cells."""
         a = self._attrs
         if a is None:
             raw = self._raw
-            if raw:
-                a = {
-                    k.lower(): (
-                        _unescape(sv) if "&" in (sv := v.strip("\"'")) else sv
-                    )
-                    for k, v in _ATTR_RE.findall(raw)
-                }
-            self._attrs = a = a or _NO_ATTRS
+            self._attrs = a = (_decode_attrs(raw) if raw else None) or _NO_ATTRS
         return a
 
     def __repr__(self) -> str:  # debugging parity with the old dataclass
@@ -210,214 +217,48 @@ def parse_html(html: str) -> Node:
     return root
 
 
-def _gather_text(node: Node, want_text: bool = True) -> tuple[str, int, int, int]:
-    """(normalized_text, total_chars, link_chars, tag_count) for a subtree —
-    link_chars counts text under <a> descendants (the readability
-    link-density numerator) and tag_count counts descendant ELEMENT nodes
-    (the tag-density denominator: markup-heavy/text-poor subtrees are
-    boilerplate). The text is returned ALREADY whitespace-normalized
-    (normalize_ws semantics, fused into the walk): words accumulate across
-    text-node boundaries when no whitespace separates them ('<b>a</b>x' →
-    'ax'), whitespace runs and blockish-subtree boundaries become single
-    spaces, and the result is stripped. One pass replaces the old
-    gather-raw-then-regex-normalize double scan.
-
-    Iterative (explicit stack, post-order markers for blockish word
-    boundaries): the recursive-closure version spent ~40% of its time on
-    frame setup/nonlocal cells at ~50 visits per document. ``want_text=False``
-    skips word-list accumulation for callers that only need the density
-    stats (list/table blocks, whose text is assembled separately) — the
-    counters are unchanged, the join is skipped.
-    Property-tested equivalent to a recursive reference walk
-    (tests/test_property.py::test_fused_gather_matches_reference)."""
-    words: list[str] = []
-    total = 0
-    linked = 0
-    tags = 0
-    open_word = False  # last emitted chunk ended mid-word (no trailing ws)
-    split = _WS_RE.split
-    append_words = words.extend
-    # stack entries: (node, in_link); None node = blockish post-order marker
-    stack = [(node, False)]
-    pop = stack.pop
-    push = stack.append
-    while stack:
-        nd, in_link = pop()
-        if nd is None:
-            open_word = False  # blockish subtree edge = word boundary
-            continue
-        tag = nd.tag
-        if tag == "":
-            # split on the SAME ASCII whitespace class normalize_ws collapses
-            # (str.split() would also split on Unicode whitespace like \xa0
-            # that _WS_RE deliberately keeps inside words); empty first/last
-            # pieces mark boundary whitespace
-            pieces = split(nd.text)
-            ws = [w for w in pieces if w]
-            if not ws:
-                if len(pieces) > 1:  # pure-whitespace node: word boundary
-                    open_word = False
-                continue
-            stripped = sum(map(len, ws)) + len(ws) - 1
-            total += stripped
-            if in_link:
-                linked += stripped
-            if want_text:
-                start = 0
-                if open_word and pieces[0] and words:
-                    words[-1] += ws[0]  # continue the word across the seam
-                    start = 1
-                append_words(ws[start:])
-            open_word = bool(pieces[-1])
-            continue
-        tags += 1
-        child_link = in_link or tag == "a"
-        if tag in _BLOCKISH:
-            push((None, False))  # fires AFTER the children (LIFO)
-        ch = nd.children
-        if ch:
-            for i in range(len(ch) - 1, -1, -1):
-                push((ch[i], child_link))
-    # the loop counted `node` itself; tag_count is DESCENDANT elements only,
-    # so a plain-text <p> scores 0 and can never trip the tag-density filter.
-    return (" ".join(words) if want_text else ""), total, linked, tags - 1
-
-
-def _has_block_child(node: Node) -> bool:
-    return any(c.tag in _BLOCKISH and c.tag != "" for c in node.children)
-
-
-def extract_blocks(
-    html: str,
-    link_density_threshold: float = 0.5,
-    tag_density_threshold: float = 8.0,
-    tag_density_min_tags: int = 3,
-) -> list[Block]:
-    """Document-order main-content blocks after boilerplate stripping.
-
-    Two readability-style density filters (reference analogue: score/NMS
-    filtering of proposed layout blocks, pipe/layout.py + pipe/common.py):
-
-    - link density: drop a block whose text is mostly anchor text
-      (`linked/total > link_density_threshold`) — nav / footer / sidebar.
-    - tag density: drop a TEXT block that is markup-heavy and text-poor
-      (≥ `tag_density_min_tags` descendant elements AND fewer than
-      `tag_density_threshold` text chars per element) — share widgets,
-      breadcrumbs, icon rows whose link density alone can sit under 0.5.
-      Scoped to category "text": titles are short by nature, and list/table
-      blocks legitimately spend one element per item/cell.
-    """
-    root = parse_html(html)
-    out: list[Block] = []
-
-    def emit(
-        node: Node,
-        category: str,
-        text: str | None = None,
-        cells: list[TableCell] | None = None,
-    ) -> None:
-        """One subtree walk serves both the density filters and (when `text`
-        is None) the block text itself — the subtree is never gathered
-        twice. When `text` is pre-assembled (list/table), the gather runs
-        stats-only (no word-list build)."""
-        norm, total, linked, tags = _gather_text(node, want_text=text is None)
-        if total == 0:
-            return
-        if linked / total > link_density_threshold:
-            return  # boilerplate: mostly anchor text
-        if (
-            category == "text"
-            and tags >= tag_density_min_tags
-            and tags > 0  # a tag-free block is never markup-heavy (min_tags=0 guard)
-            and total / tags < tag_density_threshold
-        ):
-            return  # boilerplate: markup-heavy, text-poor
-        if text is None:
-            text = norm  # _gather_text output is already normalized
-        if text:
-            out.append(Block(category, text, cells or ()))
-
-    def walk(node: Node) -> None:
-        # inline runs (text nodes + inline elements) between block children
-        # form anonymous text blocks — CSS anonymous-box semantics; needed so
-        # depth-cap flattening (parse_html MAX_DEPTH) never loses content
-        pending: list[Node] = []
-
-        def flush() -> None:
-            if not pending:
-                return
-            wrapper = Node("#anon", children=list(pending))
-            pending.clear()
-            emit(wrapper, "text")
-
-        for c in node.children:
-            if c.tag == "" or c.tag not in _BLOCKISH:
-                pending.append(c)
-                continue
-            flush()
-            tag = c.tag
-            if tag in _HEADINGS:
-                emit(c, "title")
-            elif tag == "p" or tag == "pre":
-                emit(c, "text")
-            elif tag in _LISTS:
-                items = [
-                    _gather_text(li)[0]
-                    for li in c.children
-                    if li.tag == "li"
-                ]
-                emit(c, "list", "\n".join(i for i in items if i))
-            elif tag == "table":
-                cells = segment_table_grid(c)
-                rows: dict[int, list[TableCell]] = {}
-                for cell in cells:
-                    rows.setdefault(cell.row_number, []).append(cell)
-                text = "\n".join(
-                    " ".join(cl.text for cl in sorted(rows[r], key=lambda x: x.column_number) if cl.text)
-                    for r in sorted(rows)
-                )
-                emit(c, "table", text, cells)
-            elif tag in _CONTAINERS or tag in _BLOCKISH:
-                if _has_block_child(c):
-                    walk(c)  # container: recurse
-                else:
-                    emit(c, "text")
-        flush()
-
-    walk(root)
-    return out
-
-
 def looks_like_html(text: str) -> bool:
     return "<" in text and _TAG_RE.search(text) is not None
 
 
 # ---------------------------------------------------------------------------
-# Streaming single-pass extractor (round 4): same output as the tree fold
+# Streaming single-pass extractor: the production HTML path
 # ---------------------------------------------------------------------------
 
-# Scope list indices (plain lists, not objects — the hot loop touches these
-# per text node and per tag; attribute-protocol overhead on a slotted class
-# measured ~15% of the whole kernel in the tree version).
-_S_WORDS, _S_TOTAL, _S_LINKED, _S_TAGS, _S_OPENW, _S_LINKBASE, _S_WANT, _S_ITEM = (
-    range(8)
-)
+# Scope list slots (plain lists, not objects: the hot loop touches them per
+# text run and per tag, and attribute access on a slotted class measured
+# ~15% of the whole kernel):
+#   0 chunks     normalized text chunks (text scopes only), joined by " "
+#   1 total      stripped text chars          (link-density denominator)
+#   2 linked     of those, chars under an <a> opened inside the scope
+#   3 tags       descendant elements          (tag-density denominator)
+#   4 open_word  the last chunk ended mid-word (the next run may glue on)
+#   5 link_base  <a> nesting depth when the scope opened
+#   6 want_text  accumulate chunks, not only counters
+#   7 tee        capture scope (li, table cell): counters tee into the
+#                stats scope directly beneath
+#   8 runs       text runs fed while the scope was on top (cells read it)
 
-# Frame roles
+# Frame roles. Roles >= _R_PLAIN own no scope and close like any inline or
+# unreached element; _R_GROUP and _R_ROW only mark a reached table's row
+# path, so a tr or td opening under them can be told apart from one under
+# a div or a nested table.
 _R_CONTAINER = 0  # reached container: direct blockish children become blocks
 _R_TITLE = 1      # reached heading
 _R_TEXT = 2       # reached p / pre
 _R_LIST = 3       # reached ul/ol: stats scope + per-li text captures
-_R_ITEM = 4       # direct li child of a reached list (capture, tees to list)
-_R_TABLE = 5      # reached table: stats scope + materialized subtree
-_R_PLAIN = 6      # everything else (inline, non-reached blockish, table guts)
+_R_TABLE = 4      # reached table: stats scope + cell grid
+_R_ITEM = 5       # direct li child of a reached list (capture, tees to list)
+_R_CELL = 6       # td/th direct child of a row (capture, tees to table)
+_R_PLAIN = 7      # everything else (inline, unreached blockish, table guts)
+_R_GROUP = 8      # thead/tbody/tfoot whose parent is the table or a group
+_R_ROW = 9        # tr whose parent is the table or a group
+
+_ROW_GROUPS = {"thead", "tbody", "tfoot"}
 
 
-
-
-def _new_scope(want_text: bool, link_base: int, is_item: bool = False) -> list:
-    # [words, total, linked, tags, open_word, link_base, want_text, is_item]
-    return [[], 0, 0, 0, False, link_base, want_text, is_item]
+def _new_scope(want_text: bool, link_base: int, tee: bool = False) -> list:
+    return [[], 0, 0, 0, False, link_base, want_text, tee, 0]
 
 
 def extract_blocks_stream(
@@ -426,30 +267,51 @@ def extract_blocks_stream(
     tag_density_threshold: float = 8.0,
     tag_density_min_tags: int = 3,
 ) -> list[Block]:
-    """Single-pass streaming equivalent of :func:`extract_blocks`: lexer,
-    density-stats gather, and block walk FUSED into one scan — no element
-    tree is materialized except under a reached ``<table>`` (whose grid
-    segmentation genuinely needs the subtree). Output is block-for-block
-    identical to the tree fold; the permanent property test
-    (tests/test_property.py::test_stream_matches_tree_extractor) and the
-    template/golden oracles enforce it.
+    """Document-order main-content blocks after boilerplate stripping, in
+    ONE scan: lexer, density-stats gather, block walk and table grid
+    segmentation are fused and no element tree is built.
+
+    Two readability-style density filters (reference analogue: score/NMS
+    filtering of proposed layout blocks, pipe/layout.py + pipe/common.py):
+
+    - link density: drop a block whose text is mostly anchor text
+      (`linked/total > link_density_threshold`): nav / footer / sidebar.
+    - tag density: drop a TEXT block that is markup-heavy and text-poor
+      (>= `tag_density_min_tags` descendant elements AND fewer than
+      `tag_density_threshold` text chars per element): share widgets,
+      breadcrumbs, icon rows whose link density alone can sit under 0.5.
+      Scoped to category "text": titles are short by nature, and list/table
+      blocks legitimately spend one element per item/cell.
 
     Mechanics: the frame stack mirrors parse_html's element stack exactly
-    (same MAX_DEPTH cap, skip-content fast-skip, auto-close, void and
-    entity handling — tolerant parsing is decision-identical), and a
-    parallel SCOPE stack accumulates (words, total, linked, tags,
-    open_word) for the innermost emission scope. Blocks emit at element
-    CLOSE; a container's pending inline run flushes as an anonymous text
-    block the instant its first blockish direct child OPENS (the same
-    instant the tree version commits to walking the container). Word-seam,
-    blockish-boundary (post-order), and link/tag-density rules are the
-    _gather_text semantics verbatim; li captures TEE into their list's
-    stats scope — the one case with two live scopes per event. The hot
-    paths (text feed, plain-frame open/close, tag bumps) are inlined in
-    the main loop; only reached-element open/close — a handful per
-    document — pays a function call."""
+    (same MAX_DEPTH cap, skip-content jump, auto-close, void and entity
+    handling), and a parallel SCOPE stack accumulates text and counters for
+    the innermost emission scope. Blocks emit at element CLOSE; a
+    container's pending inline run flushes as an anonymous text block the
+    instant its first blockish direct child OPENS. Each text run enters its
+    scope as one whitespace-normalized chunk; a run with no leading
+    whitespace glues onto the previous chunk when that one ended mid-word,
+    and a blockish element's close is a word boundary.
+
+    Tables: a reached <table> owns a stats scope and a cell grid. A tr is a
+    row when its parent is the table or a thead/tbody/tfoot on that path; a
+    td/th is a cell when its parent is a row. A cell is placed on the grid
+    when it opens (rowspan/colspan through ``_int_attr``, capped at
+    MAX_SPAN; occupancy is recorded only for rowspan > 1) and opens a
+    capture scope whose counters tee into the table's, the way a list item
+    tees into its list. A cell past MAX_DEPTH is placed with text "". A
+    nested table is plain content of its cell, and nothing under a table
+    is reached.
+
+    The tree parse + fold in tests/html_oracle.py is the reference; the
+    stream-vs-tree property sweeps in tests/test_property.py and the frozen
+    corpus in tests/test_table_corpus.py hold the two block-for-block and
+    cell-for-cell identical. The hot paths (text feed, plain-frame
+    open/close, tag bumps, item/cell close) are inlined in the main loop;
+    the other reached and table-structure opens and closes, a handful per
+    document, pay a function call."""
     out: list[Block] = []
-    split = _WS_RE.split
+    sub = _WS_RE.sub
     n = len(html)
     blockish_set = _BLOCKISH
     void_set = _VOID
@@ -477,17 +339,17 @@ def extract_blocks_stream(
             out.append(Block(category, text, cells or ()))
 
     # frame: [tag, role, scope_or_None, aux]
-    #   aux: list frames -> item-text list; table frames -> root Node
+    #   aux: list -> its items' texts; item -> that same list;
+    #        table -> grid [cells, row_number, next_col, occupied];
+    #        cell -> its TableCell
     root_scope = _new_scope(True, 0)
     stack: list[list] = [["#root", _R_CONTAINER, root_scope, None]]
     scopes: list[list] = [root_scope]
     link_depth = 0
-    table_depth = 0
-    node_stack: list[Node] = []  # materialization pointers inside a table
+    grid: list = []  # the reached table's grid (at most one is open)
 
     def close_reached(frame: list) -> None:
-        """Emission for a popped reached frame (rare: a few per document)."""
-        nonlocal table_depth
+        """Emission for a popped scope-owning frame."""
         role, scope, aux = frame[1], frame[2], frame[3]
         if role == _R_CONTAINER or role == _R_TEXT:
             emit_from(scope, "text", None)
@@ -496,15 +358,14 @@ def extract_blocks_stream(
         elif role == _R_LIST:
             emit_from(scope, "list", "\n".join(t for t in aux if t))
         elif role == _R_ITEM:
-            aux.append(" ".join(scope[0]))  # aux = parent list's item texts
+            aux.append(" ".join(scope[0]))
+        elif role == _R_CELL:
+            aux.text = _cell_text(scope)
         else:  # _R_TABLE
-            table_depth -= 1
-            node_stack.pop()
-            cells = segment_table_grid(aux)
-            # segment_table_grid emits row-major / column-ascending (rows
-            # enumerate top-down, col only increases within a row), so one
-            # consecutive-grouping walk replaces the dict + two sorts; a row
-            # whose cells are all empty still contributes its "" line
+            cells = aux[0]
+            # cells are placed row-major / column-ascending, so one
+            # consecutive-grouping walk builds the row lines; a row whose
+            # cells are all empty still contributes its "" line
             row_texts: list[str] = []
             cur_row = None
             parts: list[str] = []
@@ -518,18 +379,14 @@ def extract_blocks_stream(
                     parts.append(cl.text)
             if cur_row is not None:
                 row_texts.append(" ".join(parts))
-            text = "\n".join(row_texts)
-            emit_from(scope, "table", text, cells)
+            emit_from(scope, "table", "\n".join(row_texts), cells)
         scopes.pop()
         if scopes:  # blockish-close boundary on whatever lies beneath
-            top = scopes[-1]
-            top[4] = False
-            if top[7]:
-                scopes[-2][4] = False
+            scopes[-1][4] = False
 
-    def open_reached(tag: str, parent: list, rawattrs) -> None:
-        """Open a reached blockish element (rare): push frame + scope."""
-        nonlocal table_depth, link_depth
+    def open_reached(tag: str, parent: list) -> None:
+        """Open a reached blockish element: push frame + scope."""
+        nonlocal grid
         if tag in _HEADINGS:
             scope = _new_scope(True, link_depth)
             stack.append([tag, _R_TITLE, scope, None])
@@ -541,31 +398,68 @@ def extract_blocks_stream(
             stack.append([tag, _R_LIST, scope, []])
         elif tag == "table":
             scope = _new_scope(False, link_depth)
-            if rawattrs and "=" in rawattrs:
-                tnode = Node(tag, _raw=rawattrs)
-            else:
-                tnode = Node(tag, attrs=_NO_ATTRS)
-            stack.append([tag, _R_TABLE, scope, tnode])
-            node_stack.append(tnode)
-            table_depth += 1
+            grid = [[], 0, 1, None]
+            stack.append([tag, _R_TABLE, scope, grid])
         elif parent[1] == _R_LIST:  # tag == "li"
-            scope = _new_scope(True, link_depth, is_item=True)
+            scope = _new_scope(True, link_depth, tee=True)
             stack.append([tag, _R_ITEM, scope, parent[3]])
         else:
             scope = _new_scope(True, link_depth)
             stack.append([tag, _R_CONTAINER, scope, None])
         scopes.append(scope)
 
+    def open_table_part(tag: str, prole: int, rawattrs) -> bool:
+        """Open a blockish child of a reached table, row group or row. True
+        when it is a row group, row or cell (the table scope, on top here,
+        counts it); False leaves it to the plain-element path."""
+        if prole == _R_ROW:
+            if tag != "td" and tag != "th":
+                return False
+            r, col, occupied = grid[1], grid[2], grid[3]
+            if occupied:
+                while (r, col) in occupied:
+                    col += 1
+            rs = cs = 1
+            if rawattrs and "=" in rawattrs:
+                attrs = _decode_attrs(rawattrs)
+                rs = _int_attr(attrs, "rowspan")
+                cs = _int_attr(attrs, "colspan")
+                if rs > 1:
+                    if occupied is None:
+                        occupied = grid[3] = set()
+                    for rr in range(r + 1, r + rs):
+                        for cc in range(col, col + cs):
+                            occupied.add((rr, cc))
+            cell = TableCell("", r, col, rs, cs)
+            grid[0].append(cell)
+            grid[2] = col + cs
+            scopes[-1][3] += 1
+            if len(stack) < MAX_DEPTH:
+                scope = _new_scope(True, link_depth, tee=True)
+                stack.append([tag, _R_CELL, scope, cell])
+                scopes.append(scope)
+            return True
+        if tag == "tr":
+            grid[1] += 1  # a capped tr still numbers a (cell-less) row
+            grid[2] = 1
+            role = _R_ROW
+        elif tag in _ROW_GROUPS:
+            role = _R_GROUP
+        else:
+            return False
+        scopes[-1][3] += 1
+        if len(stack) < MAX_DEPTH:
+            stack.append([tag, role, None, None])
+        return True
+
     # Fused finditer drive: every char lands in exactly one match (tag /
     # comment / text-run / stray '<'), so there is no per-event search()
     # call. Consecutive text-branch matches (runs split at stray '<') BUFFER
-    # into one pending chunk fed at the next non-text event — chunk
-    # boundaries land exactly where the tree parser's between-match slices
-    # do, which the total/stripped char count is sensitive to (inter-chunk
-    # whitespace gaps are never counted, so boundaries must agree). The
-    # iterator restarts only after a skip-content jump (<script>/<style>/
-    # <head> — a handful per document). `top` caches scopes[-1]; every scope
-    # push/pop refreshes it.
+    # into one pending run fed at the next non-text event: run boundaries
+    # land exactly where the tree parser's text nodes do, which the
+    # single-text-child cell rule depends on. The iterator restarts only
+    # after a skip-content jump (<script>/<style>/<head>, a handful per
+    # document). `top` caches scopes[-1]; every scope push/pop refreshes it.
     pos = 0
     scan_iter = _SCAN_RE.finditer
     top = root_scope
@@ -579,44 +473,36 @@ def extract_blocks_stream(
                 pending = t if pending is None else pending + t
                 continue
             if pending is not None:
-                # ---- text feed (inlined hot path; _gather_text seam rules)
+                # ---- text feed (inlined hot path) ----
                 txt = pending
                 pending = None
                 if "&" in txt:
                     txt = _unescape(txt)
-                if table_depth:
-                    node_stack[-1].children.append(Node("", text=txt))
-                # _WS_RE.split collapses runs: only the FIRST and LAST piece
-                # can be empty — no filter pass needed
-                pieces = split(txt)
-                np_ = len(pieces)
-                a = 0 if pieces[0] else 1
-                b = np_ if (np_ == 1 or pieces[-1]) else np_ - 1
-                if a >= b:
-                    if np_ > 1:  # pure whitespace: word boundary
-                        top[4] = False
-                        if top[7]:
-                            scopes[-2][4] = False
-                else:
-                    stripped = sum(map(len, pieces)) + (b - a) - 1
-                    last_open = b == np_
-                    top[1] += stripped
+                norm = sub(" ", txt)
+                chunk = norm.strip(" ")  # never .strip(): \xa0 is a word char
+                if chunk:
+                    k = len(chunk)
+                    top[1] += k
                     if link_depth > top[5]:
-                        top[2] += stripped
+                        top[2] += k
                     if top[6]:
-                        words = top[0]
-                        if top[4] and a == 0 and words:
-                            words[-1] += pieces[0]
-                            words.extend(pieces[1:b])
+                        chunks = top[0]
+                        if top[4] and norm[0] != " " and chunks:
+                            chunks[-1] += chunk  # continue the word across the seam
                         else:
-                            words.extend(pieces[a:b])
-                    top[4] = last_open
-                    if top[7]:  # li capture: tee counters into the list scope
+                            chunks.append(chunk)
+                    top[4] = norm[-1] != " "
+                    if top[7]:  # capture: tee counters into the stats scope
                         s = scopes[-2]
-                        s[1] += stripped
+                        s[1] += k
                         if link_depth > s[5]:
-                            s[2] += stripped
-                        s[4] = last_open
+                            s[2] += k
+                        top[8] += 1
+                else:
+                    if norm:  # pure whitespace: word boundary
+                        top[4] = False
+                    if top[7]:  # (an entity-only run can decode to "")
+                        top[8] += 1
             if li is None:  # comment / declaration / processing instruction
                 continue
             if li == 1:
@@ -627,25 +513,19 @@ def extract_blocks_stream(
                 f = stack[-1]
                 if f[0] == tag and len(stack) > 1:
                     role = f[1]
-                    if role == _R_PLAIN:
-                        if table_depth:
-                            node_stack.pop()
+                    if role >= _R_PLAIN:
                         if tag == "a":
                             link_depth -= 1
-                        if tag in blockish_set:
+                        elif tag in blockish_set:
                             top[4] = False
-                            if top[7]:
-                                scopes[-2][4] = False
                     elif role == _R_ITEM:
-                        # inlined close_reached item case (the most frequent
-                        # reached close): capture tees into the parent list
-                        scope = f[2]
-                        f[3].append(" ".join(scope[0]))
+                        f[3].append(" ".join(top[0]))
                         scopes.pop()
                         top = scopes[-1]
-                        top[4] = False
-                        if top[7]:
-                            scopes[-2][4] = False
+                    elif role == _R_CELL:
+                        f[3].text = _cell_text(top)
+                        scopes.pop()
+                        top = scopes[-1]
                     else:
                         close_reached(f)
                         top = scopes[-1]
@@ -656,25 +536,19 @@ def extract_blocks_stream(
                     if stack[i][0] == tag:
                         for j in range(len(stack) - 1, i - 1, -1):
                             f = stack[j]
-                            if f[1] == _R_PLAIN:  # inlined common case
+                            if f[1] >= _R_PLAIN:  # inlined common case
                                 ftag = f[0]
-                                if table_depth:
-                                    node_stack.pop()
                                 if ftag == "a":
                                     link_depth -= 1
-                                if ftag in blockish_set:
-                                    top = scopes[-1]
-                                    top[4] = False
-                                    if top[7]:
-                                        scopes[-2][4] = False
+                                elif ftag in blockish_set:
+                                    scopes[-1][4] = False
                             else:
                                 close_reached(f)
                         del stack[i:]
                         top = scopes[-1]
                         break
                 continue
-            # ---- open tag ---- (attrs tail fetched lazily: only the table
-            # materialization paths read it)
+            # ---- open tag ----
             tag = m.group(2)
             if not tag.islower():
                 tag = tag.lower()
@@ -689,66 +563,39 @@ def extract_blocks_stream(
                     pos = n if gt < 0 else gt + 1
                 jumped = True
                 break
-            parent = stack[-1]
             blockish = tag in blockish_set
-            prole = parent[1]
-            if (
-                blockish
-                and not table_depth
-                and (prole == _R_CONTAINER or (prole == _R_LIST and tag == "li"))
-            ):
-                # reached block child. A container's pending inline run
-                # flushes NOW (walk-commit instant); the child never counts.
-                if prole == _R_CONTAINER:
-                    scope = parent[2]
-                    if scope[1]:
-                        emit_from(scope, "text", None)
-                        scope = parent[2] = _new_scope(True, link_depth)
-                        scopes[-1] = scope
-                        top = scope
-                    elif scope[0] or scope[3] or scope[4]:
-                        scope[0] = []
-                        scope[1] = scope[2] = scope[3] = 0
-                        scope[4] = False
-                if len(stack) < MAX_DEPTH:
-                    open_reached(
-                        tag, parent, m.group(3) if tag == "table" else None
-                    )
+            if blockish:
+                parent = stack[-1]
+                prole = parent[1]
+                if prole == _R_CONTAINER or (prole == _R_LIST and tag == "li"):
+                    # reached block child. A container's pending inline run
+                    # flushes NOW (walk-commit instant); the child never counts.
+                    if prole == _R_CONTAINER:
+                        scope = parent[2]
+                        if scope[1]:
+                            emit_from(scope, "text", None)
+                            scope = parent[2] = _new_scope(True, link_depth)
+                            scopes[-1] = scope
+                            top = scope
+                        elif scope[0] or scope[3] or scope[4]:
+                            scope[0] = []
+                            scope[1] = scope[2] = scope[3] = 0
+                            scope[4] = False
+                    if len(stack) < MAX_DEPTH:
+                        open_reached(tag, parent)
+                        top = scopes[-1]
+                    continue  # past the cap: childless in the tree -> emits nothing
+                if (prole == _R_TABLE or prole >= _R_GROUP) and open_table_part(
+                    tag, prole, m.group(3)
+                ):
                     top = scopes[-1]
-                continue  # past the cap: childless in the tree -> emits nothing
-            # ---- plain element (inline, non-reached blockish, table guts) --
+                    continue
+            # ---- plain element (inline, unreached blockish, table guts) ----
             top[3] += 1
             if top[7]:
                 scopes[-2][3] += 1
-            if table_depth:
-                rawattrs = m.group(3)
-                if rawattrs and "=" in rawattrs:
-                    node = Node(tag, _raw=rawattrs)
-                else:
-                    node = Node(tag, attrs=_NO_ATTRS)
-                node_stack[-1].children.append(node)
-                if tag == "br":
-                    node_stack[-1].children.append(Node("", text="\n"))
-                    top[4] = False
-                    if top[7]:
-                        scopes[-2][4] = False
-                    continue
-                if tag in void_set:
-                    continue
-                if len(stack) < MAX_DEPTH:
-                    stack.append([tag, _R_PLAIN, None, None])
-                    node_stack.append(node)
-                    if tag == "a":
-                        link_depth += 1
-                elif blockish:
-                    top[4] = False
-                    if top[7]:
-                        scopes[-2][4] = False
-                continue
             if tag == "br":  # the "\n" text node is pure whitespace: boundary
                 top[4] = False
-                if top[7]:
-                    scopes[-2][4] = False
                 continue
             if tag in void_set:
                 continue
@@ -758,64 +605,45 @@ def extract_blocks_stream(
                     link_depth += 1
             elif blockish:
                 top[4] = False
-                if top[7]:
-                    scopes[-2][4] = False
             continue
         if not jumped:
             break
     if pending is not None:
         # trailing text after the last tag event (cold path: once per doc at
         # most; same feed semantics as the inlined loop body)
-        txt = pending
-        if "&" in txt:
-            txt = _unescape(txt)
-        if table_depth:
-            node_stack[-1].children.append(Node("", text=txt))
-        top = scopes[-1]
-        pieces = split(txt)
-        np_ = len(pieces)
-        a = 0 if pieces[0] else 1
-        b = np_ if (np_ == 1 or pieces[-1]) else np_ - 1
-        if a >= b:
-            if np_ > 1:
-                top[4] = False
-                if top[7]:
-                    scopes[-2][4] = False
-        else:
-            stripped = sum(map(len, pieces)) + (b - a) - 1
-            last_open = b == np_
-            top[1] += stripped
+        txt = _unescape(pending) if "&" in pending else pending
+        norm = sub(" ", txt)
+        chunk = norm.strip(" ")
+        if chunk:
+            k = len(chunk)
+            top[1] += k
             if link_depth > top[5]:
-                top[2] += stripped
+                top[2] += k
             if top[6]:
-                words = top[0]
-                if top[4] and a == 0 and words:
-                    words[-1] += pieces[0]
-                    words.extend(pieces[1:b])
+                if top[4] and norm[0] != " " and top[0]:
+                    top[0][-1] += chunk
                 else:
-                    words.extend(pieces[a:b])
-            top[4] = last_open
+                    top[0].append(chunk)
             if top[7]:
                 s = scopes[-2]
-                s[1] += stripped
+                s[1] += k
                 if link_depth > s[5]:
-                    s[2] += stripped
-                s[4] = last_open
+                    s[2] += k
+        if top[7]:
+            top[8] += 1
     # EOF: close every open frame innermost-out; the root frame flushes its
-    # final pending run (identical to walk(root)'s trailing flush())
-    for j in range(len(stack) - 1, -1, -1):
-        f = stack[j]
-        if f[1] == _R_PLAIN:
-            ftag = f[0]
-            if table_depth:
-                node_stack.pop()
-            if ftag == "a":
-                link_depth -= 1
-            if ftag in blockish_set:
-                top = scopes[-1]
-                top[4] = False
-                if top[7]:
-                    scopes[-2][4] = False
-        else:
+    # final pending run (the tree walk's trailing anonymous block)
+    for f in reversed(stack):
+        if f[1] < _R_PLAIN:
             close_reached(f)
     return out
+
+
+def _cell_text(scope: list) -> str:
+    """A cell's text. A cell whose only child is one text node is normalized
+    with ``normalize_ws``, whose ``str.strip()`` also trims edge Unicode
+    whitespace (\xa0) that the chunk join keeps everywhere else."""
+    text = " ".join(scope[0])
+    if scope[8] == 1 and not scope[3]:
+        return text.strip()
+    return text

@@ -1,9 +1,10 @@
-"""Table segmentation: grid placement with row/col spans + HTML synthesis.
+"""Table cells: the cell record, span parsing, and HTML synthesis.
 
 Reference semantics re-expressed on DOM tables:
 - cell → (row_number, column_number, row_span, column_span), 1-based, via
-  occupancy-grid placement — the reference derives the same quadruple from
-  box-center sorting + interval matching
+  occupancy-grid placement inside the HTML scan
+  (kernels/html.extract_blocks_stream) — the reference derives the same
+  quadruple from box-center sorting + interval matching
   (/root/reference/deepdoctection/pipe/segment.py:399-486, 641-799).
 - HTML synthesis mirrors generate_html_string
   (/root/reference/deepdoctection/pipe/refine.py:297-346): golden tests pin
@@ -15,14 +16,7 @@ Reference semantics re-expressed on DOM tables:
 from __future__ import annotations
 
 from collections.abc import Sequence
-from dataclasses import dataclass, field
-from typing import TYPE_CHECKING
-
-from deepdoctection_spark.kernels.textnorm import normalize_ws
-
-
-if TYPE_CHECKING:  # avoid circular import at runtime
-    from deepdoctection_spark.kernels.html import Node
+from dataclasses import dataclass
 
 
 @dataclass
@@ -64,76 +58,14 @@ def _int_attr(attrs: dict, name: str, default: int = 1) -> int:
         return default
 
 
-def _find_rows(table_node: "Node") -> list["Node"]:
-    rows: list[Node] = []
-
-    def rec(nd) -> None:
-        for c in nd.children:
-            if c.tag == "tr":
-                rows.append(c)
-            elif c.tag in ("thead", "tbody", "tfoot"):
-                rec(c)
-
-    rec(table_node)
-    return rows
-
-
-def segment_table_grid(table_node: "Node") -> list[TableCell]:
-    """Place td/th cells on an occupancy grid honoring rowspan/colspan.
-
-    Occupancy bookkeeping is LAZY: within a row the column cursor only moves
-    right, so a cell's own-row coverage (any colspan) can never be probed by
-    a later cell in that row — only ``rowspan > 1`` coverage of LATER rows
-    is ever queried. Span-free tables (the overwhelmingly common case) touch
-    no set at all; single-text-child cells skip the subtree walk. Output is
-    identical to the always-register version (tests/test_table.py +
-    the `table_cells` oracle pin it)."""
-    from deepdoctection_spark.kernels.html import _gather_text  # local: circular
-
-    occupied: set[tuple[int, int]] | None = None
-    normalize = normalize_ws
-    cells: list[TableCell] = []
-    for r, tr in enumerate(_find_rows(table_node), start=1):
-        col = 1
-        for td in tr.children:
-            if td.tag not in ("td", "th"):
-                continue
-            if occupied:
-                while (r, col) in occupied:
-                    col += 1
-            rs = _int_attr(td.attrs, "rowspan")
-            cs = _int_attr(td.attrs, "colspan")
-            if rs > 1:
-                if occupied is None:
-                    occupied = set()
-                for rr in range(r + 1, r + rs):
-                    for cc in range(col, col + cs):
-                        occupied.add((rr, cc))
-            ch = td.children
-            if len(ch) == 1 and not ch[0].tag:
-                text = normalize(ch[0].text)  # single text child: no walk
-            else:
-                text = _gather_text(td)[0]  # already normalized
-            cells.append(
-                TableCell(
-                    text=text,
-                    row_number=r,
-                    column_number=col,
-                    row_span=rs,
-                    column_span=cs,
-                )
-            )
-            col += cs
-    return cells
-
-
 def cells_to_html(cells: list[TableCell]) -> str:
     """Deterministic HTML string from segmented cells (refine.py:297-346
     semantics; golden string format per tests/analyzer/test_dd.py:100-107).
 
     Precondition: cells arrive row-major / column-ascending —
-    :func:`segment_table_grid` (the only producer) emits that order, so one
-    consecutive-grouping walk replaces the dict build + two sorts."""
+    :func:`kernels.html.extract_blocks_stream` (the only producer) places
+    them in that order, so one consecutive-grouping walk replaces the dict
+    build + two sorts."""
     parts = ["<table>"]
     cur_row = None
     for c in cells:

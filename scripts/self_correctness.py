@@ -46,7 +46,7 @@ def main() -> int:
     out_path = Path(args.out or REPO / f"CORRECTNESS_self_r{args.round:02d}.json")
 
     import __spark_entry__ as entry
-    from harness import compare_query, duckdb_con
+    from harness import compare_frames, query_frames
     from deepdoctection_spark import get_spark
     from deepdoctection_spark.plans.evaluation import clear_gt_cache
 
@@ -69,12 +69,11 @@ def main() -> int:
                 rec["spark_rows"] = fn(spark, args.sf_dir).count()
                 rec["rows_match"] = rec["spark_rows"] >= 0
             else:
-                problems = compare_query(spark, name, fn, oracle, args.sf_dir)
-                with duckdb_con(args.sf_dir) as con:
-                    rec["oracle_rows"] = con.execute(
-                        f"SELECT count(*) FROM ({oracle})"
-                    ).fetchone()[0]
-                rec["spark_rows"] = fn(spark, args.sf_dir).count()
+                # row counts come from the compared frames: each side runs once
+                sdf, odf = query_frames(spark, fn, oracle, args.sf_dir)
+                problems = compare_frames(name, sdf, odf)
+                rec["oracle_rows"] = len(odf)
+                rec["spark_rows"] = len(sdf)
                 rec["rows_match"] = not any("rowcount" in p for p in problems)
                 rec["schema_match"] = not any(
                     "column mismatch" in p or "dtype kind" in p for p in problems

@@ -89,12 +89,24 @@ def canon_rows(df: pd.DataFrame) -> list[tuple]:
     return sorted(out)
 
 
-def compare_query(spark, name: str, query_fn, oracle: str, sf_dir: str) -> list[str]:
-    """Returns a list of problem strings (empty == pass)."""
-    problems: list[str] = []
+def query_frames(
+    spark, query_fn, oracle: str, sf_dir: str
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """(Spark result, DuckDB oracle result) of one query as pandas frames."""
     sdf = query_fn(spark, sf_dir).toPandas()
     with duckdb_con(sf_dir) as con:
         odf = con.execute(oracle).df()
+    return sdf, odf
+
+
+def compare_query(spark, name: str, query_fn, oracle: str, sf_dir: str) -> list[str]:
+    """Returns a list of problem strings (empty == pass)."""
+    return compare_frames(name, *query_frames(spark, query_fn, oracle, sf_dir))
+
+
+def compare_frames(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """Problem strings for a Spark result against its oracle result."""
+    problems: list[str] = []
     if sorted(sdf.columns) != sorted(odf.columns):
         problems.append(
             f"{name}: column mismatch spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 
 from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
-from deepdoctection_spark.kernels.html import extract_blocks, parse_html
+from deepdoctection_spark.kernels.html import extract_blocks_stream, parse_html
 from deepdoctection_spark.kernels.ids import span_id
 from deepdoctection_spark.kernels.layout import extract_layout_blocks
 from deepdoctection_spark.kernels.match import (
@@ -17,13 +17,14 @@ from deepdoctection_spark.kernels.match import (
     match_children,
     nms_spans,
 )
-from deepdoctection_spark.kernels.table import cells_to_html, segment_table_grid
+from deepdoctection_spark.kernels.table import cells_to_html
 from deepdoctection_spark.kernels.textnorm import (
     bpe_ish_token_count,
     normalize_ws,
     whitespace_token_count,
     word_spans,
 )
+from tests.html_oracle import extract_blocks, segment_table_grid
 
 # ---------------------------------------------------------------------------
 # text contract
@@ -179,26 +180,28 @@ def test_table_rowspan_grid_and_html():
         "<tr><td>e</td><td>f</td></tr>"
         "</table>"
     )
-    cells = segment_table_grid(parse_html(html).children[0])
-    grid = {(c.row_number, c.column_number): (c.text, c.row_span, c.column_span) for c in cells}
-    assert grid == {
-        (1, 1): ("span", 2, 1),
-        (1, 2): ("b", 1, 1),
-        (2, 2): ("d", 1, 1),  # col 1 occupied by the rowspan cell
-        (3, 1): ("e", 1, 1),
-        (3, 2): ("f", 1, 1),
-    }
-    assert cells_to_html(cells) == (
-        "<table><tr><td rowspan=2>span</td><td>b</td></tr>"
-        "<tr><td>d</td></tr><tr><td>e</td><td>f</td></tr></table>"
-    )
+    (block,) = extract_blocks_stream(html)
+    for cells in (segment_table_grid(parse_html(html).children[0]), block.cells):
+        grid = {(c.row_number, c.column_number): (c.text, c.row_span, c.column_span) for c in cells}
+        assert grid == {
+            (1, 1): ("span", 2, 1),
+            (1, 2): ("b", 1, 1),
+            (2, 2): ("d", 1, 1),  # col 1 occupied by the rowspan cell
+            (3, 1): ("e", 1, 1),
+            (3, 2): ("f", 1, 1),
+        }
+        assert cells_to_html(cells) == (
+            "<table><tr><td rowspan=2>span</td><td>b</td></tr>"
+            "<tr><td>d</td></tr><tr><td>e</td><td>f</td></tr></table>"
+        )
 
 
 def test_table_colspan():
     html = "<table><tr><td colspan=2>w</td><td>x</td></tr><tr><td>a</td><td>b</td><td>c</td></tr></table>"
-    cells = segment_table_grid(parse_html(html).children[0])
-    grid = {(c.row_number, c.column_number): c.text for c in cells}
-    assert grid == {(1, 1): "w", (1, 3): "x", (2, 1): "a", (2, 2): "b", (2, 3): "c"}
+    (block,) = extract_blocks_stream(html)
+    for cells in (segment_table_grid(parse_html(html).children[0]), block.cells):
+        grid = {(c.row_number, c.column_number): c.text for c in cells}
+        assert grid == {(1, 1): "w", (1, 3): "x", (2, 1): "a", (2, 2): "b", (2, 3): "c"}
 
 
 # ---------------------------------------------------------------------------
@@ -406,6 +409,11 @@ def test_adversarial_rowspan_capped():
     cells = segment_table_grid(parse_html(html).children[0])
     assert time.monotonic() - t0 < 2.0
     assert cells[0].row_span == MAX_SPAN and cells[0].column_span == MAX_SPAN
+    t0 = time.monotonic()
+    (block,) = extract_blocks_stream(html)
+    assert time.monotonic() - t0 < 2.0
+    cell = block.cells[0]
+    assert (cell.row_span, cell.column_span, cell.text) == (MAX_SPAN, MAX_SPAN, "x")
 
 
 def test_teds_spans_in_labels_and_size_cap():

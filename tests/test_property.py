@@ -11,9 +11,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
-from deepdoctection_spark.kernels.html import extract_blocks, parse_html
+from deepdoctection_spark.kernels.html import extract_blocks_stream, parse_html
 from deepdoctection_spark.kernels.teds import teds
 from deepdoctection_spark.kernels.textnorm import normalize_ws, word_spans
+from tests.html_oracle import _gather_text, extract_blocks
 
 # text with plenty of HTML-ish structure mixed in
 _frag = st.sampled_from(
@@ -27,8 +28,6 @@ _soup = st.lists(_frag, max_size=80).map("".join)
 @settings(max_examples=120, deadline=None, derandomize=True)
 @given(_soup)
 def test_parser_total_on_tag_soup(s):
-    from deepdoctection_spark.kernels.html import extract_blocks_stream
-
     parse_html(s)  # must not raise on any input
     extract_blocks(s)
     extract_blocks_stream(s)  # the production hot path is total too
@@ -111,8 +110,6 @@ def _gather_text_reference(node):
 @settings(max_examples=200, deadline=None, derandomize=True)
 @given(_soup)
 def test_fused_gather_matches_reference(s):
-    from deepdoctection_spark.kernels.html import _gather_text
-
     root = parse_html(s)
     norm, total, linked, tags = _gather_text(root)
     raw, rtotal, rlinked, rtags = _gather_text_reference(root)
@@ -201,10 +198,6 @@ def test_stream_matches_tree_extractor(s):
     """The single-pass streaming extractor (the production hot path since
     round 4) is block-for-block identical to the tree fold on arbitrary tag
     soup — categories, texts, and full table-cell grids."""
-    from deepdoctection_spark.kernels.html import (
-        extract_blocks,
-        extract_blocks_stream,
-    )
 
     def key(bs):
         return [
@@ -227,11 +220,7 @@ def test_stream_matches_tree_on_structured_nesting():
     tables in containers) — heavier structure than the flat soup strategy."""
     import random
 
-    from deepdoctection_spark.kernels.html import (
-        MAX_DEPTH,
-        extract_blocks,
-        extract_blocks_stream,
-    )
+    from deepdoctection_spark.kernels.html import MAX_DEPTH
 
     def key(bs):
         return [(b.category, b.text, [(c.row_number, c.column_number, c.text) for c in b.cells]) for b in bs]
@@ -269,10 +258,6 @@ def test_stream_matches_tree_on_stray_angle_hostile():
     reproduced the one divergence the flat-soup strategy missed."""
     import random
 
-    from deepdoctection_spark.kernels.html import (
-        extract_blocks,
-        extract_blocks_stream,
-    )
 
     def key(bs):
         return [
@@ -320,11 +305,7 @@ def test_stream_matches_tree_on_table_shapes():
     (row, col, row_span, col_span, text)."""
     import random
 
-    from deepdoctection_spark.kernels.html import (
-        MAX_DEPTH,
-        extract_blocks,
-        extract_blocks_stream,
-    )
+    from deepdoctection_spark.kernels.html import MAX_DEPTH
 
     def key(bs):
         return [
@@ -341,7 +322,8 @@ def test_stream_matches_tree_on_table_shapes():
                   "p&amp;q", "&lt;td&gt;", "x<br>y", "<br>", "<b>bo</b>ld",
                   "u <i>v</i> w", "<a href=/l>link</a>", "<p>para</p>tail",
                   "<ul><li>i1</li><li>i2</li></ul>", "k<!--c-->l",
-                  "m<script>n</script>o", "<img src=x>img", "  spaced\tout  "]
+                  "m<script>n</script>o", "<img src=x>img", "  spaced\tout  ",
+                  "&#1;<!---->&nbsp;z", " <!---->&nbsp;z"]
     rng = random.Random(8)
 
     def span_attrs():
@@ -400,6 +382,12 @@ def test_stream_matches_tree_on_table_shapes():
         "<table><tr><td rowspan=0 colspan=-3>z</td><td rowspan=abc colspan=\"\">y</td></tr></table>",
         "<table><tr><td rowspan=2000000000>big</td><td>r1</td></tr><tr><td>r2</td></tr></table>",
         "<table><caption>cap</caption><tr><th>h</th></tr></table>",
+        # two text nodes (one decodes to "", one is bare whitespace): the
+        # cell keeps its edge \xa0, unlike a single-text-node cell
+        "<table><tr><td>&#1;<!---->&nbsp;x</td><td> <!---->&nbsp;y</td></tr></table>",
+        # the tr under the inner group is capped but still numbers row 1
+        "<div>" * (MAX_DEPTH - 4) + "<table><tbody><thead><tr><td>h</td></tr>"
+        "</thead></tbody><tr><td>b</td></tr></table>" + "</div>" * (MAX_DEPTH - 4),
     ]
     for pad in (MAX_DEPTH - 4, MAX_DEPTH - 3, MAX_DEPTH - 2):
         # pad divs + table + tr: at MAX_DEPTH - 3 the tr is the last frame
