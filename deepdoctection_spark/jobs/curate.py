@@ -133,8 +133,7 @@ def publish_curated(
     isolation, history (each publish is an overwrite commit, so corpus v1
     remains time-travelable after v2 lands), and prunable file metadata.
     Each publish also TAGS its snapshot ``corpus-v<seq>`` (Iceberg named
-    ref), so "the exact table a model trained on" is pinned by name and
-    survives expire_snapshots until the tag is deleted.
+    ref), so "the exact table a model trained on" is pinned by name.
     The publish clusters on (pred_lang, doc_id) — training consumers slice
     by language, then by id range — and writes a Bloom sidecar on doc_id so
     single-document audits ("why is doc X in the set?") read one file, not

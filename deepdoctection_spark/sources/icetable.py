@@ -31,25 +31,23 @@ files). With a manifest list, an append writes ONE new manifest holding only
 its own files plus a snapshot whose manifest list grows by one reference:
 commit metadata is O(added files + number of manifests). Row-level ops
 rewrite only the manifests whose files they touch; untouched manifests carry
-over by reference. ``rewrite_manifests()`` (Iceberg's procedure of the same
-name) compacts a long manifest list back to one manifest in a metadata-only
-commit.
+over by reference.
 
 Semantics carried over from Iceberg:
 
 - **Atomic commits, snapshot isolation**: data files land first; the
   snapshot JSON is written with EXCLUSIVE CREATE (``open(..., "x")``) so two
   concurrent committers racing for the same sequence number conflict
-  explicitly. A losing ``append``/``overwrite``/``compact``/``rollback``
-  RE-READS the winner's snapshot and rebuilds its manifest list on top of it
-  (optimistic concurrency, like Iceberg's metadata-pointer CAS — the
-  winner's files are never lost). A losing ``delete_where``/``merge_upsert``
-  raises :class:`CommitConflict` instead: their rewrite plan was computed
-  against a snapshot that is no longer current, and silently rebasing could
-  resurrect deleted rows. Readers resolve the current snapshot via
-  version-hint but fall back to the highest committed snap file, so a torn
-  hint is harmless. Uncommitted data files are invisible (never listed in
-  any manifest reachable from a snapshot).
+  explicitly. A losing ``append``/``overwrite`` RE-READS the winner's
+  snapshot and rebuilds its manifest list on top of it (optimistic
+  concurrency, like Iceberg's metadata-pointer CAS — the winner's files are
+  never lost). A losing ``compact``/``delete_where``/``merge_upsert``/
+  ``rewrite_files`` raises :class:`CommitConflict` instead: its rewrite plan
+  was computed against a snapshot that is no longer current, and silently
+  rebasing could resurrect deleted rows. Readers resolve the current
+  snapshot via version-hint but fall back to the highest committed snap
+  file, so a torn hint is harmless. Uncommitted data files are invisible
+  (never listed in any manifest reachable from a snapshot).
 - **Time travel**: ``read(spark, seq=...)`` reconstructs any historical file
   list from its manifest list; ``history()`` is the lineage (snapshot →
   parent) and needs only the manifest-list aggregates, no manifest loads.
@@ -68,9 +66,6 @@ Semantics carried over from Iceberg:
   columns only) — resuming a job with a drifted schema fails loudly. The
   DDL comparison is bracket-aware, so nested types (struct/array/map,
   decimal) evolve correctly.
-- **Rollback**: ``rollback(snapshot_id)`` commits a NEW snapshot whose
-  manifest list is the old one (history is append-only, like Iceberg — no
-  snapshot is ever destroyed).
 - **Row-level ops, copy-on-write AND merge-on-read**: ``delete_where`` and
   ``merge_upsert`` default to CoW — rewrite ONLY the files whose manifest
   stats may contain affected rows (merge intersects the ranges of ALL key
@@ -84,29 +79,16 @@ Semantics carried over from Iceberg:
   files at plan time and anti-join only the affected files; ``compact()``
   folds deletes in physically and ``overwrite`` drops them.
 - **Named refs (tags)**: ``tag(name)`` pins a snapshot under an immutable
-  name (``read(spark, tag="v1")`` = VERSION AS OF by name); tagged
-  snapshots are retained through expiry until ``delete_tag`` — the
-  Iceberg ref-retention contract (refs live under ``metadata/refs/``).
-- **Branches + write-audit-publish**: ``create_branch(name)`` forks the
-  current snapshot into a branch-local lineage (``metadata/branches/<n>/``)
-  sharing data files and manifests with main; branch commits leave main
-  untouched and readable; ``fast_forward(name)`` publishes the audited
-  branch tip to main as a metadata-only commit, refusing when main moved
-  past the fork point. Expiry retains everything any live branch
-  references; ``delete_branch`` releases it.
-- **Maintenance**: ``expire_snapshots(keep_last=k)`` deletes expired
-  snapshots, the manifests only they reference, and the data files only
-  they reference (storage reclamation after overwrite/delete/compaction
-  churn) — except snapshots pinned by tags.
+  name (``read(spark, tag="v1")`` = VERSION AS OF by name; refs live under
+  ``metadata/refs/``).
+- **Maintenance**: ``remove_orphans()`` deletes the files no committed
+  snapshot references (torn writes, lost commit races); no snapshot is
+  ever destroyed, so time travel reaches every committed sequence.
 
-Metadata harvest runs ON THE WRITE EXECUTORS (as Iceberg's writers do):
-after the staged files are renamed into place, a Spark job fans the new
-file list out over the cluster; each task reads its files' parquet footers,
-builds and writes the Bloom sidecars, and returns one manifest row — the
-driver receives O(added) small JSON rows, never payload bytes, so commit
-latency stays flat in table size AND in per-commit data volume. Commits of
-≤ ``_DRIVER_HARVEST_MAX`` files skip the job-scheduling overhead and run
-the IDENTICAL harvest function on the driver.
+Metadata harvest runs on the driver once the staged files are renamed into
+place: per file it reads the parquet footer, writes the Bloom sidecars and
+builds the manifest entry. Reading footers costs far less than scheduling a
+Spark job to read them.
 
 The checkpointed jobs (jobs/resumable.py, jobs/curate.py) commit each wave
 as one ``append`` whose ``extra`` carries the wave record; their per-bucket
@@ -129,12 +111,6 @@ from functools import reduce
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Commits with at most this many new files harvest footer stats / Bloom
-# sidecars on the driver (same function, no Spark job) — the job-scheduling
-# overhead would dominate for tiny commits. Larger commits fan the harvest
-# out over the executors.
-_DRIVER_HARVEST_MAX = 4
 
 # A manifest-list entry stops recording its covered partition values past
 # this many distinct values (pruning falls back to the per-file checks).
@@ -240,9 +216,8 @@ def _bloom_may_contain(bloom: dict, value: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Metadata harvest — runs on write EXECUTORS for large commits (driver for
-# tiny ones): parquet footer stats + Bloom sidecar construction per new data
-# file. Module-level so Spark tasks can pickle it without a table handle.
+# Metadata harvest, on the driver: parquet footer stats + Bloom sidecar
+# construction per new data file.
 # ---------------------------------------------------------------------------
 
 
@@ -276,7 +251,7 @@ def _harvest_entry(data_dir: str, meta_dir: str, rel: str,
                    bloom_cols: list[str] | None) -> dict:
     """One manifest entry for one committed data file: footer stats, the
     partition value re-derived from the Hive path, Bloom sidecars written
-    as a side effect. Pure function of the file — safe to run anywhere."""
+    as a side effect."""
     rows, stats, nulls = _file_stats(os.path.join(data_dir, rel))
     entry: dict = {"path": rel, "rows": rows, "stats": stats,
                    "null_value_counts": nulls}
@@ -410,21 +385,15 @@ def _manifest_partitions(entries: list[dict]) -> dict[str, list[str]] | None:
 
 
 class IceTable:
-    # the main branch's snapshot log (snap files, version hint), relative to
-    # the table path; a subclass may move it (jobs/resumable.WaveTable)
+    # the snapshot log (snap files, version hint), relative to the table
+    # path; a subclass may move it (jobs/resumable.WaveTable)
     SNAPSHOT_DIR = "metadata"
 
-    def __init__(self, path: str, branch: str | None = None) -> None:
+    def __init__(self, path: str) -> None:
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.meta_dir = os.path.join(path, "metadata")
-        self.branch_name = branch
-        # snapshots live per branch; data files, manifests, Bloom sidecars
-        # and refs are SHARED across branches (a branch commit only writes
-        # branch-local snapshot JSON — Iceberg's branch model)
-        self._snap_dir = (
-            os.path.join(self.meta_dir, "branches", branch)
-            if branch else os.path.join(path, self.SNAPSHOT_DIR))
+        self._snap_dir = os.path.join(path, self.SNAPSHOT_DIR)
 
     # -- snapshot resolution --------------------------------------------
 
@@ -446,9 +415,7 @@ class IceTable:
         return seqs[-1] if seqs else 0
 
     def _raw_snapshot(self, seq: int | None = None) -> dict:
-        """The snapshot JSON as committed: manifest list, NO file entries
-        (legacy pre-manifest snapshots carry an inline ``files`` list and
-        are handled transparently everywhere)."""
+        """The snapshot JSON as committed: manifest list, NO file entries."""
         seq = self.current_seq() if seq is None else seq
         if seq == 0:
             return {"sequence": 0, "parent": None, "operation": "create",
@@ -458,8 +425,7 @@ class IceTable:
 
     def _load_manifest(self, path: str) -> list[dict]:
         """File entries of one manifest — cached per handle (manifests are
-        immutable; expire_snapshots creates new handles' problems only for
-        already-expired history, which is the documented contract)."""
+        immutable)."""
         cache = getattr(self, "_manifest_cache", None)
         if cache is None:
             cache = self._manifest_cache = {}
@@ -469,12 +435,9 @@ class IceTable:
         return cache[path]
 
     def _snap_files(self, raw: dict) -> list[dict]:
-        """Materialize a snapshot's full file-entry list from its manifests
-        (or the inline list of a legacy snapshot)."""
-        if "files" in raw:
-            return raw["files"]
+        """Materialize a snapshot's full file-entry list from its manifests."""
         out: list[dict] = []
-        for ref in raw.get("manifests", []):
+        for ref in raw["manifests"]:
             out.extend(self._load_manifest(ref["path"]))
         return out
 
@@ -483,18 +446,14 @@ class IceTable:
         ``files`` (resolved from the manifest list; the on-disk snapshot
         stores only manifest references)."""
         raw = self._raw_snapshot(seq)
-        if "files" not in raw:
-            raw["files"] = self._snap_files(raw)
+        raw["files"] = self._snap_files(raw)
         return raw
 
     def _added_files(self, raw: dict) -> list[dict]:
         """Entries of the data files a snapshot added, from its added
-        manifests alone (or the inline list of a legacy snapshot)."""
-        if "added_manifests" in raw:
-            return [e for m in raw["added_manifests"]
-                    for e in self._load_manifest(m)]
-        by_path = {f["path"]: f for f in raw.get("files", [])}
-        return [by_path[p] for p in raw.get("added", []) if p in by_path]
+        manifests alone."""
+        return [e for m in raw["added_manifests"]
+                for e in self._load_manifest(m)]
 
     def snapshot_log(self, newest_first: bool = False):
         """Walk the snapshot log: each committed snapshot as stored (manifest
@@ -514,18 +473,12 @@ class IceTable:
         out = []
         for seq in self._committed_seqs():
             s = self._raw_snapshot(seq)
-            if "files" in s:  # legacy inline snapshot
-                total_files = len(s["files"])
-                total_rows = sum(f["rows"] for f in s["files"])
-            else:
-                total_files = sum(m["n_files"] for m in s["manifests"])
-                total_rows = sum(m["rows"] for m in s["manifests"])
             out.append({
                 "sequence": s["sequence"], "snapshot_id": s["snapshot_id"],
                 "parent": s["parent"], "operation": s["operation"],
                 "added_files": len(s.get("added", [])),
-                "total_files": total_files,
-                "total_rows": total_rows,
+                "total_files": sum(m["n_files"] for m in s["manifests"]),
+                "total_rows": sum(m["rows"] for m in s["manifests"]),
                 "ts_ms": s.get("ts_ms"),
             })
         return out
@@ -550,14 +503,6 @@ class IceTable:
             cache = self._manifest_cache = {}
         cache[name] = entries
         return ref
-
-    def _carry_manifests(self, raw: dict) -> list[dict]:
-        """A parent snapshot's manifest list, upgrading a legacy inline
-        snapshot to one written manifest on first carry."""
-        if "manifests" in raw:
-            return raw["manifests"]
-        files = raw.get("files") or []
-        return [self._write_manifest(files)] if files else []
 
     @staticmethod
     def _zorder_column(df: DataFrame, cols: list[str],
@@ -626,13 +571,8 @@ class IceTable:
                           zorder_by: list[str] | None = None) -> list[dict]:
         """Stage df as immutable parquet files under data/ (commit-uuid
         prefix — never visible until a manifest reachable from a snapshot
-        lists them), then harvest each file's manifest entry. The harvest
-        (footer stats + Bloom sidecars) runs as a Spark job over the new
-        file list — executor-side, like Iceberg's write tasks — so the
-        driver receives only O(added) manifest rows and commit latency is
-        flat in both table size and commit data volume. Commits of ≤
-        ``_DRIVER_HARVEST_MAX`` files run the same function driver-side to
-        skip job overhead.
+        lists them), then harvest each file's manifest entry (footer stats
+        + Bloom sidecars) on the driver.
 
         With ``partition_by``, files land in Hive-style ``col=value``
         subdirs (Iceberg identity partitioning) and each manifest entry
@@ -647,7 +587,6 @@ class IceTable:
         per listed column for point-lookup pruning on keys where min/max
         can't help."""
         os.makedirs(self.data_dir, exist_ok=True)
-        spark = df.sparkSession
         commit = uuid.uuid4().hex[:12]
         staging = os.path.join(self.path, f"_staging-{commit}")
         if zorder_by:
@@ -704,41 +643,8 @@ class IceTable:
                 rels.append(rel)
                 n += 1
         shutil.rmtree(staging, ignore_errors=True)
-        return self._harvest(spark, rels, partition_by, bloom_cols)
-
-    def _harvest(self, spark: SparkSession, rels: list[str],
-                 partition_by: str | None,
-                 bloom_cols: list[str] | None) -> list[dict]:
-        """Manifest entries for the newly renamed files — executor-side
-        above _DRIVER_HARVEST_MAX files, driver-side (identical code) below."""
-        if not rels:
-            return []
-        data_dir, meta_dir = self.data_dir, self.meta_dir
-        if len(rels) <= _DRIVER_HARVEST_MAX:
-            return [_harvest_entry(data_dir, meta_dir, r, partition_by,
-                                   bloom_cols) for r in rels]
-
-        def harvest(batches):
-            import pandas as pd  # noqa: PLC0415 — executor-side import
-
-            for pdf in batches:
-                yield pd.DataFrame({
-                    "entry": [
-                        json.dumps(_harvest_entry(
-                            data_dir, meta_dir, rel, partition_by, bloom_cols))
-                        for rel in pdf["rel"]
-                    ]
-                })
-
-        par = min(len(rels), spark.sparkContext.defaultParallelism)
-        rows = (
-            spark.createDataFrame([(r,) for r in rels], "rel string")
-            .repartition(par)
-            .mapInPandas(harvest, "entry string")
-            .collect()
-        )
-        return sorted((json.loads(r.entry) for r in rows),
-                      key=lambda e: e["path"])
+        return [_harvest_entry(self.data_dir, self.meta_dir, rel,
+                               partition_by, bloom_cols) for rel in rels]
 
     def _check_partition_spec(self, prev: dict,
                               partition_by: str | None,
@@ -751,7 +657,7 @@ class IceTable:
         the new spec, and the readers split the two eras (Hive-layout files
         derive the partition column from the path; pre-evolution files
         carry it in the data) and union them."""
-        if prev.get("manifests") or prev.get("files"):
+        if prev["manifests"]:
             prev_spec = prev.get("partition_by")
             if prev_spec != partition_by and not allow_spec_change:
                 raise ValueError(
@@ -788,7 +694,7 @@ class IceTable:
         retried append therefore carries the racing winner's manifests
         instead of silently dropping them. Non-rebasable operations
         (rewrites whose manifest list was computed from a SPECIFIC parent:
-        delete_where, merge_upsert, compact, rewrite_manifests) pass
+        delete_where, merge_upsert, compact, rewrite_files) pass
         ``retryable=False`` plus ``planned_parent=(sequence, snapshot_id)``
         of the snapshot they planned against; if the parent observed at
         commit time differs — even when no same-sequence file collision
@@ -849,7 +755,7 @@ class IceTable:
                 f.write(str(seq))
             os.rename(hint_tmp,
                       os.path.join(self._snap_dir, "version-hint.text"))
-            snap["files"] = self._snap_files(snap)  # in-memory convenience
+            snap["files"] = self._snap_files(snap)  # in memory only
             return snap
         raise CommitConflict(
             f"lost {retries} commit races on {self.path}; concurrent writer storm"
@@ -886,7 +792,7 @@ class IceTable:
             # a rebase onto a racing winner must satisfy the same invariants
             self._check_schema(parent, ddl, allow_schema_change)
             self._check_partition_spec(parent, partition_by, allow_spec_change)
-            carried = self._carry_manifests(parent)
+            carried = parent["manifests"]
             if not added:
                 return carried
             # stamp each entry's data sequence with the sequence THIS attempt
@@ -895,7 +801,7 @@ class IceTable:
             # append that rebases past a merge-on-read commit must re-stamp —
             # a stale lower data_seq would wrongly subject its rows to the
             # racing equality delete. Lost attempts' manifests are orphans
-            # reclaimed by expire_snapshots.
+            # reclaimed by remove_orphans.
             seq = parent.get("sequence", 0) + 1
             if state["seq"] != seq:
                 for e in added:
@@ -929,7 +835,7 @@ class IceTable:
         retries cleanly: overwrite replaces whatever is current."""
         prev = self._raw_snapshot()
         ddl = self._check_schema(prev, _ddl(df), allow_schema_change)
-        has_data = bool(prev.get("manifests") or prev.get("files"))
+        has_data = bool(prev["manifests"])
         spec = prev.get("partition_by") if has_data else None
         if sort_by is None and has_data:
             sort_by = prev.get("sort_by")
@@ -975,27 +881,6 @@ class IceTable:
                             delete_manifests_fn=lambda _parent: [],
                             extra={"added_manifests": [],
                                    "partition_by": spec})
-
-    def rewrite_manifests(self) -> dict:
-        """Metadata-only manifest-list compaction (Iceberg
-        ``rewrite_manifests``): fold the current manifest list into ONE
-        manifest in a new snapshot. Data files are untouched and no rows
-        are added — incremental consumers skip it — but subsequent commits
-        and scans plan against one manifest instead of one per historical
-        append. At streaming-ingest rates this bounds manifest-list growth
-        the same way compact() bounds file growth."""
-        prev = self._raw_snapshot()
-        entries = self._snap_files(prev)
-        ref = self._write_manifest(entries) if entries else None
-        return self._commit(
-            "rewrite-manifests", [], prev["schema"],
-            lambda _parent: [ref] if ref else [],
-            retryable=False,
-            planned_parent=(prev.get("sequence", 0),
-                            prev.get("snapshot_id")),
-            extra={"added_manifests": [],
-                   "partition_by": prev.get("partition_by"),
-                   "sort_by": prev.get("sort_by")})
 
     def append_epoch(self, df: DataFrame, query_tag: str, epoch_id: int,
                      **append_kw) -> bool:
@@ -1047,8 +932,7 @@ class IceTable:
 
         Rows where the predicate is NULL are retained in both modes (SQL
         DELETE semantics: only rows where the condition is TRUE are
-        removed). Old files stay on disk for time travel
-        (expire_snapshots reclaims).
+        removed). Old files stay on disk for time travel.
 
         Reference analogue: idempotent deterministic-id re-runs
         (deepdoctection annotation.py:154-169) — here made transactional.
@@ -1058,7 +942,7 @@ class IceTable:
         if mode == "mor":
             return self._delete_where_mor(spark, predicate)
         prev = self._raw_snapshot()
-        refs = self._carry_manifests(prev)
+        refs = prev["manifests"]
         if not refs:
             return self.snapshot()
         spec = prev.get("partition_by")
@@ -1145,7 +1029,7 @@ class IceTable:
                  "targets": targets, "stats": e.get("stats") or {}}
                 for e in dentries]
         dref = self._write_manifest(dels)
-        carried = self._carry_manifests(prev)
+        carried = prev["manifests"]
         return self._commit(
             "delete", [], prev["schema"],
             lambda _parent: carried,
@@ -1195,7 +1079,7 @@ class IceTable:
             return self._merge_upsert_mor(spark, source, key_cols)
         prev = self._raw_snapshot()
         ddl = self._check_schema(prev, _ddl(source), False)
-        has_data = bool(prev.get("manifests") or prev.get("files"))
+        has_data = bool(prev["manifests"])
         spec = prev.get("partition_by") if has_data else None
         keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
         bounds = source.agg(
@@ -1228,7 +1112,7 @@ class IceTable:
         carried_refs: list[dict] = []
         candidates: list[dict] = []
         n_carried_files = 0
-        for ref in self._carry_manifests(prev):
+        for ref in prev["manifests"]:
             m_stats = ref.get("stats") or {}
             if any(k in m_stats
                    and (m_stats[k]["max"] < lo[k] or m_stats[k]["min"] > hi[k])
@@ -1285,7 +1169,7 @@ class IceTable:
         added data manifest)."""
         prev = self._raw_snapshot()
         ddl = self._check_schema(prev, _ddl(source), False)
-        has_data = bool(prev.get("manifests") or prev.get("files"))
+        has_data = bool(prev["manifests"])
         spec = prev.get("partition_by") if has_data else None
         keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
         for k in keys:
@@ -1310,7 +1194,7 @@ class IceTable:
                      "stats": e.get("stats") or {}} for e in dentries]
             n_delete_rows = sum(d["rows"] for d in dels)
             dref = self._write_manifest(dels) if dels else None
-        carried = self._carry_manifests(prev)
+        carried = prev["manifests"]
         return self._commit(
             "merge", added, ddl,
             lambda _parent: carried + [new_data_ref],
@@ -1342,26 +1226,24 @@ class IceTable:
             return None
         return [r.asDict() for r in rows]
 
-    def _live_sets(
-        self, seqs: set[int]
-    ) -> tuple[set[str], set[str], set[str]]:
-        """(data-file rels, Bloom-sidecar rels, manifest filenames)
-        referenced by the given main-branch sequences PLUS every snapshot of
-        every branch — branch snapshots share data/manifests with main, so
-        anything any branch references stays live until the branch is
-        deleted. Merge-on-read delete files live in data/ and their
-        manifests in metadata/; both are live while a referencing snapshot
-        lists them."""
+    def remove_orphans(self, dry_run: bool = False) -> dict:
+        """Iceberg ``remove_orphan_files``: find (and unless ``dry_run``,
+        delete) physical files under the table location that NO committed
+        snapshot references. Orphans accumulate from torn writes and lost
+        optimistic-commit races — the loser of a commit race rebases, but
+        the data files and manifests of its failed attempt are never
+        referenced by any snapshot (see ``_commit``). Orphan removal never
+        changes what ANY snapshot reads — safe on a live table, and at
+        100 TB it is routine maintenance after crashed writer fleets."""
+        # data-file rels, Bloom-sidecar rels and manifest filenames that
+        # any committed snapshot references; merge-on-read delete files live
+        # in data/ and their manifests in metadata/
         live: set[str] = set()
         live_sidecars: set[str] = set()
         live_manifests: set[str] = set()
-        live_raws = [self._raw_snapshot(seq) for seq in seqs]
-        for bname in self.branches():
-            b = IceTable(self.path, branch=bname)
-            live_raws.extend(b._raw_snapshot(s) for s in b._committed_seqs())
-        for raw in live_raws:
-            live_manifests.update(
-                m["path"] for m in raw.get("manifests", []))
+        for seq in self._committed_seqs():
+            raw = self._raw_snapshot(seq)
+            live_manifests.update(m["path"] for m in raw["manifests"])
             for f in self._snap_files(raw):
                 live.add(f["path"])
                 live_sidecars.update((f.get("bloom") or {}).values())
@@ -1369,31 +1251,6 @@ class IceTable:
                 m["path"] for m in raw.get("delete_manifests", []))
             for d in self._delete_entries(raw):
                 live.add(d["path"])
-        return live, live_sidecars, live_manifests
-
-    def remove_orphans(self, dry_run: bool = False) -> dict:
-        """Iceberg ``remove_orphan_files``: find (and unless ``dry_run``,
-        delete) physical files under the table location that NO committed
-        snapshot on any branch references. Orphans accumulate from torn
-        writes and lost optimistic-commit races — the loser of a commit race
-        rebases, but the data files and manifests of its failed attempt are
-        never referenced by any snapshot (see ``_commit``). Unlike
-        :meth:`expire_snapshots` (which reclaims files referenced ONLY by
-        expired snapshots and destroys time travel to them), orphan removal
-        never changes what ANY snapshot reads — safe on a live table, and at
-        100 TB it is routine maintenance after crashed writer fleets.
-
-        Main-handle-only for the same shared-directory reason as expiry:
-        a branch handle's snapshot view is partial."""
-        if self.branch_name is not None:
-            raise ValueError(
-                "remove_orphans must run on the main table handle, not a "
-                f"branch ({self.branch_name!r}): data files and manifests "
-                "are shared across branches and a branch-local view would "
-                "misclassify files referenced only by main"
-            )
-        live, live_sidecars, live_manifests = self._live_sets(
-            set(self._committed_seqs()))
         orphan_data: list[str] = []
         if os.path.isdir(self.data_dir):
             for root, _dirs, files in os.walk(self.data_dir):
@@ -1431,64 +1288,6 @@ class IceTable:
             "dry_run": dry_run,
         }
 
-    def expire_snapshots(self, keep_last: int = 1) -> dict:
-        """Snapshot expiry (Iceberg ``expire_snapshots``): drop all but the
-        newest ``keep_last`` snapshots and physically delete the manifests
-        and data files referenced ONLY by expired ones. Time travel to
-        expired sequences is gone afterwards — that is the contract; after
-        overwrite/compaction/delete churn, unreferenced files dominate
-        storage, and at 100 TB expiry IS the storage-reclamation path.
-
-        Main-handle-only: data/, puffin/ and manifests are SHARED across
-        branches, but a branch handle resolves snapshots against its
-        branch-local dir — running the deletion sweep from one would treat
-        everything referenced only by main as dead. (Main already retains
-        everything any branch references, so expiry from main is safe.)"""
-        if self.branch_name is not None:
-            raise ValueError(
-                "expire_snapshots must run on the main table handle, not a "
-                f"branch ({self.branch_name!r}): data files and manifests "
-                "are shared across branches and the sweep would delete "
-                "files referenced only by main"
-            )
-        seqs = self._committed_seqs()
-        retain = set(seqs[-keep_last:]) if keep_last > 0 else set()
-        retain.update(self.tags().values())  # named refs pin their snapshots
-        live, live_sidecars, live_manifests = self._live_sets(retain)
-        deleted_files = 0
-        if os.path.isdir(self.data_dir):
-            for root, _dirs, files in os.walk(self.data_dir, topdown=False):
-                for fn in files:
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, self.data_dir)
-                    if fn.endswith(".parquet") and rel not in live:
-                        os.remove(full)
-                        deleted_files += 1
-                if not os.listdir(root) and root != self.data_dir:
-                    os.rmdir(root)  # empty partition dir after reclamation
-        puffin = os.path.join(self.meta_dir, "puffin")
-        deleted_sidecars = 0
-        if os.path.isdir(puffin):
-            for fn in os.listdir(puffin):
-                if f"puffin/{fn}" not in live_sidecars:
-                    os.remove(os.path.join(puffin, fn))
-                    deleted_sidecars += 1
-        deleted_manifests = 0
-        for fn in os.listdir(self.meta_dir):
-            if (fn.startswith("manifest-") and fn.endswith(".json")
-                    and fn not in live_manifests):
-                os.remove(os.path.join(self.meta_dir, fn))
-                deleted_manifests += 1
-        expired = 0
-        for seq in seqs:
-            if seq not in retain:
-                os.remove(self._snap_path(seq))
-                expired += 1
-        return {"expired_snapshots": expired, "deleted_files": deleted_files,
-                "deleted_sidecars": deleted_sidecars,
-                "deleted_manifests": deleted_manifests,
-                "retained_seqs": sorted(retain)}
-
     # -- named refs (Iceberg tags) ----------------------------------------
 
     @property
@@ -1497,11 +1296,9 @@ class IceTable:
 
     def tag(self, name: str, seq: int | None = None) -> dict:
         """Create an immutable named snapshot ref (Iceberg tag): a version
-        a consumer can read by name ('v1', 'prod') while the table moves on.
-        Tagged snapshots are RETAINED by expire_snapshots regardless of
-        keep_last — the Iceberg ref-retention contract — so 'pin the corpus
-        a model trained on' survives storage reclamation. Exclusive-create:
-        re-tagging an existing name raises (delete_tag first)."""
+        a consumer can read by name ('v1', 'prod') while the table moves on
+        — 'pin the corpus a model trained on'. Exclusive-create: re-tagging
+        an existing name raises."""
         if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", name):
             raise ValueError(f"bad tag name {name!r}")
         seq = self.current_seq() if seq is None else seq
@@ -1524,101 +1321,6 @@ class IceTable:
                     ref = json.load(f)
                 out[ref["name"]] = ref["seq"]
         return out
-
-    def delete_tag(self, name: str) -> None:
-        path = os.path.join(self._refs_dir, f"{name}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"no such tag {name!r}")
-        os.remove(path)
-
-    # -- branches (Iceberg branch refs + write-audit-publish) -------------
-
-    def create_branch(self, name: str) -> "IceTable":
-        """Fork a branch at the CURRENT snapshot: the branch gets its own
-        snapshot lineage (seeded with a copy of the current snap file, so
-        time travel/incremental reads work within the branch) while data
-        files, manifests and Bloom sidecars stay shared — a branch commit
-        writes only branch-local snapshot JSON. This is the Iceberg WAP
-        shape: write to the branch, audit it, then :meth:`fast_forward`
-        main. Returns a handle onto the branch."""
-        if self.branch_name is not None:
-            raise ValueError("create_branch from the main handle only")
-        if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", name):
-            raise ValueError(f"bad branch name {name!r}")
-        bdir = os.path.join(self.meta_dir, "branches", name)
-        if os.path.isdir(bdir):
-            raise ValueError(f"branch {name!r} already exists")
-        os.makedirs(bdir)
-        seq = self.current_seq()
-        base = self._raw_snapshot(seq)
-        if seq > 0:
-            shutil.copyfile(self._snap_path(seq),
-                            os.path.join(bdir, f"snap-{seq:010d}.json"))
-        with open(os.path.join(bdir, "base.json"), "w") as f:
-            json.dump({"main_seq": seq,
-                       "main_snapshot_id": base["snapshot_id"]}, f)
-        return IceTable(self.path, branch=name)
-
-    def branch(self, name: str) -> "IceTable":
-        """Handle onto an existing branch."""
-        if not os.path.isdir(os.path.join(self.meta_dir, "branches", name)):
-            raise ValueError(f"no such branch {name!r}")
-        return IceTable(self.path, branch=name)
-
-    def branches(self) -> list[str]:
-        broot = os.path.join(self.meta_dir, "branches")
-        return sorted(os.listdir(broot)) if os.path.isdir(broot) else []
-
-    def delete_branch(self, name: str) -> None:
-        """Drop a branch ref (its exclusive data files become reclaimable
-        by the next expire_snapshots)."""
-        bdir = os.path.join(self.meta_dir, "branches", name)
-        if not os.path.isdir(bdir):
-            raise ValueError(f"no such branch {name!r}")
-        shutil.rmtree(bdir)
-
-    def fast_forward(self, name: str) -> dict:
-        """Publish a branch to main (Iceberg ``fast_forward``): commit the
-        branch's CURRENT manifest list as a new main snapshot — metadata
-        only, no data movement. Strict WAP safety: refuses when main has
-        moved past the branch's fork point (the audited data was staged
-        against a main that no longer exists → re-branch and re-audit)."""
-        if self.branch_name is not None:
-            raise ValueError("fast_forward from the main handle only")
-        bdir = os.path.join(self.meta_dir, "branches", name)
-        if not os.path.isdir(bdir):
-            raise ValueError(f"no such branch {name!r}")
-        with open(os.path.join(bdir, "base.json")) as f:
-            base = json.load(f)
-        cur = self._raw_snapshot()
-        if cur["snapshot_id"] != base["main_snapshot_id"]:
-            raise CommitConflict(
-                f"fast_forward({name!r}): main moved past the branch fork "
-                f"point (forked at {base['main_snapshot_id']}, main is at "
-                f"{cur['snapshot_id']}); re-branch, re-audit, re-publish")
-        b = IceTable(self.path, branch=name)
-        tip = b._raw_snapshot()
-        refs = self._carry_manifests(tip)
-        return self._commit(
-            "fast-forward", [], tip["schema"], lambda _parent: refs,
-            delete_manifests_fn=lambda _parent: tip.get(
-                "delete_manifests", []),
-            extra={"added_manifests": [], "from_branch": name,
-                   "partition_by": tip.get("partition_by"),
-                   "sort_by": tip.get("sort_by")})
-
-    def rollback(self, seq: int) -> dict:
-        """Commit a new snapshot replaying an ancestor's manifest list
-        (history stays append-only; nothing is deleted)."""
-        target = self._raw_snapshot(seq)
-        refs = self._carry_manifests(target)
-        return self._commit("rollback", [], target["schema"],
-                            lambda _parent: refs,
-                            delete_manifests_fn=lambda _parent: target.get(
-                                "delete_manifests", []),
-                            extra={"added_manifests": [],
-                                   "partition_by": target.get("partition_by"),
-                                   "sort_by": target.get("sort_by")})
 
     # -- reads -----------------------------------------------------------
 
@@ -1781,15 +1483,15 @@ class IceTable:
     def read_incremental(self, spark: SparkSession, after_seq: int,
                          until_seq: int | None = None) -> DataFrame:
         """Rows in files ADDED by snapshots in (after_seq, until_seq] — the
-        incremental-consumption pattern (overwrite/rollback snapshots
-        contribute only their newly added files), resolved from each
-        snapshot's added manifests without materializing any file list."""
+        incremental-consumption pattern (overwrite snapshots contribute
+        only their newly added files), resolved from each snapshot's added
+        manifests without materializing any file list."""
         until_seq = self.current_seq() if until_seq is None else until_seq
         snap = self._raw_snapshot(until_seq)
         added: list[dict] = []
         for seq in range(after_seq + 1, until_seq + 1):
             s = self._raw_snapshot(seq)
-            if s["operation"] in ("replace", "rewrite-manifests"):
+            if s["operation"] == "replace":
                 continue  # rewrites carry no new rows — skipping them
                 # keeps incremental consumers exactly-once
             added += self._added_files(s)
@@ -1889,15 +1591,9 @@ class IceTable:
         preds = ([] if predicate is None
                  else predicate if isinstance(predicate, list)
                  else [predicate])
-        if "files" in raw:  # legacy inline snapshot: single-level planning
-            keep = [f for f in raw["files"]
-                    if all(self._file_may_match(f, p) for p in preds)]
-            return {"files": keep,
-                    "pruned_files": len(raw["files"]) - len(keep),
-                    "scanned_manifests": 0, "pruned_manifests": 0}
         keep: list[dict] = []
         pruned_files = scanned_m = pruned_m = 0
-        for ref in raw.get("manifests", []):
+        for ref in raw["manifests"]:
             if preds and not all(self._manifest_may_match(ref, p)
                                  for p in preds):
                 pruned_m += 1
@@ -2085,10 +1781,9 @@ class IceTable:
         rather than silently skip (the commit itself also aborts on a
         raced parent via planned_parent, like every row-level op).
 
-        Old files stay on disk for time travel; ``expire_snapshots``
-        reclaims them."""
+        Old files stay on disk for time travel."""
         prev = self._raw_snapshot()
-        refs = self._carry_manifests(prev)
+        refs = prev["manifests"]
         wanted = set(paths)
         if not wanted:
             return self.snapshot()

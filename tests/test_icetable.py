@@ -1,7 +1,7 @@
 """IceTable (sources/icetable.py): snapshot isolation, time travel,
-incremental reads, manifest min/max pruning, optimistic-commit conflicts,
-rollback lineage, and schema pinning — the Iceberg-semantics subset the
-north rule's checkpoint/lineage contract needs, over plain parquet."""
+incremental reads, manifest min/max pruning, optimistic-commit conflicts
+and schema pinning — the Iceberg-semantics subset the north rule's
+checkpoint/lineage contract needs, over plain parquet."""
 
 from __future__ import annotations
 
@@ -102,7 +102,8 @@ def test_commit_conflict_retries_then_raises(spark, tbl, monkeypatch):
     blocker = {"sequence": 2, "snapshot_id": "x", "parent": None,
                "operation": "append",
                "schema": "id bigint,tag string,val bigint",
-               "added": [], "files": [], "ts_ms": 0}
+               "added": [], "manifests": [], "delete_manifests": [],
+               "ts_ms": 0}
     with open(tbl._snap_path(2), "w") as f:
         json.dump(blocker, f)
     monkeypatch.setattr(tbl, "current_seq", lambda: 1)
@@ -121,16 +122,6 @@ def test_commit_conflict_retries_then_raises(spark, tbl, monkeypatch):
     snap = tbl.append(_df(spark, 10, 20))
     assert snap["sequence"] == 3
     assert snap["parent"] == "x"  # lineage re-resolved on retry
-
-
-def test_rollback_is_append_only_history(spark, tbl):
-    tbl.append(_df(spark, 0, 100))
-    tbl.overwrite(_df(spark, 0, 5, tag="bad"))
-    tbl.rollback(1)
-    assert tbl.read(spark).count() == 100
-    assert [e["operation"] for e in tbl.history()] == [
-        "append", "overwrite", "rollback"]
-    assert tbl.read(spark, seq=2).count() == 5  # nothing destroyed
 
 
 def test_schema_pinning_and_add_only_evolution(spark, tbl):
@@ -293,39 +284,6 @@ def test_merge_upsert_schema_drift_rejected(spark, tbl):
         tbl.merge_upsert(spark, bad, "id")
 
 
-def test_expire_snapshots_reclaims_unreferenced_files(spark, tbl):
-    tbl.append(_df(spark, 0, 100))
-    tbl.overwrite(_df(spark, 0, 10, tag="ow"))
-    tbl.compact(spark)
-    n_files_before = sum(
-        fn.endswith(".parquet")
-        for _r, _d, fns in os.walk(tbl.data_dir) for fn in fns)
-    res = tbl.expire_snapshots(keep_last=1)
-    assert res["expired_snapshots"] == 2
-    assert res["deleted_files"] >= 1
-    n_files_after = sum(
-        fn.endswith(".parquet")
-        for _r, _d, fns in os.walk(tbl.data_dir) for fn in fns)
-    assert n_files_after < n_files_before
-    # current snapshot unaffected and fully readable
-    assert tbl.current_seq() == 3
-    assert {r["tag"] for r in tbl.read(spark).collect()} == {"ow"}
-    # time travel to an expired snapshot is gone — the documented contract
-    with pytest.raises(FileNotFoundError):
-        tbl.snapshot(1)
-
-
-def test_expire_respects_multi_snapshot_retention(spark, tbl):
-    tbl.append(_df(spark, 0, 10))
-    tbl.append(_df(spark, 10, 20))
-    tbl.overwrite(_df(spark, 50, 55, tag="ow"))
-    res = tbl.expire_snapshots(keep_last=2)
-    assert res["expired_snapshots"] == 1
-    # seq 2's files include seq 1's (append chains) -> nothing deletable
-    assert tbl.read(spark, seq=2).count() == 20
-    assert tbl.read(spark).count() == 5
-
-
 # ---------------------------------------------------------------------------
 # Bloom sidecars, write-order clustering, compound predicates
 # ---------------------------------------------------------------------------
@@ -395,20 +353,9 @@ def test_compound_predicate_is_conjunctive(spark, tbl):
     assert tbl.scan(spark, [("tag", "=", "a"), ("tag", "=", "z")]).count() == 0
 
 
-def test_expire_reclaims_bloom_sidecars(spark, tbl):
-    tbl.append(_keyed_df(spark, 0, 50).coalesce(1), bloom_cols=["k"])
-    tbl.overwrite(_keyed_df(spark, 50, 100).coalesce(1))
-    puffin = os.path.join(tbl.meta_dir, "puffin")
-    assert len(os.listdir(puffin)) == 1
-    res = tbl.expire_snapshots(keep_last=1)
-    # the overwritten file's sidecar is orphaned and reclaimed
-    assert res["deleted_sidecars"] == 1
-    assert os.listdir(puffin) == []
-
-
 # ---------------------------------------------------------------------------
-# Manifest-list metadata layer (round 4): O(added) commits, executor-side
-# harvest, rebase-on-race, two-level planning, manifest rewrite
+# Manifest-list metadata layer (round 4): O(added) commits, driver-side
+# harvest, rebase-on-race, two-level planning
 # ---------------------------------------------------------------------------
 
 
@@ -418,7 +365,7 @@ def test_commit_metadata_is_o_added_not_o_table(spark, tbl):
     manifest REFERENCE — never a re-serialized table file list."""
     big = spark.range(0, 12000).selectExpr(
         "id", "'a' AS tag", "id * 2 AS val").repartition(120)
-    tbl.append(big)  # 120 files in ONE manifest (executor-side harvest)
+    tbl.append(big)  # 120 files in ONE manifest
     assert len(tbl.snapshot()["files"]) >= 100
     size_after_big = os.path.getsize(tbl._snap_path(1))
 
@@ -441,14 +388,39 @@ def test_commit_metadata_is_o_added_not_o_table(spark, tbl):
 
 
 def test_executor_harvest_matches_driver_harvest_stats(spark, tbl):
-    """The >_DRIVER_HARVEST_MAX executor harvest path must produce the same
-    manifest stats the driver path does: footer min/max prune on a 120-file
-    commit exactly as on single-file commits."""
+    """A 120-file commit's manifest stats prune exactly as single-file
+    commits' do: the footer min/max of every file reaches its entry."""
     df = spark.range(0, 12000).selectExpr("id", "id * 2 AS val")
     tbl.append(df.repartitionByRange(120, "id").sortWithinPartitions("id"))
     keep, pruned = tbl.plan_files(("id", "<", 100))
     assert pruned >= 110  # near-disjoint ranges: almost all files pruned
     assert tbl.scan(spark, ("id", "<", 100)).count() == 100
+
+
+def test_append_runs_no_spark_job_beyond_the_write(spark, tbl, tmp_path):
+    """The footer harvest reads on the driver: a 120-file append runs the
+    same Spark jobs as a plain parquet write of the same frame, and no
+    extra job to collect manifest entries."""
+    sc = spark.sparkContext
+
+    def frame():
+        return spark.range(0, 12000).selectExpr(
+            "id", "id * 2 AS val").repartition(120)
+
+    def jobs_of(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs_of(f"plain-{id(tbl)}",
+                    lambda: frame().write.parquet(str(tmp_path / "plain")))
+    ice = jobs_of(f"ice-{id(tbl)}", lambda: tbl.append(frame()))
+    assert len(tbl.snapshot()["files"]) == 120
+    assert plain >= 1 and ice == plain
 
 
 def test_append_race_rebases_on_winner_without_losing_files(spark, tbl,
@@ -586,39 +558,6 @@ def test_manifest_level_pruning_never_loads_pruned_manifests(spark, tbl,
     assert len(detail["files"]) == 1
 
 
-def test_rewrite_manifests_compacts_metadata_only(spark, tbl):
-    """Manifest-list compaction: N appends -> N manifest refs; one
-    rewrite-manifests commit folds them into one with data untouched, and
-    incremental consumers skip it (no rows re-delivered)."""
-    for lo in (0, 100, 200, 300):
-        tbl.append(_df(spark, lo, lo + 100).coalesce(1))
-    assert len(tbl._raw_snapshot()["manifests"]) == 4
-    snap = tbl.rewrite_manifests()
-    assert snap["operation"] == "rewrite-manifests"
-    assert len(tbl._raw_snapshot()["manifests"]) == 1
-    assert tbl.read(spark).count() == 400
-    assert sorted(r["id"] for r in tbl.read(spark).collect()) == list(
-        range(400))
-    # metadata-only: no data files added, incremental read sees nothing new
-    assert tbl.read_incremental(spark, after_seq=4).count() == 0
-    # planning still prunes on the folded manifest's file entries
-    keep, pruned = tbl.plan_files(("id", ">=", 300))
-    assert pruned == 3
-
-
-def test_expire_reclaims_orphaned_manifests(spark, tbl):
-    tbl.append(_df(spark, 0, 10).coalesce(1))
-    tbl.overwrite(_df(spark, 10, 20, tag="ow"))
-    n_manifests = sum(
-        fn.startswith("manifest-") for fn in os.listdir(tbl.meta_dir))
-    assert n_manifests == 2
-    res = tbl.expire_snapshots(keep_last=1)
-    assert res["deleted_manifests"] == 1
-    assert sum(
-        fn.startswith("manifest-") for fn in os.listdir(tbl.meta_dir)) == 1
-    assert tbl.read(spark).count() == 10
-
-
 def test_in_predicate_partition_and_stats_pruning(spark, tbl):
     # partitioned table: one Hive dir per tag
     df = spark.range(0, 90).selectExpr(
@@ -748,9 +687,7 @@ def test_partition_spec_evolution(spark, tmp_path):
 
 def test_tags_pin_snapshots_through_expiry(spark, tbl):
     """Iceberg named refs: tag('v1') reads by name while the table moves on,
-    re-tagging raises, and expire_snapshots RETAINS tagged snapshots (and
-    their data files) regardless of keep_last — 'the corpus a model trained
-    on' survives storage reclamation."""
+    and re-tagging an existing name raises."""
     tbl.append(_df(spark, 0, 100))
     tbl.tag("v1")
     tbl.overwrite(_df(spark, 0, 10, tag="v2data"))
@@ -761,19 +698,6 @@ def test_tags_pin_snapshots_through_expiry(spark, tbl):
         tbl.tag("v1", 2)
     with pytest.raises(ValueError, match="no such tag"):
         tbl.read(spark, tag="nope")
-
-    info = tbl.expire_snapshots(keep_last=1)
-    assert 1 in info["retained_seqs"]  # the tag pinned seq 1
-    assert 2 not in info["retained_seqs"]
-    assert tbl.read(spark, tag="v1").count() == 100  # data files survive
-    assert tbl.read(spark).count() == 5
-
-    # deleting the tag releases the pin: next expiry reclaims it
-    tbl.delete_tag("v1")
-    info2 = tbl.expire_snapshots(keep_last=1)
-    assert info2["retained_seqs"] == [3]
-    with pytest.raises(ValueError, match="no such tag"):
-        tbl.read(spark, tag="v1")
 
 
 def test_isnull_pruning_from_footer_null_counts(spark, tbl):
@@ -812,50 +736,6 @@ def test_zorder_rejects_strings_accepts_timestamps(spark, tmp_path):
     t = IceTable(str(tmp_path / "ok"))
     t.append(df, zorder_by=["a", "ts"], sort_files=4)
     assert sorted(r.a for r in t.read(spark).collect()) == list(range(200))
-
-
-def test_branch_write_audit_publish(spark, tbl):
-    """The Iceberg WAP flow: stage commits on a branch (main is untouched
-    and readable throughout), audit the branch, then fast_forward publishes
-    the branch tip to main as a metadata-only commit. A stale branch —
-    forked before main moved — refuses to publish."""
-    tbl.append(_df(spark, 0, 100))
-    b = tbl.create_branch("audit")
-    b.append(_df(spark, 100, 160, tag="staged"))
-    # isolation both ways: main doesn't see staged rows, the branch does
-    assert tbl.read(spark).count() == 100
-    assert b.read(spark).count() == 160
-    assert tbl.branches() == ["audit"]
-    # "audit" passes → publish
-    snap = tbl.fast_forward("audit")
-    assert snap["operation"] == "fast-forward"
-    assert tbl.read(spark).count() == 160
-    assert sorted(r.id for r in tbl.read(spark).collect()) == list(range(160))
-
-    # stale-branch safety: fork, let main move, then refuse the publish
-    b2 = tbl.create_branch("stale")
-    b2.append(_df(spark, 900, 910))
-    tbl.append(_df(spark, 160, 170))
-    with pytest.raises(CommitConflict, match="fork point"):
-        tbl.fast_forward("stale")
-
-
-def test_branch_files_survive_main_expiry(spark, tbl):
-    """Branch snapshots share data files with main: expire_snapshots on
-    main must not reclaim files a live branch references; deleting the
-    branch releases them."""
-    tbl.append(_df(spark, 0, 50))
-    b = tbl.create_branch("wip")
-    b.append(_df(spark, 50, 90, tag="wip"))
-    tbl.overwrite(_df(spark, 0, 5, tag="new"))
-    tbl.overwrite(_df(spark, 0, 6, tag="newer"))
-    tbl.expire_snapshots(keep_last=1)
-    assert b.read(spark).count() == 90  # branch data intact
-    tbl.delete_branch("wip")
-    tbl.expire_snapshots(keep_last=1)
-    assert tbl.read(spark).count() == 6
-    with pytest.raises(ValueError, match="no such branch"):
-        tbl.branch("wip")
 
 
 # -- merge-on-read row-level ops (Iceberg v2 delete files) -----------------
@@ -985,19 +865,6 @@ def test_mor_compact_folds_deletes_physically(spark, tbl):
     snap = tbl.compact(spark, target_files=1)
     assert snap["delete_manifests"] == []
     assert _sorted_rows(tbl.read(spark)) == before
-    # post-compaction expire reclaims the now-unreferenced delete files
-    res = tbl.expire_snapshots(keep_last=1)
-    assert res["deleted_files"] > 0
-    assert _sorted_rows(tbl.read(spark)) == before
-
-
-def test_mor_expire_retains_live_delete_files(spark, tbl):
-    """expire_snapshots must keep delete files referenced by retained
-    snapshots: the read after expiry still masks the deleted rows."""
-    tbl.append(_df(spark, 0, 200).coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 20), mode="mor")
-    tbl.expire_snapshots(keep_last=1)
-    assert tbl.read(spark).count() == 180
 
 
 def test_mor_then_cow_materializes_pending_deletes(spark, tbl):
@@ -1019,18 +886,6 @@ def test_mor_incremental_read_applies_window_deletes(spark, tbl):
     tbl.delete_where(spark, ("id", "<", 110), mode="mor")  # seq 3
     inc = tbl.read_incremental(spark, after_seq=1)
     assert {r.id for r in inc.select("id").collect()} == set(range(110, 200))
-
-
-def test_mor_rollback_and_branch_carry_delete_state(spark, tbl):
-    """Rollback replays the target's delete manifests; a branch forked
-    after a MoR delete keeps masking on the branch read."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))              # seq 1
-    tbl.delete_where(spark, ("id", "<", 10), mode="mor")    # seq 2
-    b = tbl.create_branch("wip")
-    assert b.read(spark).count() == 90
-    tbl.delete_where(spark, ("id", ">=", 95), mode="mor")   # seq 3 (main)
-    tbl.rollback(2)                                          # seq 4
-    assert tbl.read(spark).count() == 90  # seq-3 delete undone, seq-2 kept
 
 
 # -- concurrent-writer conflict matrix -------------------------------------
@@ -1088,29 +943,15 @@ def test_race_two_deletes_second_aborts(spark, tbl, monkeypatch):
             tbl.delete_where(spark, ("id", "<", 20), mode=mode)
 
 
-def test_race_compact_and_rewrite_manifests_abort_on_moved_parent(
-        spark, tbl, monkeypatch):
-    """compact()/rewrite_manifests() compute their manifest list from a
-    specific parent; a writer landing between planning and commit must
-    surface as CommitConflict, not silently drop the racer's files."""
+def test_race_compact_aborts_on_moved_parent(spark, tbl, monkeypatch):
+    """compact() computes its manifest list from a specific parent; a
+    writer landing between planning and commit must surface as
+    CommitConflict, not silently drop the racer's files."""
     tbl.append(_df(spark, 0, 50))   # seq 1
     tbl.append(_df(spark, 50, 80))  # seq 2
     monkeypatch.setattr(tbl, "current_seq", lambda: 1)
     with pytest.raises(CommitConflict, match="re-plan"):
         tbl.compact(spark)
-    with pytest.raises(CommitConflict, match="re-plan"):
-        tbl.rewrite_manifests()
-
-
-def test_expire_snapshots_refuses_branch_handle(spark, tbl):
-    """Branch handles share data/manifest dirs with main: running the
-    expiry sweep from one would reclaim main-only files, so it must
-    refuse loudly."""
-    tbl.append(_df(spark, 0, 10))
-    b = tbl.create_branch("wip")
-    with pytest.raises(ValueError, match="main table handle"):
-        b.expire_snapshots(keep_last=1)
-    assert tbl.read(spark).count() == 10
 
 
 # ---------------------------------------------------------------------------
@@ -1281,15 +1122,9 @@ def test_remove_orphans_only_touches_unreferenced(spark, tbl, tmp_path):
 def test_remove_orphans_spares_mor_deletes_and_branches(spark, tbl):
     tbl.append(_df(spark, 0, 60))
     tbl.delete_where(spark, ("id", "<", 10), mode="mor")
-    tbl.create_branch("dev")
-    dev = IceTable(tbl.path, branch="dev")
-    dev.append(_df(spark, 1000, 1010, tag="dev-only"))
-    # branch-only data files and MoR delete files are all referenced
+    # MoR delete files and their manifests are referenced, not orphans
     assert tbl.remove_orphans(dry_run=True)["n_orphans"] == 0
     assert tbl.read(spark).count() == 50
-    assert dev.read(spark).count() == 60  # 50 surviving + 10 dev rows
-    with pytest.raises(ValueError):
-        dev.remove_orphans()
 
 
 # ---------------------------------------------------------------------------
