@@ -2,7 +2,7 @@
 
 Each query BUILDS a real IceTable in a temp dir from the events table with a
 deterministic commit sequence, then exercises an Iceberg-semantics read path
-(time travel / incremental consumption / stats-pruned scan). The oracle
+(time travel / stats-pruned scan / orphan cleanup). The oracle
 never sees the table — it recomputes the expected result from the same
 deterministic commit definitions over the raw events view, so agreement
 proves the snapshot machinery end-to-end (commit → manifest → file planning
@@ -70,232 +70,6 @@ def q_ice_time_travel(spark, sf_dir):
     t.append(ev.where("event_id % 3 = 1"))
     t.overwrite(ev.where("event_id % 3 = 2"))
     return _materialize_then_rm(_summarize(t.read(spark, seq=2)), tmp)
-
-
-@register(
-    "ice_incremental_read",
-    f"""
-WITH slice AS (
-  SELECT * FROM events WHERE event_id % 3 IN (1, 2)
-)
-{_SUMMARY_SQL}
-""",
-)
-def q_ice_incremental_read(spark, sf_dir):
-    """Incremental consumption: rows added strictly after snapshot 1 —
-    the streaming-backfill pattern (process only new files per poll)."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_inc_")
-    t = IceTable(f"{tmp}/tbl")
-    t.append(ev.where("event_id % 3 = 0"))
-    t.append(ev.where("event_id % 3 = 1"))
-    t.append(ev.where("event_id % 3 = 2"))
-    inc = t.read_incremental(spark, after_seq=1)
-    return _materialize_then_rm(_summarize(inc), tmp)
-
-
-@register(
-    "ice_delete_where",
-    f"""
-WITH bounds AS (
-  SELECT max(user_id) // 4 + 1 AS qsize FROM events
-),
-slice AS (
-  SELECT e.* FROM events e, bounds b WHERE NOT (e.user_id < b.qsize)
-)
-{_SUMMARY_SQL}
-""",
-)
-def q_ice_delete_where(spark, sf_dir):
-    """Copy-on-write row-level delete: four single-file commits over
-    disjoint user_id quartiles, then DELETE WHERE user_id < q1-cut. The
-    manifest must rewrite ONLY the bottom-quartile file (asserted:
-    ≥2 files carried over untouched) and the final read must equal the
-    complement — proving file-granular CoW end-to-end."""
-    ev = _events(spark, sf_dir)
-    hi = ev.agg(F.max("user_id")).first()[0]
-    qsize = hi // 4 + 1
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_del_")
-    t = IceTable(f"{tmp}/tbl")
-    for k in range(4):
-        t.append(
-            ev.where(
-                (F.col("user_id") >= k * qsize)
-                & (F.col("user_id") < (k + 1) * qsize)
-            ).coalesce(1)
-        )
-    snap = t.delete_where(spark, ("user_id", "<", qsize))
-    assert snap["operation"] == "delete"
-    assert snap["carried_files"] >= 2, (
-        f"delete rewrote the whole table: {snap}"
-    )
-    return _materialize_then_rm(_summarize(t.read(spark)), tmp)
-
-
-@register(
-    "ice_merge_upsert",
-    f"""
-WITH bounds AS (
-  SELECT max(event_id) AS hi, max(event_id) // 4 + 1 AS qsize FROM events
-),
-slice AS (
-  SELECT e.* FROM events e, bounds b WHERE e.event_id < 3 * b.qsize
-  UNION ALL
-  SELECT e.event_id, e.ts, e.user_id, e.event_type, e.value * 2 AS value,
-         e.props
-  FROM events e, bounds b WHERE e.event_id >= 3 * b.qsize
-  UNION ALL
-  SELECT e.event_id + b.hi + 1, e.ts, e.user_id, e.event_type,
-         e.value * 3 AS value, e.props
-  FROM events e, bounds b WHERE e.event_id < b.qsize // 2
-)
-{_SUMMARY_SQL}
-""",
-)
-def q_ice_merge_upsert(spark, sf_dir):
-    """Copy-on-write MERGE upsert: four single-file event_id-quartile
-    commits; the source UPDATES every top-quartile row (value doubled) and
-    INSERTS brand-new keys above max(event_id) (value tripled). Manifest
-    key-span overlap must leave the three low quartile files untouched
-    (asserted) while the result equals carried ∪ updated ∪ inserted."""
-    ev = _events(spark, sf_dir)
-    hi = ev.agg(F.max("event_id")).first()[0]
-    qsize = hi // 4 + 1
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_merge_")
-    t = IceTable(f"{tmp}/tbl")
-    for k in range(4):
-        t.append(
-            ev.where(
-                (F.col("event_id") >= k * qsize)
-                & (F.col("event_id") < (k + 1) * qsize)
-            ).coalesce(1)
-        )
-    updates = ev.where(F.col("event_id") >= 3 * qsize).withColumn(
-        "value", F.col("value") * 2
-    )
-    inserts = ev.where(F.col("event_id") < qsize // 2).select(
-        (F.col("event_id") + hi + 1).alias("event_id"),
-        "ts", "user_id", "event_type",
-        (F.col("value") * 3).alias("value"),
-        "props",
-    )
-    snap = t.merge_upsert(spark, updates.unionByName(inserts), "event_id")
-    assert snap["operation"] == "merge"
-    assert snap["carried_files"] >= 2, (
-        f"merge rewrote non-overlapping files: {snap}"
-    )
-    return _materialize_then_rm(_summarize(t.read(spark)), tmp)
-
-
-@register(
-    "ice_mor_delete",
-    f"""
-WITH bounds AS (
-  SELECT max(user_id) // 4 + 1 AS qsize FROM events
-),
-slice AS (
-  SELECT e.* FROM events e, bounds b
-  WHERE NOT (e.user_id < b.qsize) AND e.event_id % 7 <> 3
-)
-{_SUMMARY_SQL}
-""",
-)
-def q_ice_mor_delete(spark, sf_dir):
-    """MERGE-ON-READ row-level delete (Iceberg v2 positional delete
-    files): four user_id-quartile commits, then TWO stacked MoR deletes —
-    a bulk one (bottom quartile) and a scattered one (event_id % 7 = 3,
-    hits every file). Asserted: neither delete rewrites a single data file
-    (rewrote_files == 0, carried_files == 4) and the bulk delete's bytes
-    are a small fraction of the data it masks. The read must equal the
-    double complement — proving position harvest, delete-file binding and
-    the anti-join read path end-to-end, stacked."""
-    import glob
-    import os
-
-    ev = _events(spark, sf_dir)
-    hi = ev.agg(F.max("user_id")).first()[0]
-    qsize = hi // 4 + 1
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_mord_")
-    t = IceTable(f"{tmp}/tbl")
-    for k in range(4):
-        t.append(
-            ev.where(
-                (F.col("user_id") >= k * qsize)
-                & (F.col("user_id") < (k + 1) * qsize)
-            ).coalesce(1)
-        )
-    data_glob = f"{tmp}/tbl/data/*.parquet"
-    bytes_before = sum(os.path.getsize(p) for p in glob.glob(data_glob))
-    s1 = t.delete_where(spark, ("user_id", "<", qsize), mode="mor")
-    assert s1["rewrote_files"] == 0 and s1["carried_files"] == 4, s1
-    # scattered second delete (hits every file): event_id % 7 == 3 as an
-    # IN-list predicate, stacking a broad positional delete on the bulk one
-    ids = [r[0] for r in ev.where("event_id % 7 = 3")
-           .select("event_id").collect()]
-    s2 = t.delete_where(spark, ("event_id", "in", ids), mode="mor")
-    assert s2["rewrote_files"] == 0, s2
-    bytes_after = sum(os.path.getsize(p) for p in glob.glob(data_glob))
-    assert bytes_after - bytes_before < bytes_before // 2, (
-        f"MoR delete wrote {bytes_after - bytes_before} bytes over "
-        f"{bytes_before} of data")
-    return _materialize_then_rm(_summarize(t.read(spark)), tmp)
-
-
-@register(
-    "ice_mor_merge",
-    f"""
-WITH bounds AS (
-  SELECT max(event_id) AS hi, max(event_id) // 4 + 1 AS qsize FROM events
-),
-slice AS (
-  SELECT e.* FROM events e, bounds b WHERE e.event_id < 3 * b.qsize
-  UNION ALL
-  SELECT e.event_id, e.ts, e.user_id, e.event_type, e.value * 2 AS value,
-         e.props
-  FROM events e, bounds b WHERE e.event_id >= 3 * b.qsize
-  UNION ALL
-  SELECT e.event_id + b.hi + 1, e.ts, e.user_id, e.event_type,
-         e.value * 3 AS value, e.props
-  FROM events e, bounds b WHERE e.event_id < b.qsize // 2
-)
-{_SUMMARY_SQL}
-""",
-)
-def q_ice_mor_merge(spark, sf_dir):
-    """MERGE-ON-READ upsert (Iceberg v2 equality deletes): same update +
-    insert source as ice_merge_upsert, but mode="mor" — the commit must
-    read/rewrite ZERO target files (asserted), landing the source as new
-    data plus one equality-delete file; the read must equal the CoW
-    result exactly (carried ∪ updated ∪ inserted), with the per-file
-    key-range disjointness keeping the three low-quartile files on the
-    clean scan path."""
-    ev = _events(spark, sf_dir)
-    hi = ev.agg(F.max("event_id")).first()[0]
-    qsize = hi // 4 + 1
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_morm_")
-    t = IceTable(f"{tmp}/tbl")
-    for k in range(4):
-        t.append(
-            ev.where(
-                (F.col("event_id") >= k * qsize)
-                & (F.col("event_id") < (k + 1) * qsize)
-            ).coalesce(1)
-        )
-    updates = ev.where(F.col("event_id") >= 3 * qsize).withColumn(
-        "value", F.col("value") * 2
-    )
-    inserts = ev.where(F.col("event_id") < qsize // 2).select(
-        (F.col("event_id") + hi + 1).alias("event_id"),
-        "ts", "user_id", "event_type",
-        (F.col("value") * 3).alias("value"),
-        "props",
-    )
-    snap = t.merge_upsert(spark, updates.unionByName(inserts), "event_id",
-                          mode="mor")
-    assert snap["operation"] == "merge"
-    assert snap["row_op_mode"] == "merge-on-read", snap
-    assert snap["rewrote_files"] == 0 and snap["carried_files"] == 4, snap
-    return _materialize_then_rm(_summarize(t.read(spark)), tmp)
 
 
 def _oracle_ice_extract() -> str:
@@ -437,38 +211,6 @@ def q_ice_pruned_scan(spark, sf_dir):
 
 
 @register(
-    "ice_zorder_scan",
-    """
-SELECT event_id, user_id, value FROM events
-WHERE user_id >= 100 AND user_id < 120
-  AND value >= 10.0 AND value < 15.0
-""",
-)
-def q_ice_zorder_scan(spark, sf_dir):
-    """Z-order (Morton-curve) clustering: ONE commit of the shuffled events
-    written with zorder_by (user_id, value) into 16 files — BOTH columns get
-    file-level min/max locality, so a 2-D box predicate prunes most files
-    from footer stats alone (asserted >=6 of 16; measured 12), and even a
-    single-column predicate on the SECOND dimension prunes (plain sort_by
-    user_id prunes zero files on a value-only scan — tested in
-    test_icetable.py). The Databricks OPTIMIZE ZORDER BY pattern as a
-    write-order option."""
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "user_id", "value")
-        .repartition(8)  # scatter: locality must come from the z-curve alone
-    )
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_zorder_")
-    t = IceTable(f"{tmp}/tbl")
-    t.append(ev, zorder_by=["user_id", "value"], sort_files=16)
-    pred = [("user_id", ">=", 100), ("user_id", "<", 120),
-            ("value", ">=", 10.0), ("value", "<", 15.0)]
-    keep, pruned = t.plan_files(pred)
-    assert pruned >= 6, f"z-order clustering inert: pruned={pruned}"
-    return _materialize_then_rm(t.scan(spark, pred), tmp)
-
-
-@register(
     "ice_evolved_scan",
     f"""
 WITH slice AS (
@@ -495,136 +237,6 @@ def q_ice_evolved_scan(spark, sf_dir):
     assert pruned >= 3, f"evolved-era partition pruning inert: {pruned}"
     return _materialize_then_rm(
         _summarize(t.scan(spark, ("event_type", "=", "click"))), tmp)
-
-
-@register(
-    "ice_metadata_agg",
-    """
-WITH live AS (SELECT * FROM events WHERE event_id > 50)
-SELECT event_type AS partition, count(*)::BIGINT AS n_rows,
-       min(event_id)::BIGINT AS event_id_min,
-       max(event_id)::BIGINT AS event_id_max,
-       (count(*) - count(event_id))::BIGINT AS event_id_nulls
-FROM live GROUP BY event_type
-""",
-)
-def q_ice_metadata_agg(spark, sf_dir):
-    """Metadata-only aggregation (Iceberg metadata-table scan): after two
-    partitioned appends and a copy-on-write DELETE, per-partition row count
-    and event_id min/max/nulls are answered from manifest entries alone —
-    ZERO data-file reads. The oracle recomputes the same aggregate by
-    actually scanning the live rows, so agreement proves the manifests'
-    footer-stat bookkeeping tracks every commit (append → harvest →
-    delete-rewrite) exactly. At 100 TB this is the difference between a
-    full scan and a driver-side read of O(#files) manifest rows."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_meta_")
-    t = IceTable(f"{tmp}/tbl")
-    t.append(ev.where("event_id % 3 IN (0, 1)"), partition_by="event_type")
-    t.append(ev.where("event_id % 3 = 2"), partition_by="event_type")
-    t.delete_where(spark, ("event_id", "<=", 50), mode="cow")
-    out = t.metadata_agg(spark, cols=["event_id"]).drop("n_files")
-    return _materialize_then_rm(out, tmp)
-
-
-@register(
-    "ice_changelog",
-    f"""
-WITH chg AS (
-  SELECT 'delete' AS _change_type, * FROM events
-  WHERE (event_id % 3 IN (0, 1) AND event_id <= 40) OR event_id = 43
-  UNION ALL
-  SELECT 'insert' AS _change_type, * FROM events WHERE event_id % 3 = 2
-)
-SELECT _change_type, event_type, count(*)::BIGINT AS n_events,
-       round(sum(value), 3) AS sum_value,
-       count(DISTINCT user_id)::BIGINT AS n_users
-FROM chg GROUP BY _change_type, event_type
-""",
-)
-def q_ice_changelog(spark, sf_dir):
-    """Net row-level CDC between snapshots 2 and 5 (Iceberg changelog
-    table): two appends (from_seq=2), then a copy-on-write DELETE of the
-    event_id<=40 rows, an append of the last third, and a merge-on-read
-    positional delete of event_id=43 (43%3=1 — a row that SURVIVED the
-    CoW delete, so only a delete-binding change exposes it). The
-    changelog must emit exactly the
-    CoW-deleted rows + the MoR-deleted row as 'delete' and the appended
-    third as 'insert' — the CoW rewrite's surviving rows, which moved
-    between files, net to NOTHING (exceptAll in both directions), and
-    carried files with an unchanged delete binding are never read. The
-    oracle recomputes the expected change set from the commit definitions."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_cdc_")
-    t = IceTable(f"{tmp}/tbl")
-    t.append(ev.where("event_id % 3 = 0"))
-    t.append(ev.where("event_id % 3 = 1"))          # from_seq = 2
-    t.delete_where(spark, ("event_id", "<=", 40), mode="cow")
-    t.append(ev.where("event_id % 3 = 2"))
-    t.delete_where(spark, ("event_id", "=", 43), mode="mor")  # to_seq = 5
-    out = (
-        t.changes(spark, from_seq=2)
-        .groupBy("_change_type", "event_type")
-        .agg(F.count("*").alias("n_events"),
-             F.round(F.sum("value"), 3).alias("sum_value"),
-             F.count_distinct("user_id").alias("n_users"))
-    )
-    return _materialize_then_rm(out, tmp)
-
-
-@register(
-    "ice_incr_matview",
-    f"""
-WITH live AS (
-  SELECT * FROM events
-  WHERE (event_id % 3 IN (0, 1) AND NOT (event_id <= 40) AND event_id != 43)
-     OR event_id % 3 = 2
-)
-SELECT event_type, count(*)::BIGINT AS n_events,
-       round(sum(value), 3) AS sum_value
-FROM live GROUP BY event_type
-""",
-)
-def q_ice_incr_matview(spark, sf_dir):
-    """Incremental materialized-view maintenance via the changelog — the
-    REASON a CDC surface exists: a per-event_type (count, sum) view built
-    at snapshot 2 is brought current by aggregating ONLY the change rows
-    (insert:+, delete:-) and merging the deltas — the table is never
-    re-scanned. Same commit sequence as ice_changelog (CoW delete, append,
-    MoR delete). The oracle computes the view directly over the expected
-    live rows, so agreement proves base ⊕ delta == full recompute,
-    including group disappearance (groups whose count reaches 0 drop out).
-    At 100 TB this is the difference between re-aggregating the table and
-    aggregating the day's delta."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_mv_")
-    t = IceTable(f"{tmp}/tbl")
-    t.append(ev.where("event_id % 3 = 0"))
-    t.append(ev.where("event_id % 3 = 1"))          # base view built here
-    base = (
-        t.read(spark, seq=2)
-        .groupBy("event_type")
-        .agg(F.count("*").cast("long").alias("n_events"),
-             F.sum("value").alias("sum_value"))
-    )
-    t.delete_where(spark, ("event_id", "<=", 40), mode="cow")
-    t.append(ev.where("event_id % 3 = 2"))
-    t.delete_where(spark, ("event_id", "=", 43), mode="mor")
-    sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
-    delta = (
-        t.changes(spark, from_seq=2)
-        .groupBy("event_type")
-        .agg(F.sum(sign).cast("long").alias("n_events"),
-             F.sum(sign * F.col("value")).alias("sum_value"))
-    )
-    merged = (
-        base.unionByName(delta)
-        .groupBy("event_type")
-        .agg(F.sum("n_events").cast("long").alias("n_events"),
-             F.round(F.sum("sum_value"), 3).alias("sum_value"))
-        .where(F.col("n_events") > 0)
-    )
-    return _materialize_then_rm(merged, tmp)
 
 
 @register(
@@ -685,133 +297,3 @@ def q_ice_orphan_cleanup(spark, sf_dir):
     assert live_after == live_before, "cleanup touched a referenced file"
     assert t.read(spark, seq=1).count() > 0  # time travel intact
     return _materialize_then_rm(_summarize(t.read(spark)), tmp)
-
-
-@register(
-    "ice_binpack_plan",
-    """
-WITH files AS (
-  SELECT count(*)::BIGINT AS rows_, min(event_id)::BIGINT AS emin
-  FROM events
-  WHERE (event_id // 12) % (1 + (event_id % 12) % 3) = 0
-  GROUP BY event_id % 12
-),
-ranked AS (
-  SELECT rows_, emin,
-         row_number() OVER (ORDER BY rows_ DESC, emin)::BIGINT AS file_rank
-  FROM files
-)
-SELECT file_rank, rows_ AS file_rows, emin AS stat_min,
-       CASE WHEN rows_ >= 800 THEN -1 ELSE
-         coalesce(sum(rows_) FILTER (WHERE rows_ < 800)
-                  OVER (ORDER BY rows_ DESC, emin
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) // 800
-       END::BIGINT AS bin_id
-FROM ranked
-""",
-)
-def q_ice_binpack_plan(spark, sf_dir):
-    """Metadata-only compaction planning: 12 single-file appends of
-    deterministically varied sizes, then the binpack scheduler groups the
-    small files into ~800-row rewrite bins and excludes right-sized files
-    (bin_id = -1) — ZERO data reads, answered from manifest row counts +
-    footer min stats alone. The oracle recomputes the identical plan from
-    the slice definitions, so agreement proves the manifests' per-file
-    bookkeeping carries exactly what the scheduler needs
-    (sources/icetable.compaction_plan)."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_binpack_")
-    t = IceTable(f"{tmp}/tbl")
-    for i in range(12):
-        t.append(
-            ev.where(f"event_id % 12 = {i} "
-                     f"AND (event_id DIV 12) % {1 + i % 3} = 0").coalesce(1)
-        )
-    return _materialize_then_rm(
-        t.compaction_plan(spark, target_rows=800, stat_col="event_id"), tmp)
-
-
-@register(
-    "ice_rewrite_bin",
-    f"""
-WITH slice AS (
-  SELECT * FROM events
-  WHERE (event_id // 12) % (1 + (event_id % 12) % 3) = 0
-)
-{_SUMMARY_SQL}
-""",
-)
-def q_ice_rewrite_bin(spark, sf_dir):
-    """Plan → execute → read: the 12-file binpack fixture, the metadata-only
-    plan with paths, ONE bin handed to rewrite_files (target_files=1), then
-    a full scan. The oracle is the slice union — agreement proves the
-    partial rewrite is byte-neutral on data while the asserted file count
-    shrinks by bin_size−1 and every untouched manifest carries by
-    reference (sources/icetable.rewrite_files)."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_rwbin_")
-    t = IceTable(f"{tmp}/tbl")
-    for i in range(12):
-        t.append(
-            ev.where(f"event_id % 12 = {i} "
-                     f"AND (event_id DIV 12) % {1 + i % 3} = 0").coalesce(1)
-        )
-    plan = t.compaction_plan(spark, target_rows=800, stat_col="event_id",
-                             with_paths=True).collect()
-    bin0 = [r.path for r in plan if r.bin_id == 0]
-    assert len(bin0) >= 2, f"degenerate bin fixture: {plan}"
-    snap = t.rewrite_files(spark, bin0)
-    assert snap["rewrote_files"] == len(bin0)
-    n_after = len(t.snapshot()["files"])
-    assert n_after == 12 - len(bin0) + 1, (n_after, len(bin0))
-    return _materialize_then_rm(_summarize(t.read(spark)), tmp)
-
-
-@register(
-    "ice_snapshot_history",
-    """
-WITH c AS (
-  SELECT sum((event_id % 3 = 0)::INT)::BIGINT AS n0,
-         sum((event_id % 3 = 1)::INT)::BIGINT AS n1,
-         sum((event_id % 3 = 2)::INT)::BIGINT AS n2
-  FROM events
-)
-SELECT * FROM (
-  SELECT 1::BIGINT AS sequence, 'append' AS operation,
-         2::INT AS added_files, 2::INT AS total_files, n0 AS total_rows
-  FROM c
-  UNION ALL SELECT 2, 'append', 1, 3, n0 + n1 FROM c
-  UNION ALL SELECT 3, 'overwrite', 2, 2, n2 FROM c
-  UNION ALL SELECT 4, 'append', 1, 3, n2 + n0 FROM c
-  UNION ALL SELECT 5, 'replace', 1, 1, n2 + n0 FROM c
-)
-""",
-)
-def q_ice_snapshot_history(spark, sf_dir):
-    """The .snapshots metadata table (Iceberg's table-history surface):
-    five scripted commits — two appends, an overwrite, an append, a
-    compaction — read back ENTIRELY from manifest-list aggregates
-    (IceTable.history() loads no manifests, no data). The oracle restates
-    every operation/file-count/row-count from the commit script's
-    closed-form slice sizes, proving the lineage bookkeeping tracks each
-    commit kind exactly."""
-    ev = _events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ddspark_ice_hist_")
-    t = IceTable(f"{tmp}/tbl")
-    t.append(ev.where("event_id % 3 = 0").repartition(2))
-    t.append(ev.where("event_id % 3 = 1").coalesce(1))
-    t.overwrite(ev.where("event_id % 3 = 2").repartition(2))
-    t.append(ev.where("event_id % 3 = 0").coalesce(1))
-    t.compact(spark, target_files=1)
-    rows = [
-        (int(h["sequence"]), h["operation"], int(h["added_files"]),
-         int(h["total_files"]), int(h["total_rows"]))
-        for h in t.history()
-    ]
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "sequence long, operation string, added_files int, "
-        "total_files int, total_rows long",
-    )

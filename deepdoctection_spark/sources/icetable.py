@@ -29,9 +29,7 @@ file list inline in every snapshot, a 1-file append to a 10^6-file table
 re-serializes 10^6 entries — commit cost O(table), metadata O(snapshots ×
 files). With a manifest list, an append writes ONE new manifest holding only
 its own files plus a snapshot whose manifest list grows by one reference:
-commit metadata is O(added files + number of manifests). Row-level ops
-rewrite only the manifests whose files they touch; untouched manifests carry
-over by reference.
+commit metadata is O(added files + number of manifests).
 
 Semantics carried over from Iceberg:
 
@@ -41,19 +39,18 @@ Semantics carried over from Iceberg:
   explicitly. A losing ``append``/``overwrite`` RE-READS the winner's
   snapshot and rebuilds its manifest list on top of it (optimistic
   concurrency, like Iceberg's metadata-pointer CAS — the winner's files are
-  never lost). A losing ``compact``/``delete_where``/``merge_upsert``/
-  ``rewrite_files`` raises :class:`CommitConflict` instead: its rewrite plan
-  was computed against a snapshot that is no longer current, and silently
-  rebasing could resurrect deleted rows. Readers resolve the current
+  never lost). A losing ``compact`` raises :class:`CommitConflict`
+  instead: its rewrite was computed against a snapshot that is no longer
+  current, and silently rebasing would drop the racing writer's files.
+  The table is append-only: no commit deletes rows in place, so no
+  snapshot carries delete files and every read is a plain scan of the
+  snapshot's data files. Readers resolve the current
   snapshot via version-hint but fall back to the highest committed snap
   file, so a torn hint is harmless. Uncommitted data files are invisible
   (never listed in any manifest reachable from a snapshot).
 - **Time travel**: ``read(spark, seq=...)`` reconstructs any historical file
-  list from its manifest list; ``history()`` is the lineage (snapshot →
-  parent) and needs only the manifest-list aggregates, no manifest loads.
-- **Incremental reads**: ``read_incremental(s1, s2)`` = files added by
-  snapshots in (s1, s2] — the streaming-backfill pattern — resolved from
-  each snapshot's ``added_manifests`` alone.
+  list from its manifest list; ``snapshot_log()`` walks the lineage
+  (snapshot → parent) with each commit's added files only.
 - **Scan pruning, two-level**: each manifest file records per-file column
   min/max/null-count harvested from the parquet FOOTERS; the manifest LIST
   records per-manifest aggregates of the same stats plus the partition
@@ -66,18 +63,6 @@ Semantics carried over from Iceberg:
   columns only) — resuming a job with a drifted schema fails loudly. The
   DDL comparison is bracket-aware, so nested types (struct/array/map,
   decimal) evolve correctly.
-- **Row-level ops, copy-on-write AND merge-on-read**: ``delete_where`` and
-  ``merge_upsert`` default to CoW — rewrite ONLY the files whose manifest
-  stats may contain affected rows (merge intersects the ranges of ALL key
-  columns and consults Bloom sidecars for small sources); all other files
-  carry over by reference. With ``mode="mor"`` they instead write Iceberg
-  v2-style DELETE FILES: positional deletes ((file_path, pos) rows bound
-  to exact target files) for DELETE, equality deletes (key tuples applied
-  to data files with ``data_seq < delete_seq``) for MERGE — no data file
-  is rewritten, a point delete writes O(matching rows) bytes. Snapshots
-  carry a separate ``delete_manifests`` list; readers bind deletes to
-  files at plan time and anti-join only the affected files; ``compact()``
-  folds deletes in physically and ``overwrite`` drops them.
 - **Named refs (tags)**: ``tag(name)`` pins a snapshot under an immutable
   name (``read(spark, tag="v1")`` = VERSION AS OF by name; refs live under
   ``metadata/refs/``).
@@ -166,7 +151,7 @@ def _file_stats(path: str) -> tuple[int, dict[str, dict], dict[str, int]]:
 
 class CommitConflict(RuntimeError):
     """Another writer committed first and this commit cannot be rebased
-    (row-level ops), or append retries ran out under a writer storm."""
+    (compact), or append retries ran out under a writer storm."""
 
 
 # ---------------------------------------------------------------------------
@@ -207,8 +192,6 @@ def _build_bloom(values: list[str]) -> dict:
 
 def _bloom_may_contain(bloom: dict, value: str) -> bool:
     bits = bloom["bits"]
-    if isinstance(bits, str):  # raw sidecar json (not via _load_bloom)
-        bits = base64.b64decode(bits)
     return all(
         bits[idx >> 3] & (1 << (idx & 7))
         for idx in _bloom_hashes(value, bloom["m"], bloom["k"])
@@ -338,37 +321,6 @@ def _merge_entry_stats(entries: list[dict]) -> dict[str, dict]:
     }
 
 
-def _pos_target_sets(dels: list[dict]) -> dict[str, set]:
-    """Per positional-delete file, the set of data-file paths it targets."""
-    return {d["path"]: set(d["targets"]) for d in dels if d["kind"] == "pos"}
-
-
-def _delete_applies(f: dict, d: dict, tsets: dict[str, set]) -> bool:
-    """Whether delete entry ``d`` may affect data file ``f`` (the per-file
-    delete binding computed at plan time): positional deletes by exact
-    target path; equality deletes by ``data_seq < delete_seq`` plus
-    key-range disjointness from the footer stats."""
-    if d["kind"] == "pos":
-        return f["path"] in tsets[d["path"]]
-    if (f.get("data_seq") or 0) >= d["delete_seq"]:
-        return False  # file written at/after the delete committed
-    for k in d.get("eq_cols", []):
-        fs = (f.get("stats") or {}).get(k)
-        ds = (d.get("stats") or {}).get(k)
-        if fs and ds and (fs["max"] < ds["min"] or fs["min"] > ds["max"]):
-            return False  # key ranges disjoint: no row can match
-    return True
-
-
-def _delete_binding(f: dict, dels: list[dict],
-                    tsets: dict[str, set]) -> tuple[str, ...]:
-    """The (sorted) delete-file paths applicable to ``f`` — the file's
-    delete-binding signature. Two snapshots bind a carried file
-    identically iff these tuples are equal."""
-    return tuple(sorted(d["path"] for d in dels
-                        if _delete_applies(f, d, tsets)))
-
-
 def _manifest_partitions(entries: list[dict]) -> dict[str, list[str]] | None:
     """Partition values covered by a manifest ({col: sorted values}), or
     None when any entry is unpartitioned or the value set is too large to
@@ -466,23 +418,6 @@ class IceTable:
             raw["added_files"] = self._added_files(raw)
             yield raw
 
-    def history(self) -> list[dict]:
-        """Lineage, oldest first: [{sequence, snapshot_id, parent, operation,
-        added_files, total_files, total_rows, ts_ms}] — computed from the
-        manifest-list aggregates alone (no manifest loads)."""
-        out = []
-        for seq in self._committed_seqs():
-            s = self._raw_snapshot(seq)
-            out.append({
-                "sequence": s["sequence"], "snapshot_id": s["snapshot_id"],
-                "parent": s["parent"], "operation": s["operation"],
-                "added_files": len(s.get("added", [])),
-                "total_files": sum(m["n_files"] for m in s["manifests"]),
-                "total_rows": sum(m["rows"] for m in s["manifests"]),
-                "ts_ms": s.get("ts_ms"),
-            })
-        return out
-
     # -- commits ---------------------------------------------------------
 
     def _write_manifest(self, entries: list[dict]) -> dict:
@@ -504,71 +439,11 @@ class IceTable:
         cache[name] = entries
         return ref
 
-    @staticmethod
-    def _zorder_column(df: DataFrame, cols: list[str],
-                       bits: int = 16) -> DataFrame:
-        """Add a ``__zvalue`` long interleaving the bit-planes of each
-        column's min-max-scaled bucket id (Morton / Z-order curve) — the
-        multi-dimensional clustering key Databricks' OPTIMIZE ZORDER uses.
-        Sorting by it gives EVERY listed column file-level locality, where
-        plain sort_by only clusters the sort prefix. The min/max bounds are
-        one model-sized agg; the interleave is a pure column expression
-        (whole-stage-codegen'd, no UDF). k columns use k*floor(48/k) bits."""
-        from pyspark.sql.types import DateType, NumericType, TimestampType
-
-        if not 1 <= len(cols) <= 4:
-            raise ValueError("zorder_by takes 1-4 columns")
-        for c in cols:
-            dt = df.schema[c].dataType
-            if not isinstance(dt, (NumericType, DateType, TimestampType)):
-                raise ValueError(
-                    f"zorder_by column {c!r} is {dt.simpleString()}: only "
-                    "numeric/date/timestamp columns have a meaningful "
-                    "min-max bucket space (a string column would silently "
-                    "collapse to one bucket)")
-        k = len(cols)
-        use_bits = min(bits, 48 // k)
-        top = (1 << use_bits) - 1
-
-        def as_double(c: str):
-            dt = df.schema[c].dataType
-            if isinstance(dt, (DateType, TimestampType)):
-                return F.col(c).cast("timestamp").cast("double")
-            return F.col(c).cast("double")
-
-        bounds = df.agg(
-            *[F.min(as_double(c)).alias(f"mn_{i}")
-              for i, c in enumerate(cols)],
-            *[F.max(as_double(c)).alias(f"mx_{i}")
-              for i, c in enumerate(cols)],
-        ).first()
-        buckets = []
-        for i, c in enumerate(cols):
-            mn, mx = bounds[f"mn_{i}"], bounds[f"mx_{i}"]
-            if mn is None or mx is None or mx <= mn:
-                buckets.append(F.lit(0).cast("long"))
-                continue
-            scaled = (
-                (F.coalesce(as_double(c), F.lit(mn)) - F.lit(mn))
-                / F.lit(mx - mn) * F.lit(float(top))
-            )
-            buckets.append(
-                F.least(F.lit(top).cast("long"),
-                        F.greatest(F.lit(0).cast("long"),
-                                   F.floor(scaled).cast("long"))))
-        z = F.lit(0).cast("long")
-        for bit in range(use_bits):
-            for j, b in enumerate(buckets):
-                plane = F.shiftright(b, bit).bitwiseAND(F.lit(1).cast("long"))
-                z = z.bitwiseOR(F.shiftleft(plane, bit * k + j))
-        return df.withColumn("__zvalue", z)
-
     def _write_data_files(self, df: DataFrame,
                           partition_by: str | None = None,
                           sort_by: list[str] | None = None,
                           sort_files: int | None = None,
-                          bloom_cols: list[str] | None = None,
-                          zorder_by: list[str] | None = None) -> list[dict]:
+                          bloom_cols: list[str] | None = None) -> list[dict]:
         """Stage df as immutable parquet files under data/ (commit-uuid
         prefix — never visible until a manifest reachable from a snapshot
         lists them), then harvest each file's manifest entry (footer stats
@@ -589,16 +464,6 @@ class IceTable:
         os.makedirs(self.data_dir, exist_ok=True)
         commit = uuid.uuid4().hex[:12]
         staging = os.path.join(self.path, f"_staging-{commit}")
-        if zorder_by:
-            if sort_by:
-                raise ValueError("zorder_by and sort_by are exclusive")
-            n_files = sort_files or 8
-            df = (
-                self._zorder_column(df, zorder_by)
-                .repartitionByRange(n_files, "__zvalue")
-                .sortWithinPartitions("__zvalue")
-                .drop("__zvalue")
-            )
         if sort_by:
             # global sort = range partition + local sort; an explicit
             # ``sort_files`` pins the range-partition count (AQE otherwise
@@ -686,30 +551,17 @@ class IceTable:
 
     def _commit(self, operation: str, added: list[dict], schema: str,
                 manifests_fn, retries: int = 5, extra: dict | None = None,
-                retryable: bool = True,
-                planned_parent: tuple | None = None,
-                delete_manifests_fn=None) -> dict:
+                planned_parent: tuple | None = None) -> dict:
         """Optimistic-concurrency commit. ``manifests_fn(parent_raw)`` builds
         the manifest list ON TOP OF the parent observed in that attempt — a
         retried append therefore carries the racing winner's manifests
-        instead of silently dropping them. Non-rebasable operations
-        (rewrites whose manifest list was computed from a SPECIFIC parent:
-        delete_where, merge_upsert, compact, rewrite_files) pass
-        ``retryable=False`` plus ``planned_parent=(sequence, snapshot_id)``
-        of the snapshot they planned against; if the parent observed at
-        commit time differs — even when no same-sequence file collision
-        occurs, i.e. a writer landed between planning and commit —
-        :class:`CommitConflict` is raised instead of silently dropping the
-        racing writer's files.
-
-        ``delete_manifests_fn(parent_raw)`` builds the snapshot's DELETE
-        manifest list (merge-on-read row-level deletes, Iceberg v2); the
-        default carries the parent's delete manifests unchanged. Rewriting
-        operations that materialize delete effects (overwrite, compact)
-        pass ``lambda _parent: []``."""
-        if delete_manifests_fn is None:
-            def delete_manifests_fn(parent):
-                return parent.get("delete_manifests", [])
+        instead of silently dropping them. A rewrite whose manifest list was
+        computed from a SPECIFIC parent (compact) passes
+        ``planned_parent=(sequence, snapshot_id)`` of the snapshot it planned
+        against; if the parent observed at commit time differs — even when
+        no same-sequence file collision occurs, i.e. a writer landed between
+        planning and commit — :class:`CommitConflict` is raised instead of
+        silently dropping the racing writer's files."""
         os.makedirs(self.meta_dir, exist_ok=True)
         os.makedirs(self._snap_dir, exist_ok=True)
         for _ in range(retries):
@@ -734,7 +586,6 @@ class IceTable:
                 "schema": schema,
                 "added": [f["path"] for f in added],
                 "manifests": manifests_fn(parent),
-                "delete_manifests": delete_manifests_fn(parent),
                 "ts_ms": int(time.time() * 1000),
                 **(extra or {}),
             }
@@ -743,7 +594,7 @@ class IceTable:
                 with open(self._snap_path(seq), "x") as f:
                     json.dump(snap, f)
             except FileExistsError:
-                if not retryable:
+                if planned_parent is not None:
                     raise CommitConflict(
                         f"{operation} on {self.path} planned against seq "
                         f"{seq - 1} but a concurrent writer committed seq "
@@ -767,7 +618,6 @@ class IceTable:
                sort_by: list[str] | None = None,
                sort_files: int | None = None,
                bloom_cols: list[str] | None = None,
-               zorder_by: list[str] | None = None,
                allow_spec_change: bool = False) -> dict:
         """Append-files commit (Iceberg ``append``): new snapshot = parent's
         manifests + one new manifest holding this df's files — commit
@@ -775,52 +625,28 @@ class IceTable:
         identity partitioning (Hive-layout files, per-file partition value
         in the manifest); ``sort_by`` = write-order clustering (tight
         per-file min/max); ``bloom_cols`` = per-file Bloom sidecars for
-        point-lookup pruning; ``zorder_by`` = Morton-curve multi-dimensional
-        clustering (every listed column gets file-level min/max locality,
-        not just the sort prefix — exclusive with sort_by)."""
+        point-lookup pruning. The manifest is written once, before the
+        commit: a rebased attempt reuses it, so a lost race leaves no
+        manifest behind."""
         prev = self._raw_snapshot()
         ddl = self._check_schema(prev, _ddl(df), allow_schema_change)
         self._check_partition_spec(prev, partition_by, allow_spec_change)
         added = self._write_data_files(df, partition_by=partition_by,
                                        sort_by=sort_by, sort_files=sort_files,
-                                       bloom_cols=bloom_cols,
-                                       zorder_by=zorder_by)
-        state: dict = {"seq": None, "ref": None}
+                                       bloom_cols=bloom_cols)
+        refs = [self._write_manifest(added)] if added else []
 
         def manifests_fn(parent: dict) -> list[dict]:
             # re-validate against the parent ACTUALLY observed this attempt:
             # a rebase onto a racing winner must satisfy the same invariants
             self._check_schema(parent, ddl, allow_schema_change)
             self._check_partition_spec(parent, partition_by, allow_spec_change)
-            carried = parent["manifests"]
-            if not added:
-                return carried
-            # stamp each entry's data sequence with the sequence THIS attempt
-            # commits at (Iceberg's data sequence number): equality deletes
-            # apply only to files with data_seq < delete_seq, so a retried
-            # append that rebases past a merge-on-read commit must re-stamp —
-            # a stale lower data_seq would wrongly subject its rows to the
-            # racing equality delete. Lost attempts' manifests are orphans
-            # reclaimed by remove_orphans.
-            seq = parent.get("sequence", 0) + 1
-            if state["seq"] != seq:
-                for e in added:
-                    e["data_seq"] = seq
-                state["ref"] = self._write_manifest(added)
-                state["seq"] = seq
-            # snap's dict literal evaluates "manifests": manifests_fn(parent)
-            # BEFORE unpacking **extra, so this attempt's ref lands in the
-            # committed snapshot even after a rebase
-            extra_dyn["added_manifests"] = [state["ref"]["path"]]
-            return carried + [state["ref"]]
+            return parent["manifests"] + refs
 
-        extra_dyn = {**(extra or {}),
-                     "added_manifests": [],
-                     "partition_by": partition_by,
-                     "sort_by": sort_by,
-                     "zorder_by": zorder_by}
-        return self._commit("append", added, ddl, manifests_fn,
-                            extra=extra_dyn)
+        extra = {**(extra or {}),
+                 "added_manifests": [r["path"] for r in refs],
+                 "partition_by": partition_by, "sort_by": sort_by}
+        return self._commit("append", added, ddl, manifests_fn, extra=extra)
 
     def overwrite(self, df: DataFrame, allow_schema_change: bool = False,
                   sort_by: list[str] | None = None,
@@ -842,14 +668,8 @@ class IceTable:
         added = self._write_data_files(df, partition_by=spec,
                                        sort_by=sort_by, sort_files=sort_files,
                                        bloom_cols=bloom_cols)
-        # planned data_seq; a lost race lands later, but that staleness is
-        # harmless here — overwrite DROPS every prior delete manifest, and
-        # any future equality delete carries a strictly higher delete_seq
-        for e in added:
-            e["data_seq"] = prev.get("sequence", 0) + 1
         refs = [self._write_manifest(added)] if added else []
         return self._commit("overwrite", added, ddl, lambda _parent: refs,
-                            delete_manifests_fn=lambda _parent: [],
                             extra={"added_manifests": [r["path"] for r in refs],
                                    "partition_by": spec, "sort_by": sort_by})
 
@@ -864,21 +684,14 @@ class IceTable:
         if not prev["files"]:
             return prev
         spec = prev.get("partition_by")
-        # read WITH merge-on-read deletes applied, then drop every delete
-        # manifest: compaction is where delete files get folded in
-        # physically (Iceberg rewrite_data_files' delete compaction)
-        df = self._read_with_deletes(
-            spark, prev["schema"], prev["files"], prev).coalesce(target_files)
+        df = self._read_files(
+            spark, prev["schema"], prev["files"]).coalesce(target_files)
         added = self._write_data_files(df, partition_by=spec)
-        for e in added:
-            e["data_seq"] = prev.get("sequence", 0) + 1
         refs = [self._write_manifest(added)] if added else []
         return self._commit("replace", added, prev["schema"],
                             lambda _parent: refs,
-                            retryable=False,
                             planned_parent=(prev.get("sequence", 0),
                                             prev.get("snapshot_id")),
-                            delete_manifests_fn=lambda _parent: [],
                             extra={"added_manifests": [],
                                    "partition_by": spec})
 
@@ -909,323 +722,6 @@ class IceTable:
         return lambda batch_df, epoch_id: self.append_epoch(
             batch_df, query_tag, epoch_id)
 
-    def delete_where(self, spark: SparkSession,
-                     predicate: tuple[str, str, object],
-                     mode: str = "cow") -> dict:
-        """Row-level DELETE (Iceberg ``DELETE FROM … WHERE``), two modes:
-
-        ``mode="cow"`` (copy-on-write, the default): manifest-list
-        aggregates prune whole manifests, per-file stats select the
-        candidate files that MAY contain matching rows; ONLY those are
-        read and rewritten with the complement filter. Untouched manifests
-        carry over by reference; a manifest that loses some files is
-        rewritten minus them (O(manifest), not O(table)). Best when
-        deletes are bulky (a whole partition): reads stay join-free.
-
-        ``mode="mor"`` (merge-on-read, Iceberg v2 positional delete
-        files): matching row positions are written to a small delete file;
-        NO data file is rewritten — a 1-row delete into a 10 GB file
-        writes O(matching rows) bytes. Readers anti-join the delete rows
-        onto exactly the targeted files; :meth:`compact` folds deletes in
-        physically. Best for point deletes into hot partitions at 100 TB,
-        where CoW would rewrite whole files per deleted row.
-
-        Rows where the predicate is NULL are retained in both modes (SQL
-        DELETE semantics: only rows where the condition is TRUE are
-        removed). Old files stay on disk for time travel.
-
-        Reference analogue: idempotent deterministic-id re-runs
-        (deepdoctection annotation.py:154-169) — here made transactional.
-        """
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-        if mode == "mor":
-            return self._delete_where_mor(spark, predicate)
-        prev = self._raw_snapshot()
-        refs = prev["manifests"]
-        if not refs:
-            return self.snapshot()
-        spec = prev.get("partition_by")
-        col, op, lit = predicate
-        carried_refs: list[dict] = []
-        candidates: list[dict] = []
-        n_carried_files = 0
-        for ref in refs:
-            if not self._manifest_may_match(ref, predicate):
-                carried_refs.append(ref)
-                n_carried_files += ref["n_files"]
-                continue
-            entries = self._load_manifest(ref["path"])
-            cand = [e for e in entries
-                    if self._file_may_match(e, predicate)]
-            if not cand:
-                carried_refs.append(ref)
-                n_carried_files += ref["n_files"]
-                continue
-            candidates.extend(cand)
-            cand_paths = {e["path"] for e in cand}
-            survivors = [e for e in entries if e["path"] not in cand_paths]
-            n_carried_files += len(survivors)
-            if survivors:
-                carried_refs.append(self._write_manifest(survivors))
-        added: list[dict] = []
-        if candidates:
-            # apply pending MoR deletes while rewriting: the new files
-            # materialize their effect, and their fresh data_seq/path keeps
-            # the carried delete manifests from re-applying to them
-            df = self._read_with_deletes(spark, prev["schema"], candidates,
-                                         prev)
-            kept = df.where(
-                ~F.coalesce(_pred_column(col, op, lit), F.lit(False)))
-            added = [f for f in self._write_data_files(kept, partition_by=spec)
-                     if f["rows"] > 0]
-            for e in added:
-                e["data_seq"] = prev.get("sequence", 0) + 1
-        new_refs = [self._write_manifest(added)] if added else []
-        return self._commit(
-            "delete", added, prev["schema"],
-            lambda _parent: carried_refs + new_refs,
-            retryable=False,
-            planned_parent=(prev.get("sequence", 0),
-                            prev.get("snapshot_id")),
-            extra={"added_manifests": [r["path"] for r in new_refs],
-                   "partition_by": spec, "sort_by": prev.get("sort_by"),
-                   "rewrote_files": len(candidates),
-                   "carried_files": n_carried_files})
-
-    def _delete_where_mor(self, spark: SparkSession,
-                          predicate: tuple[str, str, object]) -> dict:
-        """Positional-delete DELETE (see :meth:`delete_where` mode="mor"):
-        stats-pruned candidate files are scanned once for matching row
-        positions via the parquet reader's generated ``_metadata`` columns
-        (no payload rewrite), the (file_path, pos) rows land in a delete
-        file, and the commit carries EVERY data manifest by reference —
-        data bytes written are O(matching rows)."""
-        prev = self._raw_snapshot()
-        col, op, lit = predicate
-        candidates = self.plan(predicate)["files"]
-        if not candidates:
-            return self.snapshot()
-        # read with pending deletes applied so already-masked rows don't
-        # land in the new delete file again (exact delete_rows accounting)
-        df = self._read_with_deletes(spark, prev["schema"], candidates,
-                                     prev, lineage=True)
-        matches = df.where(
-            F.coalesce(_pred_column(col, op, lit), F.lit(False))
-        ).select(F.col("__ice_file").alias("file_path"),
-                 F.col("__ice_pos").alias("pos"))
-        dentries = [e for e in self._write_data_files(matches)
-                    if e["rows"] > 0]
-        if not dentries:
-            return self.snapshot()  # predicate matched no live row
-        # exact target binding: only files that actually lost rows pay the
-        # read-time anti-join (the delete file itself is tiny — reading it
-        # back for the distinct set is O(deleted rows))
-        targets = sorted(
-            r[0] for r in spark.read.parquet(
-                *[os.path.join(self.data_dir, e["path"]) for e in dentries]
-            ).select("file_path").distinct().collect())
-        dels = [{"path": e["path"], "rows": e["rows"], "kind": "pos",
-                 "targets": targets, "stats": e.get("stats") or {}}
-                for e in dentries]
-        dref = self._write_manifest(dels)
-        carried = prev["manifests"]
-        return self._commit(
-            "delete", [], prev["schema"],
-            lambda _parent: carried,
-            retryable=False,
-            planned_parent=(prev.get("sequence", 0),
-                            prev.get("snapshot_id")),
-            delete_manifests_fn=lambda parent: (
-                parent.get("delete_manifests", []) + [dref]),
-            extra={"added_manifests": [],
-                   "added_delete_manifests": [dref["path"]],
-                   "row_op_mode": "merge-on-read",
-                   "partition_by": prev.get("partition_by"),
-                   "sort_by": prev.get("sort_by"),
-                   "rewrote_files": 0,
-                   "carried_files": sum(r["n_files"] for r in carried),
-                   "delete_rows": sum(e["rows"] for e in dentries),
-                   "delete_targets": len(targets)})
-
-    def merge_upsert(self, spark: SparkSession, source: DataFrame,
-                     key_cols: str | list[str], mode: str = "cow") -> dict:
-        """MERGE (Iceberg ``MERGE INTO`` upsert): target rows whose key
-        matches a source row are REPLACED by the source row; source rows
-        with unmatched keys are INSERTED.
-
-        ``mode="mor"`` (merge-on-read, Iceberg v2 equality deletes) never
-        reads or rewrites a target file: the source lands as new data
-        files and the matched keys are masked by an equality-delete file
-        applied at read to older data files — commit cost O(source), the
-        shape for continuous small upserts into a 100 TB table. See
-        :meth:`_merge_upsert_mor`.
-
-        ``mode="cow"`` (the default): candidate files are
-        pruned by intersecting the manifest stats of EVERY key column with
-        the source's key span (a file is untouched if ANY key column proves
-        disjointness — compound keys prune far better than key[0] alone),
-        and, for small sources, by per-file Bloom sidecars on the key
-        columns. Date/timestamp keys compare in the same ISO-string space
-        the footer stats are stored in. Only candidates are read,
-        anti-joined against the source keys, and rewritten together with
-        the source — untouched files carry over by reference (manifests
-        that lose files are rewritten minus them). The anti-join is a plain
-        Spark join, so Catalyst broadcasts a small source and sort-merges a
-        big one — the same physical strategy Iceberg's Spark MERGE uses."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-        if mode == "mor":
-            return self._merge_upsert_mor(spark, source, key_cols)
-        prev = self._raw_snapshot()
-        ddl = self._check_schema(prev, _ddl(source), False)
-        has_data = bool(prev["manifests"])
-        spec = prev.get("partition_by") if has_data else None
-        keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-        bounds = source.agg(
-            *[F.min(k).alias(f"lo_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"hi_{i}") for i, k in enumerate(keys)],
-        ).first()
-        if bounds[0] is None:
-            return self.snapshot()  # empty source: MERGE is a no-op
-        lo = {k: _norm_lit(bounds[i]) for i, k in enumerate(keys)}
-        hi = {k: _norm_lit(bounds[len(keys) + i])
-              for i, k in enumerate(keys)}
-        bloom_keys = self._collect_small_keys(source, keys)
-
-        def file_disjoint(entry: dict) -> bool:
-            for k in keys:
-                s = entry["stats"].get(k)
-                if s is not None and (s["max"] < lo[k] or s["min"] > hi[k]):
-                    return True  # this key column alone proves no overlap
-            if bloom_keys is not None:
-                for k in keys:
-                    side = (entry.get("bloom") or {}).get(k)
-                    if side is None:
-                        continue
-                    blob = self._load_bloom(side)
-                    if not any(_bloom_may_contain(blob, str(kv[k]))
-                               for kv in bloom_keys):
-                        return True  # no source key can live in this file
-            return False
-
-        carried_refs: list[dict] = []
-        candidates: list[dict] = []
-        n_carried_files = 0
-        for ref in prev["manifests"]:
-            m_stats = ref.get("stats") or {}
-            if any(k in m_stats
-                   and (m_stats[k]["max"] < lo[k] or m_stats[k]["min"] > hi[k])
-                   for k in keys):
-                carried_refs.append(ref)  # whole manifest out of key range
-                n_carried_files += ref["n_files"]
-                continue
-            entries = self._load_manifest(ref["path"])
-            cand = [e for e in entries if not file_disjoint(e)]
-            if not cand:
-                carried_refs.append(ref)
-                n_carried_files += ref["n_files"]
-                continue
-            candidates.extend(cand)
-            cand_paths = {e["path"] for e in cand}
-            survivors = [e for e in entries if e["path"] not in cand_paths]
-            n_carried_files += len(survivors)
-            if survivors:
-                carried_refs.append(self._write_manifest(survivors))
-        if candidates:
-            tgt = self._read_with_deletes(spark, prev["schema"], candidates,
-                                          prev)
-            survivors_df = tgt.join(
-                source.select(*keys).distinct(), on=keys, how="left_anti")
-            merged = survivors_df.unionByName(source)
-        else:
-            merged = source
-        added = [f for f in self._write_data_files(merged, partition_by=spec)
-                 if f["rows"] > 0]
-        for e in added:
-            e["data_seq"] = prev.get("sequence", 0) + 1
-        new_refs = [self._write_manifest(added)] if added else []
-        return self._commit(
-            "merge", added, ddl,
-            lambda _parent: carried_refs + new_refs,
-            retryable=False,
-            planned_parent=(prev.get("sequence", 0),
-                            prev.get("snapshot_id")),
-            extra={"added_manifests": [r["path"] for r in new_refs],
-                   "partition_by": spec, "sort_by": prev.get("sort_by"),
-                   "rewrote_files": len(candidates),
-                   "carried_files": n_carried_files})
-
-    def _merge_upsert_mor(self, spark: SparkSession, source: DataFrame,
-                          key_cols: str | list[str]) -> dict:
-        """Equality-delete MERGE (see :meth:`merge_upsert` mode="mor"):
-        the source lands as new data files (stamped with this commit's
-        data_seq) and ONE equality-delete file of the distinct source key
-        tuples masks matching rows in every OLDER data file
-        (``data_seq < delete_seq``) at read. No target file is read or
-        rewritten; per-file key-range disjointness against the delete
-        file's footer stats keeps non-overlapping files on the clean scan
-        path. Incremental consumers see exactly the source rows (the only
-        added data manifest)."""
-        prev = self._raw_snapshot()
-        ddl = self._check_schema(prev, _ddl(source), False)
-        has_data = bool(prev["manifests"])
-        spec = prev.get("partition_by") if has_data else None
-        keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-        for k in keys:
-            if k not in source.columns:
-                raise ValueError(f"key column {k!r} not in source")
-        planned_seq = prev.get("sequence", 0) + 1
-        added = [f for f in self._write_data_files(source, partition_by=spec)
-                 if f["rows"] > 0]
-        if not added:
-            return self.snapshot()  # empty source: MERGE is a no-op
-        for e in added:
-            e["data_seq"] = planned_seq
-        new_data_ref = self._write_manifest(added)
-        dref = None
-        n_delete_rows = 0
-        if has_data:
-            dkeys = source.select(*keys).distinct()
-            dentries = [e for e in self._write_data_files(dkeys)
-                        if e["rows"] > 0]
-            dels = [{"path": e["path"], "rows": e["rows"], "kind": "eq",
-                     "eq_cols": keys, "delete_seq": planned_seq,
-                     "stats": e.get("stats") or {}} for e in dentries]
-            n_delete_rows = sum(d["rows"] for d in dels)
-            dref = self._write_manifest(dels) if dels else None
-        carried = prev["manifests"]
-        return self._commit(
-            "merge", added, ddl,
-            lambda _parent: carried + [new_data_ref],
-            retryable=False,
-            planned_parent=(prev.get("sequence", 0),
-                            prev.get("snapshot_id")),
-            delete_manifests_fn=lambda parent: (
-                parent.get("delete_manifests", [])
-                + ([dref] if dref else [])),
-            extra={"added_manifests": [new_data_ref["path"]],
-                   "added_delete_manifests": [dref["path"]] if dref else [],
-                   "row_op_mode": "merge-on-read",
-                   "partition_by": spec, "sort_by": prev.get("sort_by"),
-                   "rewrote_files": 0,
-                   "carried_files": sum(r["n_files"] for r in carried),
-                   "delete_rows": n_delete_rows})
-
-    _MERGE_BLOOM_MAX_KEYS = 1024
-
-    def _collect_small_keys(self, source: DataFrame,
-                            keys: list[str]) -> list[dict] | None:
-        """Distinct source key tuples when there are few enough to test
-        against per-file Blooms (point-update pattern); None for large
-        sources — collecting their keyspace would move the join driver-side,
-        which is exactly the anti-pattern the anti-join avoids."""
-        rows = (source.select(*keys).distinct()
-                .limit(self._MERGE_BLOOM_MAX_KEYS + 1).collect())
-        if len(rows) > self._MERGE_BLOOM_MAX_KEYS:
-            return None
-        return [r.asDict() for r in rows]
-
     def remove_orphans(self, dry_run: bool = False) -> dict:
         """Iceberg ``remove_orphan_files``: find (and unless ``dry_run``,
         delete) physical files under the table location that NO committed
@@ -1236,8 +732,7 @@ class IceTable:
         changes what ANY snapshot reads — safe on a live table, and at
         100 TB it is routine maintenance after crashed writer fleets."""
         # data-file rels, Bloom-sidecar rels and manifest filenames that
-        # any committed snapshot references; merge-on-read delete files live
-        # in data/ and their manifests in metadata/
+        # any committed snapshot references
         live: set[str] = set()
         live_sidecars: set[str] = set()
         live_manifests: set[str] = set()
@@ -1247,10 +742,6 @@ class IceTable:
             for f in self._snap_files(raw):
                 live.add(f["path"])
                 live_sidecars.update((f.get("bloom") or {}).values())
-            live_manifests.update(
-                m["path"] for m in raw.get("delete_manifests", []))
-            for d in self._delete_entries(raw):
-                live.add(d["path"])
         orphan_data: list[str] = []
         if os.path.isdir(self.data_dir):
             for root, _dirs, files in os.walk(self.data_dir):
@@ -1333,134 +824,26 @@ class IceTable:
         harmless for unpartitioned files."""
         return spark.read.schema(schema).option("basePath", self.data_dir)
 
-    def _rel_file_expr(self):
-        """Column expression: a scanned row's data-file path relative to
-        data/ — the same key positional delete files store. Both the
-        delete writer and the reader derive it with THIS expression, so
-        the anti-join key is consistent by construction."""
-        pat = re.escape(os.path.abspath(self.data_dir) + "/")
-        return F.element_at(F.split(F.col("_metadata.file_path"), pat), -1)
-
     def _read_files(self, spark: SparkSession, schema: str,
-                    files: list[dict], lineage: bool = False) -> DataFrame:
+                    files: list[dict]) -> DataFrame:
         """Read an explicit manifest-entry list, PARTITION-EVOLUTION-safe:
         Hive-layout entries (they carry a manifest partition value) derive
         the partition column from the path via basePath discovery;
         pre-evolution flat entries carry the column in the data and read
         without basePath (Spark rejects a single mixed-depth read). The two
-        eras union by name — one extra scan node, no shuffle.
-
-        ``lineage`` adds ``__ice_file`` (path relative to data/) and
-        ``__ice_pos`` (row position within the file) from the scan's
-        ``_metadata`` columns — generated JVM-side by the parquet reader,
-        no payload cost — the binding keys for positional deletes."""
-
-        def tag(df: DataFrame) -> DataFrame:
-            if not lineage:
-                return df
-            return df.select(
-                "*",
-                self._rel_file_expr().alias("__ice_file"),
-                F.col("_metadata.row_index").alias("__ice_pos"))
-
+        eras union by name — one extra scan node, no shuffle."""
         hive = [f for f in files if f.get("partition")]
         flat = [f for f in files if not f.get("partition")]
         parts = []
         if flat:
             parts.append(
-                tag(spark.read.schema(schema).parquet(*self._paths(flat))))
+                spark.read.schema(schema).parquet(*self._paths(flat)))
         if hive:
             parts.append(
-                tag(self._reader(spark, schema).parquet(*self._paths(hive))))
+                self._reader(spark, schema).parquet(*self._paths(hive)))
         df = parts[0]
         for extra_df in parts[1:]:
             df = df.unionByName(extra_df)
-        return df
-
-    # Delete sides at or below this many rows get an explicit broadcast
-    # hint: a point delete's (file, pos) set is model-sized next to the
-    # data scan it masks, and a shuffle there would dominate the read.
-    _BROADCAST_DELETE_ROWS = 4_000_000
-
-    def _delete_entries(self, raw: dict) -> list[dict]:
-        """Delete-file entries (positional + equality) reachable from a
-        snapshot's delete manifest list."""
-        out: list[dict] = []
-        for ref in raw.get("delete_manifests", []):
-            out.extend(self._load_manifest(ref["path"]))
-        return out
-
-    def _read_with_deletes(self, spark: SparkSession, schema: str,
-                           files: list[dict], raw: dict,
-                           lineage: bool = False) -> DataFrame:
-        """Delete-aware read — the Iceberg v2 merge-on-read reader shape:
-        each file is bound to its applicable delete files at PLAN time
-        (positional deletes by exact target path; equality deletes by
-        ``data_seq < delete_seq`` plus key-range disjointness from the
-        footer stats), files with no applicable delete scan clean, and
-        only the bound files pay the anti-joins. Tables with no delete
-        manifests take the identical code path as before MoR existed."""
-        dels = self._delete_entries(raw)
-        if not files:
-            return spark.createDataFrame(
-                [], schema=schema or "dummy int")
-        tsets = _pos_target_sets(dels)
-
-        def applies(f: dict, d: dict) -> bool:
-            return _delete_applies(f, d, tsets)
-
-        dirty = [f for f in files if any(applies(f, d) for d in dels)]
-        if not dirty:
-            return self._read_files(spark, schema, files, lineage=lineage)
-        clean = [f for f in files
-                 if not any(applies(f, d) for d in dels)]
-        df = self._read_files(spark, schema, dirty, lineage=True)
-        pos = [d for d in dels if d["kind"] == "pos"
-               and any(applies(f, d) for f in dirty)]
-        eqs = [d for d in dels if d["kind"] == "eq"
-               and any(applies(f, d) for f in dirty)]
-        if pos:
-            pdel = spark.read.parquet(
-                *[os.path.join(self.data_dir, d["path"]) for d in pos]
-            ).select(F.col("file_path").alias("__ice_file"),
-                     F.col("pos").alias("__ice_pos"))
-            if sum(d["rows"] for d in pos) <= self._BROADCAST_DELETE_ROWS:
-                pdel = F.broadcast(pdel)
-            df = df.join(pdel, ["__ice_file", "__ice_pos"], "left_anti")
-        if eqs:
-            # per-row data_seq via a files-sized broadcast map — the same
-            # per-task state an Iceberg reader carries per FileScanTask
-            seq_map = spark.createDataFrame(
-                [(f["path"], int(f.get("data_seq") or 0)) for f in dirty],
-                "__ice_file string, __ice_dseq long")
-            df = df.join(F.broadcast(seq_map), "__ice_file", "left")
-            # one equality delete spans several key files (the distinct-key
-            # write shuffles); group by (delete_seq, eq_cols) so each
-            # DELETE pays ONE anti-join however many files hold its keys
-            groups: dict[tuple, list[dict]] = {}
-            for d in eqs:
-                groups.setdefault(
-                    (int(d["delete_seq"]), tuple(d["eq_cols"])), []
-                ).append(d)
-            for (dseq, cols), grp in sorted(groups.items()):
-                ed = spark.read.parquet(
-                    *[os.path.join(self.data_dir, d["path"]) for d in grp]
-                ).select(*cols)
-                if sum(d["rows"] for d in grp) <= self._BROADCAST_DELETE_ROWS:
-                    ed = F.broadcast(ed)
-                # equality deletes match NULL keys null-safely (Iceberg
-                # equality-delete semantics); the data_seq guard keeps
-                # rows written after the delete untouched
-                cond = F.col("__ice_dseq") < F.lit(dseq)
-                for k in cols:
-                    cond = cond & df[k].eqNullSafe(ed[k])
-                df = df.join(ed, cond, "left_anti")
-            df = df.drop("__ice_dseq")
-        if not lineage:
-            df = df.drop("__ice_file", "__ice_pos")
-        if clean:
-            df = self._read_files(
-                spark, schema, clean, lineage=lineage).unionByName(df)
         return df
 
     def read(self, spark: SparkSession, seq: int | None = None,
@@ -1477,30 +860,7 @@ class IceTable:
         snap = self.snapshot(seq)
         if not snap["files"]:
             return spark.createDataFrame([], schema=snap["schema"] or "dummy int")
-        return self._read_with_deletes(spark, snap["schema"], snap["files"],
-                                       snap)
-
-    def read_incremental(self, spark: SparkSession, after_seq: int,
-                         until_seq: int | None = None) -> DataFrame:
-        """Rows in files ADDED by snapshots in (after_seq, until_seq] — the
-        incremental-consumption pattern (overwrite snapshots contribute
-        only their newly added files), resolved from each snapshot's added
-        manifests without materializing any file list."""
-        until_seq = self.current_seq() if until_seq is None else until_seq
-        snap = self._raw_snapshot(until_seq)
-        added: list[dict] = []
-        for seq in range(after_seq + 1, until_seq + 1):
-            s = self._raw_snapshot(seq)
-            if s["operation"] == "replace":
-                continue  # rewrites carry no new rows — skipping them
-                # keeps incremental consumers exactly-once
-            added += self._added_files(s)
-        if not added:
-            return spark.createDataFrame([], schema=snap["schema"] or "dummy int")
-        # the until-snapshot's deletes apply to the added files too, so an
-        # incremental consumer never re-surfaces rows a later-in-window
-        # merge-on-read delete already masked
-        return self._read_with_deletes(spark, snap["schema"], added, snap)
+        return self._read_files(spark, snap["schema"], snap["files"])
 
     def _bloom_cache_get(self):
         cache = getattr(self, "_bloom_cache", None)
@@ -1634,243 +994,13 @@ class IceTable:
         raw = self._raw_snapshot(seq)
         if not keep:
             return spark.createDataFrame([], schema=raw["schema"] or "dummy int")
-        df = self._read_with_deletes(spark, raw["schema"], keep, raw)
+        df = self._read_files(spark, raw["schema"], keep)
         if predicate is not None:
             preds = predicate if isinstance(predicate, list) else [predicate]
             df = df.where(reduce(
                 lambda a, b: a & b,
                 (_pred_column(col, op, lit) for col, op, lit in preds)))
         return df
-
-    def metadata_agg(self, spark: SparkSession,
-                     cols: list[str] | None = None,
-                     seq: int | None = None) -> DataFrame:
-        """Metadata-only aggregation (Iceberg's metadata-table scan shape):
-        per-partition file count, row count, and per-column min/max/null
-        count answered ENTIRELY from manifest entries — zero data-file
-        reads. At 100 TB this turns ``SELECT count(*) … GROUP BY partition``
-        from a full scan into a driver-side walk of O(#files) manifest rows
-        (the same rows commit planning already reads).
-
-        Exact-by-construction: footer row counts are exact, and min/max/
-        null-count per file are parquet footer statistics merged across
-        files. Refuses snapshots that carry merge-on-read delete files
-        (their matched rows are unknowable without reading data — compact
-        first) and requested columns that some file lacks stats for (a
-        stats-less file must never be silently claimed covered)."""
-        raw = self._raw_snapshot(seq)
-        if self._delete_entries(raw):
-            raise ValueError(
-                "metadata_agg: snapshot carries merge-on-read delete files; "
-                "their effect requires reading data — compact() first")
-        cols = cols or []
-        groups: dict[str, dict] = {}
-        for f in self._snap_files(raw):
-            part = f.get("partition") or {}
-            key = next(iter(part.values()), "<all>")
-            g = groups.setdefault(
-                key, {"n_files": 0, "n_rows": 0,
-                      **{c: None for c in cols}})
-            g["n_files"] += 1
-            g["n_rows"] += f["rows"]
-            for c in cols:
-                s = f.get("stats", {}).get(c)
-                if s is None:
-                    raise ValueError(
-                        f"metadata_agg: file {f['path']} has no footer "
-                        f"stats for column {c!r}")
-                cur = g[c]
-                if cur is None:
-                    g[c] = dict(s)
-                else:
-                    cur["min"] = min(cur["min"], s["min"])
-                    cur["max"] = max(cur["max"], s["max"])
-                    cur["nulls"] += s.get("nulls", 0)
-        rows = [
-            tuple([k, g["n_files"], g["n_rows"]]
-                  + [v for c in cols
-                     for v in (g[c]["min"], g[c]["max"], g[c]["nulls"])])
-            for k, g in sorted(groups.items())
-        ]
-        names = ["partition", "n_files", "n_rows"] + [
-            f"{c}_{suffix}" for c in cols
-            for suffix in ("min", "max", "nulls")
-        ]
-        return spark.createDataFrame(rows, names)
-
-    def compaction_plan(self, spark: SparkSession, target_rows: int,
-                        stat_col: str, seq: int | None = None,
-                        with_paths: bool = False) -> DataFrame:
-        """Metadata-only compaction planning (the scheduling half of
-        Iceberg's ``rewrite_data_files`` binpack strategy): group the
-        snapshot's small files into rewrite bins of ~``target_rows`` rows
-        WITHOUT reading any data — the decision of *what to compact* comes
-        from the same O(#files) manifest rows commit planning already
-        reads, so a maintenance daemon can run it continuously against a
-        100 TB table for free and only pay I/O for the bins it accepts.
-
-        Deterministic strategy (differentially testable, unlike a greedy
-        first-fit whose output depends on iteration order): files sort by
-        (rows DESC, footer-min of ``stat_col`` ASC — a total order, since
-        paths are not stable identities), files already at/over
-        ``target_rows`` are excluded with ``bin_id = -1`` (rewriting a
-        right-sized file is wasted I/O), and the rest split at cumulative-
-        row-count multiples of ``target_rows`` — each bin rewrites to ~one
-        target-sized file via :meth:`compact` on its file subset.
-
-        Refuses snapshots carrying merge-on-read delete files for the same
-        reason :meth:`metadata_agg` does: footer row counts over-count
-        deleted rows, so bins would be mis-sized — fold deletes first.
-
-        Returns (file_rank, file_rows, stat_min, bin_id), one row per data
-        file; ``with_paths=True`` appends the file path so a maintenance
-        job can hand each bin straight to :meth:`rewrite_files` (the
-        oracle-checked query keeps the default — paths are temp-dir-local,
-        not comparable)."""
-        raw = self._raw_snapshot(seq)
-        if self._delete_entries(raw):
-            raise ValueError(
-                "compaction_plan: snapshot carries merge-on-read delete "
-                "files; footer row counts over-count — compact() first")
-        entries = []
-        for f in self._snap_files(raw):
-            s = f.get("stats", {}).get(stat_col)
-            if s is None:
-                raise ValueError(
-                    f"compaction_plan: file {f['path']} has no footer "
-                    f"stats for tie-break column {stat_col!r}")
-            entries.append((f["rows"], s["min"], f["path"]))
-        entries.sort(key=lambda e: (-e[0], e[1]))
-        rows, cum = [], 0
-        for rank, (n, smin, path) in enumerate(entries, start=1):
-            if n >= target_rows:
-                rows.append((rank, n, smin, -1, path))
-            else:
-                rows.append((rank, n, smin, cum // target_rows, path))
-                cum += n
-        schema = "file_rank long, file_rows long, stat_min long, bin_id long"
-        if with_paths:
-            return spark.createDataFrame(
-                [(int(a), int(b), int(c), int(d), p)
-                 for a, b, c, d, p in rows],
-                schema + ", path string",
-            )
-        return spark.createDataFrame(
-            [(int(a), int(b), int(c), int(d)) for a, b, c, d, _p in rows],
-            schema,
-        )
-
-    def rewrite_files(self, spark: SparkSession, paths: list[str],
-                      target_files: int = 1) -> dict:
-        """Execute ONE compaction bin (Iceberg ``rewrite_data_files`` over
-        an explicit file subset — the execution half of
-        :meth:`compaction_plan`): read ONLY the named data files, with any
-        pending merge-on-read deletes bound to them folded in physically,
-        rewrite them as ``target_files`` file(s), and carry every
-        untouched manifest by reference — I/O and commit cost are O(bin),
-        never O(table), so a maintenance daemon can drain bins
-        continuously against a 100 TB table. A manifest that loses only
-        some files is rewritten minus them (O(manifest)), same as the CoW
-        delete path.
-
-        Delete-file semantics: rewritten rows materialize their pending
-        deletes (the new files' fresh paths are outside every carried
-        delete file's target set, so nothing re-applies); delete files
-        targeting files NOT in ``paths`` are carried untouched and keep
-        masking them. Unknown paths raise — a stale plan must fail loudly
-        rather than silently skip (the commit itself also aborts on a
-        raced parent via planned_parent, like every row-level op).
-
-        Old files stay on disk for time travel."""
-        prev = self._raw_snapshot()
-        refs = prev["manifests"]
-        wanted = set(paths)
-        if not wanted:
-            return self.snapshot()
-        # validate the whole plan before writing anything: a stale plan
-        # must not leave survivor manifests behind
-        kept: list[dict | list[dict]] = []  # carried ref, or survivor entries
-        candidates: list[dict] = []
-        for ref in refs:
-            entries = self._load_manifest(ref["path"])
-            cand = [e for e in entries if e["path"] in wanted]
-            if not cand:
-                kept.append(ref)
-                continue
-            candidates.extend(cand)
-            survivors = [e for e in entries if e["path"] not in wanted]
-            if survivors:
-                kept.append(survivors)
-        missing = wanted - {e["path"] for e in candidates}
-        if missing:
-            raise ValueError(
-                f"rewrite_files: {sorted(missing)} not in the current "
-                "snapshot — re-plan against HEAD")
-        carried_refs = [
-            self._write_manifest(k) if isinstance(k, list) else k for k in kept
-        ]
-        n_carried = sum(r["n_files"] for r in carried_refs)
-        spec = prev.get("partition_by")
-        df = self._read_with_deletes(
-            spark, prev["schema"], candidates, prev).coalesce(target_files)
-        added = [f for f in self._write_data_files(df, partition_by=spec)
-                 if f["rows"] > 0]
-        for e in added:
-            e["data_seq"] = prev.get("sequence", 0) + 1
-        new_refs = [self._write_manifest(added)] if added else []
-        return self._commit(
-            "replace", added, prev["schema"],
-            lambda _parent: carried_refs + new_refs,
-            retryable=False,
-            planned_parent=(prev.get("sequence", 0),
-                            prev.get("snapshot_id")),
-            extra={"added_manifests": [r["path"] for r in new_refs],
-                   "partition_by": spec, "sort_by": prev.get("sort_by"),
-                   "rewrote_files": len(candidates),
-                   "carried_files": n_carried})
-
-    def changes(self, spark: SparkSession, from_seq: int,
-                to_seq: int | None = None) -> DataFrame:
-        """Net row-level changelog between two snapshots (the Iceberg CDC /
-        changelog-table surface): the table schema plus ``_change_type`` ∈
-        {'insert','delete'} — rows visible at ``to_seq`` but not at
-        ``from_seq`` are inserts, the reverse are deletes (multiset
-        semantics: k extra copies ⇒ k change rows).
-
-        File-identity short-circuit (the 100 TB property): a data file
-        present in BOTH snapshots with an UNCHANGED delete binding
-        contributes nothing and is NEVER read — the diff costs O(changed
-        files), not O(table). Files only in one snapshot, plus carried
-        files whose merge-on-read delete binding changed, are read at
-        their respective snapshots and netted with exceptAll in both
-        directions, so a copy-on-write rewrite that merely moved rows
-        between files emits nothing. Schema evolution across the window is
-        refused (a changelog row needs one schema)."""
-        raw_a = self._raw_snapshot(from_seq)
-        raw_b = self._raw_snapshot(to_seq)
-        if raw_a["schema"] != raw_b["schema"]:
-            raise ValueError(
-                "changes: schema evolved across the window "
-                f"({raw_a['schema']!r} -> {raw_b['schema']!r})")
-        dels_a, dels_b = self._delete_entries(raw_a), self._delete_entries(raw_b)
-        ts_a, ts_b = _pos_target_sets(dels_a), _pos_target_sets(dels_b)
-        fa = {f["path"]: f for f in self._snap_files(raw_a)}
-        fb = {f["path"]: f for f in self._snap_files(raw_b)}
-        side_a = [f for p, f in fa.items() if p not in fb]
-        side_b = [f for p, f in fb.items() if p not in fa]
-        for p in fa.keys() & fb.keys():
-            if (_delete_binding(fa[p], dels_a, ts_a)
-                    != _delete_binding(fb[p], dels_b, ts_b)):
-                side_a.append(fa[p])
-                side_b.append(fb[p])
-        schema = raw_b["schema"]
-        old = self._read_with_deletes(spark, schema, side_a, raw_a)
-        new = self._read_with_deletes(spark, schema, side_b, raw_b)
-        return (
-            old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
-            .unionByName(
-                new.exceptAll(old).withColumn("_change_type", F.lit("insert")))
-        )
 
 
 def _ddl(df: DataFrame) -> str:

@@ -24,7 +24,7 @@ input (the ``stream_neardup_ingest`` oracle row unrolls that replay in
 DuckDB). Intra-batch duplicates are out of scope by the same contract —
 both members of a same-batch near-dup pair are accepted.
 
-Maintenance contract: compaction/expiry run BETWEEN epochs (the standard
+Maintenance contract: compaction runs BETWEEN epochs (the standard
 single-writer maintenance window) — a compaction snapshot carries no stream
 tag, so the as-of read of a retried epoch would see the compacted state
 including that epoch's own partially-committed rows. Between epochs it is

@@ -1,7 +1,8 @@
-"""IceTable (sources/icetable.py): snapshot isolation, time travel,
-incremental reads, manifest min/max pruning, optimistic-commit conflicts
-and schema pinning — the Iceberg-semantics subset the north rule's
-checkpoint/lineage contract needs, over plain parquet."""
+"""IceTable (sources/icetable.py): append-only snapshots, time travel,
+compaction, two-level manifest pruning (min/max, partition values, Bloom
+sidecars), optimistic-commit conflicts, schema pinning, tags and orphan
+removal — the Iceberg-semantics subset the transcript source and the
+checkpointed jobs' commit protocol need, over plain parquet."""
 
 from __future__ import annotations
 
@@ -9,8 +10,6 @@ import json
 import os
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from deepdoctection_spark.sources.icetable import CommitConflict, IceTable
 
@@ -25,15 +24,30 @@ def tbl(tmp_path):
     return IceTable(str(tmp_path / "tbl"))
 
 
+def _stale_commit_view(monkeypatch, tbl, seq):
+    """Make ``tbl`` resolve the current sequence as ``seq`` for its next two
+    lookups, then truthfully. An append looks once while planning and once
+    per commit attempt, so its first attempt targets ``seq + 1``, loses
+    that race to the snapshot already there, and rebases."""
+    real = tbl.current_seq
+    calls = {"n": 0}
+
+    def stale_twice():
+        calls["n"] += 1
+        return seq if calls["n"] <= 2 else real()
+
+    monkeypatch.setattr(tbl, "current_seq", stale_twice)
+
+
 def test_append_and_snapshot_read(spark, tbl):
     tbl.append(_df(spark, 0, 100))
     tbl.append(_df(spark, 100, 150, tag="b"))
     assert tbl.read(spark).count() == 150
     assert tbl.current_seq() == 2
-    h = tbl.history()
-    assert [e["operation"] for e in h] == ["append", "append"]
-    assert h[1]["parent"] == h[0]["snapshot_id"]
-    assert h[1]["total_rows"] == 150
+    log = list(tbl.snapshot_log())
+    assert [e["operation"] for e in log] == ["append", "append"]
+    assert log[1]["parent"] == log[0]["snapshot_id"]
+    assert sum(m["rows"] for m in log[1]["manifests"]) == 150
 
 
 def test_time_travel_and_overwrite(spark, tbl):
@@ -42,14 +56,6 @@ def test_time_travel_and_overwrite(spark, tbl):
     assert tbl.read(spark).count() == 10
     assert tbl.read(spark, seq=1).count() == 100  # old snapshot intact
     assert {r["tag"] for r in tbl.read(spark, seq=2).collect()} == {"ow"}
-
-
-def test_incremental_read_is_exactly_the_delta(spark, tbl):
-    tbl.append(_df(spark, 0, 50))
-    tbl.append(_df(spark, 50, 80))
-    tbl.append(_df(spark, 80, 90))
-    inc = tbl.read_incremental(spark, after_seq=1, until_seq=3)
-    assert sorted(r["id"] for r in inc.collect()) == list(range(50, 90))
 
 
 def test_uncommitted_files_invisible(spark, tbl):
@@ -94,7 +100,6 @@ def test_string_stats_pruning(spark, tbl):
 
 def test_commit_conflict_retries_then_raises(spark, tbl, monkeypatch):
     tbl.append(_df(spark, 0, 10))
-    real_current_seq = tbl.current_seq
 
     # a writer with a permanently stale view: every retry targets seq 2,
     # which a concurrent winner already committed → exclusive create loses
@@ -102,7 +107,7 @@ def test_commit_conflict_retries_then_raises(spark, tbl, monkeypatch):
     blocker = {"sequence": 2, "snapshot_id": "x", "parent": None,
                "operation": "append",
                "schema": "id bigint,tag string,val bigint",
-               "added": [], "manifests": [], "delete_manifests": [],
+               "added": [], "manifests": [],
                "ts_ms": 0}
     with open(tbl._snap_path(2), "w") as f:
         json.dump(blocker, f)
@@ -110,15 +115,10 @@ def test_commit_conflict_retries_then_raises(spark, tbl, monkeypatch):
     with pytest.raises(CommitConflict):
         tbl.append(_df(spark, 10, 20))
 
-    # loser-retries-and-wins path: first resolution is stale (sees 1, loses
+    # loser-retries-and-wins path: the first attempt is stale (sees 1, loses
     # the race for 2), the retry re-resolves and lands on 3
-    calls = {"n": 0}
-
-    def stale_once():
-        calls["n"] += 1
-        return 1 if calls["n"] == 1 else real_current_seq()
-
-    monkeypatch.setattr(tbl, "current_seq", stale_once)
+    monkeypatch.undo()
+    _stale_commit_view(monkeypatch, tbl, 1)
     snap = tbl.append(_df(spark, 10, 20))
     assert snap["sequence"] == 3
     assert snap["parent"] == "x"  # lineage re-resolved on retry
@@ -156,8 +156,6 @@ def test_compaction_rewrites_without_changing_data(spark, tbl):
     assert sorted(r["id"] for r in tbl.read(spark).collect()) == list(range(400))
     # time travel still sees the pre-compaction layout
     assert len(tbl.snapshot(4)["files"]) == n_before
-    # incremental consumers never re-see compacted rows
-    assert tbl.read_incremental(spark, after_seq=4).count() == 0
 
 
 def test_streaming_sink_epoch_idempotence(spark, tbl):
@@ -168,7 +166,7 @@ def test_streaming_sink_epoch_idempotence(spark, tbl):
     sink(_df(spark, 0, 50), 0)   # late replay of an old epoch: no-op
     assert tbl.read(spark).count() == 90
     assert tbl.current_seq() == 2
-    ops = [(e["operation"]) for e in tbl.history()]
+    ops = [e["operation"] for e in tbl.snapshot_log()]
     assert ops == ["append", "append"]
     # a different query tag keeps its own epoch sequence
     tbl.streaming_sink("q2")(_df(spark, 900, 910), 0)
@@ -212,76 +210,6 @@ def test_partition_spec_is_pinned(spark, tbl):
     tbl.compact(spark, target_files=1)
     got = tbl.read(spark)
     assert got.count() == 80 and got.where("part = 'x'").count() == 20
-
-
-# --- row-level ops (copy-on-write) ------------------------------------------
-
-
-def test_delete_where_rewrites_only_candidate_files(spark, tbl):
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.append(_df(spark, 100, 200).coalesce(1))
-    tbl.append(_df(spark, 200, 300).coalesce(1))
-    snap = tbl.delete_where(spark, ("id", "<", 50))
-    assert snap["operation"] == "delete"
-    assert snap["carried_files"] == 2 and snap["rewrote_files"] == 1
-    assert sorted(r["id"] for r in tbl.read(spark).collect()) == list(
-        range(50, 300))
-    # time travel: pre-delete snapshot still has the rows
-    assert tbl.read(spark, seq=3).count() == 300
-
-
-def test_delete_where_null_predicate_rows_survive(spark, tbl):
-    df = spark.sql(
-        "SELECT * FROM VALUES (1, 'a'), (2, 'b'), (CAST(NULL AS BIGINT), 'c')"
-        " AS t(id, tag)")
-    tbl.append(df.coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 2))
-    tags = sorted(
-        r["tag"] for r in tbl.read(spark).collect())
-    # id=1 deleted; NULL id is NOT TRUE under the predicate -> kept
-    assert tags == ["b", "c"]
-
-
-def test_delete_entire_file_leaves_no_empty_entry(spark, tbl):
-    tbl.append(_df(spark, 0, 10).coalesce(1))
-    tbl.append(_df(spark, 100, 110).coalesce(1))
-    snap = tbl.delete_where(spark, ("id", "<", 50))
-    assert len(snap["files"]) == 1  # emptied file not re-listed
-    assert tbl.read(spark).count() == 10
-
-
-def test_merge_upsert_updates_inserts_and_carries(spark, tbl):
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.append(_df(spark, 100, 200).coalesce(1))
-    src = spark.sql(
-        "SELECT id, 'upd' AS tag, id * 10 AS val FROM range(150, 160)"
-        " UNION ALL "
-        "SELECT id, 'new' AS tag, id * 10 AS val FROM range(500, 505)")
-    snap = tbl.merge_upsert(spark, src, "id")
-    assert snap["operation"] == "merge"
-    assert snap["carried_files"] == 1 and snap["rewrote_files"] == 1
-    rows = {r["id"]: r for r in tbl.read(spark).collect()}
-    assert len(rows) == 205
-    assert rows[155]["tag"] == "upd" and rows[155]["val"] == 1550  # replaced
-    assert rows[42]["tag"] == "a" and rows[42]["val"] == 84  # untouched
-    assert rows[502]["tag"] == "new"  # inserted
-    # time travel: pre-merge value intact
-    old = {r["id"]: r for r in tbl.read(spark, seq=2).collect()}
-    assert old[155]["val"] == 310 and 502 not in old
-
-
-def test_merge_upsert_empty_source_is_noop(spark, tbl):
-    tbl.append(_df(spark, 0, 10))
-    before = tbl.current_seq()
-    tbl.merge_upsert(spark, _df(spark, 0, 0), "id")
-    assert tbl.current_seq() == before
-
-
-def test_merge_upsert_schema_drift_rejected(spark, tbl):
-    tbl.append(_df(spark, 0, 10))
-    bad = spark.range(0, 5).selectExpr("id", "'x' AS wrong_col")
-    with pytest.raises(ValueError, match="schema drift"):
-        tbl.merge_upsert(spark, bad, "id")
 
 
 # ---------------------------------------------------------------------------
@@ -387,7 +315,7 @@ def test_commit_metadata_is_o_added_not_o_table(spark, tbl):
     assert tbl.read(spark).count() == 12005
 
 
-def test_executor_harvest_matches_driver_harvest_stats(spark, tbl):
+def test_many_file_commit_stats_prune_like_single_file_commits(spark, tbl):
     """A 120-file commit's manifest stats prune exactly as single-file
     commits' do: the footer min/max of every file reaches its entry."""
     df = spark.range(0, 12000).selectExpr("id", "id * 2 AS val")
@@ -431,16 +359,9 @@ def test_append_race_rebases_on_winner_without_losing_files(spark, tbl,
     silently dropping the winner's rows)."""
     tbl.append(_df(spark, 0, 10))          # seq 1
     tbl.append(_df(spark, 10, 30, tag="winner"))  # seq 2: the racing winner
-    real = tbl.current_seq
-    calls = {"n": 0}
-
-    def stale_once():
-        calls["n"] += 1
-        return 1 if calls["n"] == 1 else real()
-
     # loser resolves seq 1 first (stale view), loses the CAS for seq 2,
     # retries, and must rebuild its manifest list on top of seq 2
-    monkeypatch.setattr(tbl, "current_seq", stale_once)
+    _stale_commit_view(monkeypatch, tbl, 1)
     snap = tbl.append(_df(spark, 30, 35, tag="loser"))
     assert snap["sequence"] == 3
     got = tbl.read(spark)
@@ -448,15 +369,16 @@ def test_append_race_rebases_on_winner_without_losing_files(spark, tbl,
     assert got.where("tag = 'winner'").count() == 20
 
 
-def test_row_level_op_race_raises_commit_conflict(spark, tbl, monkeypatch):
-    """delete/merge plan their rewrite against a specific parent; a lost
-    commit race must surface as CommitConflict, never a silent rebase that
-    could resurrect deleted rows."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.append(_df(spark, 100, 200).coalesce(1))  # seq 2 = racing winner
-    monkeypatch.setattr(tbl, "current_seq", lambda: 1)
-    with pytest.raises(CommitConflict, match="re-plan"):
-        tbl.delete_where(spark, ("id", "<", 50))
+def test_lost_append_race_leaves_no_orphan_manifest(spark, tbl, monkeypatch):
+    """append writes its manifest once, before the commit: the rebased
+    retry reuses it, so the attempt that lost the race leaves no manifest
+    that no snapshot references."""
+    tbl.append(_df(spark, 0, 10))                  # seq 1
+    tbl.append(_df(spark, 10, 30, tag="winner"))   # seq 2
+    _stale_commit_view(monkeypatch, tbl, 1)
+    snap = tbl.append(_df(spark, 30, 35, tag="loser"))
+    assert snap["sequence"] == 3
+    assert tbl.remove_orphans(dry_run=True)["orphan_manifests"] == []
 
 
 def test_nested_type_schema_evolution(spark, tbl):
@@ -482,58 +404,15 @@ def test_nested_type_schema_evolution(spark, tbl):
 
 def test_quote_bearing_string_predicates(spark, tbl):
     """Predicates are Column expressions, not SQL splicing: literals with
-    quotes must scan and delete correctly."""
+    quotes must scan correctly."""
     df = spark.sql(
         "SELECT * FROM VALUES (1, \"o'brien\"), (2, 'plain'), "
         "(3, 'al\"so') AS t(id, tag)")
     tbl.append(df.coalesce(1))
     got = tbl.scan(spark, ("tag", "=", "o'brien")).collect()
     assert len(got) == 1 and got[0]["id"] == 1
-    tbl.delete_where(spark, ("tag", "=", 'al"so'))
-    assert sorted(r["tag"] for r in tbl.read(spark).collect()) == [
-        "o'brien", "plain"]
-
-
-def test_compound_key_merge_prunes_on_every_key_column(spark, tbl):
-    """Two-key merge: file B overlaps the source on key[0] but is disjoint
-    on key[1] — the compound intersection must carry it (the key[0]-only
-    plan would rewrite it)."""
-    file_a = spark.sql(
-        "SELECT id AS k1, id AS k2, 'a' AS tag FROM range(0, 100)")
-    file_b = spark.sql(
-        "SELECT id AS k1, id + 1000 AS k2, 'b' AS tag FROM range(0, 100)")
-    tbl.append(file_a.coalesce(1))
-    tbl.append(file_b.coalesce(1))
-    src = spark.sql(
-        "SELECT id AS k1, id AS k2, 'upd' AS tag FROM range(10, 20)")
-    snap = tbl.merge_upsert(spark, src, ["k1", "k2"])
-    # k1 spans overlap for BOTH files; k2 [1000,1099] is disjoint from
-    # source k2 [10,19] -> file B carried by the second key column alone
-    assert snap["carried_files"] == 1 and snap["rewrote_files"] == 1
-    rows = {(r["k1"], r["k2"]): r["tag"] for r in tbl.read(spark).collect()}
-    assert rows[(15, 15)] == "upd" and rows[(15, 1015)] == "b"
-    assert len(rows) == 200
-
-
-def test_merge_with_temporal_key_column(spark, tbl):
-    """Date/timestamp merge keys: footer stats store ISO strings; the
-    source's min/max arrive as datetime objects and must compare in the
-    same space instead of raising TypeError."""
-    df = spark.sql(
-        "SELECT DATE'2024-01-01' + CAST(id AS INT) AS d, id AS v "
-        "FROM range(0, 10)")
-    tbl.append(df.coalesce(1))
-    far = spark.sql(
-        "SELECT DATE'2030-01-01' + CAST(id AS INT) AS d, id + 100 AS v "
-        "FROM range(0, 5)")
-    snap = tbl.merge_upsert(spark, far, "d")  # disjoint: pure insert
-    assert snap["carried_files"] == 1 and snap["rewrote_files"] == 0
-    assert tbl.read(spark).count() == 15
-    upd = spark.sql(
-        "SELECT DATE'2024-01-03' AS d, CAST(999 AS BIGINT) AS v")
-    tbl.merge_upsert(spark, upd, "d")
-    rows = {str(r["d"]): r["v"] for r in tbl.read(spark).collect()}
-    assert rows["2024-01-03"] == 999 and len(rows) == 15
+    got = tbl.scan(spark, ("tag", "=", 'al"so')).collect()
+    assert len(got) == 1 and got[0]["id"] == 3
 
 
 def test_manifest_level_pruning_never_loads_pruned_manifests(spark, tbl,
@@ -590,63 +469,6 @@ def test_in_predicate_bloom_pruning(spark, tbl):
     assert tbl.scan(spark, ("tag", "in", ["alpha", "nosuch"])).count() == 20
 
 
-def test_zorder_prunes_both_dimensions(spark, tmp_path):
-    """zorder_by gives BOTH columns file-level locality: a box predicate
-    and each single-column predicate prune files, where plain sort_by only
-    serves its prefix column (a value-only scan over a user_id-sorted
-    table prunes nothing)."""
-    from pyspark.sql import functions as F
-
-    ev = (
-        spark.range(4000)
-        .select(
-            F.col("id").alias("event_id"),
-            (F.col("id") % 149).alias("user_id"),
-            (F.pmod(F.col("id") * 37, F.lit(500)) / 1.0).alias("value"),
-        )
-        .repartition(8)
-    )
-    zt = IceTable(str(tmp_path / "z"))
-    zt.append(ev, zorder_by=["user_id", "value"], sort_files=16)
-    st = IceTable(str(tmp_path / "s"))
-    st.append(ev, sort_by=["user_id"], sort_files=16)
-
-    box = [("user_id", ">=", 100), ("user_id", "<", 120),
-           ("value", ">=", 10.0), ("value", "<", 100.0)]
-    y_only = [("value", ">=", 10.0), ("value", "<", 100.0)]
-    assert zt.plan_files(box)[1] >= 6
-    assert zt.plan_files(y_only)[1] >= 1
-    assert st.plan_files(y_only)[1] == 0  # sort prefix can't serve dim 2
-
-    # pruning must stay exact: scan == full filter
-    got = sorted(r.event_id for r in zt.scan(spark, box).collect())
-    want = sorted(
-        r.event_id
-        for r in ev.filter(
-            (F.col("user_id") >= 100) & (F.col("user_id") < 120)
-            & (F.col("value") >= 10.0) & (F.col("value") < 100.0)
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_zorder_row_identity_and_exclusivity(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    ev = spark.range(500).select(
-        F.col("id").alias("a"), (F.col("id") * 7 % 97).alias("b"))
-    t = IceTable(str(tmp_path / "t"))
-    t.append(ev, zorder_by=["a", "b"], sort_files=4)
-    assert sorted(t.read(spark).collect()) == sorted(ev.collect())
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="exclusive"):
-        IceTable(str(tmp_path / "t2")).append(
-            ev, zorder_by=["a"], sort_by=["b"])
-    with _pytest.raises(ValueError, match="1-4"):
-        IceTable(str(tmp_path / "t3")).append(
-            ev, zorder_by=["a", "b", "a", "b", "a"])
-
-
 def test_partition_spec_evolution(spark, tmp_path):
     """Iceberg partition evolution: commit 1 unpartitioned, commit 2 under
     partition_by (opt-in flag) — old files keep their flat layout, new
@@ -680,12 +502,8 @@ def test_partition_spec_evolution(spark, tmp_path):
     rows = t.scan(spark, ("lang", "=", "de")).collect()
     assert len(rows) == 50 and all(r.lang == "de" for r in rows)
 
-    # incremental read across the evolution boundary
-    inc = t.read_incremental(spark, after_seq=1)
-    assert inc.count() == 100 and inc.filter("lang = 'en'").count() == 0
 
-
-def test_tags_pin_snapshots_through_expiry(spark, tbl):
+def test_tags_pin_snapshots_by_name(spark, tbl):
     """Iceberg named refs: tag('v1') reads by name while the table moves on,
     and re-tagging an existing name raises."""
     tbl.append(_df(spark, 0, 100))
@@ -723,171 +541,6 @@ def test_isnull_pruning_from_footer_null_counts(spark, tbl):
     assert tbl.scan(spark, ("note", "notnull", None)).count() == 190
 
 
-def test_zorder_rejects_strings_accepts_timestamps(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    df = spark.range(200).select(
-        F.col("id").alias("a"),
-        F.col("id").cast("string").alias("s"),
-        (F.lit("2024-01-01").cast("timestamp")
-         + F.make_interval(hours=F.col("id"))).alias("ts"))
-    with pytest.raises(ValueError, match="min-max bucket space"):
-        IceTable(str(tmp_path / "bad")).append(df, zorder_by=["a", "s"])
-    t = IceTable(str(tmp_path / "ok"))
-    t.append(df, zorder_by=["a", "ts"], sort_files=4)
-    assert sorted(r.a for r in t.read(spark).collect()) == list(range(200))
-
-
-# -- merge-on-read row-level ops (Iceberg v2 delete files) -----------------
-
-
-def _data_bytes(tbl):
-    total = 0
-    for root, _dirs, files in os.walk(tbl.data_dir):
-        total += sum(os.path.getsize(os.path.join(root, fn))
-                     for fn in files if fn.endswith(".parquet"))
-    return total
-
-
-def _sorted_rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_mor_delete_writes_o1_bytes_and_matches_cow(spark, tmp_path):
-    """The MoR contract: a 1-row delete into a 500-row file writes O(1)
-    data bytes (a tiny positional delete file, NO data rewrite), and the
-    pre-compaction MoR read equals the CoW result row-for-row."""
-    cow = IceTable(str(tmp_path / "cow"))
-    mor = IceTable(str(tmp_path / "mor"))
-    for t in (cow, mor):
-        t.append(_df(spark, 0, 500).coalesce(1))
-    base_bytes = _data_bytes(mor)
-    scow = cow.delete_where(spark, ("id", "=", 137), mode="cow")
-    smor = mor.delete_where(spark, ("id", "=", 137), mode="mor")
-    assert scow["rewrote_files"] == 1
-    assert smor["rewrote_files"] == 0 and smor["delete_rows"] == 1
-    assert smor["delete_targets"] == 1
-    written = _data_bytes(mor) - base_bytes
-    # CoW rewrote the whole 500-row file; MoR wrote one (file,pos) row —
-    # orders of magnitude apart even at toy scale
-    assert written < base_bytes // 3, (written, base_bytes)
-    assert _sorted_rows(mor.read(spark)) == _sorted_rows(cow.read(spark))
-    assert mor.read(spark).count() == 499
-
-
-def test_mor_delete_stacks_and_time_travels(spark, tbl):
-    """Stacked positional deletes bind independently; time travel to any
-    pre-delete snapshot resurrects exactly that snapshot's rows."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))        # seq 1
-    tbl.append(_df(spark, 100, 200).coalesce(1))      # seq 2
-    tbl.delete_where(spark, ("id", "<", 10), mode="mor")    # seq 3
-    tbl.delete_where(spark, ("id", ">=", 190), mode="mor")  # seq 4
-    assert tbl.read(spark).count() == 180
-    assert tbl.read(spark, seq=3).count() == 190  # second delete not yet
-    assert tbl.read(spark, seq=2).count() == 200
-    ids = {r.id for r in tbl.read(spark).select("id").collect()}
-    assert ids == set(range(10, 190))
-
-
-def test_mor_delete_null_predicate_rows_survive(spark, tbl):
-    """SQL DELETE semantics in MoR mode: rows where the predicate is NULL
-    are retained (only TRUE rows get delete positions)."""
-    df = spark.sql(
-        "SELECT * FROM VALUES (1, 10), (2, NULL), (3, 30) AS t(id, v)")
-    tbl.append(df.coalesce(1))
-    tbl.delete_where(spark, ("v", ">", 5), mode="mor")
-    got = {r.id for r in tbl.read(spark).collect()}
-    assert got == {2}
-
-
-def test_mor_merge_matches_cow_and_guards_new_rows(spark, tmp_path):
-    """Equality-delete MERGE equals the CoW MERGE row-for-row with ZERO
-    rewritten files, and the data_seq guard keeps rows written AT or
-    AFTER the delete's sequence unmasked: the merge's own inserted rows
-    share keys with the delete file and must survive."""
-    cow = IceTable(str(tmp_path / "cow"))
-    mor = IceTable(str(tmp_path / "mor"))
-    for t in (cow, mor):
-        t.append(_df(spark, 0, 100).coalesce(1))
-        t.append(_df(spark, 100, 200).coalesce(1))
-    src = _df(spark, 50, 150, tag="upd")  # overlaps both files
-    scow = cow.merge_upsert(spark, src, "id", mode="cow")
-    smor = mor.merge_upsert(spark, src, "id", mode="mor")
-    assert scow["rewrote_files"] == 2
-    assert smor["rewrote_files"] == 0 and smor["carried_files"] == 2
-    assert smor["row_op_mode"] == "merge-on-read"
-    assert _sorted_rows(mor.read(spark)) == _sorted_rows(cow.read(spark))
-    assert mor.read(spark).where("tag = 'upd'").count() == 100
-    # a LATER append with the same keys must not be masked by the older
-    # equality delete (its data_seq exceeds the delete_seq)
-    mor.append(_df(spark, 50, 60, tag="after"))
-    assert mor.read(spark).where("tag = 'after'").count() == 10
-
-
-def test_mor_merge_key_range_disjoint_files_scan_clean(spark, tbl):
-    """Files whose key range is disjoint from the equality-delete span are
-    bound to NO delete at plan time: the binding criterion (older than the
-    delete AND key ranges overlap) must hold for the high-range file only,
-    and the read stays exact."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.append(_df(spark, 1000, 1100).coalesce(1))
-    tbl.merge_upsert(spark, _df(spark, 1000, 1010, tag="u"), "id",
-                     mode="mor")
-    raw = tbl._raw_snapshot()
-    files = tbl._snap_files(raw)
-    dels = [d for d in tbl._delete_entries(raw) if d["kind"] == "eq"]
-    assert len({(d["delete_seq"], tuple(d["eq_cols"])) for d in dels}) == 1
-
-    def bound(f):  # the reader's plan-time binding criterion, any entry
-        def one(d):
-            if (f.get("data_seq") or 0) >= d["delete_seq"]:
-                return False
-            fs, ds = f["stats"]["id"], d["stats"]["id"]
-            return not (fs["max"] < ds["min"] or fs["min"] > ds["max"])
-        return any(one(d) for d in dels)
-
-    bound_files = [f for f in files if bound(f)]
-    assert len(bound_files) == 1  # only the old high-range file
-    assert bound_files[0]["stats"]["id"]["min"] >= 1000
-    got = tbl.read(spark)
-    assert got.count() == 200
-    assert got.where("tag = 'u'").count() == 10
-
-
-def test_mor_compact_folds_deletes_physically(spark, tbl):
-    """compact() must apply pending delete files while rewriting and drop
-    every delete manifest — the post-compaction table is byte-equal with
-    zero delete state left."""
-    tbl.append(_df(spark, 0, 300).coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 50), mode="mor")
-    tbl.merge_upsert(spark, _df(spark, 100, 120, tag="m"), "id", mode="mor")
-    before = _sorted_rows(tbl.read(spark))
-    snap = tbl.compact(spark, target_files=1)
-    assert snap["delete_manifests"] == []
-    assert _sorted_rows(tbl.read(spark)) == before
-
-
-def test_mor_then_cow_materializes_pending_deletes(spark, tbl):
-    """A CoW rewrite over files with pending MoR deletes must apply them
-    while rewriting (no resurrection), and the rewritten files must not be
-    re-masked by the carried delete manifests."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.delete_where(spark, ("id", "=", 7), mode="mor")
-    tbl.delete_where(spark, ("id", ">=", 90), mode="cow")
-    ids = {r.id for r in tbl.read(spark).select("id").collect()}
-    assert ids == set(range(0, 90)) - {7}
-
-
-def test_mor_incremental_read_applies_window_deletes(spark, tbl):
-    """Incremental consumption across a window containing a MoR delete
-    must not re-surface masked rows."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))           # seq 1
-    tbl.append(_df(spark, 100, 200).coalesce(1))         # seq 2
-    tbl.delete_where(spark, ("id", "<", 110), mode="mor")  # seq 3
-    inc = tbl.read_incremental(spark, after_seq=1)
-    assert {r.id for r in inc.select("id").collect()} == set(range(110, 200))
-
-
 # -- concurrent-writer conflict matrix -------------------------------------
 
 
@@ -895,52 +548,10 @@ def test_race_append_vs_append_both_land(spark, tbl, monkeypatch):
     """Two appends race: the loser rebases onto the winner and BOTH land."""
     tbl.append(_df(spark, 0, 10))                       # seq 1
     tbl.append(_df(spark, 10, 30, tag="winner"))        # seq 2
-    real = tbl.current_seq
-    calls = {"n": 0}
-    monkeypatch.setattr(
-        tbl, "current_seq",
-        lambda: 1 if (calls.__setitem__("n", calls["n"] + 1)
-                      or calls["n"] == 1) else real())
+    _stale_commit_view(monkeypatch, tbl, 1)
     snap = tbl.append(_df(spark, 30, 40, tag="loser"))
     assert snap["sequence"] == 3
     assert tbl.read(spark).count() == 40
-
-
-def test_race_append_vs_mor_delete_both_land_correctly(spark, tbl,
-                                                       monkeypatch):
-    """Append racing a merge-on-read equality delete: the delete lands
-    first, the append rebases past it — both land, and the re-stamped
-    data_seq keeps the appended rows (which share keys with the delete)
-    UNMASKED. A stale data_seq would wrongly subject them to the delete."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))                    # seq 1
-    tbl.merge_upsert(spark, _df(spark, 0, 50, tag="m"), "id",
-                     mode="mor")                                   # seq 2
-    real = tbl.current_seq
-    calls = {"n": 0}
-
-    def stale_once():
-        calls["n"] += 1
-        return 1 if calls["n"] == 1 else real()
-
-    monkeypatch.setattr(tbl, "current_seq", stale_once)
-    snap = tbl.append(_df(spark, 0, 20, tag="late"))               # seq 3
-    assert snap["sequence"] == 3
-    got = tbl.read(spark)
-    assert got.where("tag = 'late'").count() == 20  # NOT masked
-    assert got.where("tag = 'm'").count() == 50
-    assert got.count() == 100 + 20  # 50 originals masked, 50 merged, 20 late
-
-
-def test_race_two_deletes_second_aborts(spark, tbl, monkeypatch):
-    """Two row-level deletes planned against the same parent: the second
-    must abort with CommitConflict even though its predicate touches the
-    same file — never a silent rebase (CoW and MoR alike)."""
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 10))  # seq 2 lands
-    monkeypatch.setattr(tbl, "current_seq", lambda: 1)
-    for mode in ("cow", "mor"):
-        with pytest.raises(CommitConflict, match="re-plan"):
-            tbl.delete_where(spark, ("id", "<", 20), mode=mode)
 
 
 def test_race_compact_aborts_on_moved_parent(spark, tbl, monkeypatch):
@@ -952,133 +563,6 @@ def test_race_compact_aborts_on_moved_parent(spark, tbl, monkeypatch):
     monkeypatch.setattr(tbl, "current_seq", lambda: 1)
     with pytest.raises(CommitConflict, match="re-plan"):
         tbl.compact(spark)
-
-
-# ---------------------------------------------------------------------------
-# metadata-only aggregation (Iceberg metadata-table scan)
-# ---------------------------------------------------------------------------
-
-
-def test_metadata_agg_matches_full_scan(spark, tbl):
-    tbl.append(_df(spark, 0, 60), partition_by="tag")
-    tbl.append(_df(spark, 60, 100, tag="b"), partition_by="tag")
-    tbl.delete_where(spark, ("id", "<", 10), mode="cow")
-    meta = {
-        r["partition"]: r
-        for r in tbl.metadata_agg(spark, cols=["id"]).collect()
-    }
-    full = {
-        r["tag"]: r
-        for r in tbl.read(spark)
-        .groupBy("tag")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("id").alias("id_min"),
-            F.max("id").alias("id_max"),
-        )
-        .collect()
-    }
-    assert set(meta) == set(full) == {"a", "b"}
-    for k in full:
-        assert meta[k]["n_rows"] == full[k]["n_rows"]
-        assert meta[k]["id_min"] == full[k]["id_min"]
-        assert meta[k]["id_max"] == full[k]["id_max"]
-        assert meta[k]["id_nulls"] == 0
-        assert meta[k]["n_files"] >= 1
-    # n_files is exactly the live planning view — zero data reads needed
-    assert sum(r["n_files"] for r in meta.values()) == len(tbl.plan_files()[0])
-
-
-def test_metadata_agg_refuses_pending_mor_deletes(spark, tbl):
-    tbl.append(_df(spark, 0, 100))
-    tbl.delete_where(spark, ("id", "=", 5), mode="mor")
-    with pytest.raises(ValueError, match="merge-on-read"):
-        tbl.metadata_agg(spark)
-    tbl.compact(spark)
-    rows = tbl.metadata_agg(spark).collect()
-    assert rows[0]["n_rows"] == 99  # compaction folded the delete in
-
-
-def test_metadata_agg_refuses_statless_column(spark, tbl):
-    tbl.append(_df(spark, 0, 10).selectExpr("id", "cast(null as string) AS s"))
-    with pytest.raises(ValueError, match="no footer stats"):
-        tbl.metadata_agg(spark, cols=["s"])
-
-
-# ---------------------------------------------------------------------------
-# snapshot changelog (CDC)
-# ---------------------------------------------------------------------------
-
-
-def _changed(spark, tbl, from_seq, to_seq=None):
-    rows = tbl.changes(spark, from_seq, to_seq).collect()
-    return (
-        sorted(r["id"] for r in rows if r["_change_type"] == "insert"),
-        sorted(r["id"] for r in rows if r["_change_type"] == "delete"),
-    )
-
-
-def test_changes_append_only_window(spark, tbl):
-    tbl.append(_df(spark, 0, 10))
-    tbl.append(_df(spark, 10, 15))
-    ins, dels = _changed(spark, tbl, 1)
-    assert ins == list(range(10, 15)) and dels == []
-
-
-def test_changes_cow_rewrite_nets_to_deleted_rows_only(spark, tbl):
-    tbl.append(_df(spark, 0, 100))
-    tbl.delete_where(spark, ("id", "<", 5), mode="cow")
-    ins, dels = _changed(spark, tbl, 1)
-    # the rewrite moved 95 surviving rows to new files; they must net out
-    assert ins == [] and dels == [0, 1, 2, 3, 4]
-
-
-def test_changes_mor_binding_change_exposes_carried_file(spark, tbl):
-    tbl.append(_df(spark, 0, 100))
-    tbl.delete_where(spark, ("id", "=", 7), mode="mor")
-    ins, dels = _changed(spark, tbl, 1)
-    assert ins == [] and dels == [7]
-
-
-def test_changes_overwrite_and_reverse_window(spark, tbl):
-    tbl.append(_df(spark, 0, 10))
-    tbl.overwrite(_df(spark, 5, 12, tag="ow"))
-    ins, dels = _changed(spark, tbl, 1)
-    assert ins == list(range(5, 12)) and dels == list(range(0, 10))
-    # empty window
-    ins, dels = _changed(spark, tbl, 2, 2)
-    assert ins == [] and dels == []
-
-
-def test_changes_skips_untouched_files(spark, tbl, monkeypatch):
-    tbl.append(_df(spark, 0, 50))        # untouched throughout
-    tbl.append(_df(spark, 50, 60))
-    tbl.append(_df(spark, 60, 70))
-    from deepdoctection_spark.sources.icetable import IceTable as IT
-
-    seen: list[str] = []
-    orig = IT._read_files
-
-    def spy(self, spark_, schema, files, lineage=False):
-        seen.extend(f["path"] for f in files)
-        return orig(self, spark_, schema, files, lineage=lineage)
-
-    monkeypatch.setattr(IT, "_read_files", spy)
-    ins, dels = _changed(spark, tbl, 2)
-    assert ins == list(range(60, 70)) and dels == []
-    first_commit = {f["path"] for f in tbl._load_manifest(
-        tbl._raw_snapshot(1)["manifests"][0]["path"])}
-    assert not (set(seen) & first_commit)  # snapshot-1 files never read
-
-
-def test_changes_refuses_schema_evolution(spark, tbl):
-    tbl.append(_df(spark, 0, 10))
-    tbl.append(
-        _df(spark, 10, 20).withColumn("extra", F.lit(1)),
-        allow_schema_change=True,
-    )
-    with pytest.raises(ValueError, match="schema evolved"):
-        tbl.changes(spark, 1)
 
 
 # -- remove_orphan_files maintenance ----------------------------------------
@@ -1117,126 +601,6 @@ def test_remove_orphans_only_touches_unreferenced(spark, tbl, tmp_path):
     assert _walk(tbl.meta_dir) == before_meta
     assert tbl.read(spark).count() == 80
     assert tbl.read(spark, seq=1).count() == 50  # time travel intact
-
-
-def test_remove_orphans_spares_mor_deletes_and_branches(spark, tbl):
-    tbl.append(_df(spark, 0, 60))
-    tbl.delete_where(spark, ("id", "<", 10), mode="mor")
-    # MoR delete files and their manifests are referenced, not orphans
-    assert tbl.remove_orphans(dry_run=True)["n_orphans"] == 0
-    assert tbl.read(spark).count() == 50
-
-
-# ---------------------------------------------------------------------------
-# compaction_plan (metadata-only binpack scheduling)
-# ---------------------------------------------------------------------------
-
-
-def test_compaction_plan_bins_small_files_excludes_right_sized(spark, tbl):
-    # file sizes: 120, 90, 60, 40, 30 rows (one file per append)
-    for lo, hi in [(0, 120), (200, 290), (400, 460), (600, 640), (800, 830)]:
-        tbl.append(_df(spark, lo, hi).coalesce(1))
-    plan = {r.file_rows: r for r in
-            tbl.compaction_plan(spark, target_rows=100, stat_col="id")
-            .collect()}
-    assert set(plan) == {120, 90, 60, 40, 30}
-    assert plan[120].bin_id == -1            # already right-sized
-    # candidates sorted desc: 90 (cum 0 -> bin 0), 60 (cum 90 -> bin 0),
-    # 40 (cum 150 -> bin 1), 30 (cum 190 -> bin 1)
-    assert plan[90].bin_id == 0 and plan[60].bin_id == 0
-    assert plan[40].bin_id == 1 and plan[30].bin_id == 1
-    # rank is the (rows DESC, stat_min) total order over ALL files
-    assert [plan[n].file_rank for n in (120, 90, 60, 40, 30)] == [1, 2, 3, 4, 5]
-    assert plan[90].stat_min == 200
-
-
-def test_compaction_plan_tie_break_is_stat_min(spark, tbl):
-    tbl.append(_df(spark, 500, 550).coalesce(1))   # 50 rows, min 500
-    tbl.append(_df(spark, 100, 150).coalesce(1))   # 50 rows, min 100
-    ranks = {r.stat_min: r.file_rank for r in
-             tbl.compaction_plan(spark, 1000, "id").collect()}
-    assert ranks == {100: 1, 500: 2}
-
-
-def test_compaction_plan_refuses_mor_deletes(spark, tbl):
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 10), mode="mor")
-    with pytest.raises(ValueError, match="merge-on-read"):
-        tbl.compaction_plan(spark, 100, "id")
-    tbl.compact(spark)
-    assert tbl.compaction_plan(spark, 1000, "id").count() == 1
-
-
-# ---------------------------------------------------------------------------
-# rewrite_files (binpack bin execution)
-# ---------------------------------------------------------------------------
-
-
-def test_rewrite_files_executes_one_bin(spark, tbl):
-    for lo, hi in [(0, 90), (200, 260), (400, 440), (600, 630), (800, 920)]:
-        tbl.append(_df(spark, lo, hi).coalesce(1))
-    before = tbl.read(spark).sort("id").collect()
-    plan = tbl.compaction_plan(spark, target_rows=100, stat_col="id",
-                               with_paths=True).collect()
-    bin0 = [r.path for r in plan if r.bin_id == 0]
-    assert len(bin0) >= 2
-    snap = tbl.rewrite_files(spark, bin0)
-    assert snap["rewrote_files"] == len(bin0)
-    # data identical, file count shrank by (len(bin0) - 1)
-    assert tbl.read(spark).sort("id").collect() == before
-    n_files = len(tbl.snapshot()["files"])
-    assert n_files == 5 - len(bin0) + 1
-    # time travel to the pre-rewrite snapshot still sees the old layout
-    assert tbl.read(spark, seq=5).sort("id").collect() == before
-
-
-def test_rewrite_files_folds_mor_deletes_only_for_rewritten(spark, tbl):
-    tbl.append(_df(spark, 0, 100).coalesce(1))
-    tbl.append(_df(spark, 100, 200).coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 5), mode="mor")      # hits file 1
-    tbl.delete_where(spark, ("id", ">=", 195), mode="mor")   # hits file 2
-    expected = list(range(5, 195))
-    f1 = next(f["path"] for f in tbl.snapshot()["files"]
-              if f["stats"]["id"]["min"] == 0)
-    tbl.rewrite_files(spark, [f1])
-    got = sorted(r.id for r in tbl.read(spark).collect())
-    assert got == expected  # folded delete stays folded; carried delete
-    #                         on the untouched file still masks its rows
-    tbl.compact(spark)
-    assert sorted(r.id for r in tbl.read(spark).collect()) == expected
-
-
-def test_rewrite_files_unknown_path_raises(spark, tbl):
-    tbl.append(_df(spark, 0, 10).coalesce(1))
-    with pytest.raises(ValueError, match="re-plan"):
-        tbl.rewrite_files(spark, ["nope.parquet"])
-
-
-def test_rewrite_files_stale_plan_writes_no_manifest(spark, tbl):
-    """A plan naming one live file (whose manifest has survivors) and one
-    gone file must fail before any survivor manifest is written."""
-    tbl.append(_df(spark, 0, 90).repartition(3))
-    live = tbl.snapshot()["files"][0]["path"]
-
-    def manifests():
-        return {f for f in os.listdir(tbl.meta_dir) if f.startswith("manifest-")}
-
-    before = manifests()
-    with pytest.raises(ValueError, match="re-plan"):
-        tbl.rewrite_files(spark, [live, "nope.parquet"])
-    assert manifests() == before
-
-
-def test_history_tracks_every_commit_kind(spark, tbl):
-    tbl.append(_df(spark, 0, 50).coalesce(1))
-    tbl.delete_where(spark, ("id", "<", 10), mode="mor")
-    tbl.compact(spark)
-    h = tbl.history()
-    ops = [x["operation"] for x in h]
-    assert ops[:3] == ["append", "delete", "replace"]
-    assert h[0]["total_rows"] == 50
-    # compaction folds the MoR delete physically: 40 footer rows
-    assert h[2]["total_rows"] == 40 and h[2]["total_files"] == 1
 
 
 def test_harvest_records_null_counts_of_all_null_columns(spark, tbl):
