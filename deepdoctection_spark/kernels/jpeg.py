@@ -1,6 +1,7 @@
 """Pure-stdlib baseline JPEG codec (grayscale + YCbCr 4:2:0 color), no Pillow.
 
-Fourth real codec family (after PNG/GIF/PDF): lossy transform coding — the
+The frame codec of the MJPEG-in-AVI video path (kernels/avi.py,
+`media_video_frames`). Lossy transform coding — the
 decoder implements the REAL baseline pipeline (marker parse, DQT/DHT/SOF0/
 SOS, Huffman entropy decode with byte-unstuffing and RST handling, per-
 component DC prediction, interleaved-MCU raster, dezigzag, dequantize,
@@ -8,7 +9,7 @@ orthonormal 2-D IDCT, level shift+clamp, chroma upsample, YCbCr→RGB)
 and the encoder the inverse. Tables are the public Annex K defaults
 (K.1/K.2 quant, K.3-K.6 Huffman).
 
-Oracle design (media_jpeg_stats): JPEG is lossy, so a general image can't be
+Oracle design (media_video_frames): JPEG is lossy, so a general image can't be
 SQL-recomputed — but a PIECEWISE-FLAT image (each 8×8 block one constant c)
 has a DC-only spectrum: DC = 8·(c−128), every AC exactly 0. The full lossy
 chain then collapses to closed-form integer arithmetic
@@ -19,7 +20,7 @@ which DuckDB reproduces exactly — while Spark actually Huffman-decodes real
 scan bytes and runs the real IDCT. Encoding floats leave ACs at ~1e-13,
 quantizing to 0, so the equality is exact, not approximate.
 
-The color oracle (media_jpeg_color_stats) extends the trick per channel:
+The color path extends the trick per channel (tests/test_jpeg.py):
 images flat per 16×16 MCU in YCbCr with Y even (exact under luma Q₀₀=16:
 8·ΔY divisible by 16) and Cb/Cr ≡ 128 (mod 17) (exact under chroma Q₀₀=17:
 gcd(8,17)=1 forces the residue condition), so Y/Cb/Cr survive the lossy
@@ -30,8 +31,7 @@ round_even() — exact agreement, channel by channel.
 
 Scope (quarantine-on-miss): baseline sequential (SOF0), 8-bit, 1 component
 (grayscale) or 3 components YCbCr with 4:4:4 or 4:2:0 sampling.
-Progressive / 4:2:2 / 12-bit / CMYK raise ValueError → row quarantine
-(exotic shapes stay behind the Pillow seam).
+Progressive / 4:2:2 / 12-bit / CMYK raise ValueError → row quarantine.
 """
 
 from __future__ import annotations
@@ -562,7 +562,7 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
             if ncomp not in (1, 3):
                 raise ValueError(
                     "only 1-component (grayscale) or 3-component (YCbCr) "
-                    "JPEG in stdlib scope; exotic layouts need Pillow")
+                    "JPEG in stdlib scope")
             for ci in range(ncomp):
                 cid = seg[6 + 3 * ci]
                 samp = seg[7 + 3 * ci]
@@ -576,8 +576,7 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
                     c[1:3] != (1, 1) for c in comps[1:]
                 ):
                     raise ValueError(
-                        "only 4:4:4 or 4:2:0 sampling in stdlib scope "
-                        "(4:2:2/4:1:1 need Pillow)")
+                        "only 4:4:4 or 4:2:0 sampling in stdlib scope")
         elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(f"non-baseline SOF 0x{marker:02x} unsupported")

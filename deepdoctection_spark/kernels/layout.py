@@ -9,11 +9,10 @@ The transcript analogue of the reference's reading-order engine
 - classify the unique topmost line as the title block (reference: layout
   category assignment via ImageLayoutService, pipe/layout.py:37-121).
 
-Payload wire format (synthetic "pdf_reader" turns): one line per positioned
-text run, ``@x,y:content``. This stands in for a PDF text-run stream — the
-geometry kernels are the real thing; only the byte decode is synthetic (the
-container has no pdfium/poppler; see sources/multimodal.py for the stub
-boundary).
+Payload wire format ("pdf_reader" turns): one line per positioned text run,
+``@x,y:content``, in y-down reader coordinates. Synthetic transcripts carry
+it directly; kernels/pdf.pdf_positioned_pages produces it from real PDF
+bytes (the ``pdf_layout_spans`` query runs that path end to end).
 """
 
 from __future__ import annotations

@@ -1,10 +1,10 @@
 """Pure-stdlib PDF codec: writer + text extractor (zlib + re, no pypdf).
 
 The reference's PDF surface is ``PdfMiner.predict(bytes) -> positioned words``
-(/root/reference/deepdoctection/extern/pdftext.py and
-utils/pdf_utils.py:121-227, which shells out to pdfplumber/poppler). This
-module puts a REAL PDF codec on the in-sandbox oracle-checked path, the same
-move as the stdlib PNG codec (operators/codecs.py:76-213):
+(reference extern/pdftext.py and utils/pdf_utils.py:121-227, which shells
+out to pdfplumber/poppler). This module is the package's one PDF codec: a
+real PDF writer and parser with no dependency beyond the stdlib, on the
+oracle-checked path:
 
 - :func:`pdf_encode` writes genuine PDF 1.4 bytes — object table, page tree,
   FlateDecode content streams, classic xref + trailer — from positioned text
@@ -19,7 +19,7 @@ move as the stdlib PNG codec (operators/codecs.py:76-213):
 - :func:`pdf_page_text` flattens runs to reading-order plain text (y-down
   line sort, x within line) — the SerializerPdfDoc page-per-row contract.
 
-Scope (declared, quarantine-on-miss like png_decode): classic xref AND
+Scope (declared, quarantine-on-miss): classic xref AND
 PDF 1.5 xref-stream documents (round 4: /Type /ObjStm compressed object
 streams are inflated and their members parsed; the writer can emit the
 same layout via ``pdf_encode(..., object_streams=True)`` — /XRef stream
@@ -1316,8 +1316,8 @@ def pdf_page_text(runs: list[tuple[float, float, float, str]],
 
 
 def pdf_texts(raw: bytes) -> list[str]:
-    """PDF bytes → per-page plain text (stdlib; the in-sandbox realization of
-    codecs.pdf_page_texts' pypdf slot)."""
+    """PDF bytes → per-page plain text, one string per page (the rows of
+    operators/multimodal.pdf_texts_stage)."""
     return [pdf_page_text(runs) for runs in pdf_decode(raw)]
 
 

@@ -1,27 +1,23 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Media payloads as opaque binary columns: FIMG images, MJPEG video, PDFs.
 
-The reference's multimodal surface is pixel ndarrays carried inside the
-Image record (b64/pdf-bytes/np setter, /root/reference/deepdoctection/
-datapoint/image.py:130-162; decode kernels datapoint/convert.py:78-166) and
-decoded at a bounded dpi (convert.py:146-166). Spark-first: media is an
-opaque `binary` column with a typed metadata struct; decode/feature-extract/
-resize/frame-sample run as Arrow-batched pandas UDFs (`mapInPandas`) so the
-bytes cross the JVM↔Python boundary once per batch and the scan never
-inflates pixels it doesn't need (decode-on-demand = the reference's
-dpi-bounded lazy decode, generalized).
+The reference carries pixel ndarrays and PDF bytes inside its Image record
+(datapoint/image.py:130-162) and decodes them at a bounded dpi
+(datapoint/convert.py:146-166). Spark-first: a payload is an opaque
+`binary` column next to typed metadata columns; decode and feature
+extraction run as Arrow-batched pandas UDFs (`mapInPandas`), so the bytes
+cross the JVM↔Python boundary once per batch and a metadata-only query
+never reads them.
 
-Container note: no image/audio codec libraries ship in this sandbox, so the
-REAL decoders (jpeg/png/wav) are stubbed behind an import-try and raise
-NotImplementedError; a deterministic FIMG/FPCM/FVID fake codec carries the
-plumbing — schema, partitioning, UDF signature, batch shape — and is fully
-exercised by tests + DuckDB oracles (the pixel/sample streams are arithmetic
-functions of (media_id, position), so an oracle recomputes every statistic
-independently via range() unnesting while Spark actually decodes bytes).
-
-Fake codec formats (little-endian uint16 header fields after the 4-byte tag):
-- FIMG: b"FIMG" w h c   + w*h*c bytes, pixel[i]   = (seed + 7*i)  % 256
-- FPCM: b"FPCM" sr n    + n int16 LE,  sample[i]  = ((seed*13 + 17*i) % 4096) - 2048
-- FVID: b"FVID" w h c f + f frames of w*h*c bytes, byte[i of whole stream] = (seed + 7*i) % 256
+Three payload kinds, one decoder each:
+- FIMG, a deterministic image format: b"FIMG" + uint16 LE w h c + w*h*c
+  bytes, pixel[i] = (seed + 7*i) % 256. Its statistics are arithmetic
+  functions of (media_id, position), so a DuckDB oracle recomputes them via
+  range() unnesting while Spark decodes the bytes (`media_image_stats`).
+- MJPEG-in-AVI video, written and parsed by the stdlib codecs in
+  kernels/avi.py and kernels/jpeg.py: one checksum row per sampled frame
+  (`media_video_frames`).
+- PDF, written and parsed by the stdlib codec in kernels/pdf.py: one text
+  row per page (the `media_pdf_*` queries).
 """
 
 from __future__ import annotations
@@ -32,31 +28,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-try:  # real codecs — not present in this container (stub contract)
-    from PIL import Image as _PILImage  # pragma: no cover
-except ImportError:
-    _PILImage = None
-
-
-def decode_real_image(raw: bytes) -> "np.ndarray":
-    """Decode a real jpeg/png payload. Delegates to the codec adapter layer
-    (operators/codecs.py — the documented seam where PIL/pypdf/pdfplumber
-    plug in outside the sandbox); kept for back-compat with round-1 callers."""
-    if _PILImage is None:
-        raise NotImplementedError(
-            "image codec libraries are not available in this container; "
-            "use the FIMG fake codec (synth_images) for plumbing tests"
-        )
-    from deepdoctection_spark.operators.codecs import _pil_decode  # pragma: no cover
-
-    return _pil_decode(raw)  # pragma: no cover
-
-
-# ---------------------------------------------------------------------------
-# fake-codec encode/decode kernels (numpy, vectorized per payload)
-# ---------------------------------------------------------------------------
 
 
 def fimg_encode(seed: int, w: int, h: int, c: int) -> bytes:
@@ -71,45 +42,9 @@ def fimg_decode(raw: bytes) -> np.ndarray:
     return np.frombuffer(raw[10:], dtype=np.uint8).reshape(h, w, c)
 
 
-def fpcm_encode(seed: int, sr: int, n: int) -> bytes:
-    x = ((seed * 13 + 17 * np.arange(n, dtype=np.int64)) % 4096) - 2048
-    return b"FPCM" + struct.pack("<HH", sr, n) + x.astype("<i2").tobytes()
-
-
-def fpcm_decode(raw: bytes) -> tuple[int, np.ndarray]:
-    if raw[:4] != b"FPCM":
-        raise ValueError("bad FPCM magic")
-    sr, n = struct.unpack("<HH", raw[4:8])
-    return sr, np.frombuffer(raw[8:], dtype="<i2")[:n]
-
-
-def fvid_encode(seed: int, w: int, h: int, c: int, frames: int) -> bytes:
-    n = w * h * c * frames
-    px = ((seed + 7 * np.arange(n, dtype=np.int64)) % 256).astype(np.uint8)
-    return b"FVID" + struct.pack("<HHHH", w, h, c, frames) + px.tobytes()
-
-
-def fvid_decode(raw: bytes) -> tuple[tuple[int, int, int, int], np.ndarray]:
-    if raw[:4] != b"FVID":
-        raise ValueError("bad FVID magic")
-    w, h, c, f = struct.unpack("<HHHH", raw[4:12])
-    return (w, h, c, f), np.frombuffer(raw[12:], dtype=np.uint8).reshape(
-        f, h, w, c
-    )
-
-
-# ---------------------------------------------------------------------------
-# deterministic synthesis (the sandbox's media tables)
-# ---------------------------------------------------------------------------
-
 IMG_SCHEMA = (
     "media_id long, media_type string, width int, height int, channels int, "
     "content binary"
-)
-PCM_SCHEMA = "media_id long, media_type string, sample_rate int, n_samples int, content binary"
-VID_SCHEMA = (
-    "media_id long, media_type string, width int, height int, channels int, "
-    "n_frames int, content binary"
 )
 
 
@@ -141,125 +76,6 @@ def synth_images(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
 
 
-def _png_dims(mid: int) -> tuple[int, int, int]:
-    # h ≥ 5 so the encoder's y % 5 filter cycle exercises every PNG filter
-    # (None/Sub/Up/Average/Paeth) in every payload
-    return 8 + mid % 9, 5 + mid % 6, 3
-
-
-def synth_png_images(docs: DataFrame) -> DataFrame:
-    """documents → REAL PNG payload table (stdlib codec): pixel stream is the
-    same closed-form (seed + 7i) % 256 contract as FIMG, so the DuckDB oracle
-    recomputes every statistic while Spark decodes genuine PNG bytes
-    (chunk CRCs, zlib inflate, all five scanline filters)."""
-    from deepdoctection_spark.operators.codecs import png_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                w, h, c = _png_dims(mid)
-                px = ((mid % 256 + 7 * np.arange(w * h * c, dtype=np.int64))
-                      % 256).astype(np.uint8).reshape(h, w, c)
-                rows.append((mid, "image/png", w, h, c, png_encode(px)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def synth_jpeg_images_tagged(docs: DataFrame) -> DataFrame:
-    """synth_jpeg_images plus PLANTED metadata after SOI: an APP1 EXIF blob
-    with a GPS string, then a COM comment — 1 + mid % 2 segments each, so
-    the strip oracle knows the exact audit count per image."""
-    import struct as _struct
-
-    from deepdoctection_spark.kernels.jpeg import jpeg_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                bw, bh = _jpeg_dims(mid)
-                vals = 2 * ((mid % 256 + 17 * np.arange(bh * bw)) % 128)
-                img = np.repeat(
-                    np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1
-                ).astype(np.uint8)
-                raw = jpeg_encode(img)
-                exif = f"Exif\x00\x00GPS {mid % 90}.{mid % 1000}".encode()
-                com = f"shot {mid}".encode()
-                segs = [
-                    b"\xff\xe1" + _struct.pack(">H", 2 + len(exif)) + exif,
-                    b"\xff\xfe" + _struct.pack(">H", 2 + len(com)) + com,
-                ][: 1 + mid % 2]
-                rows.append((mid, "image/jpeg", bw * 8, bh * 8, 1,
-                             raw[:2] + b"".join(segs) + raw[2:]))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def synth_audio(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                n = 512 + mid % 256
-                rows.append(
-                    (mid, "audio/fpcm", sample_rate, n,
-                     fpcm_encode(mid % 256, sample_rate, n))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "sample_rate", "n_samples",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=PCM_SCHEMA)
-
-
-def synth_video(docs: DataFrame, w: int = 8, h: int = 6, c: int = 3) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                f = 4 + mid % 4
-                rows.append(
-                    (mid, "video/fvid", w, h, c, f,
-                     fvid_encode(mid % 256, w, h, c, f))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "n_frames", "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=VID_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# feature extraction / transforms (Arrow-batched pandas UDF stages)
-# ---------------------------------------------------------------------------
-
 IMG_STATS_SCHEMA = (
     "media_id long, width int, height int, channels int, n_pixels int, "
     "mean_px double, min_px int, max_px int, mean_c0 double, error string"
@@ -276,9 +92,7 @@ def image_stats(media: DataFrame) -> DataFrame:
             rows = []
             for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
                 try:  # row quarantine: a truncated payload must not kill the task
-                    from deepdoctection_spark.operators.codecs import decode_image
-
-                    a = decode_image(bytes(raw))
+                    a = fimg_decode(bytes(raw))
                     h, w, c = a.shape
                     rows.append(
                         (int(mid), w, h, c, a.size, round(float(a.mean()), 4),
@@ -303,98 +117,92 @@ def image_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize, re-encoded to FIMG (the reference's
-    ResizeTransform, /root/reference/deepdoctection/utils/transform.py:53-118,
-    as a batch stage)."""
+# ---------------------------------------------------------------------------
+# REAL video: MJPEG frames in a spec-shaped AVI container (kernels/avi.py)
+# ---------------------------------------------------------------------------
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+VID_SCHEMA = (
+    "media_id long, media_type string, width int, height int, channels int, "
+    "n_frames int, content binary"
+)
+FRAME_SCHEMA = "media_id long, frame_idx int, width int, height int, frame_sum long"
+MJPEG_FPS = 10
+
+
+def _jpeg_dims(mid: int) -> tuple[int, int]:
+    # block-grid dims (each block is 8x8 px)
+    return 2 + mid % 3, 2 + mid % 2
+
+
+def _mjpeg_n_frames(mid: int) -> int:
+    return 2 + mid % 3
+
+
+def synth_videos_mjpeg(docs: DataFrame) -> DataFrame:
+    """documents → REAL MJPEG-in-AVI payload table: every frame is a genuine
+    baseline JPEG (kernels/jpeg.py) wrapped in a RIFF/AVI container
+    (kernels/avi.py). Frame f of media m is piecewise-flat per 8×8 block
+    with EVEN level-shift deltas (value = 2·((seed + 17·block) % 128),
+    seed = (m + 37·f) % 256), so the lossy chain stays exactly lossless and
+    the DuckDB oracle recomputes per-frame statistics in closed form while
+    Spark walks real RIFF chunks and Huffman-decodes real scan bytes."""
+    from deepdoctection_spark.kernels.avi import avi_encode_mjpeg
+    from deepdoctection_spark.kernels.jpeg import jpeg_encode
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                a = fimg_decode(bytes(raw))
-                h, w, c = a.shape
-                yi = (np.arange(out_h) * h // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * w // out_w).astype(np.int64)
-                r = a[yi][:, xi]
-                payload = (
-                    b"FIMG" + struct.pack("<HHH", out_w, out_h, c) + r.tobytes()
+            for mid in pdf["doc_id"].tolist():
+                mid = int(mid)
+                bw, bh = _jpeg_dims(mid)
+                nf = _mjpeg_n_frames(mid)
+                frames = []
+                for f in range(nf):
+                    vals = 2 * (((mid + 37 * f) % 256 + 17 * np.arange(bh * bw)) % 128)
+                    img = np.repeat(
+                        np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1
+                    ).astype(np.uint8)
+                    frames.append(jpeg_encode(img))
+                rows.append(
+                    (mid, "video/x-msvideo", bw * 8, bh * 8, 1, nf,
+                     avi_encode_mjpeg(frames, bw * 8, bh * 8, MJPEG_FPS))
                 )
-                rows.append((int(mid), "image/fimg", out_w, out_h, c, payload))
             yield pd.DataFrame(
                 rows,
                 columns=[
                     "media_id", "media_type", "width", "height", "channels",
-                    "content",
+                    "n_frames", "content",
                 ],
             )
 
-    return media.select("media_id", "content").mapInPandas(rs, schema=IMG_SCHEMA)
+    return docs.select("doc_id").mapInPandas(gen, schema=VID_SCHEMA)
 
 
-AUDIO_FEAT_SCHEMA = (
-    "media_id long, sample_rate int, n_samples int, duration_sec double, "
-    "rms double, peak int, error string"
-)
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """PCM16 decode + RMS/peak/duration — real numpy decode (no codec lib
-    needed for raw PCM), the audio feature-extract path."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                try:  # row quarantine
-                    from deepdoctection_spark.operators.codecs import decode_audio
-
-                    sr, x = decode_audio(bytes(raw))
-                    xf = x.astype(np.float64)
-                    # peak on the float copy: np.abs(int16 -32768) overflows
-                    # to -32768 in int16 (full-scale negative is common)
-                    rows.append(
-                        (int(mid), sr, len(x), round(len(x) / sr, 6),
-                         round(float(np.sqrt((xf * xf).mean())), 4),
-                         int(np.abs(xf).max()), None)
-                    )
-                except Exception as exc:
-                    rows.append(
-                        (int(mid), None, None, None, None, None,
-                         f"{type(exc).__name__}: {exc}"[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "duration_sec",
-                    "rms", "peak", "error",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        feats, schema=AUDIO_FEAT_SCHEMA
-    )
-
-
-FRAME_SCHEMA = "media_id long, frame_idx int, width int, height int, frame_sum long"
-
-
-def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
-    """Video → every-k-th frame rows (frame-sample pattern): decode once,
-    slice the frame axis, emit one row per kept frame with a per-frame
-    checksum (the oracle-checkable stand-in for a per-frame feature)."""
+def sample_frames_mjpeg(media: DataFrame, every: int = 2) -> DataFrame:
+    """REAL video frame-sample: RIFF walk → keep every k-th '00dc' chunk →
+    baseline-JPEG decode each kept frame → one row per frame with a pixel
+    checksum. Decode cost scales with KEPT frames only (the container walk
+    slices chunk offsets without touching skipped frames' scan bytes).
+    Poison containers (bad magic, truncated chunks, index mismatch,
+    non-JPEG payload) drop their rows: quarantine by omission."""
+    from deepdoctection_spark.kernels.avi import avi_decode_mjpeg
+    from deepdoctection_spark.kernels.jpeg import jpeg_decode
 
     def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                try:  # poison video: skip its frames, keep the task alive
-                    (w, h, _c, f), a = fvid_decode(bytes(raw))
+                try:
+                    w, h, _fps, frames = avi_decode_mjpeg(bytes(raw))
                 except Exception:
                     continue
-                for fi in range(0, f, every):
+                for fi in range(0, len(frames), every):
+                    try:
+                        px = jpeg_decode(frames[fi])
+                    except Exception:
+                        continue
                     rows.append(
-                        (int(mid), fi, w, h, int(a[fi].astype(np.int64).sum()))
+                        (int(mid), fi, w, h, int(px.astype(np.int64).sum()))
                     )
             yield pd.DataFrame(
                 rows,
@@ -402,43 +210,6 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
             )
 
     return media.select("media_id", "content").mapInPandas(fs, schema=FRAME_SCHEMA)
-
-
-def media_catalog(images: DataFrame, audio: DataFrame, video: DataFrame) -> DataFrame:
-    """Unified media catalog: one row per asset with typed metadata — the
-    multimodal analogue of the reference's page catalog; binary payloads and
-    metadata stay separate columns so Catalyst prunes bytes out of
-    metadata-only queries."""
-    i = images.select(
-        "media_id", "media_type",
-        F.struct("width", "height", "channels").alias("image_meta"),
-        F.lit(None).cast("struct<sample_rate:int,n_samples:int>").alias("audio_meta"),
-        F.lit(None).cast(
-            "struct<width:int,height:int,channels:int,n_frames:int>"
-        ).alias("video_meta"),
-        F.length("content").cast("long").alias("n_bytes"),
-    )
-    a = audio.select(
-        "media_id", "media_type",
-        F.lit(None).cast("struct<width:int,height:int,channels:int>").alias(
-            "image_meta"
-        ),
-        F.struct("sample_rate", "n_samples").alias("audio_meta"),
-        F.lit(None).cast(
-            "struct<width:int,height:int,channels:int,n_frames:int>"
-        ).alias("video_meta"),
-        F.length("content").cast("long").alias("n_bytes"),
-    )
-    v = video.select(
-        "media_id", "media_type",
-        F.lit(None).cast("struct<width:int,height:int,channels:int>").alias(
-            "image_meta"
-        ),
-        F.lit(None).cast("struct<sample_rate:int,n_samples:int>").alias("audio_meta"),
-        F.struct("width", "height", "channels", "n_frames").alias("video_meta"),
-        F.length("content").cast("long").alias("n_bytes"),
-    )
-    return i.unionByName(a).unionByName(v)
 
 
 # ---------------------------------------------------------------------------
@@ -541,13 +312,13 @@ def pdf_texts_stage(media: DataFrame) -> DataFrame:
     output row per page. Poison payloads quarantine to a single error row."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoctection_spark.operators.codecs import pdf_page_texts
+        from deepdoctection_spark.kernels.pdf import pdf_texts
 
         for pdf in batches:
             rows = []
             for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
                 try:  # row quarantine
-                    for pi, ptext in enumerate(pdf_page_texts(bytes(raw))):
+                    for pi, ptext in enumerate(pdf_texts(bytes(raw))):
                         rows.append(
                             (int(mid), pi, ptext,
                              ptext.count("\n") + 1 if ptext else 0,
@@ -568,477 +339,4 @@ def pdf_texts_stage(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "content").mapInPandas(
         extract, schema=PDF_TEXT_SCHEMA
-    )
-
-
-def _gif_dims(mid: int) -> tuple[int, int, int]:
-    # (w, h, n_palette): non-power-of-two palettes exercise table padding;
-    # n ≤ 17 keeps 3·(n−1)+2 ≤ 255 for the linear palette formula
-    return 7 + mid % 8, 5 + mid % 5, 4 + mid % 13
-
-
-def synth_gif_images(docs: DataFrame, interlace: bool = False) -> DataFrame:
-    """documents → REAL GIF payload table (stdlib LZW codec): index stream
-    is (seed + 7i) % n_palette and palette[j] = (3j, 3j+1, 3j+2), so the
-    DuckDB oracle recomputes every decoded-RGB statistic in closed form
-    while Spark actually LZW-decodes genuine GIF bytes. ``interlace``
-    writes the four-pass row raster — the decoder must reorder rows back,
-    against the SAME oracle (the image is identical)."""
-    from deepdoctection_spark.kernels.gif import gif_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                w, h, n = _gif_dims(mid)
-                idx = ((mid % 256 + 7 * np.arange(w * h, dtype=np.int64)) % n
-                       ).astype(np.uint8).reshape(h, w)
-                pal = np.stack(
-                    [3 * np.arange(n), 3 * np.arange(n) + 1,
-                     3 * np.arange(n) + 2], axis=1
-                ).astype(np.uint8)
-                rows.append(
-                    (mid, "image/gif", w, h, 3,
-                     gif_encode(idx, pal, interlace=interlace))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def synth_gif_animations(docs: DataFrame) -> DataFrame:
-    """documents → REAL ANIMATED GIF payload table: n_frames full-screen
-    frames, frame f's index stream is (seed + 7·(f·w·h + i)) % n_palette —
-    the same linear-palette closed form per frame, so the oracle recomputes
-    per-frame sums while Spark really decodes a multi-image GIF89a stream
-    (NETSCAPE loop ext + per-frame graphic control + compositing)."""
-    from deepdoctection_spark.kernels.gif import gif_encode_animated
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                w, h, n = _gif_dims(mid)
-                nf = 2 + mid % 3
-                pal = np.stack(
-                    [3 * np.arange(n), 3 * np.arange(n) + 1,
-                     3 * np.arange(n) + 2], axis=1
-                ).astype(np.uint8)
-                frames = [
-                    ((mid % 256 + 7 * (f * w * h + np.arange(w * h, dtype=np.int64))) % n
-                     ).astype(np.uint8).reshape(h, w)
-                    for f in range(nf)
-                ]
-                rows.append(
-                    (mid, "image/gif", w, h, 3, gif_encode_animated(frames, pal))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def gif_frame_stats(media: DataFrame) -> DataFrame:
-    """Animated GIF → one row per composited frame with a per-frame RGB
-    checksum (the video sample_frames pattern applied to the GIF decoder's
-    multi-frame surface)."""
-    from deepdoctection_spark.kernels.gif import gif_decode_frames
-
-    def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                try:  # poison payload: skip its frames, keep the task alive
-                    frames = gif_decode_frames(bytes(raw))
-                except Exception:
-                    continue
-                for fi, a in enumerate(frames):
-                    rows.append(
-                        (int(mid), fi, a.shape[1], a.shape[0],
-                         int(a.astype(np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "frame_sum"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(fs, schema=FRAME_SCHEMA)
-
-
-def _jpeg_dims(mid: int) -> tuple[int, int]:
-    # block-grid dims (each block is 8x8 px)
-    return 2 + mid % 3, 2 + mid % 2
-
-
-def synth_jpeg_color_images(docs: DataFrame) -> DataFrame:
-    """documents → REAL baseline COLOR JPEG payload table (stdlib codec,
-    YCbCr 4:2:0): each image is flat per 16×16 MCU in YCbCr with Y even
-    (exact under luma Q₀₀=16) and Cb/Cr ≡ 128 mod 17 (exact under chroma
-    Q₀₀=17), so the whole lossy chain — FDCT, quantize, Huffman, IDCT,
-    4:2:0 down/upsample — is bit-exact and only the decoder's fixed BT.601
-    conversion remains, which the DuckDB oracle reproduces with
-    round_even() on doubles (kernels/jpeg.py module docstring derives the
-    algebra). Spark really entropy-decodes an interleaved 3-component scan."""
-    from deepdoctection_spark.kernels.jpeg import jpeg_encode_ycbcr
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                seed = mid % 256
-                bw, bh = 1 + mid % 3, 1 + mid % 2  # MCU grid (16x16 px each)
-                b = np.arange(bh * bw)
-                yv = (2 * ((seed + 17 * b) % 128)).astype(np.uint8)
-                cbv = (128 + 17 * (((seed + 3 * b) % 15) - 7)).astype(np.uint8)
-                crv = (128 + 17 * (((seed + 5 * b) % 15) - 7)).astype(np.uint8)
-                up = lambda v: np.repeat(  # noqa: E731
-                    np.repeat(v.reshape(bh, bw), 16, 0), 16, 1
-                )
-                rows.append(
-                    (mid, "image/jpeg", bw * 16, bh * 16, 3,
-                     jpeg_encode_ycbcr(up(yv), up(cbv), up(crv)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def synth_jpeg_images(docs: DataFrame) -> DataFrame:
-    """documents → REAL baseline JPEG payload table (stdlib codec): each
-    image is piecewise-flat per 8×8 block with EVEN level-shift deltas
-    (value = 2·((seed + 17·block) % 128)), for which the lossy chain is
-    exactly lossless (DC = Δ/2·Q₀₀ with no rounding boundary) — so the
-    DuckDB oracle recomputes decoded statistics in closed form while Spark
-    actually Huffman-decodes scan bytes and runs the real IDCT
-    (kernels/jpeg.py module docstring derives the algebra)."""
-    from deepdoctection_spark.kernels.jpeg import jpeg_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                bw, bh = _jpeg_dims(mid)
-                vals = 2 * ((mid % 256 + 17 * np.arange(bh * bw)) % 128)
-                img = np.repeat(
-                    np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1
-                ).astype(np.uint8)
-                rows.append(
-                    (mid, "image/jpeg", bw * 8, bh * 8, 1, jpeg_encode(img))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# REAL video: MJPEG frames in a spec-shaped AVI container (kernels/avi.py)
-# ---------------------------------------------------------------------------
-
-MJPEG_FPS = 10
-
-
-def _mjpeg_n_frames(mid: int) -> int:
-    return 2 + mid % 3
-
-
-def synth_videos_mjpeg(docs: DataFrame) -> DataFrame:
-    """documents → REAL MJPEG-in-AVI payload table: every frame is a genuine
-    baseline JPEG (kernels/jpeg.py) wrapped in a RIFF/AVI container
-    (kernels/avi.py). Frame f of media m uses the same piecewise-flat
-    even-delta block construction as synth_jpeg_images with seed
-    (m + 37·f) % 256, so the lossy chain stays exactly lossless and the
-    DuckDB oracle recomputes per-frame statistics in closed form while
-    Spark walks real RIFF chunks and Huffman-decodes real scan bytes."""
-    from deepdoctection_spark.kernels.avi import avi_encode_mjpeg
-    from deepdoctection_spark.kernels.jpeg import jpeg_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                bw, bh = _jpeg_dims(mid)
-                nf = _mjpeg_n_frames(mid)
-                frames = []
-                for f in range(nf):
-                    vals = 2 * (((mid + 37 * f) % 256 + 17 * np.arange(bh * bw)) % 128)
-                    img = np.repeat(
-                        np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1
-                    ).astype(np.uint8)
-                    frames.append(jpeg_encode(img))
-                rows.append(
-                    (mid, "video/x-msvideo", bw * 8, bh * 8, 1, nf,
-                     avi_encode_mjpeg(frames, bw * 8, bh * 8, MJPEG_FPS))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "n_frames", "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=VID_SCHEMA)
-
-
-def sample_frames_mjpeg(media: DataFrame, every: int = 2) -> DataFrame:
-    """REAL video frame-sample: RIFF walk → keep every k-th '00dc' chunk →
-    baseline-JPEG decode each kept frame → one row per frame with a pixel
-    checksum. Decode cost scales with KEPT frames only (the container walk
-    slices chunk offsets without touching skipped frames' scan bytes) —
-    the frame-sample pattern a 100 TB video corpus needs. Poison containers
-    (bad magic, truncated chunks, index mismatch, non-JPEG payload) skip to
-    quarantine-by-omission, matching sample_frames' contract."""
-    from deepdoctection_spark.kernels.avi import avi_decode_mjpeg
-    from deepdoctection_spark.kernels.jpeg import jpeg_decode
-
-    def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                try:
-                    w, h, _fps, frames = avi_decode_mjpeg(bytes(raw))
-                except Exception:
-                    continue
-                for fi in range(0, len(frames), every):
-                    try:
-                        px = jpeg_decode(frames[fi])
-                    except Exception:
-                        continue
-                    rows.append(
-                        (int(mid), fi, w, h, int(px.astype(np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "frame_sum"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(fs, schema=FRAME_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# perceptual near-dup: average-hash (aHash) in exact integer arithmetic
-# ---------------------------------------------------------------------------
-
-AHASH_SCHEMA = "media_id long, b0 long, b1 long, b2 long, b3 long, error string"
-
-
-def synth_images_perturbed(docs: DataFrame, n_pert: int = 15) -> DataFrame:
-    """Planted near-duplicates for the perceptual-dedup fixture: for each
-    doc_id < n_pert, the SAME FIMG image as synth_images but with the last
-    four pixels saturated to 255 (media_id = doc_id + 100000). A perceptual
-    hash must place each planted copy within a few bits of its original
-    (measured on this fixture: hamming <= 6, every pair keeps at least one
-    of the four 16-bit bands intact, so banded candidate recall is 15/15)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                if mid >= n_pert:
-                    continue
-                w, h, c = _img_dims(mid)
-                px = ((mid % 256 + 7 * np.arange(w * h * c, dtype=np.int64))
-                      % 256).astype(np.uint8)
-                px[-12:] = 255  # saturate the last four pixels
-                raw = b"FIMG" + struct.pack("<HHH", w, h, c) + px.tobytes()
-                rows.append((mid + 100000, "image/fimg", w, h, c, raw))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def ahash_bands(media: DataFrame) -> DataFrame:
-    """Decode + 64-bit average hash, emitted as four 16-bit band integers
-    (the LSH keys AND the hamming operands — the full hash never needs to
-    exist as one word, so no signed-64 overflow games in either engine).
-
-    Exact-integer definition shared verbatim with the DuckDB oracle:
-    grid cell (gy, gx) = (y*8//h, x*8//w); gray = sum of the pixel's
-    channel bytes; bit(gy,gx) = cell_gray_sum * total_count >
-    total_gray_sum * cell_count (strict; equality -> 0). Counts may be
-    pixels or bytes — every cell holds exactly `channels` bytes per pixel,
-    so the choice scales both sides of the inequality uniformly. Band k
-    packs rows 2k..2k+1 MSB-first: value = sum bit << (15 - ((gy%2)*8+gx)).
-    Narrow mapInPandas; poison payloads quarantine to an error row."""
-
-    def hsh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoctection_spark.operators.codecs import decode_image
-
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                try:  # row quarantine
-                    a = decode_image(bytes(raw)).astype(np.int64)
-                    h, w, _c = a.shape
-                    gray = a.sum(axis=2)
-                    ys = (np.arange(h) * 8) // h
-                    xs = (np.arange(w) * 8) // w
-                    cell = ys[:, None] * 8 + xs[None, :]
-                    sums = np.zeros(64, dtype=np.int64)
-                    np.add.at(sums, cell.ravel(), gray.ravel())
-                    counts = np.bincount(cell.ravel(), minlength=64)
-                    bits = sums * int(gray.size) > int(gray.sum()) * counts
-                    bands = [
-                        int(sum(int(b) << (15 - j)
-                                for j, b in enumerate(bits[k * 16:(k + 1) * 16])))
-                        for k in range(4)
-                    ]
-                    rows.append((int(mid), *bands, None))
-                except Exception as exc:
-                    rows.append((int(mid), None, None, None, None,
-                                 f"{type(exc).__name__}: {exc}"[:200]))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3", "error"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(hsh, schema=AHASH_SCHEMA)
-
-
-def ahash_neardup(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Banded perceptual near-dup pairs: candidates share at least one of
-    the four 16-bit bands (pigeonhole: any pair within 3 flipped bits is
-    GUARANTEED a shared band; beyond that recall degrades gracefully, the
-    standard SimHash-style trade), verified by exact hamming distance over
-    the band integers (JVM `bit_count(xor)` — no Python in the verify).
-    One (band_idx, band_val) equi-join — never all-pairs; at 10^9 images
-    the band join is the same bounded-fan-out shape as dedup.simhash."""
-    clean = hashes.where(F.col("error").isNull())
-    sides = clean.select(
-        "media_id", "b0", "b1", "b2", "b3",
-        F.posexplode(F.array("b0", "b1", "b2", "b3")).alias(
-            "band_idx", "band_val"
-        ),
-    )
-    a, b = sides.alias("a"), sides.alias("b")
-    ham = sum(
-        F.bit_count(F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}")))
-        for k in range(4)
-    )
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.media_id") < F.col("b.media_id"),
-            ],
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def synth_png_images_tagged(docs: DataFrame) -> DataFrame:
-    """synth_png_images plus PLANTED metadata: each PNG gets 1 + mid % 3
-    ancillary chunks after IHDR — a tEXt GPS position, then a tIME
-    timestamp, then an eXIf blob — deterministic payloads so the strip
-    oracle knows exactly how many chunks each image must shed."""
-    from deepdoctection_spark.operators.codecs import png_chunk, png_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                w, h, c = _png_dims(mid)
-                px = ((mid % 256 + 7 * np.arange(w * h * c, dtype=np.int64))
-                      % 256).astype(np.uint8).reshape(h, w, c)
-                raw = png_encode(px)
-                ihdr_end = 8 + 12 + 13  # signature + IHDR chunk
-                meta = [
-                    png_chunk(b"tEXt",
-                              f"GPS\x00{mid % 90}.{mid % 1000},-0.{mid % 97}"
-                              .encode()),
-                    png_chunk(b"tIME", bytes([7, 232, 1, 1, 0, mid % 60, 0])),
-                    png_chunk(b"eXIf", b"II*\x00" + bytes([mid % 256] * 8)),
-                ][: 1 + mid % 3]
-                tagged = raw[:ihdr_end] + b"".join(meta) + raw[ihdr_end:]
-                rows.append((mid, "image/png", w, h, c, tagged))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=IMG_SCHEMA)
-
-
-def strip_image_metadata(media: DataFrame) -> DataFrame:
-    """Privacy scrub stage for image payloads, dispatched by magic: PNG
-    ancillary chunks (tEXt GPS, eXIf, tIME, …) via codecs.png_strip_metadata,
-    JPEG APP1-15/COM segments (EXIF GPS, vendor blobs) via
-    codecs.jpeg_strip_metadata. Same Arrow-batch shape as image_stats —
-    only (media_id, content) cross the boundary, metadata columns stay
-    JVM-side and re-join by media_id. Corrupt payloads quarantine to the
-    error column instead of killing the task; n_dropped is the audit
-    count a compliance manifest wants."""
-
-    def strip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deepdoctection_spark.operators.codecs import (
-            jpeg_strip_metadata,
-            png_strip_metadata,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(),
-                                pdf["content"].tolist()):
-                try:
-                    b = bytes(raw)
-                    if b[:2] == b"\xff\xd8":
-                        stripped, n = jpeg_strip_metadata(b)
-                    else:
-                        stripped, n = png_strip_metadata(b)
-                    rows.append((int(mid), stripped, n, None))
-                except Exception as exc:
-                    rows.append((int(mid), None, None,
-                                 f"{type(exc).__name__}: {exc}"[:200]))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "content", "n_dropped", "error"])
-
-    return media.select("media_id", "content").mapInPandas(
-        strip,
-        schema="media_id long, content binary, n_dropped int, error string",
     )

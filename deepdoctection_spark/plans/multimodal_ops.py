@@ -1,36 +1,35 @@
-"""Multimodal queries with DuckDB oracles.
+"""Media queries with DuckDB oracles: FIMG image statistics, MJPEG video
+frames and PDF text.
 
-Spark genuinely decodes the binary payloads (header parse + numpy over the
-byte stream inside mapInPandas); the oracle never sees a byte — it recomputes
-every statistic from the closed-form pixel/sample definitions
-(operators/multimodal.py fake-codec contract: pixel[i] = (seed + 7i) % 256,
-sample[i] = ((seed*13 + 17i) % 4096) - 2048) by unnesting range(n) per doc.
-Agreement proves the decode path end-to-end, same philosophy as the
-transcript extraction oracles."""
+Spark genuinely decodes the binary payloads inside mapInPandas; the oracle
+never sees a byte. `media_image_stats` recomputes every statistic from the
+FIMG pixel formula (pixel[i] = (seed + 7i) % 256) by unnesting range(n) per
+doc. `media_video_frames` recomputes each sampled frame's pixel sum from
+the flat-block formula its JPEG frames are built from, while Spark walks
+the AVI container and Huffman-decodes each kept frame (kernels/avi.py,
+kernels/jpeg.py). The `media_pdf_*` queries recompute each page's text
+from documents.text through the shared pagination contract (6 words per
+line, 4 lines per page), while Spark writes and parses genuine PDF bytes
+(kernels/pdf.py). Agreement proves the decode path end to end, the same
+philosophy as the transcript extraction oracles."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from deepdoctection_spark.operators import multimodal as mm
 from deepdoctection_spark.plans.registry import register
 from deepdoctection_spark.plans.training_ops import _docs
 
-_IMG_DIMS = """
-dims AS (
+
+@register(
+    "media_image_stats",
+    """
+WITH dims AS (
   SELECT doc_id AS media_id, doc_id % 256 AS seed,
          (16 + doc_id % 16)::INT AS width, (8 + doc_id % 8)::INT AS height,
          3::INT AS channels,
          ((16 + doc_id % 16) * (8 + doc_id % 8) * 3)::INT AS n_pixels
   FROM documents
-)
-"""
-
-
-@register(
-    "media_image_stats",
-    f"""
-WITH {_IMG_DIMS},
+),
 px AS (
   SELECT media_id, width, height, channels, n_pixels,
          ((seed + 7 * i) % 256) AS v, (i % 3) AS ch
@@ -49,201 +48,37 @@ def q_media_image_stats(spark, sf_dir):
 
 
 @register(
-    "media_png_stats",
+    "media_video_frames",
     """
 WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (8 + doc_id % 9)::INT AS width, (5 + doc_id % 6)::INT AS height,
-         3::INT AS channels,
-         ((8 + doc_id % 9) * (5 + doc_id % 6) * 3)::INT AS n_pixels
-  FROM documents
-),
-px AS (
-  SELECT media_id, width, height, channels, n_pixels,
-         ((seed + 7 * i) % 256) AS v, (i % 3) AS ch
-  FROM dims, unnest(range(n_pixels)) AS t(i)
-)
-SELECT media_id, width, height, channels, n_pixels,
-       round(avg(v), 4) AS mean_px,
-       min(v)::INT AS min_px, max(v)::INT AS max_px,
-       round(avg(v) FILTER (ch = 0), 4) AS mean_c0,
-       NULL::VARCHAR AS error
-FROM px GROUP BY media_id, width, height, channels, n_pixels
-""",
-)
-def q_media_png_stats(spark, sf_dir):
-    """REAL PNG path: Spark inflates/unfilters genuine PNG bytes (stdlib
-    codec, operators/codecs.png_decode) through the same registry-dispatched
-    image_stats stage; the oracle recomputes from the pixel formula."""
-    return mm.image_stats(mm.synth_png_images(_docs(spark, sf_dir)))
-
-
-@register(
-    "media_gif_stats",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (7 + doc_id % 8)::INT AS width, (5 + doc_id % 5)::INT AS height,
-         (4 + doc_id % 13) AS n_pal,
-         ((7 + doc_id % 8) * (5 + doc_id % 5) * 3)::INT AS n_pixels
-  FROM documents
-),
-px AS (
-  SELECT media_id, width, height, n_pixels,
-         (3 * ((seed + 7 * (i // 3)) % n_pal) + (i % 3)) AS v, (i % 3) AS ch
-  FROM dims, unnest(range(n_pixels)) AS t(i)
-)
-SELECT media_id, width, height, 3::INT AS channels, n_pixels,
-       round_even(avg(v), 4) AS mean_px,
-       min(v)::INT AS min_px, max(v)::INT AS max_px,
-       round_even(avg(v) FILTER (ch = 0), 4) AS mean_c0,
-       NULL::VARCHAR AS error
-FROM px GROUP BY media_id, width, height, n_pixels
-""",
-)
-def q_media_gif_stats(spark, sf_dir):
-    """REAL GIF path: Spark LZW-decodes genuine GIF bytes (stdlib codec,
-    kernels/gif.py — sub-blocks, code-width growth, palette indirection)
-    through the same registry-dispatched image_stats stage; the oracle
-    recomputes from the index/palette formulas (index = (seed+7i) % n_pal,
-    palette[j] = (3j, 3j+1, 3j+2))."""
-    return mm.image_stats(mm.synth_gif_images(_docs(spark, sf_dir)))
-
-
-@register(
-    "media_gif_interlaced_stats",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (7 + doc_id % 8)::INT AS width, (5 + doc_id % 5)::INT AS height,
-         (4 + doc_id % 13) AS n_pal,
-         ((7 + doc_id % 8) * (5 + doc_id % 5) * 3)::INT AS n_pixels
-  FROM documents
-),
-px AS (
-  SELECT media_id, width, height, n_pixels,
-         (3 * ((seed + 7 * (i // 3)) % n_pal) + (i % 3)) AS v, (i % 3) AS ch
-  FROM dims, unnest(range(n_pixels)) AS t(i)
-)
-SELECT media_id, width, height, 3::INT AS channels, n_pixels,
-       round_even(avg(v), 4) AS mean_px,
-       min(v)::INT AS min_px, max(v)::INT AS max_px,
-       round_even(avg(v) FILTER (ch = 0), 4) AS mean_c0,
-       NULL::VARCHAR AS error
-FROM px GROUP BY media_id, width, height, n_pixels
-""",
-)
-def q_media_gif_interlaced_stats(spark, sf_dir):
-    """INTERLACED GIF path: the payloads carry the four-pass row raster
-    (iflags bit 6); the decoder must restore row order, so the oracle is
-    the SAME closed form as media_gif_stats — agreement proves the
-    de-interlace is exact, not merely shape-preserving."""
-    return mm.image_stats(
-        mm.synth_gif_images(_docs(spark, sf_dir), interlace=True)
-    )
-
-
-@register(
-    "media_gif_anim_frames",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (7 + doc_id % 8)::INT AS width, (5 + doc_id % 5)::INT AS height,
-         (4 + doc_id % 13) AS n_pal, (2 + doc_id % 3)::INT AS n_frames
+  SELECT doc_id AS media_id, (2 + doc_id % 3) AS bw, (2 + doc_id % 2) AS bh,
+         (2 + doc_id % 3) AS nf
   FROM documents
 ),
 frames AS (
-  SELECT media_id, seed, width, height, n_pal, fi::INT AS frame_idx
-  FROM dims, unnest(range(n_frames)) AS t(fi)
-),
-px AS (
-  SELECT media_id, frame_idx, width, height,
-         (9 * ((seed + 7 * (frame_idx * width * height + i)) % n_pal) + 3) AS v
-  FROM frames, unnest(range(width * height)) AS t(i)
-)
-SELECT media_id, frame_idx, width, height, sum(v)::BIGINT AS frame_sum
-FROM px GROUP BY media_id, frame_idx, width, height
-""",
-)
-def q_media_gif_anim_frames(spark, sf_dir):
-    """ANIMATED GIF path: Spark decodes a real multi-image GIF89a stream
-    (graphic-control extensions, per-frame LZW, canvas compositing) to one
-    row per frame; a palette index j decodes to RGB (3j, 3j+1, 3j+2) whose
-    channel sum is 9j+3, so the oracle recomputes each frame's checksum
-    from the per-frame index formula."""
-    return mm.gif_frame_stats(mm.synth_gif_animations(_docs(spark, sf_dir)))
-
-
-@register(
-    "media_jpeg_stats",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (2 + doc_id % 3) AS bw, (2 + doc_id % 2) AS bh
-  FROM documents
+  SELECT media_id, bw, bh, fi FROM dims, unnest(range(nf)) AS t(fi)
+  WHERE fi % 2 = 0
 ),
 blocks AS (
-  SELECT media_id, bw, bh, (2 * ((seed + 17 * b) % 128)) AS v
-  FROM dims, unnest(range(bh * bw)) AS t(b)
+  SELECT media_id, bw, bh, fi,
+         2 * (((media_id + 37 * fi) % 256 + 17 * b) % 128) AS v
+  FROM frames, unnest(range(bh * bw)) AS t2(b)
 )
-SELECT media_id, (bw * 8)::INT AS width, (bh * 8)::INT AS height,
-       1::INT AS channels, (bw * bh * 64)::INT AS n_pixels,
-       round(avg(v), 4) AS mean_px,
-       min(v)::INT AS min_px, max(v)::INT AS max_px,
-       round(avg(v), 4) AS mean_c0,
-       NULL::VARCHAR AS error
-FROM blocks GROUP BY media_id, bw, bh
+SELECT media_id, fi::INT AS frame_idx, (bw * 8)::INT AS width,
+       (bh * 8)::INT AS height, sum(64 * v)::BIGINT AS frame_sum
+FROM blocks GROUP BY media_id, fi, bw, bh
 """,
 )
-def q_media_jpeg_stats(spark, sf_dir):
-    """REAL JPEG path: Spark Huffman-decodes genuine baseline scan bytes
-    and runs the real dequant+IDCT (stdlib codec, kernels/jpeg.py) through
-    the registry-dispatched image_stats stage; the even-delta flat-block
-    construction makes the lossy chain exactly lossless, so the oracle
-    recomputes decoded stats from the block-value formula."""
-    return mm.image_stats(mm.synth_jpeg_images(_docs(spark, sf_dir)))
-
-
-@register(
-    "media_jpeg_color_stats",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (1 + doc_id % 3) AS bw, (1 + doc_id % 2) AS bh
-  FROM documents
-),
-mcu AS (
-  SELECT media_id, bw, bh,
-         (2 * ((seed + 17 * b) % 128))::DOUBLE AS y,
-         (17 * (((seed + 3 * b) % 15) - 7))::DOUBLE AS cbd,
-         (17 * (((seed + 5 * b) % 15) - 7))::DOUBLE AS crd
-  FROM dims, unnest(range(bh * bw)) AS t(b)
-),
-rgb AS (
-  SELECT media_id, bw, bh,
-         least(greatest(round_even(y + 1.402 * crd, 0), 0), 255) AS r,
-         least(greatest(round_even(y - 0.344136 * cbd - 0.714136 * crd, 0), 0), 255) AS g,
-         least(greatest(round_even(y + 1.772 * cbd, 0), 0), 255) AS b
-  FROM mcu
-)
-SELECT media_id, (bw * 16)::INT AS width, (bh * 16)::INT AS height,
-       3::INT AS channels, (bw * bh * 256 * 3)::INT AS n_pixels,
-       round(sum(r + g + b) / (bw * bh * 3), 4) AS mean_px,
-       min(least(r, g, b))::INT AS min_px, max(greatest(r, g, b))::INT AS max_px,
-       round(avg(r), 4) AS mean_c0,
-       NULL::VARCHAR AS error
-FROM rgb GROUP BY media_id, bw, bh
-""",
-)
-def q_media_jpeg_color_stats(spark, sf_dir):
-    """REAL COLOR JPEG path: Spark entropy-decodes a genuine interleaved
-    3-component 4:2:0 scan (per-component DC predictors + chroma Huffman/
-    quant tables), IDCTs, upsamples chroma, and converts BT.601→RGB
-    (stdlib codec, kernels/jpeg.py). The flat-MCU YCbCr construction makes
-    the lossy chain exactly lossless, so the oracle recomputes per-channel
-    stats from the Y/Cb/Cr formulas through the same conversion arithmetic
-    (round_even on IEEE doubles — bit-equal to the decoder's np.round)."""
-    return mm.image_stats(mm.synth_jpeg_color_images(_docs(spark, sf_dir)))
+def q_media_video_frames(spark, sf_dir):
+    """REAL VIDEO path: Spark walks genuine RIFF/AVI containers
+    (kernels/avi.py), keeps every 2nd '00dc' chunk, and baseline-JPEG-decodes
+    each kept frame (kernels/jpeg.py) to a per-frame pixel checksum. The
+    flat-block even-delta frame construction keeps the lossy chain exactly
+    lossless, so the oracle recomputes every kept frame's sum from the block
+    formula while Spark does the full container walk + Huffman decode +
+    IDCT. Reference analogue: the opaque-media decode seam,
+    datapoint/convert.py:78-166."""
+    return mm.sample_frames_mjpeg(mm.synth_videos_mjpeg(_docs(spark, sf_dir)), every=2)
 
 
 @register(
@@ -510,275 +345,3 @@ def q_media_pdf_texts_mixed(spark, sf_dir):
     return mm.pdf_texts_stage(
         mm.synth_pdfs(_docs(spark, sf_dir), mixed=True)
     )
-
-
-@register(
-    "media_audio_rms",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         8000::INT AS sample_rate, (512 + doc_id % 256)::INT AS n_samples
-  FROM documents
-),
-s AS (
-  SELECT media_id, sample_rate, n_samples,
-         (((seed * 13 + 17 * i) % 4096) - 2048) AS x
-  FROM dims, unnest(range(n_samples)) AS t(i)
-)
-SELECT media_id, sample_rate, n_samples,
-       round(n_samples / sample_rate::DOUBLE, 6) AS duration_sec,
-       round(sqrt(avg(x * x::DOUBLE)), 4) AS rms,
-       max(abs(x))::INT AS peak,
-       NULL::VARCHAR AS error
-FROM s GROUP BY media_id, sample_rate, n_samples
-""",
-)
-def q_media_audio_rms(spark, sf_dir):
-    return mm.audio_features(mm.synth_audio(_docs(spark, sf_dir)))
-
-
-@register(
-    "media_frame_sample",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         8::INT AS width, 6::INT AS height,
-         (4 + doc_id % 4)::INT AS n_frames, 8 * 6 * 3 AS frame_px
-  FROM documents
-),
-frames AS (
-  SELECT media_id, seed, width, height, frame_px, fi::INT AS frame_idx
-  FROM dims, unnest(range(n_frames)) AS t(fi)
-  WHERE fi % 2 = 0
-),
-px AS (
-  SELECT media_id, frame_idx, width, height,
-         ((seed + 7 * (frame_idx * frame_px + i)) % 256) AS v
-  FROM frames, unnest(range(frame_px)) AS t(i)
-)
-SELECT media_id, frame_idx, width, height, sum(v)::BIGINT AS frame_sum
-FROM px GROUP BY media_id, frame_idx, width, height
-""",
-)
-def q_media_frame_sample(spark, sf_dir):
-    return mm.sample_frames(mm.synth_video(_docs(spark, sf_dir)), every=2)
-
-
-@register(
-    "media_video_frames",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, (2 + doc_id % 3) AS bw, (2 + doc_id % 2) AS bh,
-         (2 + doc_id % 3) AS nf
-  FROM documents
-),
-frames AS (
-  SELECT media_id, bw, bh, fi FROM dims, unnest(range(nf)) AS t(fi)
-  WHERE fi % 2 = 0
-),
-blocks AS (
-  SELECT media_id, bw, bh, fi,
-         2 * (((media_id + 37 * fi) % 256 + 17 * b) % 128) AS v
-  FROM frames, unnest(range(bh * bw)) AS t2(b)
-)
-SELECT media_id, fi::INT AS frame_idx, (bw * 8)::INT AS width,
-       (bh * 8)::INT AS height, sum(64 * v)::BIGINT AS frame_sum
-FROM blocks GROUP BY media_id, fi, bw, bh
-""",
-)
-def q_media_video_frames(spark, sf_dir):
-    """REAL VIDEO path (retires the last fake codec): Spark walks genuine
-    RIFF/AVI containers (kernels/avi.py), keeps every 2nd '00dc' chunk, and
-    baseline-JPEG-decodes each kept frame (kernels/jpeg.py) to a per-frame
-    pixel checksum. The flat-block even-delta frame construction keeps the
-    lossy chain exactly lossless, so the oracle recomputes every kept
-    frame's sum from the block formula while Spark does the full container
-    walk + Huffman decode + IDCT. Reference analogue: the opaque-media
-    decode seam, datapoint/convert.py:78-166."""
-    return mm.sample_frames_mjpeg(mm.synth_videos_mjpeg(_docs(spark, sf_dir)), every=2)
-
-
-@register(
-    "media_catalog",
-    """
-SELECT doc_id AS media_id, 'image/fimg' AS media_type,
-       (16 + doc_id % 16)::INT AS width, (8 + doc_id % 8)::INT AS height,
-       3::INT AS channels, NULL::INT AS sample_rate, NULL::INT AS n_frames,
-       (10 + (16 + doc_id % 16) * (8 + doc_id % 8) * 3)::BIGINT AS n_bytes
-FROM documents
-UNION ALL
-SELECT doc_id, 'audio/fpcm', NULL, NULL, NULL, 8000,
-       NULL, (8 + 2 * (512 + doc_id % 256))::BIGINT
-FROM documents
-UNION ALL
-SELECT doc_id, 'video/fvid', 8, 6, 3, NULL, (4 + doc_id % 4)::INT,
-       (12 + 8 * 6 * 3 * (4 + doc_id % 4))::BIGINT
-FROM documents
-""",
-)
-def q_media_catalog(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    cat = mm.media_catalog(
-        mm.synth_images(docs), mm.synth_audio(docs), mm.synth_video(docs)
-    )
-    return cat.select(
-        "media_id",
-        "media_type",
-        F.coalesce("image_meta.width", "video_meta.width").alias("width"),
-        F.coalesce("image_meta.height", "video_meta.height").alias("height"),
-        F.coalesce("image_meta.channels", "video_meta.channels").alias("channels"),
-        F.col("audio_meta.sample_rate").alias("sample_rate"),
-        F.col("video_meta.n_frames").alias("n_frames"),
-        "n_bytes",
-    )
-
-
-_AHASH_ORACLE = """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (16 + doc_id % 16) AS w, (8 + doc_id % 8) AS h, FALSE AS pert
-  FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, doc_id % 256,
-         (16 + doc_id % 16), (8 + doc_id % 8), TRUE
-  FROM documents WHERE doc_id < 15
-),
-px AS (
-  SELECT media_id, w, h,
-         (i % (3 * w)) // 3 AS x, i // (3 * w) AS y,
-         CASE WHEN pert AND i >= 3 * w * h - 12 THEN 255
-              ELSE (seed + 7 * i) % 256 END AS v
-  FROM dims, unnest(range(3 * w * h)) AS t(i)
-),
-cells AS (
-  SELECT media_id, (y * 8) // h AS gy, (x * 8) // w AS gx,
-         sum(v)::BIGINT AS cell_sum, count(*)::BIGINT AS cell_n
-  FROM px GROUP BY ALL
-),
-tot AS (
-  SELECT media_id, sum(cell_sum)::BIGINT AS total_sum,
-         sum(cell_n)::BIGINT AS total_n
-  FROM cells GROUP BY media_id
-),
-bits AS (
-  SELECT c.media_id, gy, gx,
-         CASE WHEN cell_sum * total_n > total_sum * cell_n
-              THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-  FROM cells c JOIN tot USING (media_id)
-),
-bands AS (
-  SELECT media_id, (gy // 2) AS band_idx,
-         sum(bit << (15 - ((gy % 2) * 8 + gx)))::BIGINT AS band_val
-  FROM bits GROUP BY media_id, gy // 2
-),
-hashes AS (
-  SELECT media_id,
-         max(CASE WHEN band_idx = 0 THEN band_val END) AS b0,
-         max(CASE WHEN band_idx = 1 THEN band_val END) AS b1,
-         max(CASE WHEN band_idx = 2 THEN band_val END) AS b2,
-         max(CASE WHEN band_idx = 3 THEN band_val END) AS b3
-  FROM bands GROUP BY media_id
-)
-SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
-       (bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1)) +
-        bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)))::INT
-         AS hamming
-FROM hashes a JOIN hashes b
-  ON a.media_id < b.media_id
- AND (a.b0 = b.b0 OR a.b1 = b.b1 OR a.b2 = b.b2 OR a.b3 = b.b3)
-WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1)) +
-      bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 6
-"""
-
-
-@register("media_ahash_neardup", _AHASH_ORACLE)
-def q_media_ahash_neardup(spark, sf_dir):
-    """Perceptual image near-dup: decode real FIMG bytes, 64-bit average
-    hash in exact integer arithmetic (four 16-bit band ints), banded
-    candidate equi-join + JVM bit_count(xor) hamming verify <= 6. The
-    corpus carries 15 PLANTED near-copies (last four pixels saturated,
-    multimodal.synth_images_perturbed) the pipeline must recover, plus the
-    exact-dup collisions (doc_id = d and d+256 encode identical images).
-    The oracle replays the identical hash + band + verify algorithm from
-    the closed-form pixel formula — a full differential, not a row count
-    (operators/multimodal.ahash_bands / ahash_neardup)."""
-    docs = _docs(spark, sf_dir)
-    imgs = mm.synth_images(docs).unionByName(mm.synth_images_perturbed(docs))
-    return mm.ahash_neardup(mm.ahash_bands(imgs))
-
-
-@register(
-    "media_png_strip",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (8 + doc_id % 9)::INT AS width, (5 + doc_id % 6)::INT AS height,
-         3::INT AS channels,
-         ((8 + doc_id % 9) * (5 + doc_id % 6) * 3)::INT AS n_pixels,
-         (1 + doc_id % 3)::INT AS n_dropped
-  FROM documents
-),
-px AS (
-  SELECT media_id, width, height, channels, n_pixels, n_dropped,
-         ((seed + 7 * i) % 256) AS v, (i % 3) AS ch
-  FROM dims, unnest(range(n_pixels)) AS t(i)
-)
-SELECT media_id, width, height, channels, n_pixels,
-       round(avg(v), 4) AS mean_px,
-       min(v)::INT AS min_px, max(v)::INT AS max_px,
-       round(avg(v) FILTER (ch = 0), 4) AS mean_c0,
-       NULL::VARCHAR AS error,
-       n_dropped
-FROM px GROUP BY media_id, width, height, channels, n_pixels, n_dropped
-""",
-)
-def q_media_png_strip(spark, sf_dir):
-    """Privacy scrub end-to-end: PNGs with PLANTED GPS/EXIF/timestamp
-    chunks (1 + mid % 3 each) run through strip_image_metadata, and the
-    STRIPPED bytes are then re-decoded by the real PNG codec through
-    image_stats — the oracle's closed-form pixel statistics only agree if
-    the scrub removed exactly the planted chunks and left every pixel
-    byte intact (operators/multimodal.strip_image_metadata,
-    operators/codecs.png_strip_metadata)."""
-    tagged = mm.synth_png_images_tagged(_docs(spark, sf_dir))
-    stripped = mm.strip_image_metadata(tagged)
-    stats = mm.image_stats(
-        stripped.select("media_id", "content"))
-    return stats.join(
-        stripped.select("media_id", "n_dropped"), "media_id")
-
-
-@register(
-    "media_jpeg_strip",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, doc_id % 256 AS seed,
-         (2 + doc_id % 3) AS bw, (2 + doc_id % 2) AS bh,
-         (1 + doc_id % 2)::INT AS n_dropped
-  FROM documents
-),
-blocks AS (
-  SELECT media_id, bw, bh, n_dropped, (2 * ((seed + 17 * b) % 128)) AS v
-  FROM dims, unnest(range(bh * bw)) AS t(b)
-)
-SELECT media_id, (bw * 8)::INT AS width, (bh * 8)::INT AS height,
-       1::INT AS channels, (bw * bh * 64)::INT AS n_pixels,
-       round(avg(v), 4) AS mean_px,
-       min(v)::INT AS min_px, max(v)::INT AS max_px,
-       round(avg(v), 4) AS mean_c0,
-       NULL::VARCHAR AS error,
-       n_dropped
-FROM blocks GROUP BY media_id, bw, bh, n_dropped
-""",
-)
-def q_media_jpeg_strip(spark, sf_dir):
-    """EXIF scrub end-to-end for JPEG: payloads with PLANTED APP1-EXIF-GPS
-    and COM segments (1 + mid % 2 each) run through the magic-dispatched
-    strip stage, and the stripped bytes are Huffman-decoded by the real
-    baseline codec through image_stats — closed-form stats only agree if
-    exactly the planted segments were shed and the entropy-coded data is
-    untouched (operators/codecs.jpeg_strip_metadata)."""
-    tagged = mm.synth_jpeg_images_tagged(_docs(spark, sf_dir))
-    stripped = mm.strip_image_metadata(tagged)
-    stats = mm.image_stats(stripped.select("media_id", "content"))
-    return stats.join(stripped.select("media_id", "n_dropped"), "media_id")

@@ -333,8 +333,7 @@ def q_pdf_layout_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from deepdoctection_spark.kernels.pdf import pdf_encode
-    from deepdoctection_spark.operators.codecs import pdf_positioned_lines
+    from deepdoctection_spark.kernels.pdf import pdf_encode, pdf_positioned_pages
     from deepdoctection_spark.sources.transcripts import (
         PDFISH_PAYLOAD,
         _spark_concat,
@@ -363,7 +362,7 @@ def q_pdf_layout_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                     x, y, content = float(m.group(1)), float(m.group(2)), m.group(3)
                     runs.append((x, 792.0 - y, 12.0, content))  # y-up user space
                 raw_pdf = pdf_encode([runs])
-                texts.append(pdf_positioned_lines(raw_pdf)[0])
+                texts.append(pdf_positioned_pages(raw_pdf)[0])
             yield pd.DataFrame(
                 {"conv_id": pdf["conv_id"], "turn_idx": 0, "role": "tool",
                  "text": texts, "tool": "pdf_reader"}

@@ -1,6 +1,6 @@
 """MJPEG-in-AVI container kernel: roundtrip, chunk-walk hygiene, poison
 contracts (kernels/avi.py), and the Spark frame-sample stage over real
-containers. Retires the FVID fake codec as the only video path."""
+containers."""
 
 import struct
 

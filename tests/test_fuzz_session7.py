@@ -1,80 +1,12 @@
-"""Seeded randomized hardening for the session-7 kernels: the image
-metadata strips must be byte-neutral on pixels for ANY ancillary-chunk
-placement, the Feistel shuffle must stay a bijection on arbitrary id sets,
-and the Markdown chain must strip every construct it claims to for
-arbitrary fragment soups (batched through ONE Spark job per property)."""
+"""Seeded randomized hardening: the Feistel shuffle must stay a bijection on
+arbitrary id sets, the Markdown chain must strip every construct it claims
+to for arbitrary fragment soups, the Luhn candidates must match a serial
+replay, and the KMV sketch an exact bottom-k (batched through ONE Spark job
+per property)."""
 
 from __future__ import annotations
 
 import random
-import struct
-
-import numpy as np
-
-
-def test_png_strip_fuzz_any_chunk_placement():
-    from deepdoctection_spark.operators.codecs import (
-        _png_chunks,
-        png_chunk,
-        png_decode,
-        png_encode,
-        png_strip_metadata,
-    )
-
-    rng = random.Random(42)
-    anc_tags = [b"tEXt", b"zTXt", b"iTXt", b"tIME", b"eXIf", b"pHYs",
-                b"sRGB", b"gAMA"]
-    for trial in range(30):
-        h, w, c = rng.randint(1, 12), rng.randint(1, 12), rng.choice([1, 3])
-        px = np.frombuffer(
-            bytes(rng.randrange(256) for _ in range(h * w * c)),
-            dtype=np.uint8).reshape(h, w, c)
-        raw = png_encode(px)
-        # split into wire chunks and re-assemble with ancillaries sprinkled
-        # at every legal internal position (after IHDR .. before IEND end)
-        chunks = [png_chunk(t, p) for t, p in _png_chunks(raw)]
-        n_anc = rng.randint(0, 4)
-        for _ in range(n_anc):
-            tag = rng.choice(anc_tags)
-            payload = bytes(rng.randrange(256)
-                            for _ in range(rng.randint(0, 40)))
-            pos = rng.randint(1, len(chunks) - 1)  # never before IHDR
-            chunks.insert(pos, png_chunk(tag, payload))
-        tagged = b"\x89PNG\r\n\x1a\n" + b"".join(chunks)
-        stripped, dropped = png_strip_metadata(tagged)
-        assert dropped == n_anc, (trial, dropped, n_anc)
-        assert np.array_equal(png_decode(stripped), px)
-        again, d2 = png_strip_metadata(stripped)
-        assert d2 == 0 and again == stripped
-
-
-def test_jpeg_strip_fuzz_any_segment_mix():
-    from deepdoctection_spark.kernels.jpeg import jpeg_encode
-    from deepdoctection_spark.operators.codecs import (
-        decode_image,
-        jpeg_strip_metadata,
-    )
-
-    rng = random.Random(7)
-    for trial in range(20):
-        bw, bh = rng.randint(1, 4), rng.randint(1, 3)
-        vals = 2 * ((rng.randrange(256) + 17 * np.arange(bh * bw)) % 128)
-        img = np.repeat(np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1).astype(
-            np.uint8)
-        raw = jpeg_encode(img)
-        segs, n_meta = [], rng.randint(0, 5)
-        for _ in range(n_meta):
-            marker = rng.choice([0xE1, 0xE2, 0xEC, 0xEE, 0xFE])
-            payload = bytes(rng.randrange(256)
-                            for _ in range(rng.randint(0, 60)))
-            segs.append(bytes([0xFF, marker])
-                        + struct.pack(">H", 2 + len(payload)) + payload)
-        tagged = raw[:2] + b"".join(segs) + raw[2:]
-        stripped, dropped = jpeg_strip_metadata(tagged)
-        kept = [s for s in segs if s[1] == 0xEE]  # APP14/Adobe stays
-        assert dropped == n_meta - len(kept)
-        assert stripped == raw[:2] + b"".join(kept) + raw[2:]
-        assert np.array_equal(decode_image(stripped), decode_image(raw))
 
 
 def test_feistel_bijection_on_random_id_sets(spark):

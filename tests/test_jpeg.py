@@ -1,8 +1,8 @@
 """Stdlib baseline JPEG codec (kernels/jpeg.py): real Huffman + DCT round
-trips, the DC-only closed form that backs the media_jpeg_stats oracle, the
-flat-MCU YCbCr construction that backs media_jpeg_color_stats, lossy-bound
-checks on arbitrary images, registry dispatch, and quarantine on
-out-of-scope shapes (progressive / 4:2:2 / truncated)."""
+trips, the DC-only closed form that backs the media_video_frames oracle,
+the flat-MCU YCbCr construction that makes the color path exact,
+lossy-bound checks on arbitrary images, and quarantine on out-of-scope
+shapes (progressive / 4:2:2 / truncated)."""
 
 from __future__ import annotations
 
@@ -87,15 +87,6 @@ def test_ac_coefficients_exercised():
     assert out.std() > 0
 
 
-def test_registry_dispatch_grayscale_channel():
-    from deepdoctection_spark.operators.codecs import decode_image
-
-    img = _flat_block_img(9)
-    a = decode_image(jpeg_encode(img))
-    assert a.shape == (img.shape[0], img.shape[1], 1)
-    np.testing.assert_array_equal(a[:, :, 0], img)
-
-
 def test_out_of_scope_quarantines():
     with pytest.raises(ValueError, match="signature"):
         jpeg_decode(b"NOTAJPEG" + b"\x00" * 16)
@@ -110,7 +101,7 @@ def test_out_of_scope_quarantines():
 
 
 def _flat_mcu_ycbcr(mid: int):
-    """The media_jpeg_color_stats construction: flat per 16x16 MCU, Y even,
+    """The exact color construction: flat per 16x16 MCU, Y even,
     Cb/Cr = 128 mod 17 — exactly lossless through the 4:2:0 chain."""
     seed = mid % 256
     bw, bh = 1 + mid % 3, 1 + mid % 2
@@ -169,18 +160,9 @@ def test_rgb_ycbcr_conversion_pair():
     assert np.abs(back.astype(int) - rgb.astype(int)).max() <= 2
 
 
-def test_color_registry_dispatch_three_channels():
-    from deepdoctection_spark.operators.codecs import decode_image
-
-    y, cb, cr = _flat_mcu_ycbcr(9)
-    a = decode_image(jpeg_encode_ycbcr(y, cb, cr))
-    assert a.shape == (y.shape[0], y.shape[1], 3)
-    np.testing.assert_array_equal(a, ycbcr_to_rgb(y, cb, cr))
-
-
 def test_unsupported_sampling_rejected():
     # patch the Y sampling byte of a real color JPEG to 4:2:2 (0x21) →
-    # stdlib scope rejects toward the Pillow seam
+    # stdlib scope rejects it
     y, cb, cr = _flat_mcu_ycbcr(4)
     raw = bytearray(jpeg_encode_ycbcr(y, cb, cr))
     sof = raw.find(b"\xff\xc0")

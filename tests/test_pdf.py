@@ -310,6 +310,8 @@ def test_truncated_and_corrupt_quarantine():
     raw = pdf_encode(PAGES)
     with pytest.raises(ValueError):
         pdf_decode(raw[: len(raw) // 3])
+    with pytest.raises(ValueError):
+        pdf_texts(b"%PDF-1.4 junk that is not parseable")
     # corrupt the Flate stream body → zlib error surfaces as an exception
     i = raw.index(b"stream\n") + 7
     bad = raw[:i] + bytes([raw[i] ^ 0xFF]) + raw[i + 1:]
