@@ -1,4 +1,4 @@
-"""Media payloads as opaque binary columns: FIMG images, MJPEG video, PDFs.
+"""Media payloads as opaque binary columns: FIMG images and PDFs.
 
 The reference carries pixel ndarrays and PDF bytes inside its Image record
 (datapoint/image.py:130-162) and decodes them at a bounded dpi
@@ -8,14 +8,11 @@ extraction run as Arrow-batched pandas UDFs (`mapInPandas`), so the bytes
 cross the JVM↔Python boundary once per batch and a metadata-only query
 never reads them.
 
-Three payload kinds, one decoder each:
+Two payload kinds, one decoder each:
 - FIMG, a deterministic image format: b"FIMG" + uint16 LE w h c + w*h*c
   bytes, pixel[i] = (seed + 7*i) % 256. Its statistics are arithmetic
   functions of (media_id, position), so a DuckDB oracle recomputes them via
   range() unnesting while Spark decodes the bytes (`media_image_stats`).
-- MJPEG-in-AVI video, written and parsed by the stdlib codecs in
-  kernels/avi.py and kernels/jpeg.py: one checksum row per sampled frame
-  (`media_video_frames`).
 - PDF, written and parsed by the stdlib codec in kernels/pdf.py: one text
   row per page (the `media_pdf_*` queries).
 """
@@ -115,101 +112,6 @@ def image_stats(media: DataFrame) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(
         stats, schema=IMG_STATS_SCHEMA
     )
-
-
-# ---------------------------------------------------------------------------
-# REAL video: MJPEG frames in a spec-shaped AVI container (kernels/avi.py)
-# ---------------------------------------------------------------------------
-
-VID_SCHEMA = (
-    "media_id long, media_type string, width int, height int, channels int, "
-    "n_frames int, content binary"
-)
-FRAME_SCHEMA = "media_id long, frame_idx int, width int, height int, frame_sum long"
-MJPEG_FPS = 10
-
-
-def _jpeg_dims(mid: int) -> tuple[int, int]:
-    # block-grid dims (each block is 8x8 px)
-    return 2 + mid % 3, 2 + mid % 2
-
-
-def _mjpeg_n_frames(mid: int) -> int:
-    return 2 + mid % 3
-
-
-def synth_videos_mjpeg(docs: DataFrame) -> DataFrame:
-    """documents → REAL MJPEG-in-AVI payload table: every frame is a genuine
-    baseline JPEG (kernels/jpeg.py) wrapped in a RIFF/AVI container
-    (kernels/avi.py). Frame f of media m is piecewise-flat per 8×8 block
-    with EVEN level-shift deltas (value = 2·((seed + 17·block) % 128),
-    seed = (m + 37·f) % 256), so the lossy chain stays exactly lossless and
-    the DuckDB oracle recomputes per-frame statistics in closed form while
-    Spark walks real RIFF chunks and Huffman-decodes real scan bytes."""
-    from deepdoctection_spark.kernels.avi import avi_encode_mjpeg
-    from deepdoctection_spark.kernels.jpeg import jpeg_encode
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"].tolist():
-                mid = int(mid)
-                bw, bh = _jpeg_dims(mid)
-                nf = _mjpeg_n_frames(mid)
-                frames = []
-                for f in range(nf):
-                    vals = 2 * (((mid + 37 * f) % 256 + 17 * np.arange(bh * bw)) % 128)
-                    img = np.repeat(
-                        np.repeat(vals.reshape(bh, bw), 8, 0), 8, 1
-                    ).astype(np.uint8)
-                    frames.append(jpeg_encode(img))
-                rows.append(
-                    (mid, "video/x-msvideo", bw * 8, bh * 8, 1, nf,
-                     avi_encode_mjpeg(frames, bw * 8, bh * 8, MJPEG_FPS))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "width", "height", "channels",
-                    "n_frames", "content",
-                ],
-            )
-
-    return docs.select("doc_id").mapInPandas(gen, schema=VID_SCHEMA)
-
-
-def sample_frames_mjpeg(media: DataFrame, every: int = 2) -> DataFrame:
-    """REAL video frame-sample: RIFF walk → keep every k-th '00dc' chunk →
-    baseline-JPEG decode each kept frame → one row per frame with a pixel
-    checksum. Decode cost scales with KEPT frames only (the container walk
-    slices chunk offsets without touching skipped frames' scan bytes).
-    Poison containers (bad magic, truncated chunks, index mismatch,
-    non-JPEG payload) drop their rows: quarantine by omission."""
-    from deepdoctection_spark.kernels.avi import avi_decode_mjpeg
-    from deepdoctection_spark.kernels.jpeg import jpeg_decode
-
-    def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"].tolist(), pdf["content"].tolist()):
-                try:
-                    w, h, _fps, frames = avi_decode_mjpeg(bytes(raw))
-                except Exception:
-                    continue
-                for fi in range(0, len(frames), every):
-                    try:
-                        px = jpeg_decode(frames[fi])
-                    except Exception:
-                        continue
-                    rows.append(
-                        (int(mid), fi, w, h, int(px.astype(np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "frame_sum"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(fs, schema=FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

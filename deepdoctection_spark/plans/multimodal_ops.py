@@ -1,15 +1,11 @@
-"""Media queries with DuckDB oracles: FIMG image statistics, MJPEG video
-frames and PDF text.
+"""Media queries with DuckDB oracles: FIMG image statistics and PDF text.
 
 Spark genuinely decodes the binary payloads inside mapInPandas; the oracle
 never sees a byte. `media_image_stats` recomputes every statistic from the
 FIMG pixel formula (pixel[i] = (seed + 7i) % 256) by unnesting range(n) per
-doc. `media_video_frames` recomputes each sampled frame's pixel sum from
-the flat-block formula its JPEG frames are built from, while Spark walks
-the AVI container and Huffman-decodes each kept frame (kernels/avi.py,
-kernels/jpeg.py). The `media_pdf_*` queries recompute each page's text
-from documents.text through the shared pagination contract (6 words per
-line, 4 lines per page), while Spark writes and parses genuine PDF bytes
+doc. The `media_pdf_*` queries recompute each page's text from
+documents.text through one shared pagination oracle (6 words per line, 4
+lines per page), while Spark writes and parses genuine PDF bytes
 (kernels/pdf.py). Agreement proves the decode path end to end, the same
 philosophy as the transcript extraction oracles."""
 
@@ -18,6 +14,31 @@ from __future__ import annotations
 from deepdoctection_spark.operators import multimodal as mm
 from deepdoctection_spark.plans.registry import register
 from deepdoctection_spark.plans.training_ops import _docs
+
+
+# The pagination closed form every `media_pdf_*` oracle shares: documents.text
+# split on single spaces, 6 words per line, 4 lines per page.
+_PDF_PAGES_ORACLE = """
+WITH w2 AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
+         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
+  FROM documents
+),
+lines AS (
+  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
+  FROM w2 GROUP BY doc_id, wi // 6
+)
+SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
+       string_agg(line, chr(10) ORDER BY li) AS page_text,
+       count(*)::INT AS n_lines,
+       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
+       NULL::VARCHAR AS error
+FROM lines GROUP BY doc_id, li // 4
+"""
+# The doc_id % 5 = 0 slice that q_media_pdf_texts_aes256 filters its docs to.
+_PDF_PAGES_ORACLE_AES256 = _PDF_PAGES_ORACLE.replace(
+    "FROM documents", "FROM documents WHERE doc_id % 5 = 0", 1
+)
 
 
 @register(
@@ -47,60 +68,7 @@ def q_media_image_stats(spark, sf_dir):
     return mm.image_stats(mm.synth_images(_docs(spark, sf_dir)))
 
 
-@register(
-    "media_video_frames",
-    """
-WITH dims AS (
-  SELECT doc_id AS media_id, (2 + doc_id % 3) AS bw, (2 + doc_id % 2) AS bh,
-         (2 + doc_id % 3) AS nf
-  FROM documents
-),
-frames AS (
-  SELECT media_id, bw, bh, fi FROM dims, unnest(range(nf)) AS t(fi)
-  WHERE fi % 2 = 0
-),
-blocks AS (
-  SELECT media_id, bw, bh, fi,
-         2 * (((media_id + 37 * fi) % 256 + 17 * b) % 128) AS v
-  FROM frames, unnest(range(bh * bw)) AS t2(b)
-)
-SELECT media_id, fi::INT AS frame_idx, (bw * 8)::INT AS width,
-       (bh * 8)::INT AS height, sum(64 * v)::BIGINT AS frame_sum
-FROM blocks GROUP BY media_id, fi, bw, bh
-""",
-)
-def q_media_video_frames(spark, sf_dir):
-    """REAL VIDEO path: Spark walks genuine RIFF/AVI containers
-    (kernels/avi.py), keeps every 2nd '00dc' chunk, and baseline-JPEG-decodes
-    each kept frame (kernels/jpeg.py) to a per-frame pixel checksum. The
-    flat-block even-delta frame construction keeps the lossy chain exactly
-    lossless, so the oracle recomputes every kept frame's sum from the block
-    formula while Spark does the full container walk + Huffman decode +
-    IDCT. Reference analogue: the opaque-media decode seam,
-    datapoint/convert.py:78-166."""
-    return mm.sample_frames_mjpeg(mm.synth_videos_mjpeg(_docs(spark, sf_dir)), every=2)
-
-
-@register(
-    "media_pdf_texts",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts(spark, sf_dir):
     """REAL PDF path, end to end: Spark writes genuine PDF bytes per doc
     (stdlib writer — FlateDecode streams, rotating Tj/TJ/' operators), then
@@ -111,26 +79,7 @@ def q_media_pdf_texts(spark, sf_dir):
     return mm.pdf_texts_stage(mm.synth_pdfs(_docs(spark, sf_dir)))
 
 
-@register(
-    "media_pdf_texts_objstm",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_objstm", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts_objstm(spark, sf_dir):
     """MODERN-PDF path (PDF 1.5 xref-stream layout): the payloads put the
     catalog/page-tree/page/font objects inside a FlateDecode /ObjStm with a
@@ -143,26 +92,7 @@ def q_media_pdf_texts_objstm(spark, sf_dir):
     )
 
 
-@register(
-    "media_pdf_texts_cid",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_cid", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts_cid(spark, sf_dir):
     """COMPOSITE-FONT path (Type0/Identity-H, CIDFontType2 descendant): the
     payloads show text as 2-byte subset-code hex strings under a first-
@@ -177,26 +107,7 @@ def q_media_pdf_texts_cid(spark, sf_dir):
     )
 
 
-@register(
-    "media_pdf_texts_encrypted",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_encrypted", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts_encrypted(spark, sf_dir):
     """ENCRYPTED-PDF path (standard security handler, RC4-128 /R 3, empty
     user password — the owner-locked shape most encrypted PDFs have): the
@@ -211,26 +122,7 @@ def q_media_pdf_texts_encrypted(spark, sf_dir):
     )
 
 
-@register(
-    "media_pdf_texts_aes",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_aes", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts_aes(spark, sf_dir):
     """AES-ENCRYPTED-PDF path (/V 4 /R 4 /AESV2 crypt filter — the modern
     default): the extractor derives the R4 file key, authenticates /U,
@@ -244,27 +136,7 @@ def q_media_pdf_texts_aes(spark, sf_dir):
     )
 
 
-@register(
-    "media_pdf_texts_aes256",
-    """
-WITH sel AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
-w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM sel
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_aes256", _PDF_PAGES_ORACLE_AES256)
 def q_media_pdf_texts_aes256(spark, sf_dir):
     """PDF 2.0 AES-256 path (/V 5 /R 6 /AESV3): the extractor authenticates
     the empty user password through the Algorithm 2.B hardening hash
@@ -281,26 +153,7 @@ def q_media_pdf_texts_aes256(spark, sf_dir):
     )
 
 
-@register(
-    "media_pdf_texts_incremental",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_incremental", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts_incremental(spark, sf_dir):
     """INCREMENTALLY-UPDATED PDFs (the interactive-editor save shape): the
     base file carries a DRAFT placeholder on page 0; an appended update
@@ -314,26 +167,7 @@ def q_media_pdf_texts_incremental(spark, sf_dir):
     )
 
 
-@register(
-    "media_pdf_texts_mixed",
-    """
-WITH w2 AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-         generate_subscripts(string_split(text, ' '), 1) - 1 AS wi
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, wi // 6 AS li, string_agg(word, ' ' ORDER BY wi) AS line
-  FROM w2 GROUP BY doc_id, wi // 6
-)
-SELECT doc_id AS media_id, (li // 4)::INT AS page_idx,
-       string_agg(line, chr(10) ORDER BY li) AS page_text,
-       count(*)::INT AS n_lines,
-       length(string_agg(line, chr(10) ORDER BY li))::BIGINT AS n_chars,
-       NULL::VARCHAR AS error
-FROM lines GROUP BY doc_id, li // 4
-""",
-)
+@register("media_pdf_texts_mixed", _PDF_PAGES_ORACLE)
 def q_media_pdf_texts_mixed(spark, sf_dir):
     """HETEROGENEOUS-CORPUS capstone: each document rotates through the
     real-world layout matrix by doc_id — classic xref, PDF 1.5 ObjStm,
