@@ -389,8 +389,6 @@ def pack_sequences(
 
 LINE_SEG_TOKENS = 8
 
-MIX_ALPHA_NOTE = "alpha = 0.5 (sqrt temperature), exact via IEEE sqrt"
-
 
 def line_dedup(docs: DataFrame, seg: int = LINE_SEG_TOKENS) -> DataFrame:
     """CCNet-style corpus-wide segment dedup: cut each document into

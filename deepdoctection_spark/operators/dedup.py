@@ -129,11 +129,6 @@ def shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame, num_perm: int = 8, k: int = 3) -> DataFrame:
-    """(doc_id, sig_0..sig_{n-1}): min over shingles of the j-th hash family."""
-    return _sets_with_signatures(docs, num_perm, k).drop("sh", "n_shingles")
-
-
 def _sets_with_signatures(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
     """(doc_id, sh, n_shingles, sig_0..sig_{n-1}) in ONE aggregation: the
     per-shingle hash families are computed on the FLAT exploded rows

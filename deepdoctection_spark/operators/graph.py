@@ -150,7 +150,6 @@ def hits(docs: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
 
 
 CC_BLOCK = 7
-CC_ITERS = 7
 
 
 def block_components(docs: DataFrame, block: int = CC_BLOCK) -> DataFrame:

@@ -196,69 +196,6 @@ def token_surprisal(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_bm25(docs: DataFrame, k1: float = 1.2, b: float = 0.75,
-               top_k: int = 5) -> DataFrame:
-    """Per-document top-k terms by BM25, with classic TF-IDF alongside — the
-    relevance/keyword-extraction primitive of a retrieval-augmented training
-    pipeline (reference analogue: the page-level text statistics surface,
-    datapoint/view.py Page properties).
-
-    Plan shape (all bounded, no all-pairs): explode → (doc, token) hash
-    aggregation (map-side combinable) → df/dl hash aggregations → two hash
-    joins (token, doc_id) + one broadcast of the 1-row corpus stats → per-doc
-    window for the top-k. At web scale the token join is the big shuffle and
-    it is an equi-join on the aggregated (not exploded) relation.
-
-    Determinism contract with the DuckDB oracle (same trick as
-    token_surprisal): each idf log is quantized to INTEGER micro-units
-    (floor(ln·1e6 + 0.5)) before any multiplication, so tf·idf is exact
-    integer math; the BM25 saturation factor is a single IEEE expression
-    evaluated on identical doubles in both engines, quantized to a long
-    BEFORE ranking so the rank comparison is integer-exact."""
-    toks = docs.select("doc_id", F.explode(_tokens()).alias("token"))
-    tf = toks.groupBy("doc_id", "token").agg(
-        F.count("*").cast("long").alias("tf"))
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-    dfreq = tf.groupBy("token").agg(F.count("*").cast("long").alias("df"))
-    stats = dl.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    q6 = lambda col: F.floor(col * 1000000 + F.lit(0.5)).cast("long")  # noqa: E731
-    scored = (
-        tf.join(dl, "doc_id")
-        .join(dfreq, "token")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id", "token", "tf", "df",
-            q6(F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0))).alias("idf6"),
-            q6(F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5))).alias("bidf6"),
-            (
-                (F.col("tf") * F.lit(k1 + 1.0))
-                / (F.col("tf")
-                   + F.lit(k1) * (F.lit(1.0 - b)
-                                  + F.lit(b) * F.col("dl") / F.col("avgdl")))
-            ).alias("sat"),
-        )
-        .select(
-            "doc_id", "token", "tf", "df",
-            ((F.col("tf") * F.col("idf6")) / 1000000.0).alias("tfidf"),
-            F.floor(F.col("bidf6") * F.col("sat") + F.lit(0.5))
-            .cast("long").alias("bm25_q6"),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.desc("bm25_q6"), "token")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= top_k)
-        .withColumn("bm25", F.col("bm25_q6") / 1000000.0)
-        .drop("bm25_q6")
-    )
-
-
 # Redaction patterns shared verbatim by the Spark column expressions and the
 # DuckDB oracle: Java regex and RE2 agree on this subset (char classes,
 # bounded repetition, \b word boundaries — no lookaround, no backrefs).

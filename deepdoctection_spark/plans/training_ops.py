@@ -1,7 +1,6 @@
 """Training-data pipeline operators registered with DuckDB oracles:
-dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), similarity search
-(brute-force cosine top-k / hyperplane-LSH ANN), text analysis (lang-id /
-quality / token counts / fingerprints).
+dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), brute-force cosine
+top-k, text analysis (lang-id / quality / token counts / fingerprints).
 
 Oracle philosophy: these operators ARE SQL-expressible, so the oracle is an
 independent serial re-implementation of the same algorithm in DuckDB —
@@ -14,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from deepdoctection_spark.operators import corpusprep, dedup, similarity, textstats
-from deepdoctection_spark.operators.similarity import ANN_NUM_PLANES, hyperplanes
 from deepdoctection_spark.operators.textstats import BPE_ISH_PATTERN, STOPWORDS
 from deepdoctection_spark.plans.registry import register
 
@@ -308,115 +306,6 @@ def q_knn(spark, sf_dir):
     )
 
 
-@register(
-    "mine_hard_negatives",
-    f"""
-WITH emb2 AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
-  FROM embeddings WHERE vec_id < 20
-),
-base AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
-         FROM emb2),
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 20),
-scored AS (
-  SELECT query_id, vec_id, round({_COS}, 5) AS cosine_sim
-  FROM q, base WHERE vec_id <> query_id
-)
-SELECT query_id, vec_id, cosine_sim, rank::INT AS rank FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM scored WHERE cosine_sim < 0.98
-) WHERE rank <= 5
-""",
-)
-def q_mine_hard_negatives(spark, sf_dir):
-    """Hard-negative mining with PLANTED duplicates: each query vector gets
-    an exact-direction copy (×2 scaling — cosine exactly 1.0) planted into
-    the corpus at vec_id+100000; the miner must exclude every planted copy
-    (rounded cosine ≥ 0.98) and return the informative below-band top-k
-    (operators/similarity.mine_hard_negatives)."""
-    embs = _embs(spark, sf_dir).select("vec_id", "embedding")
-    planted = embs.where(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: (x * F.lit(2.0)).cast("float")
-        ).alias("embedding"),
-    )
-    out = similarity.mine_hard_negatives(embs.unionByName(planted))
-    return out
-
-
-def _planes_sql() -> list[str]:
-    return [
-        "[" + ", ".join(f"{v}::DOUBLE" for v in plane) + "]"
-        for plane in hyperplanes()
-    ]
-
-
-def _ann_bucket_expr() -> str:
-    planes = _planes_sql()
-    return " + ".join(
-        f"(CASE WHEN list_dot_product(emb, {planes[p]}) > 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(ANN_NUM_PLANES)
-    )
-
-
-@register(
-    "ann_buckets",
-    f"""
-WITH {_EMB_BASE}
-SELECT vec_id, ({_ann_bucket_expr()})::INT AS bucket FROM base
-""",
-)
-def q_ann_buckets(spark, sf_dir):
-    return similarity.ann_buckets(_embs(spark, sf_dir))
-
-
-@register(
-    "ann_lsh_pairs",
-    f"""
-WITH {_EMB_BASE},
-wb AS (SELECT vec_id, emb, ({_ann_bucket_expr()})::INT AS bucket FROM base)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round(list_dot_product(a.emb, b.emb) /
-             (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-FROM wb a JOIN wb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round(list_dot_product(a.emb, b.emb) /
-            (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) >= 0.9
-""",
-)
-def q_ann_pairs(spark, sf_dir):
-    return similarity.ann_lsh_pairs(
-        _embs(spark, sf_dir), min_cosine=0.9
-    )
-
-
-# The driver's synthetic embeddings are near-orthogonal (max intra-bucket
-# cosine ≈ 0.47 at sf0.01), so the production 0.9-threshold config above is
-# correctness-checked against an EMPTY result — a weak value check. This
-# low-threshold config returns a non-empty pair set (23 rows at sf0.01) so
-# the bucket join + exact-cosine verification arithmetic is checked on real
-# values too.
-@register(
-    "ann_lsh_pairs_t03",
-    f"""
-WITH {_EMB_BASE},
-wb AS (SELECT vec_id, emb, ({_ann_bucket_expr()})::INT AS bucket FROM base)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round(list_dot_product(a.emb, b.emb) /
-             (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-FROM wb a JOIN wb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round(list_dot_product(a.emb, b.emb) /
-            (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) >= 0.3
-""",
-)
-def q_ann_pairs_t03(spark, sf_dir):
-    return similarity.ann_lsh_pairs(_embs(spark, sf_dir), min_cosine=0.3)
-
-
 # ---------------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------------
@@ -521,321 +410,6 @@ def q_fingerprints(spark, sf_dir):
     return textstats.fingerprints(_docs(spark, sf_dir))
 
 
-# ---------------------------------------------------------------------------
-# IVF ANN (inverted-file with sampled coarse quantizer)
-# ---------------------------------------------------------------------------
-
-_IVF_DIST = (
-    "round(list_dot_product(emb, emb) - 2 * list_dot_product(emb, cemb)"
-    " + list_dot_product(cemb, cemb), 6)"
-)
-_IVF_QDIST = (
-    "round(list_dot_product(qemb, qemb) - 2 * list_dot_product(qemb, cemb)"
-    " + list_dot_product(cemb, cemb), 6)"
-)
-
-_IVF_ASSIGN_CTE = f"""
-cents AS (SELECT vec_id AS cluster, emb AS cemb FROM base WHERE vec_id < {similarity.IVF_K}),
-scored AS (
-  SELECT b.vec_id, c.cluster, {_IVF_DIST} AS dist2
-  FROM base b, cents c
-),
-assign AS (
-  SELECT vec_id, cluster::INT AS cluster, dist2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cluster) AS rn
-    FROM scored
-  ) WHERE rn = 1
-)
-"""
-
-
-@register(
-    "semdedup_embed",
-    f"""
-WITH {_EMB_BASE},
-{_IVF_ASSIGN_CTE},
-j AS (
-  SELECT a.vec_id, a.cluster, b.emb FROM assign a JOIN base b USING (vec_id)
-),
-p AS (
-  SELECT x.vec_id,
-         round(list_dot_product(x.emb, y.emb) /
-               (sqrt(list_dot_product(x.emb, x.emb)) *
-                sqrt(list_dot_product(y.emb, y.emb))), 5) AS cos
-  FROM j x JOIN j y ON x.cluster = y.cluster AND x.vec_id > y.vec_id
-),
-d AS (
-  SELECT vec_id, count(*)::INT AS n_dups, max(cos) AS max_cos
-  FROM p WHERE cos >= {similarity.SEMDEDUP_TAU} GROUP BY vec_id
-)
-SELECT a.vec_id, a.cluster, d.vec_id IS NOT NULL AS is_dup,
-       coalesce(d.n_dups, 0)::INT AS n_dups, d.max_cos
-FROM assign a LEFT JOIN d USING (vec_id)
-""",
-)
-def q_semdedup_embed(spark, sf_dir):
-    """SemDeDup (embedding-cluster semantic near-dup pruning, Abbas et al.
-    2023): IVF-assign every vector to its coarse cluster, verify cosine ONLY
-    within clusters, keep-first by vec_id. One broadcast assign + one
-    cluster-keyed shuffle; per-cluster-bounded quadratic verify — the shape
-    that holds when k grows with corpus size at 100 TB."""
-    return similarity.semdedup(_embs(spark, sf_dir))
-
-
-@register(
-    "ann_ivf_assign",
-    f"""
-WITH {_EMB_BASE},
-{_IVF_ASSIGN_CTE}
-SELECT vec_id, cluster, dist2 FROM assign
-""",
-)
-def q_ann_ivf_assign(spark, sf_dir):
-    return similarity.ivf_assign(_embs(spark, sf_dir))
-
-
-@register(
-    "ann_ivf_search",
-    f"""
-WITH {_EMB_BASE},
-{_IVF_ASSIGN_CTE},
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 10),
-probed AS (
-  SELECT query_id, qemb, cluster FROM (
-    SELECT q.query_id, q.qemb, c.cluster, {_IVF_QDIST} AS qdist2,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {_IVF_QDIST}, c.cluster) AS rn
-    FROM q, cents c
-  ) WHERE rn <= {similarity.IVF_PROBES}
-),
-cand AS (
-  SELECT p.query_id, p.qemb, a.vec_id
-  FROM probed p JOIN assign a ON a.cluster = p.cluster
-  WHERE a.vec_id <> p.query_id
-),
-qscored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(c.qemb, b.emb) /
-               (sqrt(list_dot_product(c.qemb, c.qemb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-  FROM cand c JOIN base b ON b.vec_id = c.vec_id
-)
-SELECT query_id, vec_id, cosine_sim, rank::INT AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM qscored
-) WHERE rank <= 5
-""",
-)
-def q_ann_ivf_search(spark, sf_dir):
-    return similarity.ivf_search(_embs(spark, sf_dir), n_queries=10, k=5)
-
-
-def _ivf_lloyd_round(a: str, cents: str, next_cents: str) -> str:
-    """One Lloyd round as chained CTEs: assign `a` against `cents`, then
-    DECIMAL-mean member centroids into `next_cents` (cluster, cemb) with the
-    list ordered by dimension — mirrors similarity.train_ivf_centroids."""
-    return f"""
-{a} AS (
-  SELECT vec_id, cluster::INT AS cluster FROM (
-    SELECT b.vec_id, c.cluster,
-           row_number() OVER (PARTITION BY b.vec_id ORDER BY {_IVF_DIST}, c.cluster) AS rn
-    FROM base b, {cents} c
-  ) WHERE rn = 1
-),
-{next_cents} AS (
-  SELECT cluster, list(cv ORDER BY dim) AS cemb FROM (
-    SELECT a.cluster, (t.i - 1)::INT AS dim,
-           sum(b.emb[t.i]::DECIMAL(30,10))::DOUBLE / count(*) AS cv
-    FROM {a} a JOIN base b ON b.vec_id = a.vec_id,
-         unnest(range(1, len(b.emb) + 1)) AS t(i)
-    GROUP BY 1, 2
-  ) GROUP BY cluster
-)"""
-
-
-@register(
-    "ann_ivf_search_trained",
-    f"""
-WITH {_EMB_BASE},
-cents0 AS (SELECT vec_id AS cluster, emb AS cemb FROM base WHERE vec_id < {similarity.IVF_K}),
-{_ivf_lloyd_round("a0", "cents0", "cents1")},
-{_ivf_lloyd_round("a1", "cents1", "cents2")},
-a2 AS (
-  SELECT vec_id, cluster FROM (
-    SELECT b.vec_id, c.cluster,
-           row_number() OVER (PARTITION BY b.vec_id ORDER BY {_IVF_DIST}, c.cluster) AS rn
-    FROM base b, cents2 c
-  ) WHERE rn = 1
-),
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 10),
-probed AS (
-  SELECT query_id, qemb, cluster FROM (
-    SELECT q.query_id, q.qemb, c.cluster, {_IVF_QDIST} AS qdist2,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {_IVF_QDIST}, c.cluster) AS rn
-    FROM q, cents2 c
-  ) WHERE rn <= {similarity.IVF_PROBES}
-),
-cand AS (
-  SELECT p.query_id, p.qemb, a.vec_id
-  FROM probed p JOIN a2 a ON a.cluster = p.cluster
-  WHERE a.vec_id <> p.query_id
-),
-qscored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(c.qemb, b.emb) /
-               (sqrt(list_dot_product(c.qemb, c.qemb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-  FROM cand c JOIN base b ON b.vec_id = c.vec_id
-)
-SELECT query_id, vec_id, cosine_sim, rank::INT AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM qscored
-) WHERE rank <= 5
-""",
-)
-def q_ann_ivf_search_trained(spark, sf_dir):
-    """IVF search over the TRAINED coarse quantizer: two full Lloyd rounds
-    (driver-side loop, DECIMAL-accumulated means) feed ivf_search — closing
-    the r2 gap where the trained step existed but search probed the seed.
-    The oracle chains the identical rounds as CTEs."""
-    embs = _embs(spark, sf_dir)
-    cents = similarity.train_ivf_centroids(embs, rounds=2)
-    return similarity.ivf_search(embs, n_queries=10, k=5, centroids=cents)
-
-
-@register(
-    "ann_ivf_search_repl",
-    f"""
-WITH {_EMB_BASE},
-cents AS (SELECT vec_id AS cluster, emb AS cemb FROM base WHERE vec_id < 32),
-assign AS (
-  SELECT vec_id, cluster::INT AS cluster FROM (
-    SELECT b.vec_id, c.cluster,
-           row_number() OVER (PARTITION BY b.vec_id ORDER BY {_IVF_DIST}, c.cluster) AS rn
-    FROM base b, cents c
-  ) WHERE rn <= 2
-),
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 10),
-probed AS (
-  SELECT query_id, qemb, cluster FROM (
-    SELECT q.query_id, q.qemb, c.cluster, {_IVF_QDIST} AS qdist2,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {_IVF_QDIST}, c.cluster) AS rn
-    FROM q, cents c
-  ) WHERE rn <= 4
-),
-cand AS (
-  SELECT DISTINCT p.query_id, p.qemb, a.vec_id
-  FROM probed p JOIN assign a ON a.cluster = p.cluster
-  WHERE a.vec_id <> p.query_id
-),
-qscored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(c.qemb, b.emb) /
-               (sqrt(list_dot_product(c.qemb, c.qemb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-  FROM cand c JOIN base b ON b.vec_id = c.vec_id
-)
-SELECT query_id, vec_id, cosine_sim, rank::INT AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM qscored
-) WHERE rank <= 5
-""",
-)
-def q_ann_ivf_search_repl(spark, sf_dir):
-    """The RECALL-GRADE IVF configuration (scripts/ivf_recall.py's measured
-    winner): finer quantization (32 lists) probed 4-deep over a repl=2
-    multi-assigned index — every vector lives in its TWO nearest inverted
-    lists (FAISS multi-assignment / ScaNN spilling), so boundary-straddling
-    neighbors are reachable at the SAME ~25% scan fraction as the 8-list
-    2-probe baseline, lifting measured recall@5 0.52 → 0.84. Candidates
-    reached through two probed lists dedup before scoring (the DISTINCT in
-    the oracle's cand CTE = the dropDuplicates in ivf_search)."""
-    return similarity.ivf_search(
-        _embs(spark, sf_dir), n_queries=10, k=5, probes=4, n_clusters=32,
-        repl=2)
-
-
-@register(
-    "ann_ivf_search_pruned",
-    f"""
-WITH {_EMB_BASE},
-{_IVF_ASSIGN_CTE},
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 4),
-probed AS (
-  SELECT query_id, qemb, cluster FROM (
-    SELECT q.query_id, q.qemb, c.cluster, {_IVF_QDIST} AS qdist2,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY {_IVF_QDIST}, c.cluster) AS rn
-    FROM q, cents c
-  ) WHERE rn <= {similarity.IVF_PROBES}
-),
-cand AS (
-  SELECT p.query_id, p.qemb, a.vec_id
-  FROM probed p JOIN assign a ON a.cluster = p.cluster
-  WHERE a.vec_id <> p.query_id
-),
-qscored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(c.qemb, b.emb) /
-               (sqrt(list_dot_product(c.qemb, c.qemb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-  FROM cand c JOIN base b ON b.vec_id = c.vec_id
-)
-SELECT query_id, vec_id, cosine_sim, rank::INT AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM qscored
-) WHERE rank <= 5
-""",
-)
-def q_ann_ivf_search_pruned(spark, sf_dir):
-    """IVF search with PHYSICAL probe pruning (the round-3 open claim at
-    similarity.py ivf_search: 'partition the corpus by cluster on write and
-    the pruning is physical' — now demonstrated, not asserted): the corpus
-    is written as an IceTable identity-partitioned by cluster
-    (ivf_build_index), the probed cluster set becomes a ("cluster","in",…)
-    scan predicate, and plan_files drops non-probed partitions' files before
-    Spark opens anything. The query RAISES unless at least one file was
-    pruned and at least one cluster was left unprobed, so this oracle row
-    being green certifies the pruning itself, while the oracle — identical
-    SQL to ann_ivf_search (over 4 queries) — certifies that physical
-    pruning changed the I/O and nothing else."""
-    import shutil
-    import tempfile
-
-    embs = _embs(spark, sf_dir)
-    cents = similarity.ivf_centroids(embs)  # sampled seed = oracle's cents CTE
-    queries = embs.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"),
-        similarity.as_double(F.col("embedding")).alias("qemb"),
-    )
-    tmp = tempfile.mkdtemp(prefix="ddspark_ivf_idx_")
-    try:
-        table = similarity.ivf_build_index(embs, f"{tmp}/ivf", centroids=cents)
-        stats: dict = {}
-        out = similarity.ivf_search_pruned(
-            table, queries, k=5, centroids=cents, stats=stats
-        ).localCheckpoint(eager=True)
-        if stats["pruned_files"] == 0 or stats["probed_clusters"] >= similarity.IVF_K:
-            raise RuntimeError(f"physical pruning did not engage: {stats}")
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@register(
-    "ann_ivf_kmeans_step",
-    f"""
-WITH {_EMB_BASE},
-{_IVF_ASSIGN_CTE},
-dims AS (
-  SELECT a.cluster, (t.i - 1)::INT AS dim, b.emb[t.i] AS val
-  FROM assign a JOIN base b ON b.vec_id = a.vec_id,
-       unnest(range(1, len(b.emb) + 1)) AS t(i)
-)
-SELECT cluster, dim,
-       sum(val::DECIMAL(30,10))::DOUBLE / count(*) AS centroid_val,
-       count(*)::BIGINT AS n_members
-FROM dims GROUP BY 1, 2
-""",
-)
-def q_ann_ivf_kmeans_step(spark, sf_dir):
-    return similarity.ivf_kmeans_step(_embs(spark, sf_dir))
-
-
 @register(
     "doc_rolling_hash",
     f"""
@@ -851,48 +425,6 @@ FROM documents
 )
 def q_rolling_hash(spark, sf_dir):
     return textstats.rolling_hash(_docs(spark, sf_dir))
-
-
-@register(
-    "dedup_embedding_cosine",
-    f"""
-WITH {_EMB_BASE},
-wb AS (SELECT vec_id, emb, ({_ann_bucket_expr()})::INT AS bucket FROM base),
-pairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         round(list_dot_product(a.emb, b.emb) /
-               (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 5) AS cosine_sim
-  FROM wb a JOIN wb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT p.vec_a AS doc_a, p.vec_b AS doc_b, p.cosine_sim,
-       da.source AS source_a, db.source AS source_b
-FROM pairs p
-JOIN documents da ON da.doc_id = p.vec_a
-JOIN documents db ON db.doc_id = p.vec_b
-WHERE p.cosine_sim >= 0.9
-""",
-)
-def q_dedup_embedding_cosine(spark, sf_dir):
-    """Embedding-cosine near-duplicate detection over the documents table:
-    hyperplane-LSH candidate buckets, exact-cosine verification, joined back
-    to document metadata (vec_id ≡ doc_id in the driver's testdata). The
-    per-document embedding join is the only addition over ann_lsh_pairs —
-    at corpus scale both sides hash-join on the doc key."""
-    from pyspark.sql import functions as F
-
-    pairs = similarity.ann_lsh_pairs(_embs(spark, sf_dir), min_cosine=0.9)
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    return (
-        pairs.join(docs.alias("da"), pairs["vec_a"] == F.col("da.doc_id"))
-        .join(docs.alias("db"), pairs["vec_b"] == F.col("db.doc_id"))
-        .select(
-            pairs["vec_a"].alias("doc_a"),
-            pairs["vec_b"].alias("doc_b"),
-            "cosine_sim",
-            F.col("da.source").alias("source_a"),
-            F.col("db.source").alias("source_b"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -991,56 +523,6 @@ def q_quality_surprisal(spark, sf_dir):
     itself. Per-token values are integer-quantized before summation so the
     Spark and DuckDB sums are exact and order-independent."""
     return textstats.token_surprisal(_docs(spark, sf_dir))
-
-
-@register(
-    "tfidf_bm25_terms",
-    f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS token FROM documents
-),
-tf AS (
-  SELECT doc_id, token, count(*)::BIGINT AS tf FROM toks
-  WHERE length(token) > 0 GROUP BY doc_id, token
-),
-dl AS (SELECT doc_id, sum(tf)::BIGINT AS dl FROM tf GROUP BY doc_id),
-dfr AS (SELECT token, count(*)::BIGINT AS df FROM tf GROUP BY token),
-st AS (SELECT count(*)::BIGINT AS n_docs,
-              (sum(dl)::DOUBLE / count(*)) AS avgdl FROM dl),
-sc AS (
-  SELECT t.doc_id, t.token, t.tf, dfr.df,
-         floor(ln((st.n_docs + 1.0::DOUBLE) / (dfr.df + 1.0::DOUBLE))
-               * 1000000 + 0.5::DOUBLE)::BIGINT AS idf6,
-         floor(ln(1.0::DOUBLE + (st.n_docs - dfr.df + 0.5::DOUBLE)
-                  / (dfr.df + 0.5::DOUBLE))
-               * 1000000 + 0.5::DOUBLE)::BIGINT AS bidf6,
-         (t.tf * (1.2::DOUBLE + 1.0::DOUBLE))
-           / (t.tf + 1.2::DOUBLE
-                * (0.25::DOUBLE + 0.75::DOUBLE * d.dl / st.avgdl)) AS sat
-  FROM tf t JOIN dl d USING (doc_id) JOIN dfr USING (token) CROSS JOIN st
-),
-r AS (
-  SELECT doc_id, token, tf, df,
-         (tf * idf6) / 1000000.0::DOUBLE AS tfidf,
-         floor(bidf6 * sat + 0.5::DOUBLE)::BIGINT AS bm25q
-  FROM sc
-),
-ranked AS (
-  SELECT doc_id, token, tf, df, tfidf,
-         (row_number() OVER (PARTITION BY doc_id
-                             ORDER BY bm25q DESC, token))::INT AS rank,
-         bm25q / 1000000.0::DOUBLE AS bm25
-  FROM r
-)
-SELECT * FROM ranked WHERE rank <= 5
-""",
-)
-def q_tfidf_bm25(spark, sf_dir):
-    """Per-document top-5 terms by BM25 (k1=1.2, b=0.75) with classic TF-IDF
-    alongside — keyword extraction / retrieval scoring over the corpus. The
-    idf logs are integer-quantized before any multiplication (the
-    token_surprisal determinism contract) so ranking compares exact longs."""
-    return textstats.tfidf_bm25(_docs(spark, sf_dir), top_k=5)
 
 
 @register(
@@ -1667,89 +1149,6 @@ def q_dedup_exact_substr(spark, sf_dir):
     return corpusprep.exact_substr_spans(_docs(spark, sf_dir))
 
 
-_PQ_SUB_CTES = f"""
-cb AS (
-  SELECT j::INT AS m, vec_id::INT AS code,
-         emb[j * {similarity.PQ_SUBDIM} + 1 : j * {similarity.PQ_SUBDIM} + {similarity.PQ_SUBDIM}] AS cemb
-  FROM base, unnest(range(0, {similarity.PQ_M})) AS t(j)
-  WHERE vec_id < {similarity.PQ_KS}
-),
-subs AS (
-  SELECT vec_id, j::INT AS m,
-         emb[j * {similarity.PQ_SUBDIM} + 1 : j * {similarity.PQ_SUBDIM} + {similarity.PQ_SUBDIM}] AS semb
-  FROM base, unnest(range(0, {similarity.PQ_M})) AS t(j)
-),
-scored AS (
-  SELECT s.vec_id, s.m, c.code,
-         floor((list_dot_product(semb, semb) - 2 * list_dot_product(semb, cemb)
-                + list_dot_product(cemb, cemb)) * 1000000 + 0.5)::BIGINT AS d2_micro
-  FROM subs s JOIN cb c USING (m)
-),
-best AS (
-  SELECT vec_id, m, code, d2_micro FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2_micro, code) AS rn
-    FROM scored
-  ) WHERE rn = 1
-)"""
-
-
-@register(
-    "ann_pq_codes",
-    f"""
-WITH {_EMB_BASE},
-{_PQ_SUB_CTES}
-SELECT vec_id, array_to_string(list(code ORDER BY m), ',') AS codes_csv,
-       sum(d2_micro)::BIGINT AS err_micro
-FROM best GROUP BY vec_id
-""",
-)
-def q_ann_pq_codes(spark, sf_dir):
-    """PQ encode (Jégou et al. 2011): per-subspace argmin codebook entry,
-    sub-distances quantized to integer micro-units BEFORE the error sum so
-    both engines aggregate exact integers. Codes emitted as a csv string
-    (deterministic m-order) for the value-hash compare."""
-    enc = similarity.pq_encode(_embs(spark, sf_dir))
-    return enc.select(
-        "vec_id",
-        F.array_join(F.transform("codes", lambda c: c.cast("string")), ",").alias(
-            "codes_csv"
-        ),
-        "err_micro",
-    )
-
-
-@register(
-    "ann_pq_search_adc",
-    f"""
-WITH {_EMB_BASE},
-{_PQ_SUB_CTES},
-q AS (SELECT vec_id AS query_id, m, semb AS qsemb FROM subs WHERE vec_id < 10),
-lut AS (
-  SELECT query_id, m, code,
-         floor((list_dot_product(qsemb, qsemb) - 2 * list_dot_product(qsemb, cemb)
-                + list_dot_product(cemb, cemb)) * 1000000 + 0.5)::BIGINT AS d2_micro
-  FROM q JOIN cb USING (m)
-),
-adc AS (
-  SELECT l.query_id, b.vec_id, sum(l.d2_micro)::BIGINT AS adc_micro
-  FROM best b JOIN lut l ON l.m = b.m AND l.code = b.code
-  WHERE b.vec_id <> l.query_id
-  GROUP BY 1, 2
-)
-SELECT query_id, vec_id, adc_micro, rank FROM (
-  SELECT *, (row_number() OVER (PARTITION BY query_id ORDER BY adc_micro, vec_id))::INT AS rank
-  FROM adc
-) WHERE rank <= 5
-""",
-)
-def q_ann_pq_search(spark, sf_dir):
-    """ADC top-k over PQ codes: per-query LUT of sub-distances to every
-    codebook entry (model-sized, broadcast), database vectors scored by
-    summing m integer LUT lookups selected by their codes — the corpus side
-    travels as 8 small ints per vector, never the raw 64-dim embedding."""
-    return similarity.pq_search_adc(_embs(spark, sf_dir), n_queries=10, k=5)
-
-
 # ---------------------------------------------------------------------------
 # incremental dedup: new batch vs indexed corpus
 # ---------------------------------------------------------------------------
@@ -1855,69 +1254,6 @@ def q_dedup_incremental(spark, sf_dir):
     return dedup.incremental_minhash_dedup(
         corpus, inc, num_perm=8, bands=4, k=3, threshold=0.8
     )
-
-
-# ---------------------------------------------------------------------------
-# ranking-quality evaluation: ANN-vs-exact retrieval agreement
-# ---------------------------------------------------------------------------
-
-
-def _rank_metrics_oracle(k: int = 5) -> str:
-    from deepdoctection_spark.operators.rankeval import dcg_weights
-
-    w = dcg_weights(k)
-    idcg = sum(w)
-    wt_rows = ", ".join(f"({i + 1}, {x})" for i, x in enumerate(w))
-    return f"""
-WITH {_EMB_BASE},
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 20),
-scored AS (
-  SELECT query_id, vec_id, round({_COS}, 5) AS s5, round({_COS}, 2) AS s2
-  FROM q, base WHERE vec_id <> query_id
-),
-truth AS (
-  SELECT query_id, vec_id, rank FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY s5 DESC, vec_id) AS rank
-    FROM scored) WHERE rank <= {k}
-),
-sys AS (
-  SELECT query_id, vec_id, rank FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY s2 DESC, vec_id) AS rank
-    FROM scored) WHERE rank <= {k}
-),
-wt(rank, w) AS (VALUES {wt_rows}),
-hits AS (
-  SELECT s.query_id, s.rank, w
-  FROM sys s JOIN truth t USING (query_id, vec_id) JOIN wt ON wt.rank = s.rank
-),
-perq AS (
-  SELECT query_id, count(*)::BIGINT AS n_hits, min(rank) AS first_rank,
-         sum(w)::BIGINT AS dcg
-  FROM hits GROUP BY query_id
-)
-SELECT t.query_id, coalesce(n_hits, 0)::BIGINT AS n_hits,
-       (coalesce(n_hits, 0) * 1000000 // {k})::BIGINT AS recall_micro,
-       coalesce(1000000 // first_rank, 0)::BIGINT AS mrr_micro,
-       (coalesce(dcg, 0) * 1000000 // {idcg})::BIGINT AS ndcg_micro
-FROM (SELECT DISTINCT query_id FROM truth) t LEFT JOIN perq USING (query_id)
-"""
-
-
-@register("eval_rank_metrics", _rank_metrics_oracle())
-def q_eval_rank_metrics(spark, sf_dir):
-    """Recall@5 / MRR / nDCG of a degraded ranker (cosine quantized to 2
-    decimals — controlled rank scrambling) against the exact kNN ground
-    truth, in integer micro-units with a precomputed discount table so no
-    engine evaluates a float log (operators/rankeval.py). The same operator
-    evaluates the IVF / PQ / LSH ANN paths offline."""
-    from deepdoctection_spark.operators import rankeval
-
-    embs = _embs(spark, sf_dir)
-    truth = similarity.knn_bruteforce(embs, n_queries=20, k=5, round_to=5)
-    system = similarity.knn_bruteforce(embs, n_queries=20, k=5, round_to=2)
-    return rankeval.rank_metrics(system, truth, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -2128,118 +1464,6 @@ def q_quality_c4_rules(spark, sf_dir):
     codegen map (operators/textstats.c4_rules); every flag exercises both
     branches (see _C4_PAGES_CTE)."""
     return textstats.c4_rules(_c4_pages(_docs(spark, sf_dir)))
-
-
-# ---------------------------------------------------------------------------
-# query-time retrieval: boolean AND, phrase match, BM25 top-k search
-# ---------------------------------------------------------------------------
-
-from deepdoctection_spark.operators import retrieval  # noqa: E402
-
-# Shared postings + deterministic query-term CTEs (df-rank band 10.. below the
-# stopword head; min_df=2 bounds the rank window exactly like the Spark side).
-_POSTINGS_CTE = f"""
-toks AS (
-  SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS token FROM documents
-),
-tok AS (SELECT doc_id, token FROM toks WHERE length(token) > 0),
-tf AS (SELECT doc_id, token, count(*)::BIGINT AS tf FROM tok GROUP BY doc_id, token),
-dfr AS (SELECT token, count(*)::BIGINT AS df FROM tf GROUP BY token)
-"""
-
-
-def _qt_cte(start_rank: int, n_terms: int) -> str:
-    return f"""
-qt AS (
-  SELECT token, df FROM (
-    SELECT token, df, row_number() OVER (ORDER BY df DESC, token) AS r
-    FROM dfr WHERE df >= 2
-  ) WHERE r BETWEEN {start_rank} AND {start_rank + n_terms - 1}
-)"""
-
-
-@register(
-    "search_boolean_and",
-    f"""
-WITH {_POSTINGS_CTE}, {_qt_cte(10, 3)}
-SELECT t.doc_id, sum(t.tf)::BIGINT AS total_tf
-FROM tf t JOIN qt USING (token)
-GROUP BY t.doc_id HAVING count(*) = 3
-""",
-)
-def q_search_boolean_and(spark, sf_dir):
-    """Conjunctive boolean retrieval: documents containing ALL three query
-    terms (df-ranks 10-12). The query-term table is broadcast, so the corpus
-    side is a map-side hash probe + one per-doc aggregation — the inverted-
-    index AND scan shape at 100 TB."""
-    return retrieval.boolean_and_search(_docs(spark, sf_dir), 10, 3)
-
-
-@register(
-    "search_phrase_match",
-    f"""
-WITH toks AS (SELECT doc_id, string_split({_NORM}, ' ') AS ws FROM documents),
-bg AS (
-  SELECT doc_id, i::INT AS pos, ws[i] || ' ' || ws[i+1] AS bg
-  FROM toks, unnest(range(1, len(ws))) AS t(i)
-  WHERE len(ws) >= 2 AND length(ws[1]) > 0
-),
-win AS (
-  SELECT bg FROM (SELECT bg, count(*) AS n FROM bg GROUP BY bg)
-  ORDER BY n DESC, bg LIMIT 1
-)
-SELECT b.doc_id, min(b.bg) AS phrase, count(*)::INT AS n_matches,
-       min(b.pos)::INT AS first_pos
-FROM bg b JOIN win USING (bg)
-GROUP BY b.doc_id
-""",
-)
-def q_search_phrase_match(spark, sf_dir):
-    """Exact-phrase retrieval for the corpus's modal bigram: per matching doc
-    the occurrence count and first 1-based token position. Bigram formation
-    is row-local (token array zipped with its own tail — no positional
-    self-join); the elected 1-row phrase is broadcast."""
-    return retrieval.phrase_search(_docs(spark, sf_dir))
-
-
-@register(
-    "search_bm25_ranked",
-    f"""
-WITH {_POSTINGS_CTE}, {_qt_cte(10, 5)},
-dl AS (SELECT doc_id, sum(tf)::BIGINT AS dl FROM tf GROUP BY doc_id),
-st AS (SELECT count(*)::BIGINT AS n_docs,
-              (sum(dl)::DOUBLE / count(*)) AS avgdl FROM dl),
-sc AS (
-  SELECT t.doc_id,
-         floor(ln(1.0::DOUBLE + (st.n_docs - q.df + 0.5::DOUBLE)
-                  / (q.df + 0.5::DOUBLE))
-               * 1000000 + 0.5::DOUBLE)::BIGINT AS bidf6,
-         (t.tf * (1.2::DOUBLE + 1.0::DOUBLE))
-           / (t.tf + 1.2::DOUBLE
-                * (0.25::DOUBLE + 0.75::DOUBLE * d.dl / st.avgdl)) AS sat
-  FROM tf t JOIN qt q USING (token) JOIN dl d USING (doc_id) CROSS JOIN st
-),
-agg AS (
-  SELECT doc_id, count(*)::INT AS n_terms_hit,
-         sum(floor(bidf6 * sat + 0.5::DOUBLE)::BIGINT)::BIGINT AS s6
-  FROM sc GROUP BY doc_id
-),
-ranked AS (
-  SELECT doc_id, n_terms_hit, s6 / 1000000.0::DOUBLE AS bm25,
-         (row_number() OVER (ORDER BY s6 DESC, doc_id))::INT AS rank
-  FROM agg
-)
-SELECT * FROM ranked WHERE rank <= 20
-""",
-)
-def q_search_bm25_ranked(spark, sf_dir):
-    """BM25-ranked top-20 retrieval for the five df-rank-10..14 query terms
-    (k1=1.2, b=0.75). Per-term idf logs are integer-quantized before the
-    saturation multiply (the token_surprisal determinism contract), so the
-    per-doc sums and the global ranking compare exact longs vs the oracle.
-    Plan: postings ⋈ broadcast(terms) ⋈ doc-length → per-doc sum → one
-    bounded top-k window over the hit set only."""
-    return retrieval.bm25_query_search(_docs(spark, sf_dir), 10, 5, 20)
 
 
 _LUHN_SQL = """
@@ -2485,54 +1709,6 @@ def q_extract_markdown_tables(spark, sf_dir):
     return markdown_tables(docs.select("doc_id", md.alias("text")))
 
 
-@register(
-    "embed_quantize_int8",
-    """
-WITH x AS (
-  SELECT vec_id,
-         list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xd
-  FROM embeddings
-),
-s AS (
-  SELECT vec_id, xd,
-         floor(list_max(list_transform(xd, v -> abs(v))) * 1e6)::BIGINT
-           AS amax_q6,
-         list_max(list_transform(xd, v -> abs(v))) AS amax
-  FROM x
-),
-c AS (
-  SELECT vec_id, xd, amax_q6,
-         list_transform(xd, v -> floor(v * 127.0
-           / CASE WHEN amax > 0 THEN amax ELSE 1.0 END + 0.5)::INT)
-           AS codes
-  FROM s
-),
-r AS (
-  SELECT vec_id, amax_q6, codes,
-         list_transform(range(1, len(codes) + 1),
-           i -> abs(floor(xd[i] * 1e6)::BIGINT
-                    - floor(codes[i]::DOUBLE * amax_q6 / 127.0)::BIGINT))
-           AS errs
-  FROM c
-)
-SELECT vec_id, len(codes)::INT AS n_dims, amax_q6,
-       list_max(list_transform(codes, cc -> abs(cc)))::INT AS max_abs_code,
-       list_sum(codes)::BIGINT AS sum_codes,
-       md5(array_to_string(codes, ',')) AS codes_md5,
-       list_sum(errs)::BIGINT AS err_abs_q6
-FROM r
-""",
-)
-def q_embed_quantize_int8(spark, sf_dir):
-    """Per-vector absmax int8 quantization of the embedding corpus with a
-    pure-integer reconstruction-error audit — 4× storage cut feeding the
-    ADC/IVF paths; the oracle replays scale, rounding and the error fold
-    element-for-element (operators/similarity.quantize_int8)."""
-    from deepdoctection_spark.operators.similarity import quantize_int8
-
-    return quantize_int8(_embs(spark, sf_dir))
-
-
 def _cluster_longest_oracle() -> str:
     return f"""
 WITH cl AS ({_cluster_oracle()}),
@@ -2567,65 +1743,6 @@ def q_dedup_cluster_keep_longest(spark, sf_dir):
     pairs = dedup.minhash_lsh_pairs(docs, num_perm=8, bands=4, k=3,
                                     threshold=0.8)
     return cluster_select_longest(docs, dup_clusters(docs, pairs))
-
-
-@register(
-    "knn_int8_search",
-    """
-WITH x AS (
-  SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xd
-  FROM embeddings
-),
-s AS (
-  SELECT vec_id, xd,
-         list_max(list_transform(xd, v -> abs(v))) AS amax
-  FROM x
-),
-c AS (
-  SELECT vec_id,
-         list_transform(xd, v -> floor(v * 127.0
-           / CASE WHEN amax > 0 THEN amax ELSE 1.0 END + 0.5)::BIGINT)
-           AS codes
-  FROM s
-),
-q AS (
-  SELECT vec_id AS query_id,
-         list_transform(xd, v -> floor(v * 1000.0 + 0.5)::BIGINT) AS qq
-  FROM x WHERE vec_id < 20
-),
-sc AS (
-  SELECT q.query_id, c.vec_id,
-    list_sum(list_transform(range(1, len(codes) + 1),
-                            i -> qq[i] * codes[i]))::BIGINT AS num,
-    list_sum(list_transform(qq, v -> v * v))::BIGINT AS nq,
-    list_sum(list_transform(codes, v -> v * v))::BIGINT AS nc
-  FROM c, q WHERE c.vec_id <> q.query_id
-),
-r AS (
-  SELECT query_id, vec_id,
-         CASE WHEN nq * nc = 0 THEN 0
-              ELSE floor(num / sqrt((nq * nc)::DOUBLE) * 1e8 + 0.5)
-         END::BIGINT AS cos_q8
-  FROM sc
-),
-rk AS (
-  SELECT query_id, vec_id, cos_q8,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_q8 DESC, vec_id)::INT AS rank
-  FROM r
-)
-SELECT query_id, vec_id, cos_q8, rank FROM rk WHERE rank <= 5
-""",
-)
-def q_knn_int8_search(spark, sf_dir):
-    """Top-5 cosine neighbors over the int8-quantized corpus: the search
-    path that consumes quantize_int8's codes — 4× less corpus scan than
-    float32, amax cancels out of the scale-invariant score, and the one
-    float step (sqrt+divide on exact BIGINTs) is bit-identical across
-    engines (operators/similarity.knn_int8)."""
-    from deepdoctection_spark.operators.similarity import knn_int8
-
-    return knn_int8(_embs(spark, sf_dir))
 
 
 @register(

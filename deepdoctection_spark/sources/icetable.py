@@ -269,9 +269,6 @@ def _split_ddl(ddl: str) -> dict[str, str]:
     return cols
 
 
-_PRED_OPS = ("=", "<", "<=", ">", ">=")
-
-
 def _pred_column(col: str, op: str, lit):
     """Predicate as a Column expression — never SQL-string splicing, so
     quote-bearing string literals and reserved-word columns are safe."""

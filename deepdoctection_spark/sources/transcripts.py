@@ -105,10 +105,6 @@ EXPECTED_CELLS: list[tuple[int, int, list[Lit]]] = [
     (2, 2, [("lit", "r1c1 ©")]),
 ]
 
-TOOL_OF_MOD = {0: "", 1: "browser", 2: "pdf_reader"}
-ROLE_OF_MOD = {0: "user", 1: "assistant", 2: "tool"}
-
-
 # ---------------------------------------------------------------------------
 # Spark rendering
 # ---------------------------------------------------------------------------

@@ -4,8 +4,8 @@ scanned for the anti-patterns that silently die at 100 TB — CartesianProduct
 (quadratic row blowup) and BatchEvalPython (row-at-a-time Python UDFs in the
 hot path). BroadcastNestedLoopJoin is reported but allowed ONLY for the
 whitelisted queries that intentionally broadcast a model/grid-sized side
-(IVF centroids k x dim, kNN query vectors, the COCO threshold grid, the
-corpus-surprisal vocab, the rel_repeated replication range).
+(kNN query vectors, the COCO threshold grid, the corpus-surprisal vocab,
+the rel_repeated replication range).
 
     python scripts/plan_audit.py [--sf-dir /root/testdata/sf0.001]
 
@@ -24,27 +24,18 @@ sys.path.insert(0, str(REPO))
 
 # broadcasts of model-sized sides (bounded by k, not by data volume)
 BNLJ_WHITELIST = {
-    "ann_ivf_assign", "ann_ivf_kmeans_step", "ann_ivf_search",
-    "ann_ivf_search_trained", "ann_ivf_search_pruned",
-    "ann_ivf_search_repl",  # same k-centroid broadcast as the ivf family
-    "semdedup_embed",  # IVF coarse-assign: k-centroid broadcast (PLANS.md)
-    "eval_coco_map", "knn_bruteforce", "mine_hard_negatives",
-    "quality_surprisal", "rel_repeated",
-    "tfidf_bm25_terms",  # 1-row corpus stats (n_docs, avgdl) broadcast
+    "eval_coco_map", "knn_bruteforce", "quality_surprisal", "rel_repeated",
     "mixture_weights",  # two 1-row global-total broadcasts (token + weight sums)
     "quality_perplexity_bigram",  # 1-row vocab-size broadcast (add-one smoothing V)
     "classify_nb_lang",  # 1-row smoothing constants (V, per-class totals)
     "graph_triangles",  # 1-row node-count broadcast building the ring edges
     "sketch_hdr_quantiles",  # 3-row percentile grid × tiny bucket table
-    "eval_rank_metrics",  # knn_bruteforce × 2: same 20-query-vector broadcast
     "data_expectations",  # four 1-row aggregate relations scalar-combined
-    "search_bm25_ranked",  # 1-row corpus stats (n_docs, avgdl) broadcast
     "sketch_kmv_setops",  # 1-row union-sketch summary × 1-row membership agg
     # embeds mixture_weights' whitelisted 1-row global-total broadcasts on
     # its (sources-sized) weights side; the schedule join itself is a
     # broadcast hash equi-join on source
     "loader_mixture_schedule",
-    "knn_int8_search",  # knn_bruteforce's 20-query-vector broadcast
     # 1-row corpus-total aggregate scalar-combined into each card row —
     # the data_expectations pattern
     "corpus_release_manifest",

@@ -102,24 +102,6 @@ def test_pii_scrub_redacts_everything(spark):
         assert r["n_ips_left"] == 0
 
 
-def test_tfidf_bm25_rank_contract(spark):
-    """Per doc: ranks are 1..k dense, bm25 non-increasing in rank, and a
-    token appearing in every document scores a lower bm25 than a rarer
-    token with the same tf (idf monotonicity)."""
-    from deepdoctection_spark.operators.textstats import tfidf_bm25
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rows = tfidf_bm25(docs, top_k=5).collect()
-    per_doc: dict[int, list] = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append(r)
-    for doc, rs in per_doc.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        assert all(a["bm25"] >= b["bm25"] for a, b in zip(rs, rs[1:]))
-        assert all(r["tfidf"] >= 0.0 and r["df"] >= 1 for r in rs)
-
-
 def test_decontaminate_flags_bench_sources(spark):
     """Benchmark-source docs (doc_id %% 37 == 0) contain their own snippet, so
     they must be contaminated; counts are consistent and bounded."""
@@ -548,55 +530,6 @@ def test_bpe_encode_corpus_matches_python_reference(spark):
         assert exp_tokens <= sum(len(w) for w in valid)
 
 
-def test_semdedup_matches_bruteforce_within_clusters(spark):
-    """semdedup's keep-first dup flags equal a brute-force python replay:
-    same coarse assignment (nearest of the first-k seed centroids), same
-    within-cluster cosine threshold, dup iff ANY lower-id neighbor >= tau."""
-    import numpy as np
-
-    from deepdoctection_spark.operators.similarity import (
-        IVF_K,
-        SEMDEDUP_TAU,
-        semdedup,
-    )
-
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = {r["vec_id"]: r for r in semdedup(embs).collect()}
-
-    rows = embs.select("vec_id", "embedding").collect()
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
-    cents = {vid: vecs[vid] for vid in sorted(vecs) if vid < IVF_K}
-    assign = {}
-    for vid, v in vecs.items():
-        best = min(
-            cents, key=lambda c: (float(np.sum((v - cents[c]) ** 2)), c)
-        )
-        assign[vid] = best
-    clusters: dict[int, list[int]] = {}
-    for vid, c in assign.items():
-        clusters.setdefault(c, []).append(vid)
-    for c, members in clusters.items():
-        for vid in members:
-            lower = [m for m in members if m < vid]
-            cos = [
-                round(
-                    float(
-                        vecs[vid] @ vecs[m]
-                        / (np.linalg.norm(vecs[vid]) * np.linalg.norm(vecs[m]))
-                    ),
-                    5,
-                )
-                for m in lower
-            ]
-            dups = [x for x in cos if x >= SEMDEDUP_TAU]
-            r = got[vid]
-            assert r["cluster"] == c, vid
-            assert r["is_dup"] == bool(dups), vid
-            assert r["n_dups"] == len(dups), vid
-            if dups:
-                assert abs(r["max_cos"] - max(dups)) < 2e-5, vid
-
-
 def _norm_py(s: str) -> str:
     import re
 
@@ -698,75 +631,6 @@ def test_exact_substr_spans_matches_python_replay(spark, sf_small):
             ",".join(f"{s:06d}:{e:06d}" for s, e in spans).encode()
         ).hexdigest()
         assert r["span_md5"] == fp, did
-
-
-def test_pq_encode_and_adc_match_numpy_replay(spark):
-    """PQ encode + ADC search equal an independent numpy replay: same
-    first-KS codebook seed, same per-subspace argmin (tie -> lower code),
-    same integer micro-unit quantization BEFORE every sum, same
-    (adc, vec_id) rank order."""
-    import numpy as np
-
-    from deepdoctection_spark.operators.similarity import (
-        PQ_KS,
-        PQ_M,
-        PQ_SUBDIM,
-        pq_encode,
-        pq_search_adc,
-    )
-
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got_codes = {r["vec_id"]: r for r in pq_encode(embs).collect()}
-    got_top = {}
-    for r in pq_search_adc(embs, n_queries=5, k=5).collect():
-        got_top.setdefault(r["query_id"], []).append(r)
-
-    rows = embs.select("vec_id", "embedding").collect()
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
-
-    def sub(v, m):
-        return v[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-
-    def d2_micro(a, b):
-        d2 = float(a @ a) - 2 * float(a @ b) + float(b @ b)
-        return int(np.floor(d2 * 1000000 + 0.5))
-
-    cb = {
-        (m, code): sub(vecs[code], m)
-        for m in range(PQ_M)
-        for code in sorted(vecs)
-        if code < PQ_KS
-    }
-    codes = {}
-    errs = {}
-    for vid, v in vecs.items():
-        cs, e = [], 0
-        for m in range(PQ_M):
-            best = min(
-                ((d2_micro(sub(v, m), cb[(m, c)]), c) for c in range(PQ_KS))
-            )
-            cs.append(best[1])
-            e += best[0]
-        codes[vid] = cs
-        errs[vid] = e
-    assert set(got_codes) == set(codes)
-    for vid in codes:
-        assert list(got_codes[vid]["codes"]) == codes[vid], vid
-        assert got_codes[vid]["err_micro"] == errs[vid], vid
-
-    for qid in range(5):
-        lut = {
-            (m, c): d2_micro(sub(vecs[qid], m), cb[(m, c)])
-            for m in range(PQ_M)
-            for c in range(PQ_KS)
-        }
-        scored = sorted(
-            (sum(lut[(m, codes[vid][m])] for m in range(PQ_M)), vid)
-            for vid in vecs
-            if vid != qid
-        )[:5]
-        got = [(r["adc_micro"], r["vec_id"]) for r in sorted(got_top[qid], key=lambda r: r["rank"])]
-        assert got == scored, qid
 
 
 def test_luhn_candidates_known_vectors(spark):

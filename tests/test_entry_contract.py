@@ -3,6 +3,9 @@ with an oracle must match DuckDB on sf0.01 (rowcount + columns + values)."""
 
 from __future__ import annotations
 
+import importlib.util
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -20,6 +23,17 @@ def test_entry_smoke(spark):
 
 def test_every_oracle_has_query():
     assert set(ORACLES) == set(QUERIES)
+
+
+def test_bnlj_whitelist_names_only_registered_queries():
+    """scripts/plan_audit.py's BroadcastNestedLoopJoin whitelist must not
+    outlive the queries it excuses."""
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit", Path(entry_mod.__file__).parent / "scripts" / "plan_audit.py"
+    )
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    assert audit.BNLJ_WHITELIST - set(QUERIES) == set()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
