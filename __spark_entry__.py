@@ -9,8 +9,8 @@ Query families:
 - extraction (the north-rule engine): Spark runs the real HTML/layout parsers
   over synthesized payloads; the DuckDB oracle reconstructs expected outputs
   from template ground truth — a genuine end-to-end parity check.
-- relational coverage: SURVEY.md §2 dataflow operators expressed over the
-  TPC-H-ish tables.
+- relational: the three TPC-H-style queries bench.py times (grouped
+  aggregation, a broadcast-dimension join, a per-key window top-k).
 - training-data ops: dedup / similarity / text-analysis over documents and
   embeddings.
 """
@@ -30,7 +30,7 @@ import deepdoctection_spark.plans.multimodal_ops  # noqa: F401 — registers med
 import deepdoctection_spark.plans.pipeline  # noqa: F401 — registers extraction queries
 import deepdoctection_spark.plans.pubtables_ops  # noqa: F401 — registers pubtables segmentation query
 import deepdoctection_spark.plans.refine_ops  # noqa: F401 — registers cell-merge refinement query
-import deepdoctection_spark.plans.relational  # noqa: F401 — registers relational ops
+import deepdoctection_spark.plans.relational  # noqa: F401 — registers bench.py's relational queries
 import deepdoctection_spark.plans.graph_ops  # noqa: F401 — registers PageRank
 import deepdoctection_spark.plans.sketch_ops  # noqa: F401 — registers HLL/CMS sketches, NB classifier, split assign
 import deepdoctection_spark.plans.streaming_ops  # noqa: F401 — registers bounded streaming runs

@@ -91,9 +91,10 @@ SCHEMA = pa.schema(
 # Word-level spans travel as plain (idx, token, begin, end) tuples — the
 # single hottest per-row object (≈60 words/turn): no per-word class
 # construction, no per-word id hashing. Word span_ids are NOT materialized in
-# the hot path at all; consumers needing the deterministic id derive it
-# JVM-side from the same key (operators/extraction.word_token_ids), which is
-# a vectorized md5 column expression over the flat exploded rows.
+# the hot path at all; a consumer that needs the deterministic id derives it
+# JVM-side from the same key, md5(concat_ws('|', conv_id, turn_idx, 'word',
+# span_begin, span_end)), a vectorized column expression over the flat
+# exploded rows.
 WordTuple = tuple[int, str, int, int]
 
 

@@ -34,66 +34,8 @@ class PositionedLine:
     content: str
 
 
-def parse_positioned_lines(payload: str) -> list[PositionedLine]:
-    out = []
-    for raw in payload.split("\n"):
-        m = _LINE_RE.match(raw)
-        if m:
-            out.append(
-                PositionedLine(float(m.group(1)), float(m.group(2)), m.group(3))
-            )
-    return out
-
-
 def looks_like_layout(payload: str) -> bool:
     return payload.startswith("@") and _LINE_RE.match(payload.split("\n", 1)[0]) is not None
-
-
-def make_sub_lines(
-    runs: list[PositionedLine],
-    paragraph_break: float,
-    char_width: float = 0.0,
-) -> list[PositionedLine]:
-    """Split each LINE (same-y runs, x-sorted) into sub-lines at horizontal
-    gaps ≥ paragraph_break — the reference's TextLineGenerator sub-line pass
-    (/root/reference/deepdoctection/pipe/order.py:345-563: consecutive words
-    stay in one sub-line while current.ulx - prev.lrx < paragraph_break).
-    Runs within a sub-line merge into one positioned line (x = first run's x,
-    texts space-joined) so multi-column structure is detected per LINE, not
-    per whole-payload x histogram.
-
-    ``char_width`` models a run's rendered width (prev.lrx = prev.x +
-    char_width·len(prev)); the text wire format carries only start positions,
-    so the default 0.0 measures start-to-start distance — the strongest
-    signal available without font metrics. Detector-driven inputs with real
-    box widths pass their measured width instead."""
-    by_y: dict[float, list[PositionedLine]] = {}
-    for r in runs:
-        by_y.setdefault(r.y, []).append(r)
-    out: list[PositionedLine] = []
-    for y in sorted(by_y):
-        row = sorted(by_y[y], key=lambda r: r.x)
-        cur: list[PositionedLine] = [row[0]]
-        for prev, nxt in zip(row, row[1:]):
-            # char_width == 0.0 (the text wire format's start-to-start mode)
-            # makes the normalize_ws(len) term vanish — skip the normalize
-            prev_end = (
-                prev.x + char_width * len(normalize_ws(prev.content))
-                if char_width
-                else prev.x
-            )
-            if nxt.x - prev_end < paragraph_break:
-                cur.append(nxt)
-            else:
-                out.append(_merge_sub_line(cur))
-                cur = [nxt]
-        out.append(_merge_sub_line(cur))
-    return out
-
-
-def _merge_sub_line(runs: list[PositionedLine]) -> PositionedLine:
-    texts = [t for t in (normalize_ws(r.content) for r in runs) if t]
-    return PositionedLine(runs[0].x, runs[0].y, " ".join(texts))
 
 
 def cluster_columns(lines: list[PositionedLine], column_gap: float) -> list[list[PositionedLine]]:
@@ -136,12 +78,11 @@ def extract_layout_blocks(
 
     Fused hot path (the PDF-ish third of every extraction batch): one
     multiline finditer parses all positioned runs as (y, x, content) tuples,
-    one stable (y, x) sort replaces the per-row dict/sort of
-    make_sub_lines, and the gap-split + merge walk allocates PositionedLine
-    objects only for EMITTED sub-lines (a handful per document) instead of
-    every run. Output is line-for-line identical to the
-    parse_positioned_lines → make_sub_lines → cluster_columns composition
-    (tests/test_kernels.py pins both paths)."""
+    one stable (y, x) sort replaces a per-line dict and sort, and the
+    gap-split + merge walk allocates PositionedLine objects only for EMITTED
+    sub-lines (a handful per document) instead of every run. Output is
+    block-for-block identical to the unfused parse → sub-line → column
+    composition in tests/layout_oracle.py (tests/test_property.py pins it)."""
     runs = [
         (float(m.group(2)), float(m.group(1)), m.group(3))
         for m in _LINE_SCAN.finditer(payload)

@@ -12,10 +12,6 @@ from __future__ import annotations
 import re
 
 _WS_RE = re.compile(r"[ \t\r\n\f\v]+")
-_TOKEN_RE = re.compile(r"[^ \n]+")
-# A BPE-ish subword split: runs of letters, digits, or a single other char —
-# used by the token-count operator (training-data pipeline surface).
-_BPE_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
 
 
 def normalize_ws(text: str) -> str:
@@ -46,10 +42,3 @@ def word_spans(extracted_text: str) -> list[tuple[int, str, int, int]]:
         pos += len(tok) + 1
     return out
 
-
-def whitespace_token_count(text: str) -> int:
-    return len(_TOKEN_RE.findall(normalize_ws(text)))
-
-
-def bpe_ish_token_count(text: str) -> int:
-    return len(_BPE_RE.findall(text))

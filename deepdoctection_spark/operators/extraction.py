@@ -217,22 +217,3 @@ def word_tokens(extracted: DataFrame) -> DataFrame:
         "conv_id", "turn_idx", "w.word_idx", "w.token", "w.span_begin", "w.span_end"
     )
 
-
-def word_token_ids(words: DataFrame) -> DataFrame:
-    """Attach the deterministic word span_id to flat word_tokens rows —
-    md5('{conv}|{turn}|word|{begin}|{end}'), the kernels/ids.span_id
-    contract, computed JVM-side as a whole-stage-codegen md5 expression over
-    the exploded rows (never per-word Python in the hot Arrow stage)."""
-    return words.withColumn(
-        "span_id",
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.col("conv_id"),
-                F.col("turn_idx"),
-                F.lit("word"),
-                F.col("span_begin"),
-                F.col("span_end"),
-            )
-        ),
-    )

@@ -89,7 +89,7 @@ def _select_turn_cols(extracted: DataFrame) -> DataFrame:
     return extracted.select("conv_id", "turn_idx", "blocks")
 
 
-def noisy_candidates(extracted: DataFrame, counter=None) -> DataFrame:
+def noisy_candidates(extracted: DataFrame) -> DataFrame:
     """Per proposal: kept/suppressed verdict from the real greedy-NMS kernel."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -99,7 +99,7 @@ def noisy_candidates(extracted: DataFrame, counter=None) -> DataFrame:
             blks = rb.column(2).to_pylist()
             cols: list[list] = [[] for _ in range(8)]
             for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
+                with row_guard(cols, (conv[i], tix[i])):
                     cands = _turn_candidates(blks[i])
                     if not cands:
                         continue
@@ -137,7 +137,7 @@ def noisy_candidates(extracted: DataFrame, counter=None) -> DataFrame:
     return _select_turn_cols(extracted).mapInArrow(fn, schema=schema)
 
 
-def noisy_assignments(extracted: DataFrame, counter=None) -> DataFrame:
+def noisy_assignments(extracted: DataFrame) -> DataFrame:
     """Per probe child: argmax-IoA parent among NMS survivors (threshold 0.5,
     max-parent-only) or (-1, -1); best_ioa is the max over all survivors."""
 
@@ -148,7 +148,7 @@ def noisy_assignments(extracted: DataFrame, counter=None) -> DataFrame:
             blks = rb.column(2).to_pylist()
             cols: list[list] = [[] for _ in range(9)]
             for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
+                with row_guard(cols, (conv[i], tix[i])):
                     cands = _turn_candidates(blks[i])
                     if not cands:
                         continue

@@ -63,7 +63,7 @@ def stripe_geometry(turn_idx: int) -> tuple[list[Box], list[Box], list[Box]]:
     return rows[::-1], cols[::-1], spanning
 
 
-def pubtables_grids(transcripts: DataFrame, counter=None) -> DataFrame:
+def pubtables_grids(transcripts: DataFrame) -> DataFrame:
     """One segmented grid per turn (flat columns, narrow stage)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -72,7 +72,7 @@ def pubtables_grids(transcripts: DataFrame, counter=None) -> DataFrame:
             tix = rb.column(1).to_pylist()
             cols: list[list] = [[] for _ in range(9)]
             for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
+                with row_guard(cols, (conv[i], tix[i])):
                     t = int(tix[i])
                     rows_s, cols_s, span_s = stripe_geometry(t)
                     res = segment_pubtables_grid(rows_s, cols_s, span_s)

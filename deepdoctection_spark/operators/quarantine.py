@@ -17,29 +17,15 @@ from contextlib import contextmanager
 _log = logging.getLogger(__name__)
 
 
-def quarantine_counter(spark, initial: int = 0):
-    """A Spark accumulator for drop counts: incremented executor-side inside
-    row_guard, readable driver-side as ``counter.value`` after an action —
-    the reference logs AND counts (maputils.py:41-110); at 10^12 turns a
-    silent drop rate is an ops hazard. Accumulator semantics are
-    at-least-once under task retry (standard Spark caveat) — treat as an ops
-    metric, not an exact ledger; the exact ledger is the manifest's
-    per-bucket `quarantined` field (computed from committed data)."""
-    return spark.sparkContext.accumulator(initial)
-
-
 @contextmanager
-def row_guard(cols: list[list], row_key: object = None, counter=None):
+def row_guard(cols: list[list], row_key: object = None):
     """Append-rollback guard: on exception, truncate every output column
-    back to its length at entry (dropping the failed row's partial output),
-    count the drop on ``counter`` (quarantine_counter / any .add(int)
-    object) when given, and swallow the error after logging."""
+    back to its length at entry (dropping the failed row's partial output)
+    and swallow the error after logging."""
     marks = [len(c) for c in cols]
     try:
         yield
     except Exception as exc:  # quarantine: drop the row, never throw
         for c, m in zip(cols, marks):
             del c[m:]
-        if counter is not None:
-            counter.add(1)
         _log.warning("row quarantined (dropped) key=%r: %s", row_key, exc)

@@ -58,7 +58,7 @@ def _proposals(cells: list[dict], variant: int) -> list[ProposedCell]:
     return out
 
 
-def refined_tables(extracted: DataFrame, counter=None) -> DataFrame:
+def refined_tables(extracted: DataFrame) -> DataFrame:
     """Per table-bearing turn: refined cell count + merged-cell HTML."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -68,7 +68,7 @@ def refined_tables(extracted: DataFrame, counter=None) -> DataFrame:
             cells = rb.column(2).to_pylist()
             cols: list[list] = [[] for _ in range(5)]
             for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
+                with row_guard(cols, (conv[i], tix[i])):
                     if not cells[i]:
                         continue
                     variant = int(tix[i]) % 3
@@ -113,7 +113,7 @@ _CSV_SCHEMA = pa.schema(
 )
 
 
-def refined_csv_rows(extracted: DataFrame, counter=None) -> DataFrame:
+def refined_csv_rows(extracted: DataFrame) -> DataFrame:
     """Table.csv export (view.py:332-344) over the refined cells: one output
     row per table row, tab-joined tiles, spanned tiles blank."""
 
@@ -124,7 +124,7 @@ def refined_csv_rows(extracted: DataFrame, counter=None) -> DataFrame:
             cells = rb.column(2).to_pylist()
             cols: list[list] = [[] for _ in range(5)]
             for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
+                with row_guard(cols, (conv[i], tix[i])):
                     if not cells[i]:
                         continue
                     variant = int(tix[i]) % 3

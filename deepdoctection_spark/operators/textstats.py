@@ -27,7 +27,7 @@ BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def _tokens(text_col: str = "text"):
     # split('', ' ') returns [''] — filter it so an empty/whitespace-only
-    # document counts 0 tokens (matching kernels.textnorm.whitespace_token_count)
+    # document counts 0 tokens
     return F.filter(
         F.split(normalized_text(F.col(text_col)), " "),
         lambda w: F.length(w) > 0,

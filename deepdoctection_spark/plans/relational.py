@@ -1,27 +1,15 @@
-"""Relational operator coverage: SURVEY.md §2.1/2.2/2.6/2.7 dataflow operators
-expressed Spark-first over the TPC-H-ish tables, each with a DuckDB oracle.
+"""The three relational queries that ``bench.py`` times, each with a DuckDB
+oracle, over the TPC-H-style ``lineitem``, ``orders`` and ``customer`` tables
+and the ``events`` table:
 
-Mapping to the reference's operator inventory:
-- scan + limit       ← SerializerJsonlines.load(max_datapoints)
-                       (/root/reference/deepdoctection/dataflow/custom_serialize.py:56-107)
-- map + fused filter ← MapData None-drop (/root/reference/deepdoctection/dataflow/common.py:85-112)
-- column transform   ← MapDataComponent (common.py:115-151)
-- explode            ← FlattenData (common.py:64-82)
-- union              ← ConcatData (common.py:187-215)
-- keyed equi-join    ← JoinData positional zip generalized to keyed join
-                       (common.py:218-269) + the COCO hash-join
-                       (custom_serialize.py:459-511)
-- mean/std agg       ← MeanFromDataFlow / StdFromDataFlow
-                       (/root/reference/deepdoctection/dataflow/stats.py:31-271)
-- label histogram    ← LabelSummarizer (/root/reference/deepdoctection/mapper/maputils.py:182-239)
-- window + top-k     ← reading-order enumeration semantics
-                       (/root/reference/deepdoctection/pipe/order.py:70-115) on event streams
-- rollup             ← (no reference analogue — free via Catalyst; included
-                       for engine completeness)
+- ``rel_pricing_summary``: filter + grouped aggregation (TPC-H Q1 shape);
+- ``rel_join_revenue``: a three-way join with a broadcast dimension, then a
+  grouped aggregation (TPC-H Q3 shape);
+- ``rel_window_topk``: a per-key ``row_number`` window and a top-k filter.
 
 Float policy: monetary sums go through DECIMAL(20,4) so Spark's parallel
-aggregation and DuckDB's serial one are bit-identical; unavoidable
-double aggregates (stddev/avg) are rounded.
+aggregation and DuckDB's serial one are bit-identical; the one double
+average is rounded.
 """
 
 from __future__ import annotations
@@ -35,50 +23,6 @@ from deepdoctection_spark.plans.registry import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- scan + orderBy + limit (top-k) ----------------------------------------
-
-
-@register(
-    "rel_topk_orders",
-    """
-SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
-FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25
-""",
-)
-def q_topk(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(25)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("totalprice"))
-    )
-
-
-# --- map + fused filter + computed projection --------------------------------
-
-
-@register(
-    "rel_filter_project",
-    """
-SELECT l_orderkey, l_linenumber,
-       round((l_extendedprice::DECIMAL(20,4)) * (1 - l_discount::DECIMAL(20,4)), 2)::DOUBLE AS revenue
-FROM lineitem
-WHERE l_discount > 0.05 AND l_quantity < 25
-""",
-)
-def q_filter_project(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return li.where((F.col("l_discount") > 0.05) & (F.col("l_quantity") < 25)).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(
-            F.col("l_extendedprice").cast("decimal(20,4)")
-            * (1 - F.col("l_discount").cast("decimal(20,4)")),
-            2,
-        ).cast("double").alias("revenue"),
-    )
 
 
 # --- grouped aggregation (pricing summary, TPC-H Q1 shape) -------------------
@@ -151,148 +95,6 @@ def q_join_revenue(spark, sf_dir):
     )
 
 
-# --- union + distinct ---------------------------------------------------------
-
-
-@register(
-    "rel_union_distinct",
-    """
-SELECT DISTINCT event_type FROM (
-  SELECT event_type FROM events WHERE user_id % 2 = 0
-  UNION ALL
-  SELECT event_type FROM events WHERE value > 100
-)
-""",
-)
-def q_union_distinct(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.where(F.col("user_id") % 2 == 0)
-        .select("event_type")
-        .unionByName(e.where(F.col("value") > 100).select("event_type"))
-        .distinct()
-    )
-
-
-# --- exact percentiles --------------------------------------------------------
-
-
-@register(
-    "rel_percentile",
-    """
-SELECT event_type,
-       floor(quantile_cont(value, 0.5) * 10000 + 0.5) / 10000 AS p50,
-       floor(quantile_cont(value, 0.9) * 10000 + 0.5) / 10000 AS p90,
-       count(*)::BIGINT AS n
-FROM events GROUP BY 1
-""",
-)
-def q_percentile(spark, sf_dir):
-    """Exact linear-interpolated percentiles (Spark `percentile` vs DuckDB
-    `quantile_cont` — probed bit-identical on this data; the floor-round4
-    guard covers interpolation-formula ulp differences). A distributed exact
-    percentile sorts within hash-agg groups — fine per group; corpus-scale
-    single-key percentiles would switch to approx_percentile (t-digest)."""
-    e = _t(spark, sf_dir, "events")
-    r4 = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
-    return e.groupBy("event_type").agg(
-        r4(F.percentile("value", 0.5)).alias("p50"),
-        r4(F.percentile("value", 0.9)).alias("p90"),
-        F.count("*").cast("long").alias("n"),
-    )
-
-
-# --- repeat (RepeatedData) ----------------------------------------------------
-
-
-@register(
-    "rel_repeated",
-    """
-SELECT r.rep::INT AS rep, n.n_nationkey, n.n_name
-FROM nation n CROSS JOIN range(0, 3) AS r(rep)
-""",
-)
-def q_repeated(spark, sf_dir):
-    """RepeatedData (dataflow/common.py:154-184): stream repeated num times —
-    crossJoin with a broadcast range; per-replica index keeps rows keyed
-    (Spark outputs are unordered, so the epoch index must be explicit data,
-    unlike the reference's implicit iteration order)."""
-    n = _t(spark, sf_dir, "nation")
-    reps = F.broadcast(
-        spark.range(3).select(F.col("id").cast("int").alias("rep"))
-    )
-    return n.select("n_nationkey", "n_name").crossJoin(reps).select(
-        "rep", "n_nationkey", "n_name"
-    )
-
-
-# --- explode (FlattenData) ----------------------------------------------------
-
-
-@register(
-    "rel_explode_words",
-    """
-SELECT word, count(*) AS n
-FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-WHERE length(word) > 0
-GROUP BY word
-""",
-)
-def q_explode_words(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-# --- streaming-stats aggregation (MeanFromDataFlow / StdFromDataFlow) ---------
-
-
-@register(
-    "rel_mean_std",
-    """
-SELECT l_returnflag,
-       round(avg(l_quantity), 4) AS mean_qty,
-       round(stddev_samp(l_quantity), 4) AS std_qty,
-       round(avg(l_extendedprice), 4) AS mean_price,
-       count(*) AS n
-FROM lineitem GROUP BY l_returnflag
-""",
-)
-def q_mean_std(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.round(F.avg("l_quantity"), 4).alias("mean_qty"),
-            F.round(F.stddev_samp("l_quantity"), 4).alias("std_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("mean_price"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-# --- label histogram -----------------------------------------------------------
-
-
-@register(
-    "rel_label_histogram",
-    """
-SELECT event_type, count(*) AS n, round(avg(value), 4) AS avg_value
-FROM events GROUP BY event_type
-""",
-)
-def q_label_histogram(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.round(F.avg("value"), 4).alias("avg_value"))
-    )
-
-
 # --- window + per-key top-k ------------------------------------------------------
 
 
@@ -314,771 +116,3 @@ def q_window_topk(spark, sf_dir):
         .where(F.col("rn") <= 3)
         .select("user_id", "event_id", F.col("rn").cast("long").alias("rn"))
     )
-
-
-# --- rollup (grouping sets) -------------------------------------------------------
-
-
-@register(
-    "rel_rollup",
-    """
-SELECT l_returnflag, l_linestatus, count(*) AS n,
-       sum(l_quantity::DECIMAL(20,4))::DOUBLE AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-)
-def q_rollup(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double").alias("sum_qty"),
-        )
-    )
-
-
-# --- anti/semi join (resume-manifest shape) ----------------------------------------
-
-
-@register(
-    "rel_anti_join",
-    """
-SELECT o_orderkey, o_custkey FROM orders o
-WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-""",
-)
-def q_anti_join(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 45)
-    return o.join(l, o.o_orderkey == l.l_orderkey, "left_anti").select(
-        "o_orderkey", "o_custkey"
-    )
-
-
-# --- grouping sets / cube (multi-level aggregation in one shuffle) -----------
-
-
-@register(
-    "rel_cube_volume",
-    """
-SELECT coalesce(l_returnflag, '*') AS returnflag,
-       coalesce(l_linestatus, '*') AS linestatus,
-       count(*)::BIGINT AS n,
-       round(sum(l_quantity::DECIMAL(20,4)), 2)::DOUBLE AS sum_qty
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-""",
-)
-def q_cube(spark, sf_dir):
-    """CUBE: all 4 grouping levels computed in ONE pass (Catalyst expands to
-    a single Expand + hash agg — the multi-level rollup a 100 TB reporting
-    job wants instead of 4 scans)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(F.sum(F.col("l_quantity").cast("decimal(20,4)")), 2)
-            .cast("double")
-            .alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("*")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("*")).alias("linestatus"),
-            "n",
-            "sum_qty",
-        )
-    )
-
-
-# --- set operations: intersect / except --------------------------------------
-
-
-@register(
-    "rel_intersect_except",
-    """
-WITH hi AS (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_quantity >= 45),
-disc AS (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_discount >= 0.08)
-SELECT 'both' AS which, l_orderkey FROM (SELECT l_orderkey FROM hi INTERSECT SELECT l_orderkey FROM disc)
-UNION ALL
-SELECT 'hi_only', l_orderkey FROM (SELECT l_orderkey FROM hi EXCEPT SELECT l_orderkey FROM disc)
-""",
-)
-def q_intersect_except(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    hi = li.where(F.col("l_quantity") >= 45).select("l_orderkey").distinct()
-    disc = li.where(F.col("l_discount") >= 0.08).select("l_orderkey").distinct()
-    return hi.intersect(disc).select(
-        F.lit("both").alias("which"), "l_orderkey"
-    ).unionByName(
-        hi.exceptAll(disc).select(F.lit("hi_only").alias("which"), "l_orderkey")
-    )
-
-
-# --- semi join (EXISTS pushdown; no payload columns move) --------------------
-
-
-@register(
-    "rel_semi_join",
-    """
-SELECT c_custkey, c_name
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-""",
-)
-def q_semi_join(spark, sf_dir):
-    """Left-semi join: only the key crosses the shuffle; Spark never
-    materializes the orders payload for matching customers."""
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
-    return cust.join(
-        big, cust["c_custkey"] == big["o_custkey"], "left_semi"
-    ).select("c_custkey", "c_name")
-
-
-# --- event-stream coverage: sessionization, tumbling windows, JSON ----------
-
-
-@register(
-    "events_sessionize",
-    """
-WITH ordered AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
-),
-marked AS (
-  SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000
-                 THEN 1 ELSE 0 END AS new_session
-  FROM ordered
-),
-sess AS (
-  SELECT *, sum(new_session) OVER (
-      PARTITION BY user_id ORDER BY ts_us, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-  FROM marked
-)
-SELECT user_id, session_no::INT AS session_no,
-       min(ts_us)::BIGINT AS session_start_us,
-       max(ts_us)::BIGINT AS session_end_us,
-       count(*)::BIGINT AS n_events
-FROM sess GROUP BY user_id, session_no
-""",
-)
-def q_events_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30-min idle) as lag + running-sum windows —
-    the batch formulation of the streaming sessionizer
-    (streaming/sessionize.py); two window passes over one user_id shuffle."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        # parquet ts reads as TIMESTAMP_NTZ; session TZ is UTC so the cast
-        # is an identity re-tag for unix_micros
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    marked = e.withColumn("prev_us", F.lag("ts_us").over(w)).withColumn(
-        "new_session",
-        F.when(
-            F.col("prev_us").isNull()
-            | (F.col("ts_us") - F.col("prev_us") > 1_800_000_000),
-            1,
-        ).otherwise(0),
-    )
-    sess = marked.withColumn(
-        "session_no",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", F.col("session_no").cast("int").alias("session_no")).agg(
-        F.min("ts_us").cast("long").alias("session_start_us"),
-        F.max("ts_us").cast("long").alias("session_end_us"),
-        F.count("*").cast("long").alias("n_events"),
-    )
-
-
-@register(
-    "events_tumbling_stats",
-    """
-SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, ts))::BIGINT AS window_start_us,
-       event_type,
-       count(*)::BIGINT AS n,
-       round(sum(value::DECIMAL(20,4)), 2)::DOUBLE AS sum_value
-FROM events GROUP BY 1, 2
-""",
-)
-def q_events_tumbling(spark, sf_dir):
-    """Tumbling event-time windows (the batch face of the streaming
-    windowed aggregation)."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy(
-        F.unix_micros(
-            F.window("ts", "1 hour").getField("start").cast("timestamp")
-        )
-        .cast("long")
-        .alias("window_start_us"),
-        "event_type",
-    ).agg(
-        F.count("*").cast("long").alias("n"),
-        # DECIMAL accumulation (same policy as rel_pricing_summary): double
-        # summation order varies with partitioning and can flip the rounded
-        # 2nd decimal vs the serial oracle; decimal sums are exact and
-        # order-independent
-        F.round(F.sum(F.col("value").cast("decimal(20,4)")), 2)
-        .cast("double")
-        .alias("sum_value"),
-    )
-
-
-@register(
-    "events_json_extract",
-    """
-SELECT event_id, (props::JSON->>'k')::INT AS k,
-       CASE WHEN (props::JSON->>'k')::INT >= 50 THEN 'hi' ELSE 'lo' END AS k_band
-FROM events
-""",
-)
-def q_events_json(spark, sf_dir):
-    """Semi-structured props column: JSON path extraction JVM-side
-    (get_json_object — no UDF)."""
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return e.select(
-        "event_id",
-        k.alias("k"),
-        F.when(k >= 50, "hi").otherwise("lo").alias("k_band"),
-    )
-
-
-@register(
-    "events_asof_join",
-    """
-SELECT c.event_id AS click_id, c.user_id,
-       epoch_us(c.ts)::BIGINT AS click_ts_us, c.value AS click_value,
-       v.event_id AS view_id, epoch_us(v.ts)::BIGINT AS view_ts_us,
-       v.value AS view_value
-FROM (SELECT * FROM events WHERE event_type = 'click') c
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-  ON c.user_id = v.user_id AND c.ts >= v.ts
-""",
-)
-def q_events_asof_join(spark, sf_dir):
-    """As-of join (kdb aj / pandas merge_asof semantics, distributed): every
-    click joins the most recent prior view by the same user, nulls when no
-    view precedes. Spark has no ASOF JOIN; the union-window formulation
-    (operators/temporal.py) does it with ONE user_id shuffle and zero join
-    nodes — the naive formulation is an O(clicks x views) theta join.
-    Oracle: DuckDB's native ASOF LEFT JOIN (deterministic here: the
-    testdata has no (user_id, ts) collisions)."""
-    from deepdoctection_spark.operators.temporal import asof_join
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", "value", "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.col("ts_us").alias("click_ts_us"),
-        F.col("value").alias("click_value"),
-    )
-    views = e.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("ts_us").alias("view_ts_us"),
-        F.col("value").alias("view_value"),
-    )
-    out = asof_join(
-        clicks, views, on="user_id",
-        left_ts="click_ts_us", right_ts="view_ts_us",
-        right_payload=["view_id", "view_ts_us", "view_value"],
-    )
-    return out.select(
-        "click_id", "user_id", "click_ts_us", "click_value",
-        F.col("view_id_right").alias("view_id"),
-        F.col("view_ts_us_right").alias("view_ts_us"),
-        F.col("view_value_right").alias("view_value"),
-    )
-
-
-@register(
-    "events_range_join",
-    """
-SELECT e.event_id AS error_id, c.event_id AS click_id, e.user_id,
-       (epoch_us(c.ts) - epoch_us(e.ts))::BIGINT AS delta_us
-FROM events e JOIN events c
-  ON c.user_id = e.user_id
- AND e.event_type = 'error' AND c.event_type = 'click'
- AND c.ts >= e.ts AND c.ts <= e.ts + INTERVAL 6 HOUR
-""",
-)
-def q_events_range_join(spark, sf_dir):
-    """Interval range join: clicks landing inside [error, error+6h] windows
-    of the same user. Spark plans a BETWEEN theta join as broadcast
-    nested-loop (O(n*m) compares); the bucketed formulation
-    (operators/temporal.py) replicates each interval to <=2 six-hour
-    buckets and equi-joins on (user_id, bucket) — one hash shuffle each
-    side, exact BETWEEN refine, no dedup needed."""
-    from deepdoctection_spark.operators.temporal import range_join_intervals
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    six_h = 6 * 3600 * 1_000_000
-    errors = e.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        "user_id",
-        F.col("ts_us").alias("start_us"),
-        (F.col("ts_us") + six_h).alias("end_us"),
-    )
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.col("ts_us").alias("click_us"),
-    )
-    joined = range_join_intervals(
-        clicks, errors, on="user_id", point_ts="click_us",
-        start_ts="start_us", end_ts="end_us", bucket_width=six_h,
-    )
-    return joined.select(
-        "error_id", "click_id", "user_id",
-        (F.col("click_us") - F.col("start_us")).cast("long").alias("delta_us"),
-    )
-
-
-@register(
-    "rel_pivot",
-    """
-SELECT user_id,
-       round(sum(CASE WHEN event_type = 'click'    THEN value ELSE 0 END
-                 ::DECIMAL(20,4)), 2)::DOUBLE AS click_value,
-       round(sum(CASE WHEN event_type = 'view'     THEN value ELSE 0 END
-                 ::DECIMAL(20,4)), 2)::DOUBLE AS view_value,
-       round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0 END
-                 ::DECIMAL(20,4)), 2)::DOUBLE AS purchase_value
-FROM events GROUP BY user_id
-""",
-)
-def q_rel_pivot(spark, sf_dir):
-    """Pivot (long→wide reshape): per-user value sums spread across event
-    types. An EXPLICIT values list keeps the plan single-pass — Spark's
-    pivot without one runs a distinct-scan first AND makes the output
-    schema data-dependent, both wrong at 100 TB. DECIMAL accumulation for
-    cross-engine exactness (the rel_pricing_summary policy); the unmatched
-    sum is 0, matching the SQL CASE ELSE 0."""
-    e = _t(spark, sf_dir, "events")
-    out = (
-        e.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase"])
-        .agg(F.round(F.sum(
-            F.coalesce(F.col("value"), F.lit(0)).cast("decimal(20,4)")
-        ), 2).cast("double"))
-    )
-    return out.select(
-        "user_id",
-        F.coalesce("click", F.lit(0.0)).alias("click_value"),
-        F.coalesce("view", F.lit(0.0)).alias("view_value"),
-        F.coalesce("purchase", F.lit(0.0)).alias("purchase_value"),
-    )
-
-
-@register(
-    "rel_unpivot",
-    """
-WITH wide AS (
-  SELECT user_id,
-         round(sum(CASE WHEN event_type = 'click' THEN value ELSE 0 END
-                   ::DECIMAL(20,4)), 2)::DOUBLE AS click_value,
-         round(sum(CASE WHEN event_type = 'view'  THEN value ELSE 0 END
-                   ::DECIMAL(20,4)), 2)::DOUBLE AS view_value
-  FROM events GROUP BY user_id
-)
-SELECT user_id, kind, amount FROM (
-  SELECT user_id, 'click_value' AS kind, click_value AS amount FROM wide
-  UNION ALL
-  SELECT user_id, 'view_value', view_value FROM wide
-)
-""",
-)
-def q_rel_unpivot(spark, sf_dir):
-    """Unpivot (wide→long melt) via the DataFrame unpivot API — the inverse
-    reshape of rel_pivot, round-tripped over the same aggregate so the two
-    queries pin each other. Narrow operation: no shuffle beyond the
-    feeding aggregation (each wide row explodes to k long rows in place)."""
-    e = _t(spark, sf_dir, "events")
-    wide = (
-        e.groupBy("user_id")
-        .pivot("event_type", ["click", "view"])
-        .agg(F.round(F.sum(
-            F.coalesce(F.col("value"), F.lit(0)).cast("decimal(20,4)")
-        ), 2).cast("double"))
-        .select(
-            "user_id",
-            F.coalesce("click", F.lit(0.0)).alias("click_value"),
-            F.coalesce("view", F.lit(0.0)).alias("view_value"),
-        )
-    )
-    return wide.unpivot(
-        ids=["user_id"],
-        values=["click_value", "view_value"],
-        variableColumnName="kind",
-        valueColumnName="amount",
-    )
-
-
-@register(
-    "rel_grouping_sets",
-    """
-SELECT user_id, event_type,
-       count(*)::BIGINT AS n,
-       round(sum(value::DECIMAL(20,4)), 2)::DOUBLE AS sum_value,
-       grouping(user_id)::INT AS g_user,
-       grouping(event_type)::INT AS g_type
-FROM events
-GROUP BY GROUPING SETS ((user_id), (event_type), ())
-""",
-)
-def q_rel_grouping_sets(spark, sf_dir):
-    """GROUPING SETS — the general form rollup/cube specialize: per-user
-    totals, per-type totals, and the grand total in ONE pass (Spark expands
-    the sets into a single Expand + hash aggregate — one shuffle, not three
-    queries). grouping() flags disambiguate the null-keyed rows exactly as
-    the SQL oracle does."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupingSets(
-        [["user_id"], ["event_type"], []], "user_id", "event_type"
-    ).agg(
-        F.count("*").cast("long").alias("n"),
-        F.round(F.sum(F.col("value").cast("decimal(20,4)")), 2)
-        .cast("double").alias("sum_value"),
-        F.grouping("user_id").cast("int").alias("g_user"),
-        F.grouping("event_type").cast("int").alias("g_type"),
-    )
-
-
-@register(
-    "rel_window_suite",
-    """
-SELECT event_id, user_id,
-       lag(event_id)  OVER w AS prev_event,
-       lead(event_id) OVER w AS next_event,
-       ntile(4)       OVER w AS quartile,
-       round(cume_dist() OVER w, 6)::DOUBLE AS cume,
-       round(percent_rank() OVER w, 6)::DOUBLE AS prank,
-       row_number()   OVER w AS rn
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-""",
-)
-def q_rel_window_suite(spark, sf_dir):
-    """The full analytic-window surface in one pass: lag/lead (event
-    adjacency), ntile (quartiling), cume_dist/percent_rank (rank
-    normalization), row_number — ALL over a single window spec, so Spark
-    plans ONE sort-shuffle on user_id, not six. Deterministic ordering via
-    the (ts, event_id) compound key; rounding pins the double rank math
-    cross-engine."""
-    e = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    return e.select(
-        "event_id", "user_id",
-        F.lag("event_id").over(w).alias("prev_event"),
-        F.lead("event_id").over(w).alias("next_event"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-        F.round(F.percent_rank().over(w), 6).alias("prank"),
-        F.row_number().over(w).alias("rn"),
-    )
-
-
-@register(
-    "rel_array_ops",
-    """
-SELECT vec_id, label,
-       len(embedding)::INT AS dim,
-       round(list_aggregate(list_transform(embedding, x -> (x*x)::DECIMAL(20,12)), 'sum'), 6)::DOUBLE AS sq_norm,
-       round(list_aggregate(list_filter(embedding, x -> x > 0), 'sum')::DECIMAL(20,8), 4)::DOUBLE AS pos_sum,
-       len(list_filter(embedding, x -> x > 0))::INT AS n_pos,
-       round(list_aggregate(embedding, 'max')::DECIMAL(20,8), 4)::DOUBLE AS vmax
-FROM embeddings
-""",
-)
-def q_rel_array_ops(spark, sf_dir):
-    """Higher-order array functions over the embedding column — transform /
-    filter / aggregate run INSIDE whole-stage codegen (no UDF, no explode
-    shuffle): squared norm, positive-component sum and count, max. DECIMAL
-    accumulation pins float-order differences cross-engine; this is the
-    JVM-side vector math the ANN operators build on."""
-    e = _t(spark, sf_dir, "embeddings")
-    dec = "decimal(20,12)"
-    return e.select(
-        "vec_id", "label",
-        F.size("embedding").cast("int").alias("dim"),
-        F.round(
-            F.aggregate(
-                F.transform("embedding",
-                            lambda x: (x * x).cast(dec)),
-                F.lit(0).cast(dec),
-                lambda acc, x: (acc + x).cast(dec)),
-            6).cast("double").alias("sq_norm"),
-        F.round(
-            F.aggregate(F.filter("embedding", lambda x: x > 0),
-                        F.lit(0).cast("decimal(20,8)"),
-                        lambda acc, x: (acc + x.cast("decimal(20,8)"))
-                        .cast("decimal(20,8)")),
-            4).cast("double").alias("pos_sum"),
-        F.size(F.filter("embedding", lambda x: x > 0)).cast("int")
-        .alias("n_pos"),
-        F.round(F.array_max("embedding").cast("decimal(20,8)"), 4)
-        .cast("double").alias("vmax"),
-    )
-
-
-@register(
-    "events_gapfill_locf",
-    """
-WITH hourly AS (
-  SELECT user_id, date_trunc('hour', ts) AS bucket,
-         count(*)::BIGINT AS n_events,
-         round(sum(value::DECIMAL(20,4)), 2)::DOUBLE AS sum_value
-  FROM events GROUP BY 1, 2
-),
-bounds AS (SELECT user_id, min(bucket) AS lo, max(bucket) AS hi
-           FROM hourly GROUP BY user_id),
-grid AS (
-  SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket
-  FROM bounds
-)
-SELECT g.user_id,
-       epoch_us(g.bucket)::BIGINT AS bucket_us,
-       coalesce(h.n_events, 0)::BIGINT AS n_events,
-       (h.n_events IS NULL) AS is_gap,
-       last_value(h.sum_value IGNORE NULLS) OVER (
-           PARTITION BY g.user_id ORDER BY g.bucket
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS locf_sum
-FROM grid g
-LEFT JOIN hourly h ON g.user_id = h.user_id AND g.bucket = h.bucket
-""",
-)
-def q_events_gapfill_locf(spark, sf_dir):
-    """Hypertable-style gap-filled hourly rollup with last-observation-
-    carried-forward: per user, a dense hour grid from first to last activity
-    (sequence + explode — no driver loop), hourly counts/sums left-joined
-    onto it, and gaps filled by `last(ignorenulls)` over an ordered window.
-    Plan shape at scale: one hash aggregation on (user, hour), a tiny
-    per-user bounds aggregation whose exploded grid is bounded by the time
-    span, one co-keyed equi-join, one window sort per user — no shuffle
-    grows faster than the output. DECIMAL sums keep the carried value exact
-    cross-engine."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("bucket"),
-        "value",
-    )
-    hourly = e.groupBy("user_id", "bucket").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(20,4)")), 2)
-        .cast("double").alias("sum_value"),
-    )
-    grid = (
-        hourly.groupBy("user_id")
-        .agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("bucket"),
-        )
-    )
-    g = grid.join(hourly, ["user_id", "bucket"], "left")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return g.select(
-        "user_id",
-        F.unix_micros(F.col("bucket").cast("timestamp")).alias("bucket_us"),
-        F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias("n_events"),
-        F.col("n_events").isNull().alias("is_gap"),
-        F.last("sum_value", ignorenulls=True).over(w).alias("locf_sum"),
-    )
-
-
-# --- event-stream coverage: funnel + retention cohorts ----------------------
-
-
-@register(
-    "events_funnel_steps",
-    """
-WITH u AS (SELECT DISTINCT user_id FROM events),
-s1 AS (SELECT user_id, min(epoch_us(ts))::BIGINT AS t1_us
-       FROM events WHERE event_type = 'view' GROUP BY user_id),
-s2 AS (SELECT e.user_id, min(epoch_us(e.ts))::BIGINT AS t2_us
-       FROM events e JOIN s1 USING (user_id)
-       WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1_us
-       GROUP BY e.user_id),
-s3 AS (SELECT e.user_id, min(epoch_us(e.ts))::BIGINT AS t3_us
-       FROM events e JOIN s2 USING (user_id)
-       WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t2_us
-       GROUP BY e.user_id)
-SELECT u.user_id, t1_us, t2_us, t3_us,
-       ((t1_us IS NOT NULL)::INT + (t2_us IS NOT NULL)::INT
-        + (t3_us IS NOT NULL)::INT) AS steps_completed
-FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-       LEFT JOIN s3 USING (user_id)
-""",
-)
-def q_events_funnel_steps(spark, sf_dir):
-    """Ordered conversion funnel (view → click → purchase): per user the
-    first view, the first click strictly AFTER that view, the first
-    purchase strictly after that click, and the stage count — the
-    windowFunnel/sequence-match surface of event analytics. Three
-    user-keyed hash aggs chained by equi-joins on the SAME key (one
-    shuffle partitioning reused end-to-end; no self-join over raw events,
-    no per-user array materialization), then left joins back to the user
-    universe. Timestamps as exact epoch micros."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    u = e.select("user_id").distinct()
-    s1 = (e.where(F.col("event_type") == "view").groupBy("user_id")
-          .agg(F.min("us").alias("t1_us")))
-    s2 = (e.join(s1, "user_id")
-          .where((F.col("event_type") == "click") & (F.col("us") > F.col("t1_us")))
-          .groupBy("user_id").agg(F.min("us").alias("t2_us")))
-    s3 = (e.join(s2, "user_id")
-          .where((F.col("event_type") == "purchase") & (F.col("us") > F.col("t2_us")))
-          .groupBy("user_id").agg(F.min("us").alias("t3_us")))
-    out = (u.join(s1, "user_id", "left").join(s2, "user_id", "left")
-           .join(s3, "user_id", "left"))
-    step = lambda c: F.col(c).isNotNull().cast("int")  # noqa: E731
-    return out.select(
-        "user_id", "t1_us", "t2_us", "t3_us",
-        (step("t1_us") + step("t2_us") + step("t3_us"))
-        .alias("steps_completed"),
-    )
-
-
-@register(
-    "events_retention_cohorts",
-    """
-WITH days AS (
-  SELECT user_id, (epoch_us(ts) // 86400000000)::BIGINT AS day FROM events
-),
-first_day AS (SELECT user_id, min(day) AS day0 FROM days GROUP BY user_id),
-active AS (
-  SELECT DISTINCT d.user_id, (f.day0 // 7)::BIGINT AS cohort_week,
-         ((d.day - f.day0) // 7)::BIGINT AS week_offset
-  FROM days d JOIN first_day f USING (user_id)
-),
-ret AS (SELECT cohort_week, week_offset, count(*)::BIGINT AS n_users
-        FROM active GROUP BY cohort_week, week_offset),
-base AS (SELECT cohort_week, n_users AS cohort_size FROM ret
-         WHERE week_offset = 0)
-SELECT r.cohort_week, r.week_offset, r.n_users, b.cohort_size,
-       (r.n_users * 1000000 // b.cohort_size)::BIGINT AS retained_ppm
-FROM ret r JOIN base b USING (cohort_week)
-""",
-)
-def q_events_retention_cohorts(spark, sf_dir):
-    """Weekly retention cohorts: cohort = epoch-week of a user's first
-    activity; for each (cohort, week-offset) the distinct retained users
-    and the exact-ppm retention rate against the offset-0 cohort size (a
-    user's first week always retains, so the base row exists by
-    construction). Two user-keyed hash aggs + one distinct + one
-    cohort-keyed agg — the classic cohort matrix with no self-join over
-    raw events; pure integer day/week arithmetic shared with the oracle."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        (F.unix_micros(F.col("ts").cast("timestamp"))
-         / F.lit(86400000000)).cast("long").alias("day"),
-    )
-    f = e.groupBy("user_id").agg(F.min("day").alias("day0"))
-    active = (
-        e.join(f, "user_id")
-        .select(
-            "user_id",
-            (F.col("day0") / 7).cast("long").alias("cohort_week"),
-            ((F.col("day") - F.col("day0")) / 7).cast("long")
-            .alias("week_offset"),
-        )
-        .distinct()
-    )
-    ret = active.groupBy("cohort_week", "week_offset").agg(
-        F.count("*").cast("long").alias("n_users"))
-    base = ret.where(F.col("week_offset") == 0).select(
-        "cohort_week", F.col("n_users").alias("cohort_size"))
-    return ret.join(base, "cohort_week").select(
-        "cohort_week", "week_offset", "n_users", "cohort_size",
-        F.expr("(n_users * 1000000) DIV cohort_size").alias("retained_ppm"),
-    )
-
-
-@register(
-    "events_anomaly_mad",
-    """
-WITH v AS (
-  SELECT event_type, event_id,
-         (round(value * 100)
-          + CASE WHEN event_id % 97 = 0 THEN 50000 ELSE 0 END)::BIGINT AS v_c
-  FROM events
-),
-med AS (
-  SELECT event_type, (2 * quantile_cont(v_c, 0.5))::BIGINT AS med2_c
-  FROM v GROUP BY event_type
-),
-dev AS (
-  SELECT v.event_type, v.event_id, v.v_c,
-         abs(2 * v.v_c - m.med2_c)::BIGINT AS d2_c, m.med2_c
-  FROM v JOIN med m USING (event_type)
-),
-mad AS (
-  SELECT event_type, (2 * quantile_cont(d2_c, 0.5))::BIGINT AS mad4_c
-  FROM dev GROUP BY event_type
-),
-flagged AS (
-  SELECT d.*, md.mad4_c,
-         (2 * d.d2_c * 100000 > 518911 * md.mad4_c) AS is_out
-  FROM dev d JOIN mad md USING (event_type)
-)
-SELECT event_type, event_id, v_c, d2_c, med2_c, mad4_c
-FROM flagged WHERE is_out
-""",
-)
-def q_events_anomaly_mad(spark, sf_dir):
-    """Robust outlier detection via median absolute deviation (the
-    Iglewicz-Hosking modified z-score, |x−med| > 3.5·1.4826·MAD — immune
-    to the outliers inflating a stddev gate): planted +500.00 spikes on
-    every 97th event must all surface (the corpus's natural heavy tail
-    also legitimately clears the gate — asserted few in tests). EXACT integer
-    contract: values in cents, medians carried as 2×/4× integers so the
-    even-count interpolation midpoint stays integral, and the final gate
-    is a pure BIGINT cross-multiplication (2·d2·10⁵ > 518911·mad4) — no
-    float ever compared. Two grouped exact-percentile aggs + two broadcast
-    joins of the |types|-sized stats; at 100 TB the exact percentile
-    swaps for approx_percentile with the same plan shape."""
-    v = _t(spark, sf_dir, "events").select(
-        "event_type", "event_id",
-        (F.round(F.col("value") * 100)
-         + F.when(F.col("event_id") % 97 == 0, 50000).otherwise(0))
-        .cast("long").alias("v_c"),
-    )
-    med = v.groupBy("event_type").agg(
-        (F.expr("percentile(v_c, 0.5)") * 2).cast("long").alias("med2_c"))
-    dev = v.join(F.broadcast(med), "event_type").select(
-        "event_type", "event_id", "v_c",
-        F.abs(2 * F.col("v_c") - F.col("med2_c")).cast("long").alias("d2_c"),
-        "med2_c",
-    )
-    mad = dev.groupBy("event_type").agg(
-        (F.expr("percentile(d2_c, 0.5)") * 2).cast("long").alias("mad4_c"))
-    flagged = dev.join(F.broadcast(mad), "event_type").where(
-        2 * F.col("d2_c") * 100000 > 518911 * F.col("mad4_c"))
-    return flagged.select(
-        "event_type", "event_id", "v_c", "d2_c", "med2_c", "mad4_c")

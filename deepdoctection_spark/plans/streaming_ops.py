@@ -277,7 +277,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, joined on user_id with the time-range predicate `click.ts in
     [error.ts, error.ts + 6h]` — Spark bounds each side's join state from
     the range condition + watermarks instead of buffering streams forever.
-    The oracle is the SAME SQL as the batch events_range_join: agreement
+    The oracle is the plain batch range join of the same events: agreement
     proves the streaming join emits exactly the batch matches, none lost
     to state eviction, none duplicated across micro-batches."""
     from pyspark.sql import functions as F

@@ -1,6 +1,6 @@
-"""Sources: transcript table construction + payload templates + IO helpers.
+"""Sources: transcript table construction + payload templates, the dataset
+adapter, and IceTable.
 
-The reference's analogues are the Serializer* scans
-(/root/reference/deepdoctection/dataflow/custom_serialize.py) and the synthetic
+The reference's analogue of the transcript synthesis is the synthetic
 FakeData generator (/root/reference/deepdoctection/dataflow/serialize.py:77-131).
 """

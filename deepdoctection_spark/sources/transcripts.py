@@ -178,37 +178,6 @@ def replicated_transcripts(
     return t
 
 
-def build_skewed_transcripts(
-    spark: SparkSession,
-    sf_dir: str,
-    partitions: int | None = None,
-    hot_modulus: int = 10,
-    hot_residues: int = 3,
-) -> DataFrame:
-    """Skew-stressed variant: ~hot_residues/hot_modulus of all turns are
-    reassigned to ONE mega-conversation (`conv-mega`, turn_idx = doc_id so
-    keys stay unique). This is the mega-conversation shape the north rule's
-    skew handling must survive: a single conv_id holding 30% of the corpus
-    would serialize a naive conv-partitioned stage; the narrow extraction
-    doesn't care (per-turn), and only the one reassembly group of
-    `conv-mega` touches conv granularity."""
-    base = build_transcripts(spark, sf_dir, partitions)
-    # recover doc identity from (conv, turn): doc_id = conv_no * TURNS + turn.
-    # Both outputs derive from the ORIGINAL columns in one select — chained
-    # withColumn would re-evaluate `hot` against the rewritten turn_idx.
-    conv_no = F.regexp_extract("conv_id", r"conv-(\d+)", 1).cast("long")
-    doc_id = conv_no * TURNS_PER_CONV + F.col("turn_idx")
-    hot = (doc_id % hot_modulus) < hot_residues
-    # pmod keeps turn_idx in positive int32 range (the input_hint contract);
-    # unique while doc_id < 2^31-1, which covers every sandbox scale tier
-    mega_turn = F.pmod(doc_id, F.lit(2147483647)).cast("int")
-    return base.select(
-        F.when(hot, F.lit("conv-mega")).otherwise(F.col("conv_id")).alias("conv_id"),
-        F.when(hot, mega_turn).otherwise(F.col("turn_idx")).alias("turn_idx"),
-        "role", "text", "tool", "ts",
-    )
-
-
 # ---------------------------------------------------------------------------
 # DuckDB SQL rendering (for __spark_entry__.oracle_sql)
 # ---------------------------------------------------------------------------

@@ -4,8 +4,7 @@ scanned for the anti-patterns that silently die at 100 TB — CartesianProduct
 (quadratic row blowup) and BatchEvalPython (row-at-a-time Python UDFs in the
 hot path). BroadcastNestedLoopJoin is reported but allowed ONLY for the
 whitelisted queries that intentionally broadcast a model/grid-sized side
-(kNN query vectors, the COCO threshold grid, the corpus-surprisal vocab,
-the rel_repeated replication range).
+(kNN query vectors, the COCO threshold grid, the corpus-surprisal vocab).
 
     python scripts/plan_audit.py [--sf-dir /root/testdata/sf0.001]
 
@@ -24,7 +23,7 @@ sys.path.insert(0, str(REPO))
 
 # broadcasts of model-sized sides (bounded by k, not by data volume)
 BNLJ_WHITELIST = {
-    "eval_coco_map", "knn_bruteforce", "quality_surprisal", "rel_repeated",
+    "eval_coco_map", "knn_bruteforce", "quality_surprisal",
     "mixture_weights",  # two 1-row global-total broadcasts (token + weight sums)
     "quality_perplexity_bigram",  # 1-row vocab-size broadcast (add-one smoothing V)
     "classify_nb_lang",  # 1-row smoothing constants (V, per-class totals)

@@ -60,35 +60,6 @@ def test_split_bucket_matches_duckdb():
         assert got == expected[cid]
 
 
-def test_gapfill_locf_carries_last_observation(spark):
-    """Gap hours get n_events=0/is_gap=true and carry the last observed
-    hourly sum forward; observed hours carry their own sum."""
-    import deepdoctection_spark.plans.relational  # noqa: F401 — registers it
-    from deepdoctection_spark.plans.registry import QUERIES
-
-    rows = QUERIES["events_gapfill_locf"](spark, "/root/testdata/sf0.001").collect()
-    by_user: dict[int, list] = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    assert by_user
-    for user, rs in by_user.items():
-        rs.sort(key=lambda r: r["bucket_us"])
-        # dense hourly grid: consecutive buckets differ by exactly 1h
-        for a, b in zip(rs, rs[1:]):
-            assert b["bucket_us"] - a["bucket_us"] == 3_600_000_000
-        # first bucket is always observed (grid starts at first activity)
-        assert not rs[0]["is_gap"]
-        last = None
-        for r in rs:
-            if r["is_gap"]:
-                assert r["n_events"] == 0
-                assert r["locf_sum"] == last  # carried forward
-            else:
-                assert r["n_events"] > 0
-                last = r["locf_sum"]
-                assert last is not None
-
-
 def test_pii_scrub_redacts_everything(spark):
     """Every planted email/URL/IP is found exactly once and the post-scrub
     residue is zero; the scrubbed text contains the typed placeholders."""

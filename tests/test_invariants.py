@@ -12,13 +12,38 @@ from pyspark.sql import functions as F
 
 from deepdoctection_spark.operators.extraction import extract_transcripts
 from deepdoctection_spark.operators.reassembly import reassemble_conversations
-from deepdoctection_spark.sources.transcripts import build_transcripts
+from deepdoctection_spark.sources.transcripts import TURNS_PER_CONV, build_transcripts
 
 
 def _salted(df, salt_buckets):
     """A hot conv_id spread over salt_buckets of 16 partitions."""
     salt = F.pmod(F.hash("turn_idx"), F.lit(salt_buckets))
     return df.repartition(16, F.col("conv_id"), salt)
+
+
+def build_skewed_transcripts(spark, sf_dir):
+    """Skew-stressed variant: the ~30% of turns with doc_id % 10 < 3 are
+    reassigned to ONE mega-conversation (`conv-mega`, turn_idx = doc_id so
+    keys stay unique). This is the mega-conversation shape the north rule's
+    skew handling must survive: a single conv_id holding 30% of the corpus
+    would serialize a naive conv-partitioned stage; the narrow extraction
+    doesn't care (per-turn), and only the one reassembly group of
+    `conv-mega` touches conv granularity."""
+    base = build_transcripts(spark, sf_dir)
+    # recover doc identity from (conv, turn): doc_id = conv_no * TURNS + turn.
+    # Both outputs derive from the ORIGINAL columns in one select — chained
+    # withColumn would re-evaluate `hot` against the rewritten turn_idx.
+    conv_no = F.regexp_extract("conv_id", r"conv-(\d+)", 1).cast("long")
+    doc_id = conv_no * TURNS_PER_CONV + F.col("turn_idx")
+    hot = (doc_id % 10) < 3
+    # pmod keeps turn_idx in positive int32 range (the input_hint contract);
+    # unique while doc_id < 2^31-1, which covers every sandbox scale tier
+    mega_turn = F.pmod(doc_id, F.lit(2147483647)).cast("int")
+    return base.select(
+        F.when(hot, F.lit("conv-mega")).otherwise(F.col("conv_id")).alias("conv_id"),
+        F.when(hot, mega_turn).otherwise(F.col("turn_idx")).alias("turn_idx"),
+        "role", "text", "tool", "ts",
+    )
 
 
 def _conv_fp(df):
@@ -110,8 +135,6 @@ def test_mega_conversation_skew_path(spark, sf_small):
     """A single conv holding ~30% of all turns: extraction + reassembly stay
     correct, salted == unsalted, and the mega conversation's text is ordered
     by turn_idx."""
-    from deepdoctection_spark.sources.transcripts import build_skewed_transcripts
-
     t = build_skewed_transcripts(spark, sf_small)
     n_total = t.count()
     n_mega = t.where(F.col("conv_id") == "conv-mega").count()
@@ -188,7 +211,7 @@ def test_extraction_schema_frozen():
 
 def test_empty_doc_counts_zero_tokens(spark):
     """split('', ' ') returns [''] — the operators must filter it so empty
-    docs count 0 tokens, matching kernels.textnorm.whitespace_token_count."""
+    and whitespace-only docs count 0 tokens."""
     from deepdoctection_spark.operators import textstats
 
     docs = spark.createDataFrame(
@@ -244,8 +267,6 @@ def test_reassembly_matches_reference_on_skew_and_edge_rows(spark, sf_small):
     (turn_idx, text) structs joined by sep, on the 30%-skewed input plus
     planted edge rows, for a plain separator and one holding a quote and a
     backslash."""
-    from deepdoctection_spark.sources.transcripts import build_skewed_transcripts
-
     t = build_skewed_transcripts(spark, sf_small)
     ex = extract_transcripts(t, with_words=False).select(
         "conv_id", "turn_idx", "extracted_text"
@@ -308,8 +329,6 @@ def test_chunked_reassembly_reconstructs_full_text(spark, sf_small):
     from deepdoctection_spark.operators.reassembly import (
         reassemble_conversations_chunked,
     )
-    from deepdoctection_spark.sources.transcripts import build_skewed_transcripts
-
     t = build_skewed_transcripts(spark, sf_small)
     ex = extract_transcripts(t, with_words=False)
     full = {r["conv_id"]: (r["n_turns"], r["conv_text"])
@@ -364,18 +383,16 @@ def test_simhash_pairs_plan_has_no_cross_join(spark, sf_parity):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan, plan
 
 
-def test_row_guard_counter_counts_drops(spark):
-    """Quarantine observability: dropped rows are counted on the accumulator
-    (log-and-COUNT, the reference's maputils contract), visible driver-side."""
+def test_row_guard_drops_poison_rows(spark):
+    """Quarantine contract of the per-row operators: a row whose kernel
+    raises is logged and dropped, and the rest of the batch survives
+    (log-and-drop, the reference's maputils contract)."""
     from deepdoctection_spark.operators.pubtablesop import pubtables_grids
-    from deepdoctection_spark.operators.quarantine import quarantine_counter
 
     rows = [("c1", 0, ""), ("c1", None, ""), ("c2", None, ""), ("c2", 3, "")]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    counter = quarantine_counter(spark)
-    out = pubtables_grids(df, counter=counter).collect()
+    out = pubtables_grids(df).collect()
     assert len(out) == 2  # poison rows dropped
-    assert counter.value == 2  # ...and counted
 
 
 def test_extraction_over_icetable_is_narrow(spark, sf_small, tmp_path):

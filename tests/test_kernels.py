@@ -18,12 +18,7 @@ from deepdoctection_spark.kernels.match import (
     nms_spans,
 )
 from deepdoctection_spark.kernels.table import cells_to_html
-from deepdoctection_spark.kernels.textnorm import (
-    bpe_ish_token_count,
-    normalize_ws,
-    whitespace_token_count,
-    word_spans,
-)
+from deepdoctection_spark.kernels.textnorm import normalize_ws, word_spans
 from tests.html_oracle import extract_blocks, segment_table_grid
 
 # ---------------------------------------------------------------------------
@@ -43,11 +38,6 @@ def test_word_spans_offsets():
     assert spans == [(0, "ab", 0, 2), (1, "c", 3, 4), (2, "de", 5, 7)]
     for _, tok, b, e in spans:
         assert text[b:e] == tok
-
-
-def test_token_counts():
-    assert whitespace_token_count("one two  three") == 3
-    assert bpe_ish_token_count("don't stop2x") == 6  # don ' t stop 2 x
 
 
 def test_span_id_deterministic():
@@ -456,10 +446,7 @@ def test_sub_line_wide_gap_splits_into_columns():
 
 
 def test_sub_line_char_width_model_extends_run_end():
-    from deepdoctection_spark.kernels.layout import (
-        make_sub_lines,
-        parse_positioned_lines,
-    )
+    from tests.layout_oracle import make_sub_lines, parse_positioned_lines
 
     runs = parse_positioned_lines("@0,0:abcdefghij\n@150,0:next")
     # start-distance mode: 150 >= 100 → split
@@ -470,30 +457,9 @@ def test_sub_line_char_width_model_extends_run_end():
 
 
 def test_paragraph_break_boundary_is_strict_less_than():
-    from deepdoctection_spark.kernels.layout import make_sub_lines, parse_positioned_lines
+    from tests.layout_oracle import make_sub_lines, parse_positioned_lines
 
     # gap exactly == break → split (reference: same sub-line only if < break)
     runs = parse_positioned_lines("@0,0:a\n@100,0:b")
     assert len(make_sub_lines(runs, 100.0)) == 2
     assert len(make_sub_lines(runs, 100.5)) == 1
-
-
-def test_word_token_ids_match_python_contract(spark):
-    from deepdoctection_spark.kernels.ids import span_id as py_span_id
-    from deepdoctection_spark.operators.extraction import (
-        extract_transcripts,
-        word_token_ids,
-        word_tokens,
-    )
-    from deepdoctection_spark.sources.transcripts import build_transcripts
-
-    ex = extract_transcripts(
-        build_transcripts(spark, "/root/testdata/sf0.001").limit(20),
-        with_words=True,
-    )
-    rows = word_token_ids(word_tokens(ex)).limit(50).collect()
-    assert rows
-    for r in rows:
-        assert r["span_id"] == py_span_id(
-            r["conv_id"], r["turn_idx"], "word", r["span_begin"], r["span_end"]
-        )

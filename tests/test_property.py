@@ -12,8 +12,10 @@ from hypothesis import strategies as st
 
 from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
 from deepdoctection_spark.kernels.html import extract_blocks_stream, parse_html
+from deepdoctection_spark.kernels.layout import extract_layout_blocks
 from deepdoctection_spark.kernels.teds import teds
 from deepdoctection_spark.kernels.textnorm import normalize_ws, word_spans
+from tests import layout_oracle
 from tests.html_oracle import _gather_text, extract_blocks
 
 # text with plenty of HTML-ish structure mixed in
@@ -143,6 +145,30 @@ def test_batch_words_matches_per_row(texts):
         for s in texts
     ]
     assert got == exp
+
+
+# positioned runs on a few shared rows and x starts, so y ties, title
+# candidates, wide and narrow gaps and blank runs all occur; some lines are
+# not runs at all
+_layout_line = st.one_of(
+    st.builds(
+        "@{},{}:{}".format,
+        st.sampled_from(["0", "50", "72", "100", "150", "306", "-5", "72.5"]),
+        st.sampled_from(["10", "40", "40.0", "150"]),
+        st.sampled_from(["a", "b", "a\tb  c", "", " ", "\xa0a\r"]),
+    ),
+    st.sampled_from(["", "noise", "@x,1:bad", " @0,10:lead"]),
+)
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(st.lists(_layout_line, max_size=12).map("\n".join),
+       st.sampled_from([(100.0, None), (300.0, None), (100.0, 50.0)]))
+def test_fused_layout_matches_reference(payload, gaps):
+    """The fused layout extractor (the production path) is block-for-block
+    identical to the unfused parse → sub-line → column composition."""
+    assert extract_layout_blocks(payload, *gaps) == \
+        layout_oracle.extract_layout_blocks(payload, *gaps)
 
 
 _pdf_text = st.text(
