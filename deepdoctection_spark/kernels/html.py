@@ -27,7 +27,7 @@ import types
 from html import unescape as _unescape
 
 from deepdoctection_spark.kernels.table import Block, TableCell, _int_attr
-from deepdoctection_spark.kernels.textnorm import _WS_RE
+from deepdoctection_spark.kernels.textnorm import collapse_ws
 
 # Alternatives: element tag | comment | DOCTYPE-style declaration | processing
 # instruction. The last two would otherwise fall through as text nodes and be
@@ -311,7 +311,6 @@ def extract_blocks_stream(
     the other reached and table-structure opens and closes, a handful per
     document, pay a function call."""
     out: list[Block] = []
-    sub = _WS_RE.sub
     n = len(html)
     blockish_set = _BLOCKISH
     void_set = _VOID
@@ -478,7 +477,7 @@ def extract_blocks_stream(
                 pending = None
                 if "&" in txt:
                     txt = _unescape(txt)
-                norm = sub(" ", txt)
+                norm = collapse_ws(txt)
                 chunk = norm.strip(" ")  # never .strip(): \xa0 is a word char
                 if chunk:
                     k = len(chunk)
@@ -611,8 +610,7 @@ def extract_blocks_stream(
     if pending is not None:
         # trailing text after the last tag event (cold path: once per doc at
         # most; same feed semantics as the inlined loop body)
-        txt = _unescape(pending) if "&" in pending else pending
-        norm = sub(" ", txt)
+        norm = collapse_ws(_unescape(pending) if "&" in pending else pending)
         chunk = norm.strip(" ")
         if chunk:
             k = len(chunk)

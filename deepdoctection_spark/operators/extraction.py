@@ -59,7 +59,7 @@ EXTRACTION_SCHEMA = from_arrow_schema(SCHEMA)
 EXTRACTION_SCHEMA_TS = from_arrow_schema(_SCHEMA_TS)
 
 
-def _batch_words(out_text: list[str]) -> pa.ListArray:
+def _batch_words(txt: pa.StringArray) -> pa.ListArray:
     """Tokenize the WHOLE batch's extracted text in one vectorized pass:
     one Arrow split (C) + numpy prefix sums replace the per-row
     kernels.textnorm.word_spans loop (which was ~1/3 of stage CPU).
@@ -70,7 +70,6 @@ def _batch_words(out_text: list[str]) -> pa.ListArray:
     row's extracted_text, word_idx counts tokens within the row.
     Equivalence is property-tested against the per-row kernel
     (tests/test_property.py)."""
-    txt = pa.array(out_text, pa.string())
     # str.split(' ') semantics: empty fragments mark separator runs, so the
     # fragment lengths alone reconstruct every offset (fragment k of a row
     # begins at sum(previous fragment lengths) + k separators)
@@ -138,16 +137,17 @@ def _extract_batches(
                 out_cells[i] = fin.cells
                 out_html[i] = fin.table_html
             blocks_arr = pa.array(out_blocks, pa.list_(SPAN))
+            text_arr = pa.array(out_text, pa.string())
             arrays = [
                 rb.column("conv_id"),
                 rb.column("turn_idx"),
                 rb.column("role"),
                 rb.column("tool"),
-                pa.array(out_text, pa.string()),
+                text_arr,
                 blocks_arr.value_lengths(),
                 blocks_arr,
                 pa.array(out_cells, pa.list_(CELL)),
-                _batch_words(out_text) if with_words else pa.array([[]] * n, pa.list_(WORD)),
+                _batch_words(text_arr) if with_words else pa.array([[]] * n, pa.list_(WORD)),
                 pa.array(out_html, pa.string()),
                 pa.array(out_err, pa.string()),
             ]

@@ -1,18 +1,17 @@
 """Single-core extraction-kernel micro-bench (no Spark).
 
-Reproduces the exact per-row workload of the Arrow extraction stage
-(operators/extraction.py) — extract_turn + finalize_turn over the same mixed
-payload set bench.py feeds the full pipeline (sources/transcripts.py template
-rendered over sf documents) — but single-threaded in one process, so the
-number is per-core kernel rate with zero Spark/Arrow/JVM overhead.
-
-This is the deterministic evidence harness for parser-hot-loop work
-(VERDICT r3 next-round #5): the full-bench wall carries documented ±2×
-hypervisor swings, while this isolate is stable to a few percent and directly
-measures the thing being changed.
+Runs the per-row work of the Arrow extraction stage (operators/extraction.py)
+in one process, one thread: ``extract_turn`` per payload kind and
+``finalize_turn``, over payloads rendered from the same templates and
+document generator as perfbench's ``extract_mixed`` (perfbench/inputs.py).
+It prints per-turn microseconds under perfbench's per-layer names
+(``kernels.html_us``, ``layout_us``, ``text_us``, ``finalize_us``), best of
+``--repeat``, and one checksum over every kind's output, so a kernel change
+can show its layer delta and its output parity in seconds. Absolute
+numbers move with the host: compare two trees back to back.
 
 Usage:
-    python scripts/kernel_bench.py [--sf /root/testdata/sf0.1] [--repeat 5]
+    python scripts/kernel_bench.py [--seed 1] [--repeat 9]
     python scripts/kernel_bench.py --profile   # cProfile top functions
 
 Reference analogue: TestDataSpeed's warmup + wall discipline
@@ -22,59 +21,66 @@ Reference analogue: TestDataSpeed's warmup + wall discipline
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import sys
 import time
 from pathlib import Path
 
-import pyarrow.parquet as pq
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "perfbench"))
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import inputs  # perfbench/inputs.py: the extract_mixed document generator
 
+from deepdoctection_spark.config import DEFAULT_CONFIG
 from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
-from deepdoctection_spark.sources.transcripts import HTML_PAYLOAD, PDFISH_PAYLOAD
+
+KINDS = (("html", "browser"), ("layout", "pdf_reader"), ("text", ""))
+N_DOCS = 600  # as perfbench's kernel isolate
 
 
-def render(pieces, row) -> str:
-    vals = {"d": str(row["doc_id"]), "t": row["text"], "l": row["lang"], "s": row["source"]}
-    return "".join(v if kind == "lit" else vals[v] for kind, v in pieces)
+def build_payloads(seed: int, n_docs: int) -> list[tuple[dict, str, str]]:
+    """(document, text, tool) rows: the payload mix ``extract_mixed`` feeds
+    the stage, a third of each kind."""
+    docs = inputs.documents(seed, n_docs).to_pylist()
+    return [(d, *inputs.render_payload(d)) for d in docs]
 
 
-def build_payloads(sf_dir: str) -> list[tuple[str, str]]:
-    """(text, tool) rows — the exact mix build_transcripts synthesizes."""
-    tbl = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang", "source"]
-    )
-    out: list[tuple[str, str]] = []
-    for row in tbl.to_pylist():
-        mod = row["doc_id"] % 3
-        if mod == 1:
-            out.append((render(HTML_PAYLOAD, row), "browser"))
-        elif mod == 2:
-            out.append((render(PDFISH_PAYLOAD, row), "pdf_reader"))
-        else:
-            out.append((row["text"], ""))
-    return out
+def best_us(fn, items: list, repeat: int) -> float:
+    """Best-of-``repeat`` microseconds per item of ``fn`` over ``items``."""
+    walls = []
+    for _ in range(repeat):
+        t0 = time.perf_counter()
+        fn(items)
+        walls.append(time.perf_counter() - t0)
+    return min(walls) / len(items) * 1e6
 
 
-def run_once(payloads: list[tuple[str, str]]) -> float:
-    t0 = time.perf_counter()
-    for i, (text, tool) in enumerate(payloads):
-        blocks = extract_turn(text, tool)
-        finalize_turn("conv-%05d" % (i // 8), i % 8, blocks, with_words=False)
-    return time.perf_counter() - t0
+def checksum(finals) -> str:
+    """md5 over each turn's extracted text, block spans and cells."""
+    h = hashlib.md5()
+    for fin in finals:
+        h.update(repr((fin.extracted_text, fin.blocks, fin.cells, fin.table_html)).encode())
+    return h.hexdigest()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--repeat", type=int, default=5)
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--repeat", type=int, default=9)
     ap.add_argument("--profile", action="store_true")
     args = ap.parse_args()
 
-    payloads = build_payloads(args.sf)
-    n = len(payloads)
-    run_once(payloads[: n // 10])  # warmup
+    cfg = DEFAULT_CONFIG
+    kargs = (cfg.link_density_threshold, cfg.column_gap, cfg.tag_density_threshold)
+    rows = build_payloads(args.seed, N_DOCS)
+
+    def extract_all(items):
+        return [extract_turn(p, tool, *kargs) for p, tool in items]
+
+    def finalize_all(items):
+        return [finalize_turn(c, i, b, with_words=False) for c, i, b in items]
 
     if args.profile:
         import cProfile
@@ -82,25 +88,20 @@ def main() -> None:
 
         pr = cProfile.Profile()
         pr.enable()
-        run_once(payloads)
+        extract_all([(p, t) for _d, p, t in rows])
         pr.disable()
         pstats.Stats(pr).sort_stats("cumulative").print_stats(25)
         return
 
-    walls = [run_once(payloads) for _ in range(args.repeat)]
-    best = min(walls)
-    print(
-        json.dumps(
-            {
-                "metric": "single_core_kernel_turns_per_sec",
-                "value": round(n / best, 1),
-                "unit": "turns/sec",
-                "turns": n,
-                "trials": [round(w, 4) for w in walls],
-                "best_wall_s": round(best, 4),
-            }
-        )
-    )
+    out: dict[str, object] = {"seed": args.seed, "turns": len(rows)}
+    for kind, tool in KINDS:
+        mine = [(p, t) for _d, p, t in rows if t == tool]
+        out[f"kernels.{kind}_us"] = round(best_us(extract_all, mine, args.repeat), 2)
+    blocks = [(f"conv-{d['doc_id'] // 8:05d}", d["doc_id"] % 8, extract_turn(p, t, *kargs))
+              for d, p, t in rows]
+    out["kernels.finalize_us"] = round(best_us(finalize_all, blocks, args.repeat), 2)
+    out["checksum"] = checksum(finalize_all(blocks))
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

@@ -20,7 +20,7 @@ from deepdoctection_spark.kernels.html import (
     parse_html,
 )
 from deepdoctection_spark.kernels.table import Block, TableCell, _int_attr
-from deepdoctection_spark.kernels.textnorm import _WS_RE, normalize_ws
+from tests.ws_oracle import WS_RE, normalize
 
 
 def _gather_text(node: Node, want_text: bool = True) -> tuple[str, int, int, int]:
@@ -29,7 +29,7 @@ def _gather_text(node: Node, want_text: bool = True) -> tuple[str, int, int, int
     link-density numerator) and tag_count counts descendant ELEMENT nodes
     (the tag-density denominator: markup-heavy/text-poor subtrees are
     boilerplate). The text is returned ALREADY whitespace-normalized
-    (normalize_ws semantics, fused into the walk): words accumulate across
+    (``normalize`` semantics, fused into the walk): words accumulate across
     text-node boundaries when no whitespace separates them ('<b>a</b>x' →
     'ax'), whitespace runs and blockish-subtree boundaries become single
     spaces, and the result is stripped. One pass replaces the old
@@ -48,7 +48,7 @@ def _gather_text(node: Node, want_text: bool = True) -> tuple[str, int, int, int
     linked = 0
     tags = 0
     open_word = False  # last emitted chunk ended mid-word (no trailing ws)
-    split = _WS_RE.split
+    split = WS_RE.split
     append_words = words.extend
     # stack entries: (node, in_link); None node = blockish post-order marker
     stack = [(node, False)]
@@ -61,9 +61,9 @@ def _gather_text(node: Node, want_text: bool = True) -> tuple[str, int, int, int
             continue
         tag = nd.tag
         if tag == "":
-            # split on the SAME ASCII whitespace class normalize_ws collapses
+            # split on the SAME ASCII whitespace class the contract collapses
             # (str.split() would also split on Unicode whitespace like \xa0
-            # that _WS_RE deliberately keeps inside words); empty first/last
+            # that WS_RE deliberately keeps inside words); empty first/last
             # pieces mark boundary whitespace
             pieces = split(nd.text)
             ws = [w for w in pieces if w]
@@ -224,9 +224,8 @@ def segment_table_grid(table_node: Node) -> list[TableCell]:
     a later cell in that row — only ``rowspan > 1`` coverage of LATER rows
     is ever queried. Span-free tables (the overwhelmingly common case) touch
     no set at all; single-text-child cells skip the subtree walk (and so
-    get ``normalize_ws``'s full ``str.strip()``)."""
+    get ``normalize``'s full ``str.strip()``)."""
     occupied: set[tuple[int, int]] | None = None
-    normalize = normalize_ws
     cells: list[TableCell] = []
     for r, tr in enumerate(_find_rows(table_node), start=1):
         col = 1

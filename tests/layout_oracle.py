@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from deepdoctection_spark.kernels.layout import _LINE_RE, PositionedLine, cluster_columns
 from deepdoctection_spark.kernels.table import Block
-from deepdoctection_spark.kernels.textnorm import normalize_ws
+from tests.ws_oracle import normalize
 
 
 def parse_positioned_lines(payload: str) -> list[PositionedLine]:
@@ -27,11 +27,7 @@ def parse_positioned_lines(payload: str) -> list[PositionedLine]:
     return out
 
 
-def make_sub_lines(
-    runs: list[PositionedLine],
-    paragraph_break: float,
-    char_width: float = 0.0,
-) -> list[PositionedLine]:
+def make_sub_lines(runs: list[PositionedLine], paragraph_break: float) -> list[PositionedLine]:
     """Split each LINE (same-y runs, x-sorted) into sub-lines at horizontal
     gaps ≥ paragraph_break — the reference's TextLineGenerator sub-line pass
     (deepdoctection/pipe/order.py:345-563 in the reference: consecutive words
@@ -40,10 +36,8 @@ def make_sub_lines(
     texts space-joined) so multi-column structure is detected per LINE, not
     per whole-payload x histogram.
 
-    ``char_width`` models a run's rendered width (prev.lrx = prev.x +
-    char_width·len(prev)); the text wire format carries only start positions,
-    so the default 0.0 measures start-to-start distance — the strongest
-    signal available without font metrics."""
+    The wire format carries only start positions, so the gap is measured
+    start to start."""
     by_y: dict[float, list[PositionedLine]] = {}
     for r in runs:
         by_y.setdefault(r.y, []).append(r)
@@ -52,8 +46,7 @@ def make_sub_lines(
         row = sorted(by_y[y], key=lambda r: r.x)
         cur: list[PositionedLine] = [row[0]]
         for prev, nxt in zip(row, row[1:]):
-            prev_end = prev.x + char_width * len(normalize_ws(prev.content))
-            if nxt.x - prev_end < paragraph_break:
+            if nxt.x - prev.x < paragraph_break:
                 cur.append(nxt)
             else:
                 out.append(_merge_sub_line(cur))
@@ -63,7 +56,7 @@ def make_sub_lines(
 
 
 def _merge_sub_line(runs: list[PositionedLine]) -> PositionedLine:
-    texts = [t for t in (normalize_ws(r.content) for r in runs) if t]
+    texts = [t for t in (normalize(r.content) for r in runs) if t]
     return PositionedLine(runs[0].x, runs[0].y, " ".join(texts))
 
 
@@ -79,8 +72,8 @@ def extract_layout_blocks(
     min_y = min(ln.y for ln in lines)
     top = [ln for ln in lines if ln.y == min_y]
     rest = lines
-    if len(top) == 1 and normalize_ws(top[0].content):
-        blocks.append(Block("title", normalize_ws(top[0].content)))
+    if len(top) == 1 and normalize(top[0].content):
+        blocks.append(Block("title", normalize(top[0].content)))
         rest = [ln for ln in lines if ln is not top[0]]
     sub = make_sub_lines(rest, column_gap if paragraph_break is None else paragraph_break)
     for bucket in cluster_columns(sub, column_gap):

@@ -445,17 +445,6 @@ def test_sub_line_wide_gap_splits_into_columns():
     ]
 
 
-def test_sub_line_char_width_model_extends_run_end():
-    from tests.layout_oracle import make_sub_lines, parse_positioned_lines
-
-    runs = parse_positioned_lines("@0,0:abcdefghij\n@150,0:next")
-    # start-distance mode: 150 >= 100 → split
-    assert len(make_sub_lines(runs, 100.0)) == 2
-    # width model: prev ends at 0 + 20*10 = 200 → gap -50 → merge
-    merged = make_sub_lines(runs, 100.0, char_width=20.0)
-    assert len(merged) == 1 and merged[0].content == "abcdefghij next"
-
-
 def test_paragraph_break_boundary_is_strict_less_than():
     from tests.layout_oracle import make_sub_lines, parse_positioned_lines
 

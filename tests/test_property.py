@@ -7,6 +7,7 @@ offset validity are load-bearing properties, not nice-to-haves.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -14,8 +15,9 @@ from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
 from deepdoctection_spark.kernels.html import extract_blocks_stream, parse_html
 from deepdoctection_spark.kernels.layout import extract_layout_blocks
 from deepdoctection_spark.kernels.teds import teds
-from deepdoctection_spark.kernels.textnorm import normalize_ws, word_spans
-from tests import layout_oracle
+from deepdoctection_spark.kernels.table import Block
+from deepdoctection_spark.kernels.textnorm import collapse_ws, normalize_ws, word_spans
+from tests import layout_oracle, ws_oracle
 from tests.html_oracle import _gather_text, extract_blocks
 
 # text with plenty of HTML-ish structure mixed in
@@ -69,6 +71,35 @@ def test_normalize_idempotent_and_word_spans_cover(s):
     assert rebuilt_len == len(n)
 
 
+# every ASCII whitespace char and a double space, next to the characters
+# str.isspace() knows but the contract keeps inside words (\x1c-\x1f, \x85
+# and the Unicode spaces) and letters; framed by a fragment on each side so
+# each lands at a run edge as well as in the middle
+_WS_FRAGS = [" ", "\t", "\n", "\r", "\f", "\v", "  ", "\x1c", "\x1d", "\x1e",
+             "\x1f", "\x85", "\xa0", "\u2028", "\u2029", "\u3000"]
+_ws_frag = st.sampled_from(_WS_FRAGS + ["a", "b", "xy", "\xe9"] * 2)
+_ws_text = st.builds(
+    lambda a, mid, b: a + "".join(mid) + b,
+    _ws_frag, st.lists(_ws_frag, max_size=24), _ws_frag,
+)
+
+
+@settings(max_examples=400, deadline=None, derandomize=True)
+@given(_ws_text, _ws_text)
+def test_whitespace_collapse_matches_regex_reference(s, t):
+    """collapse_ws skips the regex on text it cannot change; it, normalize_ws
+    and the HTML text feed (hot loop and trailing run) must still equal the
+    plain ``[ \t\r\n\f\v]+`` -> " " collapse on every input."""
+    assert collapse_ws(s) == ws_oracle.collapse(s)
+    assert normalize_ws(s) == ws_oracle.normalize(s)
+    ref = ws_oracle.collapse(s).strip(" ")
+    want = [Block("text", ref)] if ref else []
+    assert extract_blocks_stream(f"<p>{s}</p>") == want
+    assert extract_blocks_stream(s) == want
+    html = f"<div>{s}<b>{t}</b>{s}<p>{t}</p>{t}</div>{s}"
+    assert extract_blocks_stream(html) == extract_blocks(html)
+
+
 @settings(max_examples=40, deadline=None, derandomize=True)
 @given(_soup, _soup)
 def test_teds_bounded_and_reflexive(a, b):
@@ -85,7 +116,6 @@ def _gather_text_reference(node):
     counters, normalized afterwards. The fused _gather_text must match it
     exactly on arbitrary tag soup."""
     from deepdoctection_spark.kernels.html import _BLOCKISH
-    from deepdoctection_spark.kernels.textnorm import _WS_RE
 
     parts, total, linked, tags = [], 0, 0, -1  # -1: don't count `node` itself
 
@@ -93,7 +123,7 @@ def _gather_text_reference(node):
         nonlocal total, linked, tags
         if nd.tag == "":
             parts.append(nd.text)
-            ws = [w for w in _WS_RE.split(nd.text) if w]
+            ws = [w for w in ws_oracle.WS_RE.split(nd.text) if w]
             stripped = sum(map(len, ws)) + max(0, len(ws) - 1)
             total += stripped
             if in_link:
@@ -115,7 +145,7 @@ def test_fused_gather_matches_reference(s):
     root = parse_html(s)
     norm, total, linked, tags = _gather_text(root)
     raw, rtotal, rlinked, rtags = _gather_text_reference(root)
-    assert (norm, total, linked, tags) == (normalize_ws(raw), rtotal, rlinked, rtags)
+    assert (norm, total, linked, tags) == (ws_oracle.normalize(raw), rtotal, rlinked, rtags)
 
 
 @settings(max_examples=200, deadline=None, derandomize=True)
@@ -136,7 +166,7 @@ def test_batch_words_matches_per_row(texts):
     including unicode, separator runs, and empty rows."""
     from deepdoctection_spark.operators.extraction import _batch_words
 
-    got = _batch_words(texts).to_pylist()
+    got = _batch_words(pa.array(texts, pa.string())).to_pylist()
     exp = [
         [
             {"token": t, "span_begin": b, "span_end": e, "word_idx": i}
