@@ -31,10 +31,9 @@ import deepdoctection_spark.plans.pipeline  # noqa: F401 — registers extractio
 import deepdoctection_spark.plans.pubtables_ops  # noqa: F401 — registers pubtables segmentation query
 import deepdoctection_spark.plans.refine_ops  # noqa: F401 — registers cell-merge refinement query
 import deepdoctection_spark.plans.relational  # noqa: F401 — registers bench.py's relational queries
-import deepdoctection_spark.plans.graph_ops  # noqa: F401 — registers PageRank
-import deepdoctection_spark.plans.sketch_ops  # noqa: F401 — registers HLL/CMS sketches, NB classifier, split assign
+import deepdoctection_spark.plans.graph_ops  # noqa: F401 — registers the five graph queries
 import deepdoctection_spark.plans.streaming_ops  # noqa: F401 — registers bounded streaming runs
-import deepdoctection_spark.plans.training_ops  # noqa: F401 — registers dedup/similarity/textstats
+import deepdoctection_spark.plans.training_ops  # noqa: F401 — registers dedup, kNN, text-stats and LLM data-prep queries
 from deepdoctection_spark.plans.registry import ORACLES, QUERIES
 
 

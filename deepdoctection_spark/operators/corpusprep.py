@@ -906,32 +906,6 @@ def exact_substr_spans(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     return per_doc_grams.join(per_doc_spans, "doc_id")
 
 
-def split_assign(docs: DataFrame, train: int = 80, val: int = 10) -> DataFrame:
-    """Deterministic train/val/test split: md5(doc_id) mod 100 buckets the
-    document into train (< train), val (< train+val), test (rest).
-
-    The pipeline-critical property at 10^12 rows is that the assignment is a
-    pure column expression of the row's own key — no global shuffle, no
-    sampling state, stable under re-runs and partial re-processing (the same
-    doc lands in the same split on every cluster size), and stratification is
-    free because the hash is independent of every feature column."""
-    bucket = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-        ).cast("long"),
-        F.lit(100),
-    )
-    return docs.select(
-        "doc_id",
-        "lang",
-        bucket.alias("bucket"),
-        F.when(bucket < train, "train")
-        .when(bucket < train + val, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-
-
 def stride_schedule(docs: DataFrame, weights: DataFrame,
                     id_col: str = "doc_id") -> DataFrame:
     """Deterministic cross-source interleave for a mixture-weighted training

@@ -19,32 +19,19 @@ from __future__ import annotations
 
 from deepdoctection_spark.operators.extraction import extract_transcripts
 from deepdoctection_spark.operators.matchnms import noisy_assignments, noisy_candidates
+from deepdoctection_spark.plans.oracles import block_geometry
 from deepdoctection_spark.plans.registry import register
-from deepdoctection_spark.sources.transcripts import (
-    EXPECTED_BLOCKS,
-    TRANSCRIPT_BASE_SQL,
-    Lit,
-    build_transcripts,
-    sql_len,
-)
-
-_MOD_OF_TOOL = {"": 0, "browser": 1, "pdf_reader": 2}
+from deepdoctection_spark.sources.transcripts import TRANSCRIPT_BASE_SQL, build_transcripts
 
 _TWO_THIRDS = "floor((2.0/3)*10000 + 0.5)/10000"
 _ONE_THIRD = "floor((1.0/3)*10000 + 0.5)/10000"
 
 
 def _block_geometry():
-    """Yield (mod, block_no, begin_sql, end_sql, len_sql) per template block."""
-    for tool, blocks in EXPECTED_BLOCKS.items():
-        mod = _MOD_OF_TOOL[tool]
-        prefix: list[Lit] = []
-        for k, (_cat, bp) in enumerate(blocks):
-            begin = sql_len(prefix) + (f" + {k}" if k else "")
-            L = sql_len(bp)
-            end = f"({begin}) + ({L})"
-            yield mod, k, f"({begin})", f"({end})", f"({L})"
-            prefix = prefix + bp
+    """Yield (mod, block_no, begin_sql, end_sql, len_sql) per template block,
+    each SQL term parenthesised for use inside the proposal arithmetic."""
+    for mod, k, _cat, begin, end, length in block_geometry():
+        yield mod, k, f"({begin})", f"({end})", f"({length})"
 
 
 def oracle_noisy_candidates() -> str:

@@ -59,6 +59,30 @@ def _span_id_sql(cat_sql: str, begin_sql: str, end_sql: str) -> str:
     )
 
 
+def block_geometry():
+    """Yield (mod, k, cat, begin_sql, end_sql, len_sql) per template block:
+    the ``doc_id % 3`` class of its tool, its reading order, its category,
+    and its offsets in the extracted text as SQL arithmetic (block k starts
+    after the pieces of the blocks before it plus k '\\n' separators)."""
+    for tool, blocks in EXPECTED_BLOCKS.items():
+        mod = _MOD_OF_TOOL[tool]
+        prefix: list[Lit] = []  # pieces of all preceding blocks
+        for k, (cat, bp) in enumerate(blocks):
+            begin = sql_len(prefix) + (f" + {k}" if k else "")
+            length = sql_len(bp)
+            yield mod, k, cat, begin, f"({begin}) + ({length})", length
+            prefix = prefix + bp
+
+
+def _span_select(k: int, cat: str, begin: str, end: str) -> str:
+    return (
+        f"SELECT conv_id, turn_idx, "
+        f"{_span_id_sql(repr(cat), begin, end)} AS span_id, "
+        f"'{cat}' AS category, ({begin})::INT AS span_begin, "
+        f"({end})::INT AS span_end, {k}::INT AS reading_order FROM base"
+    )
+
+
 def oracle_extract_text() -> str:
     n_blocks = {t: len(b) for t, b in EXPECTED_BLOCKS.items()}
     return f"""
@@ -72,36 +96,20 @@ FROM base
 
 
 def oracle_extract_spans() -> str:
-    selects = []
-    for tool, blocks in EXPECTED_BLOCKS.items():
-        mod = _MOD_OF_TOOL[tool]
-        prefix: list[Lit] = []  # pieces of all preceding blocks + separators
-        for k, (cat, bp) in enumerate(blocks):
-            begin = sql_len(prefix) + (f" + {k}" if k else "")
-            end = f"({begin}) + ({sql_len(bp)})"
-            selects.append(
-                f"SELECT conv_id, turn_idx, "
-                f"{_span_id_sql(repr(cat), begin, end)} AS span_id, "
-                f"'{cat}' AS category, ({begin})::INT AS span_begin, "
-                f"({end})::INT AS span_end, {k}::INT AS reading_order "
-                f"FROM base WHERE (doc_id % 3) = {mod}"
-            )
-            prefix = prefix + bp
+    selects = [
+        f"{_span_select(k, cat, begin, end)} WHERE (doc_id % 3) = {mod}"
+        for mod, k, cat, begin, end, _len in block_geometry()
+    ]
     union = "\nUNION ALL\n".join(selects)
     return f"WITH base AS ({TRANSCRIPT_BASE_SQL})\n{union}"
 
 
 def oracle_table_cells() -> str:
     """Cells exist only on browser turns; the table is the last block."""
-    blocks = EXPECTED_BLOCKS["browser"]
-    table_k = next(i for i, (c, _) in enumerate(blocks) if c == "table")
-    tprefix: list[Lit] = []
-    for _cat, bp in blocks[:table_k]:
-        tprefix = tprefix + bp
-    tbl_begin = f"({sql_len(tprefix)} + {table_k})"
-    tbl_pieces = blocks[table_k][1]
-    tbl_end = f"({tbl_begin} + ({sql_len(tbl_pieces)}))"
-    parent_id = _span_id_sql("'table'", tbl_begin, tbl_end)
+    begin, end = next((b, e) for mod, _k, cat, b, e, _len in block_geometry()
+                      if mod == _MOD_OF_TOOL["browser"] and cat == "table")
+    tbl_begin = f"({begin})"
+    parent_id = _span_id_sql("'table'", tbl_begin, f"({end})")
 
     # within-block cell offsets: rows joined by \n, cells by ' '
     selects = []
@@ -196,18 +204,11 @@ def oracle_pdf_layout_spans() -> str:
          printf('pdfconv-%06d', doc_id) AS conv_id, 0::INT AS turn_idx
   FROM documents
 """
-    selects = []
-    prefix: list[Lit] = []
-    for k, (cat, bp) in enumerate(EXPECTED_BLOCKS["pdf_reader"]):
-        begin = sql_len(prefix) + (f" + {k}" if k else "")
-        end = f"({begin}) + ({sql_len(bp)})"
-        selects.append(
-            f"SELECT conv_id, turn_idx, "
-            f"{_span_id_sql(repr(cat), begin, end)} AS span_id, "
-            f"'{cat}' AS category, ({begin})::INT AS span_begin, "
-            f"({end})::INT AS span_end, {k}::INT AS reading_order FROM base"
-        )
-        prefix = prefix + bp
+    selects = [
+        _span_select(k, cat, begin, end)
+        for mod, k, cat, begin, end, _len in block_geometry()
+        if mod == _MOD_OF_TOOL["pdf_reader"]
+    ]
     union = "\nUNION ALL\n".join(selects)
     return f"WITH base AS ({base})\n{union}"
 

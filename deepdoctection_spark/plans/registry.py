@@ -1,7 +1,7 @@
 """Query registry shared by all plan modules.
 
-Every implemented operator registers (name → DataFrame builder) and, where SQL
-can express the semantics, a DuckDB oracle string. __spark_entry__ surfaces
+Every implemented operator registers (name → DataFrame builder) together
+with the DuckDB oracle SQL its result must match. __spark_entry__ surfaces
 the registry to the driver.
 """
 
@@ -17,11 +17,10 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str):
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco

@@ -26,11 +26,8 @@ BNLJ_WHITELIST = {
     "eval_coco_map", "knn_bruteforce", "quality_surprisal",
     "mixture_weights",  # two 1-row global-total broadcasts (token + weight sums)
     "quality_perplexity_bigram",  # 1-row vocab-size broadcast (add-one smoothing V)
-    "classify_nb_lang",  # 1-row smoothing constants (V, per-class totals)
     "graph_triangles",  # 1-row node-count broadcast building the ring edges
-    "sketch_hdr_quantiles",  # 3-row percentile grid × tiny bucket table
     "data_expectations",  # four 1-row aggregate relations scalar-combined
-    "sketch_kmv_setops",  # 1-row union-sketch summary × 1-row membership agg
     # embeds mixture_weights' whitelisted 1-row global-total broadcasts on
     # its (sources-sized) weights side; the schedule join itself is a
     # broadcast hash equi-join on source

@@ -1,8 +1,7 @@
 """Seeded randomized hardening: the Feistel shuffle must stay a bijection on
 arbitrary id sets, the Markdown chain must strip every construct it claims
-to for arbitrary fragment soups, the Luhn candidates must match a serial
-replay, and the KMV sketch an exact bottom-k (batched through ONE Spark job
-per property)."""
+to for arbitrary fragment soups, and the Luhn candidates must match a serial
+replay (batched through ONE Spark job per property)."""
 
 from __future__ import annotations
 
@@ -78,31 +77,3 @@ def test_luhn_fuzz_vs_serial_replay(spark):
            .collect()}
     assert out == expect
 
-
-def test_kmv_fuzz_vs_exact_bottom_k(spark):
-    import hashlib
-
-    from deepdoctection_spark.operators.sketches import KMV_K, kmv_setops
-
-    rng = random.Random(23)
-    a = {f"k{rng.randrange(5000)}" for _ in range(700)}
-    b = {f"k{rng.randrange(5000)}" for _ in range(500)}
-    sets = spark.createDataFrame(
-        [("a", k) for k in a] + [("b", k) for k in b], "s string, url string")
-    out = {r.op: r for r in kmv_setops(sets).collect()}
-
-    def hs(keys):
-        return sorted(int(hashlib.md5(k.encode()).hexdigest()[:15], 16)
-                      for k in keys)
-
-    ha, hb = hs(a), hs(b)
-    hu = sorted(set(ha) | set(hb))
-    # sketch contents equal the serial bottom-k exactly (kth + size)
-    assert out["a"].kth == ha[:KMV_K][-1] and out["a"].sk_n == min(
-        KMV_K, len(ha))
-    assert out["b"].kth == hb[:KMV_K][-1]
-    assert out["union"].kth == hu[:KMV_K][-1]
-    # exact columns match true set algebra
-    assert out["union"].exact == len(set(ha) | set(hb))
-    assert out["intersect"].exact == len(set(ha) & set(hb))
-    assert out["a_not_b"].exact == len(set(ha) - set(hb))
